@@ -168,9 +168,9 @@ object Dedup {
     * [[org.apache.spark.sql.graft.CharShingles]] expression — the
     * declarative transform/substring spelling rescans the string per
     * position (O(chars^2) per doc; it was the single dominant cost of
-    * the near-dup family at sf0.1) and is kept below as the
-    * cross-checked reference formulation. lower() is projected once per
-    * document.
+    * the near-dup family at sf0.1) and survives only as the test-side
+    * reference this operator is pinned against. lower() is projected once
+    * per document.
     */
   def charShingles(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame = {
     import org.apache.spark.sql.graft.{CharShingles, ColumnBridge}
@@ -181,19 +181,6 @@ object Dedup {
         explode(ColumnBridge.toColumn(
           CharShingles(ColumnBridge.toExpression(col("__lt")), n))).as("s"))
   }
-
-  /** The transform/substring spelling — quadratic, spec-only: the
-    * reference [[charShingles]] is asserted set-identical to it.
-    */
-  private[operators] def charShinglesExpr(
-      df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame =
-    df.filter(length(col(textCol)) >= n)
-      .select(col(idCol).as("doc_id"), lower(col(textCol)).as("__lt"))
-      .select(
-        col("doc_id"),
-        explode(array_distinct(expr(
-          s"transform(sequence(1, length(__lt) - ${n - 1}), i -> substring(__lt, i, $n))"
-        ))).as("s"))
 
   /** Document-count cap for the exact all-pairs Jaccard form; larger
     * corpora auto-route through MinHash-LSH candidates. */

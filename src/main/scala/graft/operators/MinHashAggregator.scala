@@ -18,35 +18,25 @@ import org.apache.spark.sql.expressions.Aggregator
   *
   * Input is the base shingle hash `pmod(xxhash64(s), Prime)`; permutation
   * parameters are seeded identically to MinHashLSH.perms, so both
-  * formulations produce bit-identical signatures.
+  * formulations produce bit-identical signatures. The reduce loop is
+  * MinHashLSH.permuteMin, which the driver-bound per-row kernel
+  * (MinHashLSH.collectSignatures) runs too.
   */
 final class MinHashAggregator(numPerms: Int)
     extends Aggregator[Long, Array[Long], Array[Long]] {
 
-  private val Prime = MinHashLSH.Prime
   // (a, b) pairs flattened for cheap indexed access in the hot loop
   private val ab: Array[Long] = MinHashLSH.permParams(numPerms)
 
   override def zero: Array[Long] = Array.fill(numPerms)(Long.MaxValue)
 
   override def reduce(buf: Array[Long], h: Long): Array[Long] = {
-    var i = 0
-    while (i < numPerms) {
-      val v = (h * ab(2 * i) + ab(2 * i + 1)) % Prime
-      if (v < buf(i)) buf(i) = v
-      i += 1
-    }
+    MinHashLSH.permuteMin(buf, h, ab)
     buf
   }
 
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < numPerms) {
-      if (b(i) < a(i)) a(i) = b(i)
-      i += 1
-    }
-    a
-  }
+  override def merge(a: Array[Long], b: Array[Long]): Array[Long] =
+    MinHashLSH.mergeMin(a, b)
 
   override def finish(buf: Array[Long]): Array[Long] = buf
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** MinHash + LSH banding for near-duplicate candidate generation
@@ -127,18 +127,110 @@ object MinHashLSH {
       .agg(mh(col("h")).as("sig"))
   }
 
-  /** The pure-expression formulation (numPerms separate min() columns) —
-    * kept for cross-checking the Aggregator produces identical signatures.
+  /** The permutation loop: folds one base shingle hash `h` (in [0, Prime))
+    * into the running signature `buf` — component i keeps the minimum of
+    * (h·a_i + b_i) mod Prime over `ab` = [[permParams]]. The one loop
+    * both MinHashAggregator.reduce and [[collectSignatures]] run.
     */
-  private[operators] def signaturesExpr(shingles: DataFrame, numPerms: Int = 128): DataFrame = {
-    val h = pmod(xxhash64(col("s")), lit(Prime))
-    val minCols: Seq[Column] = perms(numPerms).zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(h * a + b, lit(Prime))).as(s"m$i")
+  private[operators] def permuteMin(buf: Array[Long], h: Long, ab: Array[Long]): Unit = {
+    val numPerms = ab.length / 2
+    var i = 0
+    while (i < numPerms) {
+      val v = (h * ab(2 * i) + ab(2 * i + 1)) % Prime
+      if (v < buf(i)) buf(i) = v
+      i += 1
     }
-    shingles
-      .groupBy(col("doc_id"))
-      .agg(minCols.head, minCols.tail: _*)
-      .select(col("doc_id"), array((0 until numPerms).map(i => col(s"m$i")): _*).as("sig"))
+  }
+
+  /** Element-wise min of two signatures, into `a` (the aggregator's
+    * merge). */
+  private[operators] def mergeMin(a: Array[Long], b: Array[Long]): Array[Long] = {
+    var i = 0
+    while (i < a.length) {
+      if (b(i) < a(i)) a(i) = b(i)
+      i += 1
+    }
+    a
+  }
+
+  /** Signatures of a driver-bounded frame in ONE narrow job: each row's
+    * signature is computed where the row sits (no exchange, no cache,
+    * no two-stage aggregation plan) and the driver merges a doc_id that
+    * several rows carry by element-wise min. Returns doc_id -> sig,
+    * bit-identical to `signatures(Dedup.charShingles(df, idCol, textCol,
+    * n), numPerms)`: the same length filter and lower() (projected by
+    * Spark, so their semantics are Spark's), the same CharShingles
+    * windows, seed-42 XXH64 taken pmod Prime, and [[permuteMin]]. A row
+    * without a shingle gets no entry, as it gets no shingle row there.
+    * For micro-batch inputs, where the aggregation's exchange and
+    * planning are the whole cost; distributed inputs stay on
+    * [[signatures]].
+    */
+  private[graft] def collectSignatures(
+      df: DataFrame, idCol: String, textCol: String,
+      numPerms: Int = 128, n: Int = 3): Map[Long, Array[Long]] = {
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    import org.apache.spark.sql.graft.CharShingles
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    import org.apache.spark.unsafe.Platform
+    df.schema(idCol).dataType match {
+      case LongType | IntegerType | ShortType | ByteType => ()
+      case t => throw new IllegalArgumentException(
+        s"collectSignatures: $idCol must be an integral id column, got $t")
+    }
+    val ab = permParams(numPerms)
+    val rows = df.filter(length(col(textCol)) >= n)
+      .select(col(idCol).cast(LongType), lower(col(textCol)))
+      .queryExecution.toRdd
+      .mapPartitions(_.flatMap { row =>
+        val bytes = row.getUTF8String(1).getBytes
+        val sig = Array.fill(numPerms)(Long.MaxValue)
+        var shingled = false
+        CharShingles.foreachShingle(bytes, n) { (start, end) =>
+          val h = XXH64.hashUnsafeBytes(
+            bytes, Platform.BYTE_ARRAY_OFFSET + start, end - start, HashSeed)
+          permuteMin(sig, java.lang.Math.floorMod(h, Prime), ab)
+          shingled = true
+        }
+        if (!shingled) None
+        else {
+          require(!row.isNullAt(0), s"collectSignatures: null $idCol")
+          Some(row.getLong(0) -> sig)
+        }
+      })
+      .collect()
+    val out = scala.collection.mutable.HashMap.empty[Long, Array[Long]]
+    rows.foreach { case (id, sig) =>
+      out.get(id) match {
+        case Some(acc) => mergeMin(acc, sig)
+        case None => out.put(id, sig)
+      }
+    }
+    out.toMap
+  }
+
+  /** Seed of Spark's xxhash64(), which [[signatures]] and [[bandKeys]]
+    * evaluate. */
+  private val HashSeed = 42L
+
+  /** Every band's key of one signature, band b at index b — bit-identical
+    * to the `bkey` [[bandKeys]] derives: xxhash64(b, slice) hashes the
+    * int band with the seed, then folds each long of the slice in as the
+    * next seed.
+    */
+  private[graft] def bandKeysOf(sig: Array[Long], bands: Int, rowsPerBand: Int): Array[Long] = {
+    requireBandsFit(sig.length, bands, rowsPerBand)
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    val out = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var h = XXH64.hashInt(b, HashSeed)
+      var k = b * rowsPerBand
+      while (k < (b + 1) * rowsPerBand) { h = XXH64.hashLong(sig(k), h); k += 1 }
+      out(b) = h
+      b += 1
+    }
+    out
   }
 
   /** Distinct candidate pairs (da < db) from banded signatures, hot
@@ -161,11 +253,6 @@ object MinHashLSH {
       bucketCap: Int = DefaultBucketCap): DataFrame =
     bandedPairs(signatures, bands, rowsPerBand, bucketCap, logOverflow = true, dedup = false)
 
-  /** Adds (band, bkey) rows to a signature frame — one row per band,
-    * all other columns carried through. THE band-key definition: every
-    * consumer (batch candidate generation, the streaming index join)
-    * must derive keys through here so they can never drift apart.
-    */
   /** Guard for every (numPerms, bands, rowsPerBand) entry point: an
     * over-long banding slices past the signature — the trailing bands
     * hash empty slices, EVERY document collides in them, and candidate
@@ -175,6 +262,12 @@ object MinHashLSH {
     require(bands * rowsPerBand <= numPerms,
       s"bands ($bands) x rowsPerBand ($rowsPerBand) exceeds the $numPerms-perm signature")
 
+  /** Adds (band, bkey) rows to a signature frame — one row per band,
+    * all other columns carried through. THE band-key definition: every
+    * consumer (batch candidate generation, the streaming index join)
+    * derives keys through here or through [[bandKeysOf]], its per-row
+    * form, which MinHashKernelSpec pins to it.
+    */
   private[graft] def bandKeys(
       signatures: DataFrame, bands: Int = 32, rowsPerBand: Int = 4): DataFrame =
     signatures.select(

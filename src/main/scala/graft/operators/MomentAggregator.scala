@@ -13,7 +13,7 @@ import org.apache.spark.sql.expressions.Aggregator
   *
   * 128-bit two's-complement addition is exact and associative, so the
   * slot sums are bit-identical to the DECIMAL(38,0) hash-aggregate sums
-  * of [[Pca.momentsExpr]] under any partitioning (PcaSpec pins the
+  * of the expression spelling under any partitioning (PcaSpec pins the
   * equivalence). Each quantum satisfies |q| < 2.9·10⁹ (enforced below,
   * same bound as the expression form's raise_error guard), so a product
   * fits a long and the 128-bit sum cannot saturate before ~10²⁰ rows.

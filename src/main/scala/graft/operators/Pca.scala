@@ -45,8 +45,8 @@ object Pca {
   def moments(vecs: DataFrame, vecCol: String, d: Int): DataFrame = {
     require(d > 0 && d <= 1024, s"d=$d out of the tall-skinny regime")
     val spark = vecs.sparkSession
-    // Fused one-pass form (r13): the explode spelling below
-    // ([[momentsExpr]]) shipped N·d(d+3)/2 struct rows through a
+    // Fused one-pass form (r13): the explode spelling (PcaSpec's
+    // reference) shipped N·d(d+3)/2 struct rows through a
     // DECIMAL(38,0) hash aggregate — ~4.3 M generator rows at a mere
     // 2 k×64 input, measured as the whole cost of the q141/q142/q154
     // family. Here each row's d(d+3)/2 products accumulate into ONE
@@ -86,34 +86,6 @@ object Pca {
       org.apache.spark.sql.types.StructField("s", DecimalType(38, 0))))
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), schema)
-  }
-
-  /** The generator + decimal-hash-aggregate spelling — kept as the
-    * equivalence reference for PcaSpec: [[moments]] must reproduce its
-    * rows bit-for-bit.
-    */
-  private[operators] def momentsExpr(vecs: DataFrame, vecCol: String, d: Int): DataFrame = {
-    require(d > 0 && d <= 1024, s"d=$d out of the tall-skinny regime")
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val xq = transform(col(vecCol), x =>
-      when(abs(x) < 2.9f, floor(x * lit(1e9)).cast("long"))
-        .otherwise(raise_error(concat(
-          lit(s"Pca.moments: |$vecCol| component out of quantization range: "),
-          x.cast("string")))))
-    // Per element i: one (j = -1, xi) first-moment term, then the
-    // upper-triangle products against the tail x[i..d). slice() is
-    // 1-based; its idx lambda arg is a 0-based offset into the tail.
-    val terms = concat(
-      array(struct(lit(-1).as("j"), $"xi".as("s"))),
-      transform(
-        slice($"__xq", $"i" + 1, lit(d) - $"i"),
-        (xj, off) => struct(($"i" + off).as("j"), ($"xi" * xj).as("s"))))
-    vecs.select(xq.as("__xq"))
-      .select($"__xq", posexplode($"__xq").as(Seq("i", "xi")))
-      .select($"i", explode(terms).as("t"))
-      .groupBy($"i", $"t.j".as("j"))
-      .agg(sum($"t.s".cast(DecimalType(38, 0))).as("s"))
   }
 
   /** Merge shard moment frames into the whole-corpus matrix. The

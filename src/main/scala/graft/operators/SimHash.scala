@@ -42,8 +42,8 @@ object SimHash {
 
   /** (doc_id, lo, hi): signature packed into two 32-bit halves, via the
     * fused [[SimHashAggregator]] — one compact counter buffer per doc
-    * instead of the 64-rows-per-token posexplode (which stays below as
-    * the cross-checked reference formulation).
+    * instead of the 64-rows-per-token posexplode over [[bitRows]] (the
+    * test-side reference it is pinned against).
     */
   def packed(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = docs
@@ -58,18 +58,6 @@ object SimHash {
       .select(col("doc_id"),
         element_at(col("sig"), 1).as("lo"), element_at(col("sig"), 2).as("hi"))
   }
-
-  /** The posexplode + two-stage aggregation formulation — kept as the
-    * independent reference [[packed]] is cross-checked against (the A8
-    * pattern: fused Aggregator ≡ expression form, asserted in spec).
-    */
-  private[operators] def packedViaBitRows(
-      docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    bitRows(docs, idCol, textCol)
-      .groupBy(col("doc_id"))
-      .agg(
-        sum(expr("IF(pos < 32, shiftleft(CAST(sbit AS BIGINT), pos), 0L)")).as("lo"),
-        sum(expr("IF(pos >= 32, shiftleft(CAST(sbit AS BIGINT), pos - 32), 0L)")).as("hi"))
 
   /** Pairwise Hamming-distance histogram over all doc pairs: (h, n_pairs).
     * The pair join runs on the packed one-row-per-doc table (broadcast

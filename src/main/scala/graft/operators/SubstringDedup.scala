@@ -194,7 +194,7 @@ object SubstringDedup {
 
   /** The HOF spelling of the same selection — O(chars * stride) slice
     * copies; retained for cross-checking the expression (the
-    * MinHashLSH.signaturesExpr precedent).
+    * precedent of the MinHash expression form the specs keep).
     */
   private[operators] def winnowedHof(
       docs: DataFrame, idCol: String, textCol: String,

@@ -11,8 +11,10 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * against an INDEX of everything already retained, never by
   * re-scanning the historical corpus. Per micro-batch:
   *
-  *  1. MinHash signatures for the batch docs (the same fused
-  *     aggregator the batch path uses);
+  *  1. MinHash signatures for the batch docs — the batch operators'
+  *     shingles, hashes and permutation loop (MinHashLSH), computed per
+  *     row in one narrow job under the driver cap and by the fused
+  *     aggregator above it;
   *  2. banded candidate probe of batch band keys against the persisted
   *     MEMBERSHIP index (already banded and bucket-capped at write
   *     time — see the index layout below) plus the in-batch capped
@@ -33,10 +35,10 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * Batches at or under [[DefaultDriverBatchCap]] run the pairwise steps
   * (2–4) as a DRIVER-RESIDENT KERNEL over the collected banded rows and
   * b-bit signatures — metadata-scale state, the broadcast-parameters
-  * idiom — so a trigger costs the index probe scan, the signature
-  * aggregation and three writes, not a dozen batch-scale shuffle
-  * stages. Above the cap the identical semantics run distributed
-  * (spec-asserted equivalent).
+  * idiom — so a trigger costs a row count, one shuffle-free signature
+  * job, the index probe and three concurrent writes, not a dozen
+  * batch-scale shuffle stages. Above the cap the identical semantics run
+  * distributed (spec-asserted equivalent).
   *
   * == Incremental index layout ==
   *
@@ -424,10 +426,14 @@ object DedupStreams {
       r
     }
     // cached for the trigger's duration: the source frame is otherwise
-    // re-read by the emptiness guard, the shingle pipeline AND the
-    // survivor write — three scans of the same micro-batch input
+    // re-read by the row count, the signature job AND the survivor
+    // write — three scans of the same micro-batch input
     val cachedBatch = batch.cache()
-    if (phase("empty")(cachedBatch.isEmpty)) { cachedBatch.unpersist(); return }
+    // the row count is both the emptiness guard and the kernel-cap test
+    // below; rows >= docs, so a batch can only move toward the
+    // (equivalent) distributed spelling
+    val nRows = phase("count")(cachedBatch.count())
+    if (nRows == 0L) { cachedBatch.unpersist(); return }
     // compact FIRST (before this trigger's index read) so the listing
     // this very batch performs is already bounded. batchId is a pure
     // function of the trigger, so a replayed batch re-runs the same
@@ -460,29 +466,9 @@ object DedupStreams {
     // batch signatures: full 64-bit components feed the band keys (full
     // key entropy — 8-bit banding would birthday-collide unrelated docs
     // at billion-doc scale), the 1-byte fold feeds every similarity
-    // estimate and the persisted index. A micro-batch often arrives as
-    // ONE file-source partition — spread the signature aggregation (the
-    // trigger's only real compute: |shingles| x numPerms min updates)
-    // across the executors instead of one task; the batch-sized text
-    // shuffle this costs is noise next to the 4-8x it parallelizes
-    // modest spread for the signature aggregation when the micro-batch
-    // arrives as one file-source partition: 8-way is the measured sweet
-    // spot at 1000-doc batches (32-way loses more to task scheduling
-    // than it gains; 1-way leaves the trigger's only real compute —
-    // |shingles| x numPerms min updates — on a single core)
-    val (sigs, banded) = phase("setup") {
-      val sigSrc =
-        if (cachedBatch.rdd.getNumPartitions < 8) cachedBatch.repartition(8)
-        else cachedBatch
-      val s = MinHashLSH
-        .signatures(Dedup.charShingles(sigSrc, "doc_id", "text"), NumPerms)
-        .withColumn("sig8", transform(col("sig"), x => x.bitwiseAND(lit(255L))))
-        .cache()
-      val b = MinHashLSH.bandKeys(s, Bands, RowsPerBand)
-        .select(col("doc_id"), col("band"), col("bkey"))
-        .cache()
-      (s, b)
-    }
+    // estimate and the persisted index. Each branch below derives them
+    // its own way: the driver kernel per row in one narrow job, the
+    // distributed spelling as cached frames.
     // collision-corrected b-bit drop threshold (see scaladoc)
     val tCorr = threshold + (1 - threshold) / 256.0
 
@@ -593,21 +579,27 @@ object DedupStreams {
         droppedDf
       }
 
-      val nDocs = phase("sig_count")(sigs.count()) // also materializes the signature cache
-      if (nDocs <= driverBatchCap) {
+      if (nRows <= driverBatchCap) {
         // ---------------- driver-resident batch kernel ----------------
-        // (see DefaultDriverBatchCap) — the batch's banded rows and b-bit
-        // signatures come to the driver once; everything pairwise happens
-        // in plain Scala with the EXACT arithmetic of the distributed
-        // spelling below (spec-asserted equivalent across the cap).
-        val sig8Local: Map[Long, Array[Long]] = phase("sig_collect")(
-          sigs.select(col("doc_id"), col("sig8")).as[(Long, Array[Long])]
-            .collect().toMap)
+        // (see DefaultDriverBatchCap) — the batch's signatures come to
+        // the driver from ONE narrow job (per-row MinHash where the rows
+        // sit, duplicate ids min-merged on the driver: no shuffle, no
+        // cached frames), band keys are folded locally, and everything
+        // pairwise happens in plain Scala with the EXACT arithmetic of
+        // the distributed spelling below (spec-asserted equivalent
+        // across the cap; MinHashKernelSpec pins the signatures and
+        // keys to MinHashLSH.signatures/bandKeys).
+        val sigLocal: Map[Long, Array[Long]] = phase("sig_collect")(
+          MinHashLSH.collectSignatures(cachedBatch, "doc_id", "text", NumPerms))
+        val sig8Local: Map[Long, Array[Long]] =
+          sigLocal.map { case (id, s) => id -> s.map(_ & 255L) }
         val sigPk: Map[Long, Array[Long]] =
           sig8Local.map { case (id, s) => id -> packSig8(s) }
-        val bandedLocal: Array[(Int, Long, Long)] = phase("band_collect")(
-          banded.select(col("band"), col("bkey"), col("doc_id"))
-            .as[(Int, Long, Long)].collect())
+        val bandedLocal: Array[(Int, Long, Long)] = phase("band_keys")(
+          sigLocal.toArray.flatMap { case (id, s) =>
+            MinHashLSH.bandKeysOf(s, Bands, RowsPerBand).zipWithIndex
+              .map { case (bkey, band) => (band, bkey, id) }
+          })
         // batch vs index: the driver-resident bucket-key bloom rejects
         // batch keys that CANNOT be in the index, so most triggers scan
         // only the handful of possibly-hitting keys (pushed In-filter on
@@ -691,17 +683,13 @@ object DedupStreams {
               rebuildProbeState(spark, indexDir, Some(batchId), hint))
             cacheProbeState(indexDir, s); s
         }
-        val (batchKeys, probeKeys, bandedDf) = phase("probe_prep") {
+        val (probeKeys, bandedDf) = phase("probe_prep") {
           val bk = bandedLocal.map(_._2).distinct
           val pk =
             if (state.items == 0L) Array.empty[Long]
             else bk.filter(state.bloom.mightContainLong)
-          (bk, pk, spark.createDataset(bandedLocal.toSeq).toDF("band", "bkey", "nid"))
+          (pk, spark.createDataset(bandedLocal.toSeq).toDF("band", "bkey", "nid"))
         }
-        if (sys.env.contains("GRAFT_PROBE_DEBUG")) System.err.println(
-          s"[probe-debug] batch=$batchId items=${state.items} cap=${state.capacity} " +
-            s"batchKeys=${batchKeys.length} probeKeys=${probeKeys.length} " +
-            s"liveEmpty=${live.isEmpty} dirs=${live.dirNames.mkString(",")}")
         // the raw hit multiset (bucket members x batch docs per bucket)
         // is the kernel's largest intermediate — background-similar hot
         // buckets push it to millions of rows per trigger, and its
@@ -912,90 +900,105 @@ object DedupStreams {
         afterWrite(admitted)
       } else {
         // ---------------- distributed spelling (over-cap) ----------------
-        // this path doesn't maintain the probe bloom — invalidate so the
-        // next driver-kernel trigger rebuilds from disk
-        probeState.remove(indexDir)
-        // probe the (write-time-capped) membership with the batch's band
-        // keys: broadcast the batch side, so the index side is a pruned
-        // columnar scan with NO shuffle, NO re-banding, NO window; bucket
-        // occupancy for admission falls out of the same join, counted
-        // over exactly the buckets this batch touches
-        val memberHits = members
-          .join(broadcast(banded.withColumnRenamed("doc_id", "nid")), Seq("band", "bkey"))
+        // signatures as cached frames, built only on this path (each is
+        // read several times below); a batch this large can still arrive
+        // as one file-source partition, so the aggregation is spread
+        // 8 ways
+        val sigSrc =
+          if (cachedBatch.rdd.getNumPartitions < 8) cachedBatch.repartition(8)
+          else cachedBatch
+        val sigs = MinHashLSH
+          .signatures(Dedup.charShingles(sigSrc, "doc_id", "text"), NumPerms)
+          .withColumn("sig8", transform(col("sig"), x => x.bitwiseAND(lit(255L))))
           .cache()
-        val occupancy = memberHits.groupBy(col("band"), col("bkey"))
-          .agg(countDistinct(col("mid")).as("occ"))
-        // batch vs index: signatures are fetched for the candidate
-        // members only — the hits, not the index
-        val candIdx = memberHits.select(col("nid"), col("mid")).distinct()
-        val memberSigs = idxSigs.join(
-          broadcast(candIdx.select(col("mid").as("doc_id")).distinct()), Seq("doc_id"))
-        val indexHits = candIdx
-          .join(broadcast(sigs.select(col("doc_id").as("nid"), col("sig8").as("nsig"))), Seq("nid"))
-          .join(broadcast(memberSigs.select(col("doc_id").as("mid"), col("sig8").as("msig"))), Seq("mid"))
-          .filter(est8(col("nsig"), col("msig")) >= tCorr)
-          .select(col("nid")).distinct()
-          .as[Long].collect().toSet
-
-        // batch vs earlier batch docs through the SAME hot-bucket cap as
-        // the batch operators. dedup=true here (unlike Dedup's batch
-        // path): the refine is the interpreted est8 HOF, not a codegen'd
-        // popcount kernel, so evaluating it on the per-band duplicated
-        // multiset (up to `bands` copies per pair) costs far more than
-        // the batch-scale distinct that removes them (measured 10x)
-        val candidates = MinHashLSH.cappedBucketPairs(
-          banded, bucketCap, logOverflow = false, dedup = true, cache = false)
-        val sa = sigs.select(col("doc_id").as("da"), col("sig8").as("sa"))
-        val sb = sigs.select(col("doc_id").as("db"), col("sig8").as("sb"))
-        val refined = candidates
-          .join(sa, Seq("da")).join(sb, Seq("db"))
-          .filter(est8(col("sa"), col("sb")) >= tCorr)
-          .select(col("da"), col("db")).distinct()
+        val banded = MinHashLSH.bandKeys(sigs, Bands, RowsPerBand)
+          .select(col("doc_id"), col("band"), col("bkey"))
           .cache()
-        val nPairs = refined.count()
-        log.info(s"dedupBatch($batchId): $nPairs refined pairs, " +
-          s"${indexHits.size} index hits (driver pair cap $MaxDriverPairs)")
-        val dropped =
-          if (nPairs <= MaxDriverPairs)
-            resolveDropped(indexHits, refined.as[(Long, Long)].collect())
-          else {
-            // degenerate batch: see MaxDriverPairs — conservative
-            // resolution without materializing the pair set (the later
-            // endpoints alone are <= batch doc count)
-            log.warn(s"dedupBatch($batchId): pair set $nPairs exceeds " +
-              s"$MaxDriverPairs — using conservative distributed resolution")
-            indexHits ++ refined.select(col("db")).distinct().as[Long].collect()
-          }
-        refined.unpersist()
-        val droppedDf = writeOut(dropped)
+        try {
+          // this path doesn't maintain the probe bloom — invalidate so the
+          // next driver-kernel trigger rebuilds from disk
+          probeState.remove(indexDir)
+          // probe the (write-time-capped) membership with the batch's band
+          // keys: broadcast the batch side, so the index side is a pruned
+          // columnar scan with NO shuffle, NO re-banding, NO window; bucket
+          // occupancy for admission falls out of the same join, counted
+          // over exactly the buckets this batch touches
+          val memberHits = members
+            .join(broadcast(banded.withColumnRenamed("doc_id", "nid")), Seq("band", "bkey"))
+            .cache()
+          val occupancy = memberHits.groupBy(col("band"), col("bkey"))
+            .agg(countDistinct(col("mid")).as("occ"))
+          // batch vs index: signatures are fetched for the candidate
+          // members only — the hits, not the index
+          val candIdx = memberHits.select(col("nid"), col("mid")).distinct()
+          val memberSigs = idxSigs.join(
+            broadcast(candIdx.select(col("mid").as("doc_id")).distinct()), Seq("doc_id"))
+          val indexHits = candIdx
+            .join(broadcast(sigs.select(col("doc_id").as("nid"), col("sig8").as("nsig"))), Seq("nid"))
+            .join(broadcast(memberSigs.select(col("doc_id").as("mid"), col("sig8").as("msig"))), Seq("mid"))
+            .filter(est8(col("nsig"), col("msig")) >= tCorr)
+            .select(col("nid")).distinct()
+            .as[Long].collect().toSet
 
-        // admission via a window over BATCH rows only (same semantics as
-        // the driver kernel's local form)
-        val wAdm = Window.partitionBy(col("band"), col("bkey")).orderBy(col("doc_id"))
-        banded
-          .join(droppedDf, Seq("doc_id"), "left_anti")
-          .join(broadcast(occupancy), Seq("band", "bkey"), "left")
-          .withColumn("__r", row_number().over(wAdm))
-          .filter(col("__r") + coalesce(col("occ"), lit(0)) <= lit(bucketCap))
-          .select(col("band"), col("bkey"), col("doc_id"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$indexDir/members/batch=$batchId")
-        // read the written partition back rather than recomputing the
-        // admission window
-        val admittedIds = spark.read.parquet(s"$indexDir/members/batch=$batchId")
-          .select(col("doc_id")).distinct()
-        sigs.select(col("doc_id"), col("sig8"))
-          .join(admittedIds, Seq("doc_id"), "left_semi")
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$indexDir/sigs/batch=$batchId")
-        memberHits.unpersist()
+          // batch vs earlier batch docs through the SAME hot-bucket cap as
+          // the batch operators. dedup=true here (unlike Dedup's batch
+          // path): the refine is the interpreted est8 HOF, not a codegen'd
+          // popcount kernel, so evaluating it on the per-band duplicated
+          // multiset (up to `bands` copies per pair) costs far more than
+          // the batch-scale distinct that removes them (measured 10x)
+          val candidates = MinHashLSH.cappedBucketPairs(
+            banded, bucketCap, logOverflow = false, dedup = true, cache = false)
+          val sa = sigs.select(col("doc_id").as("da"), col("sig8").as("sa"))
+          val sb = sigs.select(col("doc_id").as("db"), col("sig8").as("sb"))
+          val refined = candidates
+            .join(sa, Seq("da")).join(sb, Seq("db"))
+            .filter(est8(col("sa"), col("sb")) >= tCorr)
+            .select(col("da"), col("db")).distinct()
+            .cache()
+          val nPairs = refined.count()
+          log.info(s"dedupBatch($batchId): $nPairs refined pairs, " +
+            s"${indexHits.size} index hits (driver pair cap $MaxDriverPairs)")
+          val dropped =
+            if (nPairs <= MaxDriverPairs)
+              resolveDropped(indexHits, refined.as[(Long, Long)].collect())
+            else {
+              // degenerate batch: see MaxDriverPairs — conservative
+              // resolution without materializing the pair set (the later
+              // endpoints alone are <= batch doc count)
+              log.warn(s"dedupBatch($batchId): pair set $nPairs exceeds " +
+                s"$MaxDriverPairs — using conservative distributed resolution")
+              indexHits ++ refined.select(col("db")).distinct().as[Long].collect()
+            }
+          refined.unpersist()
+          val droppedDf = writeOut(dropped)
+
+          // admission via a window over BATCH rows only (same semantics as
+          // the driver kernel's local form)
+          val wAdm = Window.partitionBy(col("band"), col("bkey")).orderBy(col("doc_id"))
+          banded
+            .join(droppedDf, Seq("doc_id"), "left_anti")
+            .join(broadcast(occupancy), Seq("band", "bkey"), "left")
+            .withColumn("__r", row_number().over(wAdm))
+            .filter(col("__r") + coalesce(col("occ"), lit(0)) <= lit(bucketCap))
+            .select(col("band"), col("bkey"), col("doc_id"))
+            .coalesce(1)
+            .write.mode("overwrite").parquet(s"$indexDir/members/batch=$batchId")
+          // read the written partition back rather than recomputing the
+          // admission window
+          val admittedIds = spark.read.parquet(s"$indexDir/members/batch=$batchId")
+            .select(col("doc_id")).distinct()
+          sigs.select(col("doc_id"), col("sig8"))
+            .join(admittedIds, Seq("doc_id"), "left_semi")
+            .coalesce(1)
+            .write.mode("overwrite").parquet(s"$indexDir/sigs/batch=$batchId")
+          memberHits.unpersist()
+        } finally {
+          banded.unpersist()
+          sigs.unpersist()
+        }
       }
     } finally {
-      phase("unpersist") {
-        banded.unpersist()
-        sigs.unpersist()
-        cachedBatch.unpersist()
-      }
+      phase("unpersist")(cachedBatch.unpersist())
       prevInFilter match {
         case Some(v) => spark.conf.set(inFilterKey, v)
         case None => spark.conf.unset(inFilterKey)

@@ -37,6 +37,27 @@ case class CharShingles(child: Expression, n: Int)
 
   override protected def nullSafeEval(input: Any): Any = {
     val bytes = input.asInstanceOf[UTF8String].getBytes
+    val seen = new java.util.LinkedHashSet[UTF8String]()
+    CharShingles.foreachShingle(bytes, n) { (start, end) =>
+      seen.add(UTF8String.fromBytes(bytes, start, end - start)); ()
+    }
+    new GenericArrayData(seen.toArray.asInstanceOf[Array[AnyRef]])
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object CharShingles {
+
+  /** Calls `f(start, end)` with the byte range of every n-codepoint
+    * window of the UTF-8 `bytes`, in position order, repeats included;
+    * nothing when the string has fewer than n codepoints. The one
+    * shingle walk: the expression dedups its windows into an array, the
+    * driver-bound MinHash kernel (MinHashLSH.collectSignatures) hashes
+    * them in place.
+    */
+  def foreachShingle(bytes: Array[Byte], n: Int)(f: (Int, Int) => Unit): Unit = {
     // one pass: byte offset of every codepoint start (+ end sentinel)
     var count = 0
     var i = 0
@@ -47,17 +68,10 @@ case class CharShingles(child: Expression, n: Int)
       count += 1
     }
     offsets(count) = bytes.length
-    if (count < n) return new GenericArrayData(Array.empty[Any])
-    val seen = new java.util.LinkedHashSet[UTF8String]()
     var k = 0
     while (k + n <= count) {
-      val start = offsets(k)
-      seen.add(UTF8String.fromBytes(bytes, start, offsets(k + n) - start))
+      f(offsets(k), offsets(k + n))
       k += 1
     }
-    new GenericArrayData(seen.toArray.asInstanceOf[Array[AnyRef]])
   }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

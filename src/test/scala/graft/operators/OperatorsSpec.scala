@@ -509,12 +509,12 @@ class OperatorsSpec extends SparkSpec {
   test("one-pass CharShingles equals the transform/substring formulation (incl. multi-byte)") {
     val docs = tables.documents // fixture corpus includes zh (multi-byte UTF-8) docs
     val fast = Dedup.charShingles(docs, "doc_id", "text")
-    val ref = Dedup.charShinglesExpr(docs, "doc_id", "text")
+    val ref = ReferenceSpellings.charShinglesExpr(docs, "doc_id", "text")
     assert(fast.exceptAll(ref).count() == 0 && ref.exceptAll(fast).count() == 0)
     import spark.implicits._
     val edge = Seq((1L, "日本語のテキスト"), (2L, "ab"), (3L, "aaaa"), (4L, "")).toDF("doc_id", "text")
     val f2 = Dedup.charShingles(edge, "doc_id", "text").as[(Long, String)].collect().toSet
-    val r2 = Dedup.charShinglesExpr(edge, "doc_id", "text").as[(Long, String)].collect().toSet
+    val r2 = ReferenceSpellings.charShinglesExpr(edge, "doc_id", "text").as[(Long, String)].collect().toSet
     assert(f2 == r2)
     assert(f2.contains((1L, "日本語")) && f2.contains((3L, "aaa")))
     assert(!f2.exists(_._1 == 2L) && !f2.exists(_._1 == 4L)) // shorter than n -> no rows
@@ -523,14 +523,14 @@ class OperatorsSpec extends SparkSpec {
   test("fused SimHash Aggregator produces signatures identical to the posexplode form") {
     val docs = tables.documents
     val a = SimHash.packed(docs, "doc_id", "text")
-    val b = SimHash.packedViaBitRows(docs, "doc_id", "text")
+    val b = ReferenceSpellings.packedViaBitRows(docs, "doc_id", "text")
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
   }
 
   test("A8: fused MinHash Aggregator produces signatures identical to the expression form") {
     val sh = Dedup.charShingles(tables.documents, "doc_id", "text")
     val a = MinHashLSH.signatures(sh, 32).select(col("doc_id"), col("sig"))
-    val b = MinHashLSH.signaturesExpr(sh, 32).select(col("doc_id"), col("sig"))
+    val b = ReferenceSpellings.signaturesExpr(sh, 32).select(col("doc_id"), col("sig"))
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
   }
 

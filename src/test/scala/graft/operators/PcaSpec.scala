@@ -39,7 +39,7 @@ class PcaSpec extends SparkSpec {
         r.getAs[java.math.BigDecimal]("s").toBigIntegerExact))
       .toMap
     val fused = rowsOf(Pca.moments(e, "embedding", d = 64))
-    val ref = rowsOf(Pca.momentsExpr(e, "embedding", d = 64))
+    val ref = rowsOf(ReferenceSpellings.momentsExpr(e, "embedding", d = 64))
     assert(fused == ref)
     // negative components and a sum that crosses zero (the signed-128-bit
     // carry path), plus repartitioning (merge path) — still identical
@@ -48,7 +48,7 @@ class PcaSpec extends SparkSpec {
       Array(2.8f, 2.8f), Array(-2.8f, 0.0f)
     ).toDF("embedding").repartition(3)
     assert(rowsOf(Pca.moments(vecs, "embedding", d = 2)) ==
-      rowsOf(Pca.momentsExpr(vecs, "embedding", d = 2)))
+      rowsOf(ReferenceSpellings.momentsExpr(vecs, "embedding", d = 2)))
   }
 
   test("Pca.eigen: recovers analytic eigenpairs of a known 2x2 covariance") {

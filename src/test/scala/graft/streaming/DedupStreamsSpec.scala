@@ -239,25 +239,41 @@ class DedupStreamsSpec extends SparkSpec {
   }
 
   test("driver-resident and distributed batch kernels agree across the cap boundary") {
-    def drain(dbCap: Long): (Set[Long], Map[String, Long]) = {
+    // a fourth batch carrying one id on two rows, a short-text row (no
+    // signature, always retained) and an exact copy of retained doc 4
+    val tail = Seq(
+      8L -> "a genuinely novel late arrival about broadcast joins and salting",
+      8L -> "A SECOND ROW FOR THE SAME ID about skew hints and adaptive plans",
+      9L -> "xy",
+      10L -> "third unrelated document mentioning parquet statistics and pruning"
+    ).toDF("doc_id", "text")
+    val batches = Seq(Seq(1L, 2L), Seq(3L, 4L), Seq(5L, 6L, 7L))
+      .map(ids => corpus.filter(col("doc_id").isin(ids: _*))) :+ tail
+    def drain(dbCap: Long): (Seq[(Long, String)], Seq[(Int, Long, Long)], Seq[(Long, Seq[Long])]) = {
       val root = Files.createTempDirectory("dedup_stream_paths").toString
-      Seq(Seq(1L, 2L), Seq(3L, 4L), Seq(5L, 6L, 7L)).zipWithIndex.foreach { case (ids, i) =>
-        DedupStreams.dedupBatch(
-          corpus.filter(col("doc_id").isin(ids: _*)), s"$root/out", s"$root/index",
+      batches.zipWithIndex.foreach { case (b, i) =>
+        DedupStreams.dedupBatch(b, s"$root/out", s"$root/index",
           threshold = 0.7, batchId = i.toLong, driverBatchCap = dbCap)
       }
       val survivors = spark.read.parquet(s"$root/out")
-        .select(col("doc_id")).as[Long].collect().toSet
-      val index = Map(
-        "members" -> spark.read.parquet(s"$root/index/members/batch=*").count(),
-        "sigs" -> spark.read.parquet(s"$root/index/sigs/batch=*").count())
-      (survivors, index)
+        .select(col("doc_id"), col("text")).as[(Long, String)].collect().toSeq.sorted
+      val members = spark.read.parquet(s"$root/index/members/batch=*")
+        .select(col("band"), col("bkey"), col("doc_id"))
+        .as[(Int, Long, Long)].collect().toSeq.sorted
+      val sigs = spark.read.parquet(s"$root/index/sigs/batch=*")
+        .select(col("doc_id"), col("sig8"))
+        .as[(Long, Seq[Long])].collect().toSeq.sortBy(_._1)
+      (survivors, members, sigs)
     }
-    val (sDriver, iDriver) = drain(DedupStreams.DefaultDriverBatchCap)
-    val (sDist, iDist) = drain(0L) // cap 0: every batch takes the distributed path
-    assert(sDriver == sDist, "survivor sets diverge across the kernel cap")
-    assert(iDriver == iDist, "persisted index state diverges across the kernel cap")
-    assert(sDriver == Set(1L, 2L, 4L, 7L))
+    val (sDriver, mDriver, gDriver) = drain(DedupStreams.DefaultDriverBatchCap)
+    val (sDist, mDist, gDist) = drain(0L) // cap 0: every batch takes the distributed path
+    assert(sDriver == sDist, "survivor rows diverge across the kernel cap")
+    assert(mDriver == mDist, "persisted members rows diverge across the kernel cap")
+    assert(gDriver == gDist, "persisted sigs rows diverge across the kernel cap")
+    assert(sDriver.map(_._1) == Seq(1L, 2L, 4L, 7L, 8L, 8L, 9L))
+    // every retained doc with a signature is in the index, once
+    assert(gDriver.map(_._1) == Seq(1L, 2L, 4L, 8L))
+    assert(mDriver.map(_._3).distinct.sorted == Seq(1L, 2L, 4L, 8L))
   }
 
   test("write-time bucket admission enforces the cap") {
