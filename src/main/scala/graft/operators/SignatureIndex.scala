@@ -1,8 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
 /** Persisted MinHash-LSH signature index — THE corpus-side artifact the
   * 100 TB refresh story needs: shingle → signature → band-key derivation
@@ -151,6 +154,59 @@ object SignatureIndex {
     TableListing(m, runs, ids("batch=", needSuccess = false).filter(_ > floor).sorted)
   }
 
+  /** Row schemas of the two tables as a driver-side write lays them
+    * down — the schemas `Seq[(Int, Long, Long)].toDF` and
+    * `Seq[(Long, Seq[Long])].toDF` encode, so a component written by
+    * [[writeComponent]] carries the same parquet schema and Spark row
+    * metadata as one written through a DataFrame.
+    */
+  private[graft] val MembersSchema: StructType = StructType(Seq(
+    StructField("band", IntegerType, nullable = false),
+    StructField("bkey", LongType, nullable = false),
+    StructField("doc_id", LongType, nullable = false)))
+  private[graft] val SigsSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("sig8", ArrayType(LongType, containsNull = false))))
+
+  /** Write `rows` as one index component dir `dir` (e.g.
+    * `indexDir/members/batch=7`) from the driver: one parquet file
+    * through Spark's own writer (`ParquetFileFormat.prepareWrite` →
+    * `OutputWriter`, so codec, parquet schema and row metadata are a
+    * DataFrame write's), with no Spark job, plan or commit protocol
+    * around it — the component's rows are already on the driver.
+    *
+    * The file lands in a hidden sibling `.<name>.tmp-<uuid>` (readers
+    * and [[listTable]] skip dot-prefixed names), gets `_SUCCESS`, and
+    * only then replaces `dir`: overwrite semantics, so a replayed
+    * trigger rewrites its own component exactly like
+    * `write.mode("overwrite")`. A crash before the rename leaves only a
+    * hidden temp dir, which [[compact]] deletes once its id is folded.
+    */
+  private[graft] def writeComponent(
+      spark: SparkSession, dir: String, schema: StructType,
+      rows: Iterator[InternalRow]): Unit = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+    val target = new Path(dir)
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val fs = target.getFileSystem(job.getConfiguration)
+    val uuid = java.util.UUID.randomUUID().toString
+    val tmp = new Path(target.getParent, s".${target.getName}.tmp-$uuid")
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      job.getConfiguration,
+      new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
+    try {
+      val file = new Path(tmp, s"part-00000-$uuid-c000${factory.getFileExtension(ctx)}")
+      val writer = factory.newInstance(file.toString, schema, ctx)
+      try rows.foreach(writer.write) finally writer.close()
+      fs.create(new Path(tmp, "_SUCCESS"), true).close()
+      fs.delete(target, true)
+      if (!fs.rename(tmp, target))
+        throw new java.io.IOException(s"could not rename $tmp to $target")
+    } catch { case e: Throwable => scala.util.Try(fs.delete(tmp, true)); throw e }
+  }
+
   /** Readable paths of one index table (`members` or `sigs`), newest
     * epoch + runs + live batch dirs, optionally excluding one batch id
     * (the stream's current trigger excludes its own about-to-be-
@@ -261,11 +317,13 @@ object SignatureIndex {
     * capped index that takes batch appends should route them through
     * the stream.
     *
-    * Sigs land before members (matching the fold ordering contract):
-    * a reader that lists between the two writes may see a member whose
-    * signature is missing, never the reverse — the exact-refine probe
-    * ignores sigs entirely and the streaming probe treats a missing
-    * sig as a non-hit that the next trigger's rebuild heals.
+    * Sigs land before members (matching the fold ordering contract,
+    * and the order a streaming trigger's driver-side [[writeComponent]]
+    * calls follow): a reader that lists between the two writes may see
+    * a signature whose member rows are missing, never a member without
+    * its signature — the exact-refine probe ignores sigs entirely, the
+    * streaming probe only fetches signatures of member hits, and it
+    * treats a missing sig as a non-hit.
     */
   def append(
       docs: DataFrame, idCol: String, textCol: String, indexDir: String,
@@ -376,15 +434,23 @@ object SignatureIndex {
       s"${if (mergeRuns && l.runs.nonEmpty) s" + ${l.runs.size} run(s)" else ""}" +
       s"${if (major) l.epoch.fold("")(e => s" + epoch $e") else ""} -> $target)")
     // cleanup is best-effort: leftovers are ignored by readers (covered
-    // ids) and retried by the next fold. Raw listing, not listTable —
-    // that helper hides exactly the now-covered ids that need deleting.
+    // ids, hidden temp dirs) and retried by the next fold. Raw listing,
+    // not listTable — that helper hides exactly the now-covered ids that
+    // need deleting. `.batch=<n>.tmp-*` is a [[writeComponent]] that
+    // crashed before its rename.
     for (dir <- Seq(membersDir, sigsDir) if fs.exists(dir)) {
       val stale = fs.listStatus(dir).toSeq.map(_.getPath.getName).filter { n =>
         def id(prefix: String): Option[Long] =
           if (n.startsWith(prefix))
             scala.util.Try(n.stripPrefix(prefix).toLong).toOption
           else None
-        id("batch=").exists(_ <= upTo) ||
+        val tmpId = n.split("\\.tmp-", 2) match {
+          case Array(head, _) if head.startsWith(".batch=") =>
+            scala.util.Try(head.stripPrefix(".batch=").toLong).toOption
+          case _ => None
+        }
+        tmpId.exists(_ <= upTo) ||
+          id("batch=").exists(_ <= upTo) ||
           id("run=").exists(r => if (major) r <= upTo else mergeRuns && r < upTo) ||
           (major && id("compacted=").exists(_ < upTo))
       }

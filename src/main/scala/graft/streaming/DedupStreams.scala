@@ -2,6 +2,8 @@ package graft.streaming
 
 import graft.operators.{Dedup, MinHashLSH}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
@@ -30,15 +32,17 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   *  4. greedy resolution in doc_id order over ONLY the docs involved in
   *     a candidate pair or index hit (metadata-scale: they are the
   *     near-dups themselves, not the corpus); everything else is
-  *     retained by an anti-join against the small dropped set.
+  *     retained by one filter against the small dropped set.
   *
   * Batches at or under [[DefaultDriverBatchCap]] run the pairwise steps
   * (2–4) as a DRIVER-RESIDENT KERNEL over the collected banded rows and
   * b-bit signatures — metadata-scale state, the broadcast-parameters
   * idiom — so a trigger costs a row count, one shuffle-free signature
-  * job, the index probe and three concurrent writes, not a dozen
-  * batch-scale shuffle stages. Above the cap the identical semantics run
-  * distributed (spec-asserted equivalent).
+  * job, the index probe and ONE write job (the survivors, filtered in
+  * place from the cached batch), while the driver writes the two index
+  * components beside it with Spark's parquet writer and no job — not a
+  * dozen batch-scale shuffle stages. Above the cap the identical
+  * semantics run distributed (spec-asserted equivalent).
   *
   * == Incremental index layout ==
   *
@@ -350,6 +354,21 @@ object DedupStreams {
       zip_with(sa, sb, (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, m) => acc + m).cast("double") / lit(NumPerms)
 
+  /** Rows whose `doc_id` is not in `dropped` — the anti-join against
+    * the dropped set as one filter, null ids kept as the anti-join keeps
+    * them. `InSet` holds the set as a reference object outside the
+    * generated code, so every trigger reuses one compiled filter; an
+    * `isin` of literals would inline the ids below the OptimizeIn
+    * threshold and recompile per trigger.
+    */
+  private def notDropped(dropped: Set[Long]): Column = {
+    import org.apache.spark.sql.catalyst.expressions.InSet
+    import org.apache.spark.sql.graft.ColumnBridge
+    val id = col("doc_id").cast("long")
+    id.isNull || !ColumnBridge.toColumn(
+      InSet(ColumnBridge.toExpression(id), dropped.map(d => d: Any)))
+  }
+
   /** Index listing/epoch selection lives in [[graft.operators
     * .SignatureIndex]] (the shared on-disk layout — a batch-built index
     * seeds a stream, a stream-built index serves batch probes); this is
@@ -419,10 +438,11 @@ object DedupStreams {
     val bodyT0 = System.nanoTime()
     val phases = scala.collection.mutable.ListBuffer.empty[(String, Long)]
     val sizes = scala.collection.mutable.ListBuffer.empty[(String, Long)]
+    // synchronized: the survivor write times itself from a Future
     def phase[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime()
       val r = f
-      phases += name -> ((System.nanoTime() - t0) / 1000000)
+      phases.synchronized { phases += name -> ((System.nanoTime() - t0) / 1000000) }
       r
     }
     // cached for the trigger's duration: the source frame is otherwise
@@ -570,14 +590,9 @@ object DedupStreams {
           log.info(s"dedupBatch($batchId): dropped ${dropped.size} near-duplicate doc(s)")
         dropped.toSet
       }
-      def writeOut(dropped: Set[Long]): DataFrame = {
-        // anti-join against the (small) dropped set; per-batch overwrite
-        // partitions make a foreachBatch replay idempotent
-        val droppedDf = broadcast(dropped.toSeq.toDF("doc_id"))
-        cachedBatch.join(droppedDf, Seq("doc_id"), "left_anti")
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        droppedDf
-      }
+      def writeOut(dropped: Set[Long]): Unit =
+        phase("write_survivors")(cachedBatch.filter(notDropped(dropped))
+          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId"))
 
       if (nRows <= driverBatchCap) {
         // ---------------- driver-resident batch kernel ----------------
@@ -865,33 +880,44 @@ object DedupStreams {
         // exactly. Single-file local writes: one file per batch per
         // table, not shuffle-partition many — the per-trigger probe scan
         // is file-count-bound at this scale, not byte-bound.
-        val (admitted, membersDf, sigsDf) = phase("admit_prep") {
-          val adm: Seq[(Int, Long, Long)] = bandedLocal.iterator
+        val admitted: Seq[(Int, Long, Long)] = phase("admit_prep") {
+          bandedLocal.iterator
             .filter(t => !dropped.contains(t._3)).toSeq
             .groupBy(t => (t._1, t._2)).iterator.flatMap { case ((band, bkey), rows) =>
               val room = bucketCap - occLocal.getOrElse((band, bkey), 0L)
               rows.map(_._3).sorted.take(math.max(0L, room).toInt)
                 .map(d => (band, bkey, d))
             }.toSeq
-          // signatures only for docs reachable from the membership (a doc
-          // admitted to zero buckets can never be probed)
-          (adm, adm.toDF("band", "bkey", "doc_id"),
-            adm.map(_._3).distinct.map(d => (d, sig8Local(d).toSeq))
-              .toDF("doc_id", "sig8"))
         }
         // the three writes are independent (survivors, membership,
-        // signatures) — run them as concurrent jobs; each is individually
-        // idempotent (overwrite of its own batch=<id> dir) so a failure
-        // in any of them fails the trigger and the replay heals all three
+        // signatures). The survivor write is the one Spark job; the index
+        // rows are already on the driver, so the driver writes them as
+        // parquet components meanwhile — sigs before members, the fold
+        // and append order. Each write is individually idempotent
+        // (overwrite of its own batch=<id> dir), so a failure in any of
+        // them fails the trigger and the replay heals all three.
         import scala.concurrent.{Await, Future}
         import scala.concurrent.ExecutionContext.Implicits.global
-        phase("writes")(Await.result(Future.sequence(Seq(
-          Future(writeOut(dropped)),
-          Future(membersDf.coalesce(1).write.mode("overwrite")
-            .parquet(s"$indexDir/members/batch=$batchId")),
-          Future(sigsDf.coalesce(1).write.mode("overwrite")
-            .parquet(s"$indexDir/sigs/batch=$batchId")))),
-          scala.concurrent.duration.Duration.Inf))
+        val survivors = Future(writeOut(dropped))
+        val indexWrites = scala.util.Try {
+          // signatures only for docs reachable from the membership (a doc
+          // admitted to zero buckets can never be probed)
+          phase("write_sigs")(graft.operators.SignatureIndex.writeComponent(
+            spark, s"$indexDir/sigs/batch=$batchId",
+            graft.operators.SignatureIndex.SigsSchema,
+            admitted.iterator.map(_._3).distinct.map(d => InternalRow(
+              d, UnsafeArrayData.fromPrimitiveArray(sig8Local(d))))))
+          phase("write_members")(graft.operators.SignatureIndex.writeComponent(
+            spark, s"$indexDir/members/batch=$batchId",
+            graft.operators.SignatureIndex.MembersSchema,
+            admitted.iterator.map(t => InternalRow(t._1, t._2, t._3))))
+        }
+        // wait for the survivor job even when an index write failed: the
+        // finally below unpersists the cache it reads
+        val survived = scala.util.Try(
+          Await.result(survivors, scala.concurrent.duration.Duration.Inf))
+        indexWrites.get
+        survived.get
         // probe-state update strictly AFTER the members write lands
         // (crash before this point -> rebuild/re-seed covers it; a
         // replay re-put is idempotent for the bloom and heals through
@@ -970,13 +996,13 @@ object DedupStreams {
               indexHits ++ refined.select(col("db")).distinct().as[Long].collect()
             }
           refined.unpersist()
-          val droppedDf = writeOut(dropped)
+          writeOut(dropped)
 
           // admission via a window over BATCH rows only (same semantics as
           // the driver kernel's local form)
           val wAdm = Window.partitionBy(col("band"), col("bkey")).orderBy(col("doc_id"))
           banded
-            .join(droppedDf, Seq("doc_id"), "left_anti")
+            .filter(notDropped(dropped))
             .join(broadcast(occupancy), Seq("band", "bkey"), "left")
             .withColumn("__r", row_number().over(wAdm))
             .filter(col("__r") + coalesce(col("occ"), lit(0)) <= lit(bucketCap))

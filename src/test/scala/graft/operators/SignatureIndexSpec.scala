@@ -319,6 +319,48 @@ class SignatureIndexSpec extends SparkSpec {
     assert(f4 == Set(7100004L), s"append after compact must be probe-visible: $f4")
   }
 
+  test("a driver-written component carries a DataFrame write's parquet schema and row metadata") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    val root = tmpDir("writer")
+    val members = Seq((3, 11L, 7L), (0, -5L, 2L))
+    val sigs = Seq(7L -> Seq(1L, 255L, 0L), 2L -> Seq(4L, 4L, 4L))
+    members.toDF("band", "bkey", "doc_id").coalesce(1).write.parquet(s"$root/frame/members")
+    sigs.toDF("doc_id", "sig8").coalesce(1).write.parquet(s"$root/frame/sigs")
+    // a stale component the driver write must replace, as overwrite does
+    Seq((9, 9L, 9L)).toDF("band", "bkey", "doc_id").write.parquet(s"$root/driver/members")
+    SignatureIndex.writeComponent(spark, s"$root/driver/members", SignatureIndex.MembersSchema,
+      members.iterator.map { case (b, k, d) => InternalRow(b, k, d) })
+    SignatureIndex.writeComponent(spark, s"$root/driver/sigs", SignatureIndex.SigsSchema,
+      sigs.iterator.map { case (d, s) => InternalRow(d, UnsafeArrayData.fromPrimitiveArray(s.toArray)) })
+    val conf = spark.sessionState.newHadoopConf()
+    def footer(dir: String) = {
+      val part = new java.io.File(dir).listFiles().map(_.getPath)
+        .filter(p => p.endsWith(".parquet") && !p.contains("/."))
+      assert(part.length == 1, s"expected one parquet file in $dir: ${part.toSeq}")
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(part.head), conf))
+      try r.getFooter finally r.close()
+    }
+    for (t <- Seq("members", "sigs")) {
+      val (a, b) = (footer(s"$root/frame/$t"), footer(s"$root/driver/$t"))
+      assert(a.getFileMetaData.getSchema == b.getFileMetaData.getSchema,
+        s"$t parquet schema: ${a.getFileMetaData.getSchema} vs ${b.getFileMetaData.getSchema}")
+      val key = "org.apache.spark.sql.parquet.row.metadata"
+      assert(a.getFileMetaData.getKeyValueMetaData.get(key) ==
+        b.getFileMetaData.getKeyValueMetaData.get(key), s"$t row metadata")
+      assert(a.getBlocks.get(0).getColumns.get(0).getCodec ==
+        b.getBlocks.get(0).getColumns.get(0).getCodec, s"$t codec")
+      assert(new java.io.File(s"$root/driver/$t/_SUCCESS").exists, s"$t _SUCCESS")
+      assert(spark.read.parquet(s"$root/driver/$t").collect().toSeq ==
+        spark.read.parquet(s"$root/frame/$t").collect().toSeq, s"$t rows or row order")
+    }
+    assert(!new java.io.File(s"$root/driver").list().exists(_.contains(".tmp-")),
+      "the temp dir outlived its rename")
+  }
+
   test("probing with mismatched derivation params fails loudly") {
     import spark.implicits._
     val corpus = tables.documents.select($"doc_id", $"text").limit(50)

@@ -240,40 +240,149 @@ class DedupStreamsSpec extends SparkSpec {
 
   test("driver-resident and distributed batch kernels agree across the cap boundary") {
     // a fourth batch carrying one id on two rows, a short-text row (no
-    // signature, always retained) and an exact copy of retained doc 4
+    // signature, always retained), an exact copy of retained doc 4 and a
+    // null-id short-text row, which the survivor filter keeps exactly as
+    // an anti-join on doc_id would
     val tail = Seq(
-      8L -> "a genuinely novel late arrival about broadcast joins and salting",
-      8L -> "A SECOND ROW FOR THE SAME ID about skew hints and adaptive plans",
-      9L -> "xy",
-      10L -> "third unrelated document mentioning parquet statistics and pruning"
+      Some(8L) -> "a genuinely novel late arrival about broadcast joins and salting",
+      Some(8L) -> "A SECOND ROW FOR THE SAME ID about skew hints and adaptive plans",
+      Some(9L) -> "xy",
+      Some(10L) -> "third unrelated document mentioning parquet statistics and pruning",
+      None -> "zz"
     ).toDF("doc_id", "text")
     val batches = Seq(Seq(1L, 2L), Seq(3L, 4L), Seq(5L, 6L, 7L))
       .map(ids => corpus.filter(col("doc_id").isin(ids: _*))) :+ tail
-    def drain(dbCap: Long): (Seq[(Long, String)], Seq[(Int, Long, Long)], Seq[(Long, Seq[Long])]) = {
+    def drain(dbCap: Long) = {
       val root = Files.createTempDirectory("dedup_stream_paths").toString
       batches.zipWithIndex.foreach { case (b, i) =>
         DedupStreams.dedupBatch(b, s"$root/out", s"$root/index",
           threshold = 0.7, batchId = i.toLong, driverBatchCap = dbCap)
       }
       val survivors = spark.read.parquet(s"$root/out")
-        .select(col("doc_id"), col("text")).as[(Long, String)].collect().toSeq.sorted
-      val members = spark.read.parquet(s"$root/index/members/batch=*")
-        .select(col("band"), col("bkey"), col("doc_id"))
+        .select(col("doc_id"), col("text")).as[(Option[Long], String)].collect().toSeq.sorted
+      val membersDf = spark.read.parquet(s"$root/index/members/batch=*")
+      val sigsDf = spark.read.parquet(s"$root/index/sigs/batch=*")
+      val members = membersDf.select(col("band"), col("bkey"), col("doc_id"))
         .as[(Int, Long, Long)].collect().toSeq.sorted
-      val sigs = spark.read.parquet(s"$root/index/sigs/batch=*")
-        .select(col("doc_id"), col("sig8"))
+      val sigs = sigsDf.select(col("doc_id"), col("sig8"))
         .as[(Long, Seq[Long])].collect().toSeq.sortBy(_._1)
-      (survivors, members, sigs)
+      // a read-back DataFrame schema is nullable throughout; the schema
+      // each file was written with, nullability and containsNull
+      // included, is the Spark row metadata in its parquet footer. The
+      // tail batch is left out: the distributed spelling's doc_id keeps
+      // the input's nullability (nullable there), the driver writer's
+      // schema is fixed non-null, and both read back alike.
+      def written(table: String): Seq[String] =
+        new java.io.File(s"$root/index/$table").listFiles().toSeq
+          .filter(f => f.getName.startsWith("batch=") && f.getName != "batch=3")
+          .sortBy(_.getName)
+          .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
+          .map { f =>
+            val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                new org.apache.hadoop.fs.Path(f.getPath), spark.sessionState.newHadoopConf()))
+            try r.getFooter.getFileMetaData.getKeyValueMetaData
+              .get("org.apache.spark.sql.parquet.row.metadata")
+            finally r.close()
+          }
+      (survivors, members, sigs,
+        (membersDf.schema, written("members")), (sigsDf.schema, written("sigs")))
     }
-    val (sDriver, mDriver, gDriver) = drain(DedupStreams.DefaultDriverBatchCap)
-    val (sDist, mDist, gDist) = drain(0L) // cap 0: every batch takes the distributed path
+    val (sDriver, mDriver, gDriver, mSchemaDriver, gSchemaDriver) =
+      drain(DedupStreams.DefaultDriverBatchCap)
+    // cap 0: every batch takes the distributed path
+    val (sDist, mDist, gDist, mSchemaDist, gSchemaDist) = drain(0L)
     assert(sDriver == sDist, "survivor rows diverge across the kernel cap")
     assert(mDriver == mDist, "persisted members rows diverge across the kernel cap")
     assert(gDriver == gDist, "persisted sigs rows diverge across the kernel cap")
-    assert(sDriver.map(_._1) == Seq(1L, 2L, 4L, 7L, 8L, 8L, 9L))
+    assert(mSchemaDriver._2.size == 3 && gSchemaDriver._2.size == 3)
+    assert(mSchemaDriver == mSchemaDist,
+      s"members schemas diverge: $mSchemaDriver vs $mSchemaDist")
+    assert(gSchemaDriver == gSchemaDist,
+      s"sigs schemas diverge: $gSchemaDriver vs $gSchemaDist")
+    assert(sDriver.map(_._1) ==
+      Seq(None, Some(1L), Some(2L), Some(4L), Some(7L), Some(8L), Some(8L), Some(9L)))
     // every retained doc with a signature is in the index, once
     assert(gDriver.map(_._1) == Seq(1L, 2L, 4L, 8L))
     assert(mDriver.map(_._3).distinct.sorted == Seq(1L, 2L, 4L, 8L))
+  }
+
+  test("a component write that died before its rename is ignored, replayed and folded away") {
+    // a driver-side component write lands its file in a hidden
+    // `.batch=<id>.tmp-<uuid>` dir and renames it into place; a crash in
+    // between leaves that dir behind. Plant one holding a valid parquet
+    // file with a foreign row under both tables.
+    val batches = Seq(Seq(1L, 2L), Seq(3L, 4L), Seq(5L, 6L, 7L))
+      .map(ids => corpus.filter(col("doc_id").isin(ids: _*))) ++
+      Seq(distinctDocs(Seq(20L)), distinctDocs(Seq(21L)))
+    def run(root: String, store: graft.operators.MembershipStore, ids: Seq[Int]): Unit =
+      ids.foreach(i => DedupStreams.dedupBatch(batches(i), s"$root/out", s"$root/index",
+        threshold = 0.7, batchId = i.toLong, compactEvery = 4, store = Some(store)))
+    // live components only: after a fold the table dir mixes compacted=
+    // and batch= names, which partition discovery cannot read as one
+    def liveTable(root: String, name: String): DataFrame = spark.read.parquet(
+      graft.operators.SignatureIndex.tablePaths(spark, s"$root/index", name): _*)
+    def contents(root: String) = (
+      spark.read.parquet(s"$root/out").select(col("doc_id"), col("text"))
+        .as[(Long, String)].collect().toSeq.sorted,
+      liveTable(root, "members").select(col("band"), col("bkey"), col("doc_id"))
+        .as[(Int, Long, Long)].collect().toSeq.sorted,
+      liveTable(root, "sigs").select(col("doc_id"), col("sig8"))
+        .as[(Long, Seq[Long])].collect().toSeq.sortBy(_._1))
+    val foreignId = 999L
+    val foreignKey = (0, 4242424242L)
+
+    val rootA = Files.createTempDirectory("dedup_tmp_clean").toString
+    val storeA = new graft.operators.InMemoryMembershipStore
+    run(rootA, storeA, 0 to 2)
+
+    val rootB = Files.createTempDirectory("dedup_tmp_crash").toString
+    val idx = s"$rootB/index"
+    val storeB = new graft.operators.InMemoryMembershipStore
+    run(rootB, storeB, 0 to 1)
+    def plant(batch: String): Unit = {
+      Seq((foreignKey._1, foreignKey._2, foreignId)).toDF("band", "bkey", "doc_id")
+        .coalesce(1).write.parquet(s"$idx/members/$batch")
+      Seq((foreignId, Seq.fill(128)(7L))).toDF("doc_id", "sig8")
+        .coalesce(1).write.parquet(s"$idx/sigs/$batch")
+    }
+    plant(".batch=2.tmp-x")
+    // above the next fold's reach: must outlive it
+    plant(".batch=9.tmp-y")
+
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    for (table <- Seq("members", "sigs")) {
+      val dir = new org.apache.hadoop.fs.Path(s"$idx/$table")
+      val fs = dir.getFileSystem(hadoopConf)
+      assert(graft.operators.SignatureIndex.listTable(fs, dir).dirNames ==
+        Seq("batch=0", "batch=1"), s"$table listing sees the temp dir")
+      assert(graft.operators.SignatureIndex.componentNames(spark, idx, table) ==
+        Seq("batch=0", "batch=1"), s"$table component names see the temp dir")
+      assert(!spark.read.parquet(s"$idx/$table").select(col("doc_id")).as[Long]
+        .collect().contains(foreignId), s"a $table table read sees the temp dir")
+    }
+    val fresh = new graft.operators.InMemoryMembershipStore
+    fresh.ensureCovers(spark, idx,
+      graft.operators.SignatureIndex.componentNames(spark, idx, "members").toSet)
+    assert(fresh.bucketMembers(Array(foreignKey)).values.forall(_.isEmpty),
+      "ensureCovers seeded the temp dir's members")
+    assert(fresh.memberSigs(Array(foreignId)).isEmpty,
+      "ensureCovers seeded the temp dir's sigs")
+
+    // the replay of batch 2 lands what an uninterrupted run landed
+    run(rootB, storeB, Seq(2))
+    assert(contents(rootB) == contents(rootA), "replay over a leftover temp dir diverges")
+
+    // batch 4 folds batches 0..3 and deletes the leftover it covers
+    run(rootA, storeA, 3 to 4)
+    run(rootB, storeB, 3 to 4)
+    for (table <- Seq("members", "sigs")) {
+      val names = new java.io.File(s"$idx/$table").list().toSeq
+      assert(names.contains("compacted=3"), s"$table: expected the fold's epoch in $names")
+      assert(!names.contains(".batch=2.tmp-x"), s"$table: the fold left the covered temp dir")
+      assert(names.contains(".batch=9.tmp-y"), s"$table: the fold deleted an uncovered temp dir")
+    }
+    assert(contents(rootB) == contents(rootA), "the fold over a leftover temp dir diverges")
   }
 
   test("write-time bucket admission enforces the cap") {
