@@ -20,7 +20,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * parameters are seeded identically to MinHashLSH.perms, so both
   * formulations produce bit-identical signatures. The reduce loop is
   * MinHashLSH.permuteMin, which the driver-bound per-row kernel
-  * (MinHashLSH.collectSignatures) runs too.
+  * (MinHashLSH.collectWithSignatures) runs too.
   */
 final class MinHashAggregator(numPerms: Int)
     extends Aggregator[Long, Array[Long], Array[Long]] {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** MinHash + LSH banding for near-duplicate candidate generation
@@ -130,7 +131,7 @@ object MinHashLSH {
   /** The permutation loop: folds one base shingle hash `h` (in [0, Prime))
     * into the running signature `buf` — component i keeps the minimum of
     * (h·a_i + b_i) mod Prime over `ab` = [[permParams]]. The one loop
-    * both MinHashAggregator.reduce and [[collectSignatures]] run.
+    * both MinHashAggregator.reduce and [[collectWithSignatures]] run.
     */
   private[operators] def permuteMin(buf: Array[Long], h: Long, ab: Array[Long]): Unit = {
     val numPerms = ab.length / 2
@@ -153,60 +154,107 @@ object MinHashLSH {
     a
   }
 
-  /** Signatures of a driver-bounded frame in ONE narrow job: each row's
-    * signature is computed where the row sits (no exchange, no cache,
-    * no two-stage aggregation plan) and the driver merges a doc_id that
-    * several rows carry by element-wise min. Returns doc_id -> sig,
-    * bit-identical to `signatures(Dedup.charShingles(df, idCol, textCol,
-    * n), numPerms)`: the same length filter and lower() (projected by
-    * Spark, so their semantics are Spark's), the same CharShingles
-    * windows, seed-42 XXH64 taken pmod Prime, and [[permuteMin]]. A row
-    * without a shingle gets no entry, as it gets no shingle row there.
-    * For micro-batch inputs, where the aggregation's exchange and
-    * planning are the whole cost; distributed inputs stay on
-    * [[signatures]].
+  /** One partition's share of [[collectWithSignatures]]: the copied
+    * rows, each row's `cast(id as long)` (null where the id is) and
+    * signature (null where the text gives no shingle), and the rows'
+    * bytes. A partition whose bytes passed the bound carries no rows.
     */
-  private[graft] def collectSignatures(
+  private final case class RowsPart(
+      rows: Array[InternalRow], ids: Array[java.lang.Long], sigs: Array[Array[Long]],
+      bytes: Long)
+
+  /** Every row of a driver-bounded frame with its MinHash signature:
+    * `rows(i)` is a copy of the i-th row in `df`'s schema, `ids(i)` its
+    * id cast to long (null for a null id), and `sigs` maps each id to
+    * the signature of its rows, repeated ids merged by element-wise min.
+    */
+  private[graft] final case class CollectedRows(
+      rows: Array[InternalRow], ids: Array[java.lang.Long], sigs: Map[Long, Array[Long]])
+
+  /** A driver-bounded frame's rows and signatures in ONE narrow job:
+    * each row is copied and its signature computed where the row sits
+    * (no exchange, no cache, no two-stage aggregation plan), and the
+    * driver merges an id that several rows carry by element-wise min.
+    * The signatures are bit-identical to `signatures(Dedup.charShingles(
+    * df, idCol, textCol, n), numPerms)`: the same length filter and
+    * lower() (projected by Spark, so their semantics are Spark's), the
+    * same CharShingles windows, seed-42 XXH64 taken pmod Prime, and
+    * [[permuteMin]]. A row without a shingle comes back without a
+    * signature, as it gets no shingle row there.
+    *
+    * `maxRowBytes` bounds the copied rows' bytes on the driver: a task
+    * stops once its partition passes it, the driver drops what it holds
+    * once the partitions' sum does, and the call returns None. For
+    * micro-batch inputs, where the aggregation's exchange and planning
+    * are the whole cost; distributed inputs stay on [[signatures]].
+    */
+  private[graft] def collectWithSignatures(
       df: DataFrame, idCol: String, textCol: String,
-      numPerms: Int = 128, n: Int = 3): Map[Long, Array[Long]] = {
-    import org.apache.spark.sql.catalyst.expressions.XXH64
+      numPerms: Int = 128, n: Int = 3,
+      maxRowBytes: Long = Long.MaxValue): Option[CollectedRows] = {
+    import org.apache.spark.sql.catalyst.expressions.{UnsafeRow, XXH64}
     import org.apache.spark.sql.graft.CharShingles
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     import org.apache.spark.unsafe.Platform
     df.schema(idCol).dataType match {
       case LongType | IntegerType | ShortType | ByteType => ()
       case t => throw new IllegalArgumentException(
-        s"collectSignatures: $idCol must be an integral id column, got $t")
+        s"collectWithSignatures: $idCol must be an integral id column, got $t")
     }
     val ab = permParams(numPerms)
-    val rows = df.filter(length(col(textCol)) >= n)
-      .select(col(idCol).cast(LongType), lower(col(textCol)))
+    val width = df.schema.length
+    val rdd = df
+      .select(struct(col("*")), col(idCol).cast(LongType),
+        when(length(col(textCol)) >= n, lower(col(textCol))))
       .queryExecution.toRdd
-      .mapPartitions(_.flatMap { row =>
-        val bytes = row.getUTF8String(1).getBytes
-        val sig = Array.fill(numPerms)(Long.MaxValue)
-        var shingled = false
-        CharShingles.foreachShingle(bytes, n) { (start, end) =>
-          val h = XXH64.hashUnsafeBytes(
-            bytes, Platform.BYTE_ARRAY_OFFSET + start, end - start, HashSeed)
-          permuteMin(sig, java.lang.Math.floorMod(h, Prime), ab)
-          shingled = true
+    val perPartition = (it: Iterator[InternalRow]) => {
+      val rows = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+      val ids = scala.collection.mutable.ArrayBuffer.empty[java.lang.Long]
+      val sigs = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
+      var bytes = 0L
+      while (bytes <= maxRowBytes && it.hasNext) {
+        val r = it.next()
+        // a projection's output is an UnsafeRow, so is its nested struct
+        val row = r.getStruct(0, width).asInstanceOf[UnsafeRow].copy()
+        bytes += row.getSizeInBytes
+        val id: java.lang.Long = if (r.isNullAt(1)) null else r.getLong(1)
+        var sig: Array[Long] = null
+        if (!r.isNullAt(2)) {
+          val text = r.getUTF8String(2).getBytes
+          CharShingles.foreachShingle(text, n) { (start, end) =>
+            if (sig == null) sig = Array.fill(numPerms)(Long.MaxValue)
+            val h = XXH64.hashUnsafeBytes(
+              text, Platform.BYTE_ARRAY_OFFSET + start, end - start, HashSeed)
+            permuteMin(sig, java.lang.Math.floorMod(h, Prime), ab)
+          }
+          require(sig == null || id != null, s"collectWithSignatures: null $idCol")
         }
-        if (!shingled) None
-        else {
-          require(!row.isNullAt(0), s"collectSignatures: null $idCol")
-          Some(row.getLong(0) -> sig)
+        rows += row; ids += id; sigs += sig
+      }
+      if (bytes > maxRowBytes) RowsPart(Array.empty, Array.empty, Array.empty, bytes)
+      else RowsPart(rows.toArray, ids.toArray, sigs.toArray, bytes)
+    }
+    // results arrive one partition at a time on the scheduler's thread;
+    // once their sum passes the bound nothing more is kept
+    val parts = new Array[RowsPart](rdd.getNumPartitions)
+    var held = 0L
+    df.sparkSession.sparkContext.runJob(rdd, perPartition, (i: Int, p: RowsPart) => {
+      held += p.bytes
+      if (held > maxRowBytes) parts.indices.foreach(parts(_) = null) else parts(i) = p
+    })
+    if (held > maxRowBytes) None
+    else {
+      val merged = scala.collection.mutable.HashMap.empty[Long, Array[Long]]
+      parts.foreach(p => p.ids.indices.foreach { i =>
+        val sig = p.sigs(i)
+        if (sig != null) merged.get(p.ids(i)) match {
+          case Some(acc) => mergeMin(acc, sig)
+          case None => merged.put(p.ids(i), sig)
         }
       })
-      .collect()
-    val out = scala.collection.mutable.HashMap.empty[Long, Array[Long]]
-    rows.foreach { case (id, sig) =>
-      out.get(id) match {
-        case Some(acc) => mergeMin(acc, sig)
-        case None => out.put(id, sig)
-      }
+      Some(CollectedRows(
+        parts.flatMap(_.rows), parts.flatMap(_.ids), merged.toMap))
     }
-    out.toMap
   }
 
   /** Seed of Spark's xxhash64(), which [[signatures]] and [[bandKeys]]

@@ -180,7 +180,9 @@ object SignatureIndex {
     * only then replaces `dir`: overwrite semantics, so a replayed
     * trigger rewrites its own component exactly like
     * `write.mode("overwrite")`. A crash before the rename leaves only a
-    * hidden temp dir, which [[compact]] deletes once its id is folded.
+    * hidden temp dir. The next write of the same component (a replay)
+    * deletes it first, and [[compact]] deletes one whose id it folds.
+    * One writer per component at a time, as a trigger's replay gives.
     */
   private[graft] def writeComponent(
       spark: SparkSession, dir: String, schema: StructType,
@@ -191,7 +193,11 @@ object SignatureIndex {
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
     val fs = target.getFileSystem(job.getConfiguration)
     val uuid = java.util.UUID.randomUUID().toString
-    val tmp = new Path(target.getParent, s".${target.getName}.tmp-$uuid")
+    val tmpPrefix = s".${target.getName}.tmp-"
+    val tmp = new Path(target.getParent, tmpPrefix + uuid)
+    if (fs.exists(target.getParent))
+      fs.listStatus(target.getParent).map(_.getPath)
+        .filter(_.getName.startsWith(tmpPrefix)).foreach(fs.delete(_, true))
     val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
     val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
       job.getConfiguration,

@@ -34,15 +34,18 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   *     near-dups themselves, not the corpus); everything else is
   *     retained by one filter against the small dropped set.
   *
-  * Batches at or under [[DefaultDriverBatchCap]] run the pairwise steps
-  * (2–4) as a DRIVER-RESIDENT KERNEL over the collected banded rows and
+  * A batch small enough for the driver ([[DriverBatchBytes]] by its
+  * plan's size estimate and by its actual row bytes, at most
+  * [[DefaultDriverBatchCap]] rows) runs the pairwise steps (2–4) as a
+  * DRIVER-RESIDENT KERNEL over its collected rows, banded keys and
   * b-bit signatures — metadata-scale state, the broadcast-parameters
-  * idiom — so a trigger costs a row count, one shuffle-free signature
-  * job, the index probe and ONE write job (the survivors, filtered in
-  * place from the cached batch), while the driver writes the two index
-  * components beside it with Spark's parquet writer and no job — not a
-  * dozen batch-scale shuffle stages. Above the cap the identical
-  * semantics run distributed (spec-asserted equivalent).
+  * idiom. With an attached point-lookup store such a trigger costs ONE
+  * Spark job, a shuffle-free pass that brings every batch row to the
+  * driver with its signature (the inline parquet probe adds its scan
+  * jobs when the bloom passes a key). The driver writes the survivors
+  * and both index components itself with Spark's parquet writer — not
+  * a dozen batch-scale shuffle stages. Any other batch runs the
+  * identical semantics distributed (spec-asserted equivalent).
   *
   * == Incremental index layout ==
   *
@@ -160,19 +163,33 @@ object DedupStreams {
     */
   val DefaultCompactEvery = 16
 
-  /** Batch-doc-count bound for the driver-resident batch kernel — the
+  /** Batch-row bound for the driver-resident batch kernel — the
     * broadcast-parameters shape ([[graft.operators.PageRank]] fast path,
     * same idiom): a micro-batch's banded rows and 128-byte signatures
     * are metadata-scale (~10 MB at this cap), so within-batch pair
     * generation, similarity estimates, greedy resolution and bucket
-    * admission run in plain Scala on the driver, leaving Spark exactly
-    * the distributed work — the index probe scan and the writes. Cuts
-    * ~8 batch-scale shuffle stages (and their fixed latency) out of
-    * every trigger. Above the cap the identical semantics run as the
-    * distributed spelling (asserted equivalent in spec). Aligned with
-    * [[Dedup.MaxExactDocs]].
+    * admission run in plain Scala on the driver, leaving Spark the one
+    * collect job (and, without a point-lookup store, the index probe
+    * scan). Checked on the collected rows, after [[DriverBatchBytes]]
+    * has bounded their bytes. Cuts ~8 batch-scale shuffle stages (and
+    * their fixed latency) out of every trigger. Above the cap the
+    * identical semantics run as the distributed spelling (asserted
+    * equivalent in spec). Aligned with [[Dedup.MaxExactDocs]].
     */
   val DefaultDriverBatchCap: Long = 65536L
+
+  /** Row-byte bound for the driver-resident kernel, the size test
+    * Spark's broadcast rule applies: a batch whose plan estimates more
+    * (`stats.sizeInBytes`; for a foreachBatch micro-batch its source
+    * files' bytes), or gives no estimate, goes distributed without
+    * running a job. The estimate can undercount (compressed parquet,
+    * default per-row widths), so the collect job enforces the bound on
+    * the copied rows themselves. At [[DefaultDriverBatchCap]] rows the
+    * kernel already holds 64 MiB of 64-bit signatures; this bound at
+    * most doubles that, and a batch of ~1 KB documents reaches both
+    * bounds together. Specs lower it to reach both fallbacks.
+    */
+  private[streaming] var DriverBatchBytes: Long = 64L << 20
 
   /** Bound on the refined near-dup pair set [[resolveDropped]]
     * materializes on the driver per trigger. Normal batches sit orders
@@ -361,7 +378,7 @@ object DedupStreams {
     * `isin` of literals would inline the ids below the OptimizeIn
     * threshold and recompile per trigger.
     */
-  private def notDropped(dropped: Set[Long]): Column = {
+  private[streaming] def notDropped(dropped: Set[Long]): Column = {
     import org.apache.spark.sql.catalyst.expressions.InSet
     import org.apache.spark.sql.graft.ColumnBridge
     val id = col("doc_id").cast("long")
@@ -438,22 +455,35 @@ object DedupStreams {
     val bodyT0 = System.nanoTime()
     val phases = scala.collection.mutable.ListBuffer.empty[(String, Long)]
     val sizes = scala.collection.mutable.ListBuffer.empty[(String, Long)]
-    // synchronized: the survivor write times itself from a Future
     def phase[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime()
       val r = f
-      phases.synchronized { phases += name -> ((System.nanoTime() - t0) / 1000000) }
+      phases += name -> ((System.nanoTime() - t0) / 1000000)
       r
     }
-    // cached for the trigger's duration: the source frame is otherwise
-    // re-read by the row count, the signature job AND the survivor
-    // write — three scans of the same micro-batch input
-    val cachedBatch = batch.cache()
-    // the row count is both the emptiness guard and the kernel-cap test
-    // below; rows >= docs, so a batch can only move toward the
-    // (equivalent) distributed spelling
-    val nRows = phase("count")(cachedBatch.count())
-    if (nRows == 0L) { cachedBatch.unpersist(); return }
+    // the kernel's input: every batch row with its signature, from the
+    // trigger's one job — run only when the plan's size estimate fits
+    // the driver (a plan without one reports spark.sql.defaultSizeInBytes,
+    // Long.MaxValue unless a session lowers it; the job's own byte bound
+    // holds either way) and kept only within the row and byte bounds
+    val collected: Option[MinHashLSH.CollectedRows] =
+      if (batch.queryExecution.optimizedPlan.stats.sizeInBytes > DriverBatchBytes) None
+      else {
+        val sc = spark.sparkContext
+        val prevDesc = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(s"dedup.collect batch=$batchId")
+        try phase("collect")(MinHashLSH.collectWithSignatures(
+          batch, "doc_id", "text", NumPerms, maxRowBytes = DriverBatchBytes))
+        finally sc.setLocalProperty("spark.job.description", prevDesc)
+      }
+    val kernelRows = collected.filter(_.rows.length <= driverBatchCap)
+    // the distributed spelling reads its batch several times: cached for
+    // the trigger, and counted for the emptiness guard the collected
+    // rows give the kernel
+    val cachedBatch = if (kernelRows.isDefined) None else Some(batch.cache())
+    if (collected.fold(cachedBatch.get.count() == 0L)(_.rows.isEmpty)) {
+      cachedBatch.foreach(_.unpersist()); return
+    }
     // compact FIRST (before this trigger's index read) so the listing
     // this very batch performs is already bounded. batchId is a pure
     // function of the trigger, so a replayed batch re-runs the same
@@ -480,15 +510,15 @@ object DedupStreams {
         case _ => ()
       }
       try phase("compact")(compact(spark, indexDir, upTo = batchId - 1))
-      catch { case e: Throwable => cachedBatch.unpersist(); throw e }
+      catch { case e: Throwable => cachedBatch.foreach(_.unpersist()); throw e }
     }
 
     // batch signatures: full 64-bit components feed the band keys (full
     // key entropy — 8-bit banding would birthday-collide unrelated docs
     // at billion-doc scale), the 1-byte fold feeds every similarity
     // estimate and the persisted index. Each branch below derives them
-    // its own way: the driver kernel per row in one narrow job, the
-    // distributed spelling as cached frames.
+    // its own way: the driver kernel per row in the collect job above,
+    // the distributed spelling as cached frames.
     // collision-corrected b-bit drop threshold (see scaladoc)
     val tCorr = threshold + (1 - threshold) / 256.0
 
@@ -590,22 +620,18 @@ object DedupStreams {
           log.info(s"dedupBatch($batchId): dropped ${dropped.size} near-duplicate doc(s)")
         dropped.toSet
       }
-      def writeOut(dropped: Set[Long]): Unit =
-        phase("write_survivors")(cachedBatch.filter(notDropped(dropped))
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId"))
-
-      if (nRows <= driverBatchCap) {
+      kernelRows match {
+      case Some(kernel) =>
         // ---------------- driver-resident batch kernel ----------------
-        // (see DefaultDriverBatchCap) — the batch's signatures come to
-        // the driver from ONE narrow job (per-row MinHash where the rows
-        // sit, duplicate ids min-merged on the driver: no shuffle, no
-        // cached frames), band keys are folded locally, and everything
-        // pairwise happens in plain Scala with the EXACT arithmetic of
-        // the distributed spelling below (spec-asserted equivalent
-        // across the cap; MinHashKernelSpec pins the signatures and
-        // keys to MinHashLSH.signatures/bandKeys).
-        val sigLocal: Map[Long, Array[Long]] = phase("sig_collect")(
-          MinHashLSH.collectSignatures(cachedBatch, "doc_id", "text", NumPerms))
+        // (see DefaultDriverBatchCap) — the batch's rows and signatures
+        // came to the driver from the collect job (per-row MinHash where
+        // the rows sit, duplicate ids min-merged on the driver: no
+        // shuffle, no cached frames), band keys are folded locally, and
+        // everything pairwise happens in plain Scala with the EXACT
+        // arithmetic of the distributed spelling below (spec-asserted
+        // equivalent across the cap; MinHashKernelSpec pins the
+        // signatures and keys to MinHashLSH.signatures/bandKeys).
+        val sigLocal: Map[Long, Array[Long]] = kernel.sigs
         val sig8Local: Map[Long, Array[Long]] =
           sigLocal.map { case (id, s) => id -> s.map(_ & 255L) }
         val sigPk: Map[Long, Array[Long]] =
@@ -889,50 +915,44 @@ object DedupStreams {
                 .map(d => (band, bkey, d))
             }.toSeq
         }
-        // the three writes are independent (survivors, membership,
-        // signatures). The survivor write is the one Spark job; the index
-        // rows are already on the driver, so the driver writes them as
-        // parquet components meanwhile — sigs before members, the fold
-        // and append order. Each write is individually idempotent
-        // (overwrite of its own batch=<id> dir), so a failure in any of
-        // them fails the trigger and the replay heals all three.
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val survivors = Future(writeOut(dropped))
-        val indexWrites = scala.util.Try {
-          // signatures only for docs reachable from the membership (a doc
-          // admitted to zero buckets can never be probed)
-          phase("write_sigs")(graft.operators.SignatureIndex.writeComponent(
-            spark, s"$indexDir/sigs/batch=$batchId",
-            graft.operators.SignatureIndex.SigsSchema,
-            admitted.iterator.map(_._3).distinct.map(d => InternalRow(
-              d, UnsafeArrayData.fromPrimitiveArray(sig8Local(d))))))
-          phase("write_members")(graft.operators.SignatureIndex.writeComponent(
-            spark, s"$indexDir/members/batch=$batchId",
-            graft.operators.SignatureIndex.MembersSchema,
-            admitted.iterator.map(t => InternalRow(t._1, t._2, t._3))))
-        }
-        // wait for the survivor job even when an index write failed: the
-        // finally below unpersists the cache it reads
-        val survived = scala.util.Try(
-          Await.result(survivors, scala.concurrent.duration.Duration.Inf))
-        indexWrites.get
-        survived.get
+        // every row is on the driver, so the driver writes all three
+        // components with Spark's parquet writer and no job: the
+        // survivors (the rows notDropped keeps: a null id, or a long id
+        // not dropped), then sigs before members, the fold and append
+        // order. Each write is individually idempotent (overwrite of its
+        // own batch=<id> dir), so a failure in any of them fails the
+        // trigger and the replay heals all three.
+        phase("write_survivors")(graft.operators.SignatureIndex.writeComponent(
+          spark, s"$outDir/batch=$batchId", batch.schema,
+          kernel.rows.indices.iterator
+            .filter(i => kernel.ids(i) == null || !dropped.contains(kernel.ids(i)))
+            .map(i => kernel.rows(i))))
+        // signatures only for docs reachable from the membership (a doc
+        // admitted to zero buckets can never be probed)
+        phase("write_sigs")(graft.operators.SignatureIndex.writeComponent(
+          spark, s"$indexDir/sigs/batch=$batchId",
+          graft.operators.SignatureIndex.SigsSchema,
+          admitted.iterator.map(_._3).distinct.map(d => InternalRow(
+            d, UnsafeArrayData.fromPrimitiveArray(sig8Local(d))))))
+        phase("write_members")(graft.operators.SignatureIndex.writeComponent(
+          spark, s"$indexDir/members/batch=$batchId",
+          graft.operators.SignatureIndex.MembersSchema,
+          admitted.iterator.map(t => InternalRow(t._1, t._2, t._3))))
         // probe-state update strictly AFTER the members write lands
         // (crash before this point -> rebuild/re-seed covers it; a
         // replay re-put is idempotent for the bloom and heals through
         // ensureCovers for a store). Branch-specific: bloom puts on the
         // parquet path, store.put on the KV path.
         afterWrite(admitted)
-      } else {
+      case None =>
         // ---------------- distributed spelling (over-cap) ----------------
         // signatures as cached frames, built only on this path (each is
         // read several times below); a batch this large can still arrive
         // as one file-source partition, so the aggregation is spread
         // 8 ways
+        val input = cachedBatch.get
         val sigSrc =
-          if (cachedBatch.rdd.getNumPartitions < 8) cachedBatch.repartition(8)
-          else cachedBatch
+          if (input.rdd.getNumPartitions < 8) input.repartition(8) else input
         val sigs = MinHashLSH
           .signatures(Dedup.charShingles(sigSrc, "doc_id", "text"), NumPerms)
           .withColumn("sig8", transform(col("sig"), x => x.bitwiseAND(lit(255L))))
@@ -996,7 +1016,8 @@ object DedupStreams {
               indexHits ++ refined.select(col("db")).distinct().as[Long].collect()
             }
           refined.unpersist()
-          writeOut(dropped)
+          input.filter(notDropped(dropped))
+            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
 
           // admission via a window over BATCH rows only (same semantics as
           // the driver kernel's local form)
@@ -1024,7 +1045,7 @@ object DedupStreams {
         }
       }
     } finally {
-      phase("unpersist")(cachedBatch.unpersist())
+      cachedBatch.foreach(_.unpersist())
       prevInFilter match {
         case Some(v) => spark.conf.set(inFilterKey, v)
         case None => spark.conf.unset(inFilterKey)

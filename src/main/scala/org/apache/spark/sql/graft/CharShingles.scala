@@ -54,7 +54,7 @@ object CharShingles {
     * window of the UTF-8 `bytes`, in position order, repeats included;
     * nothing when the string has fewer than n codepoints. The one
     * shingle walk: the expression dedups its windows into an array, the
-    * driver-bound MinHash kernel (MinHashLSH.collectSignatures) hashes
+    * driver-bound MinHash kernel (MinHashLSH.collectWithSignatures) hashes
     * them in place.
     */
   def foreachShingle(bytes: Array[Byte], n: Int)(f: (Int, Int) => Unit): Unit = {

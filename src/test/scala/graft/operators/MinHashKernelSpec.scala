@@ -4,11 +4,12 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The driver-bound per-row MinHash kernel (MinHashLSH.collectSignatures
-  * + bandKeysOf) must give exactly what the distributed operators give:
-  * the same 64-bit signature, hence the same 8-bit fold, and the same
-  * (band, bkey) rows as MinHashLSH.signatures + bandKeys over
-  * Dedup.charShingles.
+/** The driver-bound per-row MinHash kernel (MinHashLSH
+  * .collectWithSignatures + bandKeysOf) must give exactly what the
+  * distributed operators give: the same 64-bit signature, hence the same
+  * 8-bit fold, and the same (band, bkey) rows as MinHashLSH.signatures +
+  * bandKeys over Dedup.charShingles. It must also bring back every input
+  * row unchanged, with its id cast to long, signature or not.
   */
 class MinHashKernelSpec extends SparkSpec {
 
@@ -36,7 +37,7 @@ class MinHashKernelSpec extends SparkSpec {
 
   /** The same, the way the driver kernel derives them. */
   private def kernel(df: DataFrame): Result = {
-    val sigs = MinHashLSH.collectSignatures(df, "doc_id", "text", NumPerms)
+    val sigs = MinHashLSH.collectWithSignatures(df, "doc_id", "text", NumPerms).get.sigs
     val bands = sigs.iterator.flatMap { case (id, s) =>
       MinHashLSH.bandKeysOf(s, Bands, RowsPerBand).zipWithIndex
         .map { case (bkey, band) => (id, band, bkey) }
@@ -53,6 +54,21 @@ class MinHashKernelSpec extends SparkSpec {
       assert(sig(id)._2 == s8, s"sig8 of doc $id differs")
     }
     assert(bands == refBands, "(band, bkey) rows differ")
+    assertRowsReturned(df)
+  }
+
+  /** The collected rows are the input rows, each with its id as
+    * `cast(doc_id as long)` gives it. */
+  private def assertRowsReturned(df: DataFrame): Unit = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    val c = MinHashLSH.collectWithSignatures(df, "doc_id", "text", NumPerms).get
+    val got = c.rows.toSeq.map(r =>
+      CatalystTypeConverters.convertToScala(r, df.schema).asInstanceOf[Row])
+      .zip(c.ids.toSeq.map(Option(_).map(_.longValue)))
+    val want = df.select(col("*"), col("doc_id").cast("long")).collect().toSeq
+      .map(r => Row.fromSeq(r.toSeq.init) -> Option(r.get(r.length - 1)).map(_.asInstanceOf[Long]))
+    assert(got.sortBy(_.toString) == want.sortBy(_.toString), "collected rows differ from the input")
   }
 
   test("per-row kernel equals signatures + bandKeys on the fixture corpus") {
@@ -86,6 +102,15 @@ class MinHashKernelSpec extends SparkSpec {
     val (sig, _) = kernel(edge)
     assert(!sig.contains(4L) && !sig.contains(6L) && !sig.contains(7L) && !sig.contains(8L))
     assert(sig.contains(3L) && sig.contains(5L) && sig.contains(10L))
+    // a null id comes back with its row when its text gives no shingle
+    val nullIds = Seq[(Option[Long], String)](
+      None -> "zz", None -> null, Some(12L) -> "ab", Some(13L) -> "a longer document text")
+      .toDF("doc_id", "text")
+    assertRowsReturned(nullIds)
+    assertRowsReturned(nullIds.repartition(3))
+    val c = MinHashLSH.collectWithSignatures(nullIds, "doc_id", "text", NumPerms).get
+    assert(c.rows.length == 4 && c.ids.count(_ == null) == 2)
+    assert(c.sigs.keySet == Set(13L), s"only doc 13 has a shingle: ${c.sigs.keySet}")
   }
 
   test("per-row kernel accepts int ids and rejects non-integral ones") {
@@ -94,6 +119,19 @@ class MinHashKernelSpec extends SparkSpec {
     assertIdentical(ints)
     val strs = Seq("a" -> "string keyed document").toDF("doc_id", "text")
     intercept[IllegalArgumentException](
-      MinHashLSH.collectSignatures(strs, "doc_id", "text", NumPerms))
+      MinHashLSH.collectWithSignatures(strs, "doc_id", "text", NumPerms))
+  }
+
+  test("the collect gives up past its row-byte bound, in one partition or across several") {
+    val docs = (1L to 8L).map(i => i -> s"document number $i with some text in it").toDF("doc_id", "text")
+    val c = MinHashLSH.collectWithSignatures(docs, "doc_id", "text", NumPerms).get
+    val bytes = c.rows.map(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.UnsafeRow]
+      .getSizeInBytes.toLong).sum
+    for (df <- Seq(docs.coalesce(1), docs.repartition(4))) {
+      assert(MinHashLSH.collectWithSignatures(
+        df, "doc_id", "text", NumPerms, maxRowBytes = bytes).isDefined, "at the bound")
+      assert(MinHashLSH.collectWithSignatures(
+        df, "doc_id", "text", NumPerms, maxRowBytes = bytes - 1).isEmpty, "past the bound")
+    }
   }
 }

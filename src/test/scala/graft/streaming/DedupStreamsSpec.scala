@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import java.nio.file.Files
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Online (incremental) near-dup dedup: the streaming ingest must drop
@@ -250,48 +250,94 @@ class DedupStreamsSpec extends SparkSpec {
       Some(10L) -> "third unrelated document mentioning parquet statistics and pruning",
       None -> "zz"
     ).toDF("doc_id", "text")
+    // int ids: the driver's drop filter must cast them as notDropped
+    // does (14 copies retained doc 2)
+    val intIds = Seq(
+      11 -> "an int keyed document about sort merge joins and spill files",
+      14 -> "completely different content about spark physical plans and shuffles",
+      15 -> "ab"
+    ).toDF("doc_id", "text")
+    // under the lowered byte bound below, these two batches take the
+    // distributed spelling even under the driver row cap: the first by
+    // its row bytes alone (its plan estimates default 20-byte strings),
+    // the second already by its plan's estimate, with no collect job
+    val undercount = distinctDocs(Seq(16L, 17L)).unionByName(
+      Seq(18L -> "third unrelated document mentioning parquet statistics and pruning")
+        .toDF("doc_id", "text"))
+    val overEstimate = distinctDocs(19L to 38L).unionByName(
+      corpus.filter(col("doc_id") === 5L).select(lit(39L).as("doc_id"), col("text")))
     val batches = Seq(Seq(1L, 2L), Seq(3L, 4L), Seq(5L, 6L, 7L))
-      .map(ids => corpus.filter(col("doc_id").isin(ids: _*))) :+ tail
+      .map(ids => corpus.filter(col("doc_id").isin(ids: _*))) ++
+      Seq(tail, intIds, undercount, overEstimate)
+    val collectJobs = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("dedup.collect")).foreach(d => collectJobs.synchronized(collectJobs += d))
+    }
     def drain(dbCap: Long) = {
       val root = Files.createTempDirectory("dedup_stream_paths").toString
-      batches.zipWithIndex.foreach { case (b, i) =>
+      // the distributed spelling drops the probe's bloom state, which
+      // the driver kernel's parquet probe keeps: which path ran
+      val kernelRan = batches.zipWithIndex.map { case (b, i) =>
         DedupStreams.dedupBatch(b, s"$root/out", s"$root/index",
           threshold = 0.7, batchId = i.toLong, driverBatchCap = dbCap)
+        DedupStreams.probeCapacity(s"$root/index").isDefined
       }
-      val survivors = spark.read.parquet(s"$root/out")
-        .select(col("doc_id"), col("text")).as[(Option[Long], String)].collect().toSeq.sorted
-      val membersDf = spark.read.parquet(s"$root/index/members/batch=*")
-      val sigsDf = spark.read.parquet(s"$root/index/sigs/batch=*")
-      val members = membersDf.select(col("band"), col("bkey"), col("doc_id"))
+      // batch by batch: the int-id batch's components carry int ids
+      def perBatch(dir: String, cols: Column*): DataFrame = batches.indices
+        .map(i => spark.read.parquet(s"$dir/batch=$i").select(cols: _*))
+        .reduce(_ unionByName _)
+      val survivors = perBatch(s"$root/out", col("doc_id").cast("long").as("doc_id"), col("text"))
+        .as[(Option[Long], String)].collect().toSeq.sorted
+      val members = perBatch(s"$root/index/members",
+        col("band"), col("bkey"), col("doc_id").cast("long").as("doc_id"))
         .as[(Int, Long, Long)].collect().toSeq.sorted
-      val sigs = sigsDf.select(col("doc_id"), col("sig8"))
+      val sigs = perBatch(s"$root/index/sigs", col("doc_id").cast("long").as("doc_id"), col("sig8"))
         .as[(Long, Seq[Long])].collect().toSeq.sortBy(_._1)
+      val membersDf = spark.read.parquet((0 to 2).map(i => s"$root/index/members/batch=$i"): _*)
+      val sigsDf = spark.read.parquet((0 to 2).map(i => s"$root/index/sigs/batch=$i"): _*)
       // a read-back DataFrame schema is nullable throughout; the schema
       // each file was written with, nullability and containsNull
-      // included, is the Spark row metadata in its parquet footer. The
-      // tail batch is left out: the distributed spelling's doc_id keeps
-      // the input's nullability (nullable there), the driver writer's
-      // schema is fixed non-null, and both read back alike.
-      def written(table: String): Seq[String] =
-        new java.io.File(s"$root/index/$table").listFiles().toSeq
-          .filter(f => f.getName.startsWith("batch=") && f.getName != "batch=3")
-          .sortBy(_.getName)
-          .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
-          .map { f =>
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                new org.apache.hadoop.fs.Path(f.getPath), spark.sessionState.newHadoopConf()))
-            try r.getFooter.getFileMetaData.getKeyValueMetaData
-              .get("org.apache.spark.sql.parquet.row.metadata")
-            finally r.close()
-          }
+      // included, is the Spark row metadata in its parquet footer. Only
+      // batches 0-2 are compared: the distributed spelling writes
+      // doc_id with the input's type and nullability (nullable in the
+      // tail batch, int in the int-id batch), the driver writer's
+      // schema is fixed long non-null, and both read back alike.
+      def written(table: String): Seq[String] = (0 to 2)
+        .flatMap(i => new java.io.File(s"$root/index/$table/batch=$i").listFiles()
+          .filter(_.getName.endsWith(".parquet")))
+        .map { f =>
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+              new org.apache.hadoop.fs.Path(f.getPath), spark.sessionState.newHadoopConf()))
+          try r.getFooter.getFileMetaData.getKeyValueMetaData
+            .get("org.apache.spark.sql.parquet.row.metadata")
+          finally r.close()
+        }
       (survivors, members, sigs,
-        (membersDf.schema, written("members")), (sigsDf.schema, written("sigs")))
+        (membersDf.schema, written("members")), (sigsDf.schema, written("sigs")), kernelRan)
     }
-    val (sDriver, mDriver, gDriver, mSchemaDriver, gSchemaDriver) =
-      drain(DedupStreams.DefaultDriverBatchCap)
-    // cap 0: every batch takes the distributed path
-    val (sDist, mDist, gDist, mSchemaDist, gSchemaDist) = drain(0L)
+    val prevBytes = DedupStreams.DriverBatchBytes
+    DedupStreams.DriverBatchBytes = 600L
+    spark.sparkContext.addSparkListener(listener)
+    val (driver, dist) = try {
+      val d = drain(DedupStreams.DefaultDriverBatchCap)
+      org.apache.spark.sql.graft.ListenerBusHook.drain(spark.sparkContext)
+      // every batch but the over-estimate one ran the collect job
+      assert(collectJobs.toSeq == (0 to 5).map(i => s"dedup.collect batch=$i"),
+        s"collect jobs under the driver cap: $collectJobs")
+      // cap 0: every batch takes the distributed path
+      (d, drain(0L))
+    } finally {
+      DedupStreams.DriverBatchBytes = prevBytes
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val (sDriver, mDriver, gDriver, mSchemaDriver, gSchemaDriver, kDriver) = driver
+    val (sDist, mDist, gDist, mSchemaDist, gSchemaDist, kDist) = dist
+    assert(kDriver == Seq(true, true, true, true, true, false, false),
+      s"paths taken under the driver cap: $kDriver")
+    assert(kDist.forall(!_), s"paths taken under cap 0: $kDist")
     assert(sDriver == sDist, "survivor rows diverge across the kernel cap")
     assert(mDriver == mDist, "persisted members rows diverge across the kernel cap")
     assert(gDriver == gDist, "persisted sigs rows diverge across the kernel cap")
@@ -301,10 +347,116 @@ class DedupStreamsSpec extends SparkSpec {
     assert(gSchemaDriver == gSchemaDist,
       s"sigs schemas diverge: $gSchemaDriver vs $gSchemaDist")
     assert(sDriver.map(_._1) ==
-      Seq(None, Some(1L), Some(2L), Some(4L), Some(7L), Some(8L), Some(8L), Some(9L)))
+      (Seq(None, Some(1L), Some(2L), Some(4L), Some(7L), Some(8L), Some(8L), Some(9L),
+        Some(11L), Some(15L), Some(16L), Some(17L)) ++ (19L to 38L).map(Some(_))))
     // every retained doc with a signature is in the index, once
-    assert(gDriver.map(_._1) == Seq(1L, 2L, 4L, 8L))
-    assert(mDriver.map(_._3).distinct.sorted == Seq(1L, 2L, 4L, 8L))
+    val indexed = Seq(1L, 2L, 4L, 8L, 11L, 16L, 17L) ++ (19L to 38L)
+    assert(gDriver.map(_._1) == indexed)
+    assert(mDriver.map(_._3).distinct.sorted == indexed)
+  }
+
+  test("a driver-kernel trigger runs one described Spark job and restores the description") {
+    val root = Files.createTempDirectory("dedup_one_job").toString
+    val store = new graft.operators.InMemoryMembershipStore
+    def run(b: DataFrame, i: Long): Unit = DedupStreams.dedupBatch(
+      b, s"$root/out", s"$root/index", threshold = 0.7, batchId = i, store = Some(store))
+    val jobs = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.synchronized(jobs += Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("-"))
+    }
+    val sc = spark.sparkContext
+    def jobsOf(f: => Unit): Seq[String] = {
+      org.apache.spark.sql.graft.ListenerBusHook.drain(sc)
+      jobs.synchronized(jobs.clear())
+      f
+      org.apache.spark.sql.graft.ListenerBusHook.drain(sc)
+      jobs.synchronized(jobs.toSeq)
+    }
+    sc.addSparkListener(listener)
+    try {
+      run(corpus.filter(col("doc_id").isin(1L, 2L)), 0L)
+      sc.setJobDescription("outer")
+      assert(jobsOf(run(corpus.filter(col("doc_id").isin(3L, 4L)), 1L)) ==
+        Seq("dedup.collect batch=1"), "a steady-state trigger must run exactly the collect job")
+      assert(sc.getLocalProperty("spark.job.description") == "outer",
+        "the trigger must restore the caller's job description")
+      sc.setJobDescription(null)
+      // an RDD-backed batch has no size estimate: distributed, no collect job
+      val rddBatch = spark.createDataFrame(
+        corpus.filter(col("doc_id").isin(5L, 6L, 7L)).rdd, corpus.schema)
+      val distJobs = jobsOf(run(rddBatch, 2L))
+      assert(distJobs.nonEmpty && !distJobs.exists(_.startsWith("dedup.collect")),
+        s"a batch without a size estimate ran the collect job: $distJobs")
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+    assert(spark.read.parquet(s"$root/out").select(col("doc_id")).as[Long].collect().toSet ==
+      Set(1L, 2L, 4L, 7L))
+  }
+
+  test("a survivor write that died before its rename is ignored and cleared by the replay") {
+    val batches = Seq(Seq(1L, 2L), Seq(3L, 4L), Seq(5L, 6L, 7L))
+      .map(ids => corpus.filter(col("doc_id").isin(ids: _*)))
+    def run(root: String, ids: Seq[Int]): Unit = ids.foreach(i => DedupStreams.dedupBatch(
+      batches(i), s"$root/out", s"$root/index", threshold = 0.7, batchId = i.toLong))
+    def survivors(root: String): Seq[(Long, String)] = spark.read.parquet(s"$root/out")
+      .select(col("doc_id"), col("text")).as[(Long, String)].collect().toSeq.sorted
+    val rootA = Files.createTempDirectory("dedup_out_clean").toString
+    run(rootA, 0 to 2)
+    val rootB = Files.createTempDirectory("dedup_out_crash").toString
+    run(rootB, 0 to 1)
+    // batch 2's survivor write died between its file and its rename
+    val planted = s"$rootB/out/.batch=2.tmp-x"
+    Seq(999L -> "a foreign row that no trigger retained").toDF("doc_id", "text")
+      .coalesce(1).write.parquet(planted)
+    assert(!spark.read.parquet(s"$rootB/out").select(col("doc_id")).as[Long]
+      .collect().contains(999L), "a read of the survivors sees the temp dir")
+    run(rootB, Seq(2))
+    assert(survivors(rootB) == survivors(rootA), "the replay diverges from an uninterrupted run")
+    assert(!new java.io.File(planted).exists(), "the replay left its dead write's temp dir")
+  }
+
+  test("a driver-written survivor component carries a DataFrame write's parquet schema and row metadata") {
+    val root = Files.createTempDirectory("dedup_survivor_footer").toString
+    // the drain's shape: a JSON read, every column nullable, a null id
+    corpus.unionByName(Seq[(Option[Long], String)](None -> "zz").toDF("doc_id", "text"))
+      .coalesce(1).write.json(s"$root/json")
+    val frames = Seq(
+      "local" -> corpus, // doc_id non-null
+      "json" -> spark.read.schema("doc_id LONG, text STRING").json(s"$root/json"))
+    val conf = spark.sessionState.newHadoopConf()
+    def footer(dir: String) = {
+      val part = new java.io.File(dir).listFiles().map(_.getPath)
+        .filter(p => p.endsWith(".parquet") && !p.contains("/."))
+      assert(part.length == 1, s"expected one parquet file in $dir: ${part.toSeq}")
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(part.head), conf))
+      try r.getFooter finally r.close()
+    }
+    for ((name, frame) <- frames) {
+      DedupStreams.dedupBatch(frame, s"$root/$name/out", s"$root/$name/index",
+        threshold = 0.7, batchId = 0)
+      assert(DedupStreams.probeCapacity(s"$root/$name/index").isDefined,
+        s"$name: the batch did not take the driver kernel")
+      // 3 and 6 copy 1 and 2, 5 is a near-copy of 1
+      frame.filter(DedupStreams.notDropped(Set(3L, 5L, 6L))).coalesce(1)
+        .write.parquet(s"$root/$name/frame")
+      val (a, b) = (footer(s"$root/$name/frame"), footer(s"$root/$name/out/batch=0"))
+      assert(a.getFileMetaData.getSchema == b.getFileMetaData.getSchema,
+        s"$name parquet schema: ${a.getFileMetaData.getSchema} vs ${b.getFileMetaData.getSchema}")
+      val key = "org.apache.spark.sql.parquet.row.metadata"
+      assert(a.getFileMetaData.getKeyValueMetaData.get(key) ==
+        b.getFileMetaData.getKeyValueMetaData.get(key), s"$name row metadata")
+      assert(a.getBlocks.get(0).getColumns.get(0).getCodec ==
+        b.getBlocks.get(0).getColumns.get(0).getCodec, s"$name codec")
+      assert(new java.io.File(s"$root/$name/out/batch=0/_SUCCESS").exists, s"$name _SUCCESS")
+      assert(spark.read.parquet(s"$root/$name/out/batch=0").collect().toSeq ==
+        spark.read.parquet(s"$root/$name/frame").collect().toSeq, s"$name rows or row order")
+    }
   }
 
   test("a component write that died before its rename is ignored, replayed and folded away") {
@@ -347,6 +499,8 @@ class DedupStreamsSpec extends SparkSpec {
         .coalesce(1).write.parquet(s"$idx/sigs/$batch")
     }
     plant(".batch=2.tmp-x")
+    // a landed batch's leftover: no replay clears it, the fold must
+    plant(".batch=1.tmp-w")
     // above the next fold's reach: must outlive it
     plant(".batch=9.tmp-y")
 
@@ -369,9 +523,13 @@ class DedupStreamsSpec extends SparkSpec {
     assert(fresh.memberSigs(Array(foreignId)).isEmpty,
       "ensureCovers seeded the temp dir's sigs")
 
-    // the replay of batch 2 lands what an uninterrupted run landed
+    // the replay of batch 2 lands what an uninterrupted run landed and
+    // clears its own leftover
     run(rootB, storeB, Seq(2))
     assert(contents(rootB) == contents(rootA), "replay over a leftover temp dir diverges")
+    for (table <- Seq("members", "sigs"))
+      assert(!new java.io.File(s"$idx/$table/.batch=2.tmp-x").exists,
+        s"$table: the replay left its dead write's temp dir")
 
     // batch 4 folds batches 0..3 and deletes the leftover it covers
     run(rootA, storeA, 3 to 4)
@@ -379,7 +537,7 @@ class DedupStreamsSpec extends SparkSpec {
     for (table <- Seq("members", "sigs")) {
       val names = new java.io.File(s"$idx/$table").list().toSeq
       assert(names.contains("compacted=3"), s"$table: expected the fold's epoch in $names")
-      assert(!names.contains(".batch=2.tmp-x"), s"$table: the fold left the covered temp dir")
+      assert(!names.contains(".batch=1.tmp-w"), s"$table: the fold left the covered temp dir")
       assert(names.contains(".batch=9.tmp-y"), s"$table: the fold deleted an uncovered temp dir")
     }
     assert(contents(rootB) == contents(rootA), "the fold over a leftover temp dir diverges")
