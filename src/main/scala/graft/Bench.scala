@@ -522,22 +522,13 @@ object Bench {
         .schema("doc_id LONG, text STRING")
         .option("maxFilesPerTrigger", "1")
         .json(s"$in/*")
-      // SPARK_GRAFT_DRAIN_STORE selects the per-trigger index-probe
-      // path: "kv" (default) routes it through the in-memory
-      // point-lookup MembershipStore — the external-KV seam, probe cost
-      // independent of index size — "parquet" keeps the bloom-pruned
-      // epoch scan. Identical survivors either way (spec-pinned;
-      // 400-batch artifacts: retained 128214 on both, p50 942 ms kv vs
-      // 2126 ms parquet). The artifact records which path ran.
-      val storeKind = sys.env.getOrElse("SPARK_GRAFT_DRAIN_STORE", "kv")
-      val store = storeKind match {
-        case "kv" => Some(new graft.operators.InMemoryMembershipStore)
-        case _ => None
-      }
+      // the stream's store is created here so its size lands in the
+      // artifact ("store":"kv" names the in-memory point-lookup probe)
+      val store = new graft.operators.InMemoryMembershipStore
       val t0 = System.nanoTime()
       val q = graft.streaming.DedupStreams.ingest(
         stream, tmp.resolve("out").toString, tmp.resolve("index").toString,
-        tmp.resolve("ckpt").toString, store = store)
+        tmp.resolve("ckpt").toString, store = Some(store))
       val finished = q.awaitTermination(2400000L)
       val dt = (System.nanoTime() - t0) / 1e9
       if (!finished) {
@@ -605,11 +596,9 @@ object Bench {
           s"[bench:drain] near-dedup $nDocs docs -> $retained retained in $sec s " +
             s"(${batchMs.size} batches, p50 ${p50(batchMs)} ms, max ${batchMs.max} ms, " +
             s"2nd-half/1st-half p50 ratio $rs)")
-        val storeStat = store.map { s =>
-          val st = s.stats
-          s"""{"entries":${st.entries},"sigs":${st.sigs},"bytes":${st.approxBytes}}"""
-        }.getOrElse("null")
-        s"""{"docs":$nDocs,"retained":$retained,"sec":$sec,"store":"$storeKind","store_stats":$storeStat,"batches":${batchMs.size},""" +
+        val st = store.stats
+        val storeStat = s"""{"entries":${st.entries},"sigs":${st.sigs},"bytes":${st.approxBytes}}"""
+        s"""{"docs":$nDocs,"retained":$retained,"sec":$sec,"store":"kv","store_stats":$storeStat,"batches":${batchMs.size},""" +
           s""""batch_p50_ms":${p50(batchMs)},"batch_max_ms":${batchMs.max},""" +
           s""""p50_first_half_ms":${p50(h1)},"p50_second_half_ms":${p50(h2)},""" +
           s""""slope_ratio":$rs,"quartile_p50_ms":[${quart.mkString(",")}],""" +

@@ -119,7 +119,7 @@ object Decontamination {
       threshold: Double,
       cfg: SignatureIndex.Config = SignatureIndex.Config(),
       excludeBatch: Option[Long] = None,
-      store: Option[MembershipStore] = None): DataFrame =
+      store: Option[InMemoryMembershipStore] = None): DataFrame =
     SignatureIndex.probeNearDuplicateIds(
       corpus.sparkSession, indexDir, corpus, batch, idCol, textCol, threshold, cfg,
       excludeBatch, store)

@@ -2,68 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** The external-KV probe seam the 100 TB drain story names: a
-  * point-lookup interface over the signature index's two tables —
-  * bucket-keyed membership `(band, bkey) -> member doc ids` and
-  * doc-keyed b-bit signatures `doc_id -> packed sig8` — both
-  * append-only, which is what makes the schema a KV schema
-  * ([[SignatureIndex]] layout scaladoc).
-  *
-  * Until round 9 this interface was only DOCUMENTED: the streaming
-  * drain's one residual corpus-proportional per-trigger term was the
-  * mandatory bloom-pruned epoch scan (probe_collect, measured 451→543
-  * ms across a 2x index growth), and the declared answer — "on a
-  * cluster the same two tables sit behind a key-value/state-store
-  * interface" — had no code. This trait is that seam, with two
-  * implementations:
-  *
-  *  - [[ParquetMembershipStore]] (a): point lookups against the
-  *    persisted parquet epochs — the pushed-In pruned scan, i.e. the
-  *    columnar approximation of the point lookup. Stateless; every
-  *    probe re-lists, so it is always current. The streaming driver
-  *    kernel's inline path ([[graft.streaming.DedupStreams]] with
-  *    store = None) is the FUSED spelling of this same store (adds the
-  *    driver-resident bloom gate and cross-trigger epoch cache); this
-  *    class is the trait-shaped form batch probes and equivalence
-  *    specs compose with.
-  *  - [[InMemoryMembershipStore]] (b): a true point-lookup store —
-  *    open-addressing long-keyed hash over primitive arrays, O(1) per
-  *    bucket key, cost independent of index size. Volatile
-  *    write-through cache over the durable parquet layout: admissions
-  *    are `put` after their parquet write lands, recovery re-seeds
-  *    from the index dirs (the same crash contract as the drain's
-  *    bucket-key bloom). On a real cluster this impl's role is played
-  *    by an external KV/state store; the interface and the write-
-  *    through discipline are identical.
-  *
-  * Correctness contract (spec-pinned in MembershipStoreSpec): for the
-  * same index state, both impls — and the fused inline path — produce
-  * IDENTICAL bucket-member sets and signature maps, hence identical
-  * near-duplicate flag sets. The store affects WORK, never results.
+/** Shared pieces of the signature index's point-lookup probe
+  * ([[InMemoryMembershipStore]]): the packed b-bit signature layout, its
+  * SWAR agreement kernel, and the store's capacity ledger row.
   */
-trait MembershipStore {
-
-  /** Distinct member doc ids of each probed bucket, present keys only.
-    * Bounded by the write-side bucket cap times the key count — never
-    * corpus-proportional.
-    */
-  def bucketMembers(keys: Array[(Int, Long)]): Map[(Int, Long), Array[Long]]
-
-  /** Packed b-bit signatures ([[MembershipStore.packSig8]] layout) for
-    * the given member ids (present ids only).
-    */
-  def memberSigs(ids: Array[Long]): Map[Long, Array[Long]]
-
-  /** Write-through of one trigger's admissions, called strictly AFTER
-    * the durable parquet write of `batch=<id>` lands (a crash between
-    * the two is healed by re-seeding — same ordering contract as the
-    * drain's bloom update). Idempotent per batchId for replays.
-    * Vacuous for stores whose probes read the durable layout directly.
-    */
-  def put(batchId: Long, members: Seq[(Int, Long, Long)],
-      sigsPk: Map[Long, Array[Long]]): Unit
-}
-
 object MembershipStore {
 
   /** Capacity ledger row for one in-memory store: membership entries,
@@ -76,28 +18,13 @@ object MembershipStore {
     */
   final case class StoreStats(entries: Int, sigs: Int, approxBytes: Long)
 
-  /** Per-SCAN bound on pushed In-predicate literals (the parquet-mr
-    * nested-OR stack bound — see DedupStreams.MaxProbeKeyLiterals). A
-    * probe past the bound is CHUNKED into ceil(n/1024) pruned scans
-    * unioned into one job — every branch keeps its pushed filter, so
-    * collected bytes stay O(hits) at ANY key count.
+  /** Bound on the pushed In-predicate literals of one pull scan: parquet-mr
+    * evaluates a pushed In as a left-nested OR chain whose recursion depth
+    * is the literal count (1024 evaluates fine on this JVM, 2048
+    * overflows the scan task's stack). A pull past it filters through a
+    * broadcast semi-join instead.
     */
   private[operators] val MaxInLiterals = 1024
-
-  /** Union of per-chunk pushed-In pruned scans over `lits` values of
-    * `keyCol` — never an unfiltered scan, never more than
-    * [[MaxInLiterals]] literals in any one scan branch. Shared by the
-    * parquet store's point lookups and the in-memory store's lazy
-    * pull-through seeding.
-    */
-  private[operators] def prunedScan(
-      src0: org.apache.spark.sql.DataFrame, keyCol: String,
-      lits: Array[Long]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
-    lits.grouped(MaxInLiterals)
-      .map(ch => src0.filter(col(keyCol).isin(ch.map(Long.box).toSeq: _*)))
-      .reduce(_ union _)
-  }
 
   /** Pack a b-bit (8-bit fold) signature — `sig` holds one byte-range
     * component per long — into sig.length/8 longs, 8 components per
@@ -135,107 +62,56 @@ object MembershipStore {
   }
 }
 
-/** Impl (a): point lookups as bloom-free pushed-In pruned scans of the
-  * persisted index (the fused streaming path adds a driver bloom in
-  * front of exactly this scan). `excludeBatch` mirrors the trigger's
-  * own-partition exclusion. Stateless — each call re-lists the index,
-  * so out-of-band appends and folds are always visible.
-  */
-final class ParquetMembershipStore(
-    spark: SparkSession, indexDir: String,
-    val excludeBatch: Option[Long] = None) extends MembershipStore {
-  import org.apache.spark.sql.functions._
-
-  /** Chunked pushed-In pruned scan — see [[MembershipStore.prunedScan]]
-    * (hoisted there in r13 so the in-memory store's lazy pull-through
-    * shares it; the r9 history note stands: dropping the filter past
-    * the 1024-literal bound and collecting the full index is the exact
-    * anti-pattern this store exists to avoid). private[operators]:
-    * MembershipStoreSpec pins the every-branch-filtered plan shape at
-    * >1024 keys.
-    */
-  private[operators] def prunedScan(
-      src0: org.apache.spark.sql.DataFrame, keyCol: String,
-      lits: Array[Long]): org.apache.spark.sql.DataFrame =
-    MembershipStore.prunedScan(src0, keyCol, lits)
-
-  override def bucketMembers(
-      keys: Array[(Int, Long)]): Map[(Int, Long), Array[Long]] = {
-    val paths = SignatureIndex.tablePaths(spark, indexDir, "members", excludeBatch)
-    if (paths.isEmpty || keys.isEmpty) return Map.empty
-    val keySet = keys.toSet
-    val bkeys = keys.map(_._2).distinct
-    val src0 = spark.read.parquet(paths: _*)
-    prunedScan(src0, "bkey", bkeys)
-      .select(col("band"), col("bkey"), col("doc_id"))
-      .collect()
-      .map(r => ((r.getInt(0), r.getLong(1)), r.getLong(2)))
-      .filter(t => keySet.contains(t._1))
-      .groupBy(_._1)
-      .map { case (k, vs) => k -> vs.map(_._2).distinct.sorted }
-  }
-
-  override def memberSigs(ids: Array[Long]): Map[Long, Array[Long]] = {
-    val paths = SignatureIndex.tablePaths(spark, indexDir, "sigs", excludeBatch)
-    if (paths.isEmpty || ids.isEmpty) return Map.empty
-    val idSet = ids.toSet
-    val src0 = spark.read.parquet(paths: _*)
-    prunedScan(src0, "doc_id", ids.distinct)
-      .select(col("doc_id"), col("sig8"))
-      .collect()
-      .filter(r => idSet.contains(r.getLong(0)))
-      .map(r => r.getLong(0) ->
-        MembershipStore.packSig8(r.getSeq[Long](1).toArray))
-      .toMap
-  }
-
-  /** The parquet batch write IS this store's write — nothing to do. */
-  override def put(batchId: Long, members: Seq[(Int, Long, Long)],
-      sigsPk: Map[Long, Array[Long]]): Unit = ()
-}
-
-/** Impl (b): the in-memory point-lookup store. Data layout is
-  * primitive-array, not boxed-collection, because at drain scale the
-  * membership holds ~#docs x bands entries (12.8M at the 400k-doc
-  * horizon): an open-addressing hash from bkey to the head of a chain
-  * over three parallel growable arrays (band, mid, next). A probed key
-  * costs one hash probe plus its chain — independent of index size,
-  * which is exactly the flat-probe property the drain needs.
+/** The signature index's point-lookup probe: bucket-keyed membership
+  * `(band, bkey) -> member doc ids` and doc-keyed b-bit signatures
+  * `doc_id -> packed sig8`, the index's two append-only tables
+  * ([[SignatureIndex]] layout scaladoc) held as a key-value view. It is
+  * the one index probe of the streaming dedup trigger
+  * ([[graft.streaming.DedupStreams]]) and the store-backed candidate
+  * probe of [[SignatureIndex.probeNearDuplicateIds]].
+  *
+  * Data layout is primitive-array, not boxed-collection, because at
+  * drain scale the membership holds ~#docs x bands entries (12.8M at
+  * the 400k-doc horizon): an open-addressing hash from bkey to the head
+  * of a chain over three parallel growable arrays (band, mid, next). A
+  * probed key costs one hash probe plus its chain — independent of
+  * index size.
   *
   * Durability: none, by design — this is the volatile write-through
-  * view of the parquet index (the durable layout), with the bloom's
-  * recovery contract generalized: [[ensureCovers]] is called by the
-  * consumer with the CURRENT live component listing before each probe;
-  * novel components (first attach, out-of-band appends, a distributed-
-  * path trigger's write) are seeded incrementally, and a fold the
-  * consumer did NOT certify as its own content-preserving rename
-  * triggers a full rebuild (clear + re-seed), never a silent miss.
-  * On a cluster the same interface fronts a real KV store and
-  * ensureCovers becomes a no-op (the store is the source of truth for
-  * probes; parquet remains the analytical copy).
+  * view of the parquet index (the durable layout). Admissions are
+  * [[put]] after their parquet write lands; [[ensureCovers]] is called
+  * by the consumer with the CURRENT live component listing before each
+  * probe. Novel components (first attach, out-of-band appends, a
+  * distributed-spelling trigger's write, a write whose put a crash
+  * lost) are seeded incrementally, and a fold the consumer did NOT
+  * certify as its own content-preserving rename triggers a full rebuild
+  * (clear + re-seed), never a silent miss. On a cluster the same
+  * interface fronts a real KV store and ensureCovers becomes a no-op
+  * (the store is the source of truth for probes; parquet remains the
+  * analytical copy). Results never depend on the store's history: a
+  * fresh store seeded from the same index answers every lookup the
+  * same (MembershipStoreSpec).
   *
-  * `lazySeed = true` (r12 verdict item 5) replaces the first attach's
-  * full-index seed with PARTITION-PRUNED PULL-THROUGH: ensureCovers
-  * only records which components exist, and each probe pulls its OWN
-  * uncovered bucket keys / member ids from those components via the
-  * shared chunked pushed-In pruned scan ([[MembershipStore.prunedScan]]
-  * — O(hits) collected bytes at any key count), caching positives AND
-  * negatives so warm re-probes stay point-lookup-only. Residency drops
-  * from O(retained corpus) to O(probe working set) — the figure the
-  * bench's store_bytes ledger now reports for the seeded gates — and
-  * the seed cost moves off the first probe's critical path in
-  * proportion to how little of the index it touches. Later NOVEL
-  * components (out-of-band append batches — batch-sized by the index's
-  * refresh contract) still seed eagerly, which keeps cached negative
-  * results coherent: a pulled "absent" key can only gain members
-  * through an eagerly-seeded append or this store's own write-through
-  * put. After an uncertified fold the store clears and re-attaches
-  * lazily; after [[resyncAfterFold]] the folded components become the
-  * lazy pull source — re-pulling a key that already has resident
-  * entries is harmless because the read paths dedup member ids and
-  * signature puts are idempotent.
+  * `lazySeed = true` replaces the first attach's full-index seed with
+  * PARTITION-PRUNED PULL-THROUGH: ensureCovers only records which
+  * components exist, and each probe pulls its OWN uncovered bucket keys
+  * / member ids from those components ([[pullScan]] — O(hits)
+  * collected bytes at any key count), caching positives AND negatives
+  * so warm re-probes stay point-lookup-only. Residency drops from
+  * O(retained corpus) to O(probe working set) — the figure the bench's
+  * store_bytes ledger reports for the seeded gates — and the seed cost
+  * moves off the first probe's critical path in proportion to how
+  * little of the index it touches. Later NOVEL components (out-of-band
+  * append batches — batch-sized by the index's refresh contract) still
+  * seed eagerly, which keeps cached negative results coherent: a pulled
+  * "absent" key can only gain members through an eagerly-seeded append
+  * or this store's own write-through put. After an uncertified fold the
+  * store clears and re-attaches lazily; after [[resyncAfterFold]] the
+  * folded components become the lazy pull source — re-pulling a key
+  * that already has resident entries is harmless because the read
+  * paths dedup member ids and signature puts are idempotent.
   */
-final class InMemoryMembershipStore(lazySeed: Boolean = false) extends MembershipStore {
+final class InMemoryMembershipStore(lazySeed: Boolean = false) {
   import org.apache.spark.sql.functions.col
 
   // ---- membership: open-addressing bkey -> chain head over parallel arrays
@@ -251,8 +127,7 @@ final class InMemoryMembershipStore(lazySeed: Boolean = false) extends Membershi
   // ---- signatures: doc_id -> packed sig8
   private val sigMap = new java.util.HashMap[java.lang.Long, Array[Long]]()
 
-  /** Live member-component dir names this store covers (the bloom's
-    * `known` discipline). */
+  /** Live member-component dir names this store covers. */
   @volatile private var known: Set[String] = Set.empty
 
   // ---- lazy pull-through state (lazySeed mode only): components whose
@@ -266,12 +141,10 @@ final class InMemoryMembershipStore(lazySeed: Boolean = false) extends Membershi
 
   /** One pull job over the lazy components for `lits` values of
     * `keyCol`: a point-lookup probe (<= [[MembershipStore.MaxInLiterals]]
-    * keys) rides the pushed-In pruned scan — IO is O(hits) via row-group
-    * stats on the key-sorted epochs; a BATCH-shaped probe past the cap
-    * switches to a single broadcast hash-semi filter scan instead of
-    * ceil(n/1024) full scan branches (the r13 bench caught the chunked
-    * spelling costing ~40 re-reads of the epoch on a 40k-key refresh
-    * probe). Collected bytes are O(hits) on both paths.
+    * keys) is one isin filter scan, which row-group stats on the
+    * key-sorted epochs can prune; a BATCH-shaped probe past the bound
+    * is a single broadcast hash-semi filter scan. Collected bytes are
+    * O(hits) on both paths.
     */
   private def pullScan(
       spark: SparkSession, paths: Seq[String], keyCol: String,
@@ -279,7 +152,7 @@ final class InMemoryMembershipStore(lazySeed: Boolean = false) extends Membershi
     val src = spark.read.parquet(paths: _*)
     val pulled =
       if (lits.length <= MembershipStore.MaxInLiterals)
-        MembershipStore.prunedScan(src, keyCol, lits)
+        src.filter(col(keyCol).isin(lits.map(Long.box).toSeq: _*))
       else {
         import spark.implicits._
         val keys = lits.toSeq.toDF(keyCol)
@@ -367,7 +240,11 @@ final class InMemoryMembershipStore(lazySeed: Boolean = false) extends Membershi
 
   private var tableOccupancy = 0
 
-  override def bucketMembers(
+  /** Distinct member doc ids of each probed bucket, present keys only.
+    * Bounded by the write-side bucket cap times the key count — never
+    * corpus-proportional.
+    */
+  def bucketMembers(
       keys: Array[(Int, Long)]): Map[(Int, Long), Array[Long]] = synchronized {
     pullMembers(keys.map(_._2).distinct.filterNot(k => pulledKeys.contains(k)))
     val out = Map.newBuilder[(Int, Long), Array[Long]]
@@ -386,7 +263,10 @@ final class InMemoryMembershipStore(lazySeed: Boolean = false) extends Membershi
     out.result()
   }
 
-  override def memberSigs(ids: Array[Long]): Map[Long, Array[Long]] = synchronized {
+  /** Packed b-bit signatures ([[MembershipStore.packSig8]] layout) for
+    * the given member ids (present ids only).
+    */
+  def memberSigs(ids: Array[Long]): Map[Long, Array[Long]] = synchronized {
     pullSigs(ids.distinct
       .filterNot(id => sigMap.containsKey(id) || pulledSigs.contains(id)))
     val b = Map.newBuilder[Long, Array[Long]]
@@ -397,7 +277,12 @@ final class InMemoryMembershipStore(lazySeed: Boolean = false) extends Membershi
     b.result()
   }
 
-  override def put(batchId: Long, members: Seq[(Int, Long, Long)],
+  /** Write-through of one trigger's admissions, called strictly AFTER
+    * the durable parquet write of `batch=<id>` lands (a crash between
+    * the two is healed by the next [[ensureCovers]], which seeds the
+    * component). Idempotent per batchId for replays.
+    */
+  def put(batchId: Long, members: Seq[(Int, Long, Long)],
       sigsPk: Map[Long, Array[Long]]): Unit = synchronized {
     members.foreach { case (band, bkey, mid) => insert(band, bkey, mid) }
     sigsPk.foreach { case (id, s) => sigMap.put(id, s); () }
@@ -432,8 +317,7 @@ final class InMemoryMembershipStore(lazySeed: Boolean = false) extends Membershi
     * member + one sig scan over just those dirs); components the store
     * covered that are GONE mean a fold the caller didn't certify with
     * [[resyncAfterFold]] — full rebuild. First attach (known empty)
-    * seeds everything: the one-time O(index) cost the drain's bloom
-    * build already pays today.
+    * seeds everything: a one-time O(index) cost per store.
     */
   def ensureCovers(
       spark: SparkSession, indexDir: String, liveDirs: Set[String]): Unit = synchronized {

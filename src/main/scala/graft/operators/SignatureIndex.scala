@@ -541,7 +541,7 @@ object SignatureIndex {
     */
   private def storeCandidates(
       spark: SparkSession, indexDir: String, batchSigs: DataFrame,
-      cfg: Config, excludeBatch: Option[Long], store: MembershipStore): DataFrame = {
+      cfg: Config, excludeBatch: Option[Long], store: InMemoryMembershipStore): DataFrame = {
     import spark.implicits._
     val batchBanded: Array[(Long, Int, Long)] = MinHashLSH.bandKeys(
       batchSigs, cfg.bands, cfg.rowsPerBand)
@@ -551,21 +551,8 @@ object SignatureIndex {
       s"store-backed probe batch has ${batchBanded.length} banded rows " +
         s"(> $MaxStoreProbeRows) — this is a corpus, not a refresh batch; " +
         "use the frame-join probe (store = None)")
-    store match {
-      case im: InMemoryMembershipStore => im.ensureCovers(
-        spark, indexDir, componentNames(spark, indexDir, "members", excludeBatch).toSet)
-      // A parquet store pins ITS exclusion at construction; the call
-      // site's excludeBatch cannot reach its scans, so a mismatch would
-      // silently probe the excluded batch's own partial rows. Refuse
-      // the divergence instead (the in-memory impl honors the call-site
-      // value through the ensureCovers listing above).
-      case ps: ParquetMembershipStore => require(
-        ps.excludeBatch == excludeBatch,
-        s"store-backed probe: ParquetMembershipStore pinned " +
-          s"excludeBatch=${ps.excludeBatch} but the probe requested " +
-          s"$excludeBatch — construct the store with the probe's exclusion")
-      case _ => ()
-    }
+    store.ensureCovers(
+      spark, indexDir, componentNames(spark, indexDir, "members", excludeBatch).toSet)
     val bm = store.bucketMembers(batchBanded.map(t => (t._2, t._3)).distinct)
     // ONE driver row per probed bucket, members as a packed array,
     // exploded on the executors: the flat (bucket, member) spelling
@@ -603,10 +590,11 @@ object SignatureIndex {
     * only — it is filtered to candidate ids by a semi-join before any
     * shingle is derived.
     *
-    * `store`: route the candidate probe through a [[MembershipStore]]
-    * point lookup instead of the members-frame join — the external-KV
-    * seam. Candidates (and therefore the returned flag set) are
-    * IDENTICAL by the store contract (spec-pinned); only the probe's
+    * `store`: route the candidate probe through an
+    * [[InMemoryMembershipStore]] point lookup instead of the
+    * members-frame join — the external-KV seam. Candidates (and
+    * therefore the returned flag set) are IDENTICAL by the store
+    * contract (spec-pinned); only the probe's
     * WORK changes: an in-memory store makes it O(batch keys),
     * independent of index size.
     */
@@ -615,7 +603,7 @@ object SignatureIndex {
       corpus: DataFrame, batch: DataFrame,
       idCol: String, textCol: String, threshold: Double,
       cfg: Config = Config(), excludeBatch: Option[Long] = None,
-      store: Option[MembershipStore] = None,
+      store: Option[InMemoryMembershipStore] = None,
       preparedShingles: Option[DataFrame] = None,
       preparedSignatures: Option[DataFrame] = None): DataFrame = {
     validateParams(spark, indexDir, cfg)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Dedup, MinHashLSH}
+import graft.operators.{Dedup, InMemoryMembershipStore, MinHashLSH}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
@@ -39,13 +39,17 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * [[DefaultDriverBatchCap]] rows) runs the pairwise steps (2–4) as a
   * DRIVER-RESIDENT KERNEL over its collected rows, banded keys and
   * b-bit signatures — metadata-scale state, the broadcast-parameters
-  * idiom. With an attached point-lookup store such a trigger costs ONE
-  * Spark job, a shuffle-free pass that brings every batch row to the
-  * driver with its signature (the inline parquet probe adds its scan
-  * jobs when the bloom passes a key). The driver writes the survivors
-  * and both index components itself with Spark's parquet writer — not
-  * a dozen batch-scale shuffle stages. Any other batch runs the
-  * identical semantics distributed (spec-asserted equivalent).
+  * idiom. Its index probe is a set of point lookups in an
+  * [[InMemoryMembershipStore]], the write-through view of the index
+  * (see [[ingest]]), so a steady-state trigger costs ONE Spark job, a
+  * shuffle-free pass that brings every batch row to the driver with
+  * its signature. The driver writes the survivors and both index
+  * components itself with Spark's parquet writer — not a dozen
+  * batch-scale shuffle stages — and then puts the admissions into the
+  * store. Any other batch runs the identical semantics distributed
+  * (spec-asserted equivalent), probing the live index components with
+  * a broadcast join; the store seeds that trigger's components at the
+  * next kernel trigger.
   *
   * == Incremental index layout ==
   *
@@ -62,12 +66,11 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * O(batch + hits): band keys are computed for the BATCH only, the
   * bucket-cap needs no window over the index (occupancy of exactly the
   * buckets the batch touches falls out of the probe join itself), and
-  * the only shuffles are batch-sized aggregations. The index side of
-  * every join is the broadcast-probe scan of a narrow parquet table;
-  * on a cluster deployment the same two tables would sit behind a
-  * key-value/state-store interface for true point lookups — the layout
+  * the only shuffles are batch-sized aggregations. The layout
   * (bucket-keyed membership + doc-keyed signatures, both append-only)
-  * is exactly a KV schema, which is the deliberate seam.
+  * is a key-value schema: the kernel probes it through the in-memory
+  * store, and on a cluster deployment the same two tables would sit
+  * behind an external key-value/state-store interface.
   *
   * Every `compactEvery` batches the `batch=<id>` partition dirs fold —
   * two-level and size-tiered (see [[compact]]): normally a MINOR fold
@@ -109,7 +112,7 @@ object DedupStreams {
     * one byte-range component — into NumPerms/8 longs, 8 components per
     * word. The driver kernel's agreement estimate then compares 8
     * components per XOR instead of one per array slot; exactness is
-    * byte equality either way. (Shared with the point-lookup stores —
+    * byte equality either way. (Shared with the point-lookup store —
     * one packing, one kernel, no drift.)
     */
   private[streaming] def packSig8(sig: Array[Long]): Array[Long] =
@@ -169,8 +172,7 @@ object DedupStreams {
     * are metadata-scale (~10 MB at this cap), so within-batch pair
     * generation, similarity estimates, greedy resolution and bucket
     * admission run in plain Scala on the driver, leaving Spark the one
-    * collect job (and, without a point-lookup store, the index probe
-    * scan). Checked on the collected rows, after [[DriverBatchBytes]]
+    * collect job. Checked on the collected rows, after [[DriverBatchBytes]]
     * has bounded their bytes. Cuts ~8 batch-scale shuffle stages (and
     * their fixed latency) out of every trigger. Above the cap the
     * identical semantics run as the distributed spelling (asserted
@@ -205,134 +207,15 @@ object DedupStreams {
     */
   val MaxDriverPairs: Long = 4L * 1024 * 1024
 
-  /** Literal-count bound for the pushed bkey In-filter on the index
-    * probe: past it the probe reverts to the full members scan (the
-    * pre-bloom shape) rather than planning a multi-thousand-literal
-    * predicate. The bound is a STACK limit, not a taste choice:
-    * parquet-mr evaluates the pushed In as a left-nested OR chain whose
-    * recursion depth equals the literal count — measured on this JVM,
-    * 1024 evaluates fine and 2048 StackOverflows the scan task. Normal
-    * batches sit far below it — only the bloom's true hits plus ~1%
-    * false positives survive the gate.
-    */
-  private val MaxProbeKeyLiterals = 1024
-
-  /** Driver-resident Bloom filter over the index's bucket keys (bkey
-    * already encodes the band — it is xxhash64(band, slice)), the
-    * structure that makes per-trigger index-probe cost O(batch + hits)
-    * in BYTES, not just in rows: a batch bucket key that the bloom
-    * rejects cannot be in the index, so the members scan runs only for
-    * the (few) keys that might hit, with a pushed In-filter that the
-    * bkey-sorted epoch files prune by row-group stats. Without this the
-    * probe re-scanned the whole compacted epoch every trigger — the
-    * +7-16% linear drain-slope term.
-    *
-    * Lifecycle: built from the on-disk members table on first touch
-    * (one-time O(index), amortized over the stream), updated with each
-    * trigger's admitted keys AFTER their write lands (a crash between
-    * write and update is healed by the next rebuild — a missing update
-    * can only happen in a JVM that died, and a fresh JVM rebuilds).
-    * False positives only cost a scan; a false NEGATIVE is impossible
-    * for keys that were put (no eviction, puts precede reads of the
-    * same keys) — load past capacity only degrades the FP rate. Three
-    * events force a rebuild at the next driver-kernel trigger:
-    * (a) `items > capacity` — resized 4x from the tracked count, so
-    * rebuilds are geometric (O(log) over the stream's life, never a
-    * permanently saturated pass-everything filter); (b) the live
-    * listing contains member components the state never covered
-    * (`known`) — an out-of-band writer, e.g. a batch
-    * [[graft.operators.SignatureIndex.build]] seeding this dir after
-    * first touch, whose keys a cached bloom would silently
-    * false-negative; (c) the over-cap distributed path ran (it doesn't
-    * maintain the bloom, so it removes the state). Our own minor/major
-    * compactions only RENAME covered components, so they resync `known`
-    * instead of rebuilding — but only after a pre-compact novelty check
-    * proves nothing out-of-band is about to be folded under our names.
-    */
-  private final class ProbeIndexState(
-      var bloom: org.apache.spark.util.sketch.BloomFilter,
-      var capacity: Long, var items: Long, var known: Set[String])
-  private val probeState =
-    scala.collection.concurrent.TrieMap.empty[String, ProbeIndexState]
-
-  /** Cached columnar copies of the index's STABLE components (the
-    * `compacted=`/`run=` dirs, which change only at folds — every
-    * compactEvery triggers) so the per-trigger probe scans in-memory
-    * batches instead of re-reading and re-decoding the epoch parquet
-    * three times a trigger (occupancy, candidate join, signature
-    * fetch). The fresh `batch=` dirs (at most compactEvery of them,
-    * one file each) stay on the uncached read path and union in. The
-    * cache key is the stable dir-name set: any fold — ours or an
-    * out-of-band writer's — changes it and swaps the cache (old frames
-    * unpersisted). Measured: this is the drain's last corpus-
-    * proportional per-trigger term (quartile p50s 2066→2424 ms over a
-    * 400-batch/400k-doc drain without it).
-    */
-  private final case class EpochCache(
-      key: Set[String], members: DataFrame, sigs: DataFrame)
-  private val epochCache =
-    scala.collection.concurrent.TrieMap.empty[String, EpochCache]
-  private def dropEpochCache(indexDir: String): Unit =
-    epochCache.remove(indexDir).foreach { c =>
-      c.members.unpersist(); c.sigs.unpersist(); ()
-    }
-
-  /** Bloom capacity floor. Production value sized so typical streams
-    * never resize in their first ~30 triggers; the spec that proves the
-    * saturation-resize path (capacity grows 4x, pruning stays active)
-    * lowers it — the path is otherwise only reachable after ~100
-    * thousand-doc triggers.
-    */
-  private[streaming] var MinBloomCapacity: Long = 1L << 20
-  private[streaming] def probeCapacity(indexDir: String): Option[Long] =
-    probeState.get(indexDir).map(_.capacity)
-
-  /** `excludeBatch`: the rebuilding trigger's own about-to-be-overwritten
-    * partition must not feed the bloom (same exclusion the index read
-    * applies). `sizeHint`: skip the count pass when the caller already
-    * tracks the row count (the saturation-resize rebuild) — the count is
-    * footer-cheap (no column pages decoded for a count-only scan) but
-    * free is better than cheap on a per-stream-lifecycle path.
-    */
-  private def rebuildProbeState(
-      spark: SparkSession, indexDir: String,
-      excludeBatch: Option[Long] = None,
-      sizeHint: Option[Long] = None): ProbeIndexState = {
-    val paths = graft.operators.SignatureIndex
-      .tablePaths(spark, indexDir, "members", excludeBatch)
-    if (paths.isEmpty)
-      new ProbeIndexState(
-        org.apache.spark.util.sketch.BloomFilter.create(MinBloomCapacity, 0.01),
-        MinBloomCapacity, 0L, Set.empty)
-    else {
-      val m = spark.read.parquet(paths: _*).select(col("bkey"))
-      val n = sizeHint.getOrElse(m.count())
-      val cap = math.max(MinBloomCapacity, 4 * n)
-      new ProbeIndexState(m.stat.bloomFilter("bkey", cap, 0.01), cap, n, paths.toSet)
-    }
-  }
-
-  /** Bound the state map: each bloom is MBs; a JVM cycling many streams
-    * (bench + specs) must not accumulate them. */
-  private def cacheProbeState(indexDir: String, s: ProbeIndexState): Unit = {
-    if (probeState.size >= 4)
-      probeState.keys.filterNot(_ == indexDir).take(probeState.size - 3)
-        .foreach(probeState.remove)
-    probeState.put(indexDir, s)
-    ()
-  }
-
   /** Start the checkpointed streaming ingest: retained docs land in
     * `outDir` (parquet), their signature index under `indexDir`.
     *
-    * `store`: route the per-trigger index probe through a
-    * [[graft.operators.MembershipStore]] point lookup — the external-KV
-    * seam. The parquet layout is still written (it stays the durable
-    * source of truth and the analytical copy); the store is the
-    * write-through view probes read. With the in-memory impl the
-    * probe's cost is O(batch keys), independent of index size — the
-    * spelling that eliminates the drain's one residual
-    * corpus-proportional term (the bloom-pruned epoch scan).
+    * `store`: the point-lookup view of the index every trigger probes
+    * ([[InMemoryMembershipStore]]). The parquet layout is still written
+    * (it stays the durable source of truth and the analytical copy);
+    * the store is the write-through view probes read, so a probe costs
+    * O(batch keys), independent of index size. `None` means one fresh
+    * store for this stream, seeded from the index at its first trigger.
     */
   def ingest(
       docs: DataFrame,
@@ -341,12 +224,13 @@ object DedupStreams {
       checkpointDir: String,
       threshold: Double = 0.7,
       availableNow: Boolean = true,
-      store: Option[graft.operators.MembershipStore] = None): StreamingQuery = {
+      store: Option[InMemoryMembershipStore] = None): StreamingQuery = {
+    val st = Some(store.getOrElse(new InMemoryMembershipStore))
     val writer = docs.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        dedupBatch(batch.toDF(), outDir, indexDir, threshold, id, store = store)
+        dedupBatch(batch.toDF(), outDir, indexDir, threshold, id, store = st)
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
@@ -399,9 +283,9 @@ object DedupStreams {
   /** Two-level size-tiered compaction — the fold logic lives in
     * [[graft.operators.SignatureIndex.compact]] (shared with batch-
     * refresh indexes, which call it every K appends); the stream
-    * invokes it every `compactEvery` triggers. The probe's epoch cache
-    * keys on the stable dir-name set, so a fold resyncs it at the next
-    * read (see ProbeIndexState scaladoc).
+    * invokes it every `compactEvery` triggers and then resyncs its
+    * store's coverage to the folded names
+    * ([[InMemoryMembershipStore.resyncAfterFold]]).
     */
   private def compact(spark: SparkSession, indexDir: String, upTo: Long): Unit =
     graft.operators.SignatureIndex.compact(spark, indexDir, upTo)
@@ -417,6 +301,10 @@ object DedupStreams {
     * partitions instead of appending duplicates. The CURRENT batch id is
     * excluded from the index read: an interrupted write of this id is
     * about to be overwritten and must not feed its own dedup pass.
+    *
+    * `store`: the probe's point-lookup view of the index (see
+    * [[ingest]]); `None` means a fresh store for this call, seeded from
+    * the index.
     */
   private[graft] def dedupBatch(
       batch: DataFrame, outDir: String, indexDir: String, threshold: Double,
@@ -424,20 +312,10 @@ object DedupStreams {
       bucketCap: Int = MinHashLSH.DefaultBucketCap,
       compactEvery: Int = DefaultCompactEvery,
       driverBatchCap: Long = DefaultDriverBatchCap,
-      store: Option[graft.operators.MembershipStore] = None): Unit = {
+      store: Option[InMemoryMembershipStore] = None): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    // the probe's bkey/doc_id In-filters carry up to MaxProbeKeyLiterals
-    // values; the default threshold (10) would fall back to a min/max
-    // range push, which prunes nothing when probe keys span the key
-    // space. Session conf, restored after the trigger — the bench JVM
-    // shares this session with the registry sweep.
-    val inFilterKey = "spark.sql.parquet.pushdown.inFilterThreshold"
-    val prevInFilter = spark.conf.getOption(inFilterKey)
-    // the override itself is applied as the FIRST statement of the main
-    // try below: its finally is the only restore point, so the
-    // empty-batch early return and any pre-listing failure can never
-    // leak the override onto the shared session
+    val st = store.getOrElse(new InMemoryMembershipStore)
     // per-phase wall timing, printed once per trigger when
     // SPARK_GRAFT_DRAIN_TIMING=1 — the knob that found the fixed
     // per-trigger cost breakdown (see PLANS.md drain notes)
@@ -490,25 +368,12 @@ object DedupStreams {
     // compaction — which is then a no-op.
     val didCompact = compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0
     if (didCompact) {
-      // pre-compact novelty check: if out-of-band member components are
-      // about to be folded, the cached bloom must not survive the fold —
-      // post-fold they'd sit under our own run=/compacted= names and the
-      // post-compact resync below would mask their (un-put) keys forever
-      probeState.get(indexDir).foreach { s =>
-        val pre = graft.operators.SignatureIndex
-          .tablePaths(spark, indexDir, "members", excludeBatch = Some(batchId)).toSet
-        if ((pre -- s.known).nonEmpty) probeState.remove(indexDir)
-      }
-      // same novelty discipline for an attached point-lookup store: an
-      // out-of-band component about to be folded under our names must
-      // not survive the fold as a silently-missing coverage gap
-      store.foreach {
-        case im: graft.operators.InMemoryMembershipStore =>
-          val preNames = graft.operators.SignatureIndex
-            .componentNames(spark, indexDir, "members", excludeBatch = Some(batchId)).toSet
-          if ((preNames -- im.knownPaths).nonEmpty) im.clear()
-        case _ => ()
-      }
+      // pre-compact novelty check: an out-of-band component about to be
+      // folded under our names must not survive the fold as a silently
+      // missing coverage gap of the store
+      val preNames = graft.operators.SignatureIndex
+        .componentNames(spark, indexDir, "members", excludeBatch = Some(batchId)).toSet
+      if ((preNames -- st.knownPaths).nonEmpty) st.clear()
       try phase("compact")(compact(spark, indexDir, upTo = batchId - 1))
       catch { case e: Throwable => cachedBatch.foreach(_.unpersist()); throw e }
     }
@@ -535,73 +400,10 @@ object DedupStreams {
     val live = listing.copy(batches = listing.batches.filter(_ != batchId))
     def tablePaths(table: String): Seq[String] =
       live.dirNames.map(n => s"$indexDir/$table/$n")
-    // our compaction only renamed components the bloom already covers
-    // (pre-compact novelty check above removed the state otherwise) —
-    // resync the covered set instead of forcing an O(index) rebuild
-    if (didCompact) {
-      probeState.get(indexDir).foreach(_.known = tablePaths("members").toSet)
-      // our fold renamed covered components without changing content —
-      // adopt the names (a cleared store ignores this and re-seeds)
-      store.foreach {
-        case im: graft.operators.InMemoryMembershipStore =>
-          im.resyncAfterFold(live.dirNames.toSet)
-        case _ => ()
-      }
-    }
+    // our fold renamed covered components without changing content —
+    // adopt the names (a cleared store ignores this and re-seeds)
+    if (didCompact) st.resyncAfterFold(live.dirNames.toSet)
     try {
-      spark.conf.set(inFilterKey, MaxProbeKeyLiterals.toString)
-      // lazy: the store-backed driver-kernel probe never touches the
-      // index FRAMES (no epoch cache, no parquet scan) — only the
-      // parquet paths (no store / over-cap distributed) force them
-      lazy val frames = phase("frames") {
-        val emptyM = Seq.empty[(Int, Long, Long)].toDF("band", "bkey", "mid")
-        val emptyS = Seq.empty[(Long, Array[Long])].toDF("doc_id", "sig8")
-        if (live.isEmpty) (emptyM, emptyS)
-        else {
-          val stable = live.dirNames.filterNot(_.startsWith("batch=")).toSet
-          val batchNames = live.dirNames.filter(_.startsWith("batch="))
-          def selM(df: DataFrame): DataFrame =
-            df.select(col("band"), col("bkey"), col("doc_id").as("mid"))
-          // stable components via the cross-trigger columnar cache. The
-          // cached frames materialize fully during this trigger's own
-          // aggregation jobs; a lost cached block after a later fold has
-          // deleted the source dirs would need the (local-mode-impossible)
-          // executor loss — on a real cluster pair this cache with
-          // replicated storage or accept the trigger failing to a replay.
-          val cached: Option[EpochCache] =
-            if (stable.isEmpty) { dropEpochCache(indexDir); None }
-            else epochCache.get(indexDir) match {
-              case Some(c) if c.key == stable => Some(c)
-              case _ =>
-                dropEpochCache(indexDir)
-                if (epochCache.size >= 4)
-                  epochCache.keys.filterNot(_ == indexDir)
-                    .take(epochCache.size - 3).foreach(dropEpochCache)
-                val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-                val c = EpochCache(
-                  stable,
-                  selM(spark.read.parquet(
-                    stable.toSeq.map(n => s"$indexDir/members/$n"): _*)).persist(lvl),
-                  spark.read.parquet(
-                    stable.toSeq.map(n => s"$indexDir/sigs/$n"): _*).persist(lvl))
-                epochCache.put(indexDir, c)
-                Some(c)
-            }
-          val freshM =
-            if (batchNames.isEmpty) None
-            else Some(selM(spark.read.parquet(
-              batchNames.map(n => s"$indexDir/members/$n"): _*)))
-          val freshS =
-            if (batchNames.isEmpty) None
-            else Some(spark.read.parquet(
-              batchNames.map(n => s"$indexDir/sigs/$n"): _*))
-          val m = (cached.map(_.members) ++ freshM).reduceOption(_ union _).getOrElse(emptyM)
-          val s = (cached.map(_.sigs) ++ freshS).reduceOption(_ union _).getOrElse(emptyS)
-          (m, s)
-        }
-      }
-      def members: DataFrame = frames._1
-      def idxSigs: DataFrame = frames._2
       // greedy resolution in id order over only the pair-involved ids —
       // a doc in no pair and no index hit is retained unconditionally,
       // and every potential dropper of a pair endpoint is itself a pair
@@ -641,207 +443,35 @@ object DedupStreams {
             MinHashLSH.bandKeysOf(s, Bands, RowsPerBand).zipWithIndex
               .map { case (bkey, band) => (band, bkey, id) }
           })
-        // batch vs index: the driver-resident bucket-key bloom rejects
-        // batch keys that CANNOT be in the index, so most triggers scan
-        // only the handful of possibly-hitting keys (pushed In-filter on
-        // bkey; the bkey-sorted epoch files prune by row-group stats) —
-        // per-trigger probe BYTES stay O(hits) instead of O(index), the
-        // fix for the linear drain-slope term. The probe itself is still
-        // the LocalRelation-broadcast join of the batch's collected band
-        // keys: no exchange job, hits back in ONE narrow-scan job,
-        // occupancy and candidate pairs derived in plain Scala.
-        // Index probe: either through an attached point-lookup store
-        // (the external-KV seam — O(batch keys) per trigger, cost
-        // independent of index size, identical flag set by the
-        // MembershipStore contract) or the inline fused parquet path
-        // (driver bloom gate + pushed-In pruned epoch scan). afterWrite
-        // is the branch's post-durable-write bookkeeping (store.put /
-        // bloom puts), invoked once the parquet batch dirs land.
-        val (occLocal, indexHits, afterWrite): (
-            Map[(Int, Long), Long], Set[Long], Seq[(Int, Long, Long)] => Unit) =
-          store match {
-          case Some(st) =>
-            st match {
-              case im: graft.operators.InMemoryMembershipStore =>
-                phase("store_sync")(
-                  im.ensureCovers(spark, indexDir, live.dirNames.toSet))
-              // a parquet store pins its exclusion at construction and
-              // ignores the trigger's — refuse a store that would probe
-              // this batch's own partial rows (or silently exclude a
-              // different batch)
-              case ps: graft.operators.ParquetMembershipStore => require(
-                ps.excludeBatch.contains(batchId),
-                s"dedupBatch($batchId): attached ParquetMembershipStore " +
-                  s"pins excludeBatch=${ps.excludeBatch}, not this trigger")
-              case _ => ()
-            }
-            val keys = phase("probe_prep")(
-              bandedLocal.map(t => (t._1, t._2)).distinct)
-            val bm = phase("probe_collect")(st.bucketMembers(keys))
-            val occ: Map[(Int, Long), Long] =
-              bm.map { case (k, ms) => k -> ms.length.toLong }
-            val mids = bm.valuesIterator.flatten.toArray.distinct
-            val msig = phase("msig_collect")(st.memberSigs(mids))
-            // driver refine loop: per-bucket member lists are bounded by
-            // the write-side cap, so this sweep is hit-bounded, and the
-            // SWAR agreement kernel is the same one the executors run on
-            // the parquet path — identical hit set, different venue
-            val hits = phase("refine_dist") {
-              val out = scala.collection.mutable.HashSet.empty[Long]
-              bandedLocal.foreach { case (band, bkey, nid) =>
-                if (!out.contains(nid)) bm.get((band, bkey)).foreach { ms =>
-                  val nsig = sigPk(nid)
-                  var i = 0
-                  while (i < ms.length && !out.contains(nid)) {
-                    msig.get(ms(i)).foreach { m =>
-                      if (packedAgreeCount(nsig, m).toDouble / NumPerms >= tCorr)
-                        out += nid
-                    }
-                    i += 1
-                  }
+        // batch vs index through the store's point lookups — O(batch
+        // keys) per trigger, independent of index size. The store first
+        // seeds whatever live component it does not cover yet (first
+        // attach, an out-of-band append, an over-cap trigger's write).
+        phase("store_sync")(st.ensureCovers(spark, indexDir, live.dirNames.toSet))
+        val keys = phase("probe_prep")(bandedLocal.map(t => (t._1, t._2)).distinct)
+        val bm = phase("probe_collect")(st.bucketMembers(keys))
+        val occLocal: Map[(Int, Long), Long] =
+          bm.map { case (k, ms) => k -> ms.length.toLong }
+        val mids = bm.valuesIterator.flatten.toArray.distinct
+        val msig = phase("msig_collect")(st.memberSigs(mids))
+        // driver refine loop: per-bucket member lists are bounded by the
+        // write-side cap, so this sweep is hit-bounded
+        val indexHits: Set[Long] = phase("refine_dist") {
+          val out = scala.collection.mutable.HashSet.empty[Long]
+          bandedLocal.foreach { case (band, bkey, nid) =>
+            if (!out.contains(nid)) bm.get((band, bkey)).foreach { ms =>
+              val nsig = sigPk(nid)
+              var i = 0
+              while (i < ms.length && !out.contains(nid)) {
+                msig.get(ms(i)).foreach { m =>
+                  if (packedAgreeCount(nsig, m).toDouble / NumPerms >= tCorr)
+                    out += nid
                 }
-              }
-              out.toSet
-            }
-            (occ, hits, adm => phase("store_put")(st.put(
-              batchId, adm,
-              adm.map(_._3).distinct.map(d => d -> sigPk(d)).toMap)))
-          case None =>
-        // fetch-or-rebuild (see ProbeIndexState scaladoc): a cached state
-        // is reusable only while it is BOTH under capacity (else resize
-        // 4x — geometric) and covering every live member component (else
-        // an out-of-band writer seeded this dir and a bloom miss on its
-        // keys would be a silent false negative). The saturation resize
-        // reuses the tracked count and skips the rebuild's count pass.
-        val memberPaths = tablePaths("members").toSet
-        val state = probeState.get(indexDir) match {
-          case Some(s) if s.items <= s.capacity && (memberPaths -- s.known).isEmpty => s
-          case old =>
-            val hint = old
-              .filter(s => s.items > s.capacity && (memberPaths -- s.known).isEmpty)
-              .map(_.items)
-            val s = phase("bloom_build")(
-              rebuildProbeState(spark, indexDir, Some(batchId), hint))
-            cacheProbeState(indexDir, s); s
-        }
-        val (probeKeys, bandedDf) = phase("probe_prep") {
-          val bk = bandedLocal.map(_._2).distinct
-          val pk =
-            if (state.items == 0L) Array.empty[Long]
-            else bk.filter(state.bloom.mightContainLong)
-          (pk, spark.createDataset(bandedLocal.toSeq).toDF("band", "bkey", "nid"))
-        }
-        // the raw hit multiset (bucket members x batch docs per bucket)
-        // is the kernel's largest intermediate — background-similar hot
-        // buckets push it to millions of rows per trigger, and its
-        // volume grows with the in-index population a batch collides
-        // with, so NOTHING proportional to it may touch the driver:
-        // occupancy aggregates over the pruned members scan, and the
-        // agreement refine sweeps the hit multiset on the executors
-        // (RDD partition sweep over broadcast signature maps),
-        // collecting only the agreeing batch ids — bounded by batch
-        // size no matter how hot the buckets. Earlier spellings that
-        // collected the multiset (or even its distinct pair set) were
-        // the drain's load-dependent driver term.
-        val src =
-          if (probeKeys.length <= MaxProbeKeyLiterals)
-            members.filter(col("bkey").isin(probeKeys.map(Long.box).toSeq: _*))
-          else members
-        // ONE pruned epoch scan per trigger: the (band,bkey)-restricted
-        // hit frame carries (band, bkey, mid, nid) and is persisted, so
-        // occupancy, candidate-member extraction AND the agreement
-        // sweep all read the materialized hits instead of each
-        // re-scanning the cached epoch. The three independent scans
-        // were the drain's corpus-proportional term at the 400-batch
-        // horizon: candidates/pairs stayed flat while probe_collect/
-        // mids_collect/refine_dist grew ~+340 ms as the cached index
-        // doubled (attribution in PLANS.md). The hit multiset is
-        // hot-bucket-bounded (≤ a few M rows, tens of MB) — persisting
-        // it per trigger is cheap; nothing proportional to it touches
-        // the driver.
-        // Occupancy semantics: the (band,bkey) join restriction equals
-        // the batch-bucket restriction admission reads (bkey embeds the
-        // band — xxhash64(band, slice)); the pre-refactor code already
-        // used the join form whenever the literal cap overflowed.
-        val hitFrame: Option[DataFrame] =
-          if (probeKeys.isEmpty || live.isEmpty) None
-          else Some {
-            val hp = src.join(broadcast(bandedDf), Seq("band", "bkey"))
-              .select(col("band"), col("bkey"), col("mid"), col("nid"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            phase("probe_collect")(hp.count()) // materialize once, timed
-            hp
-          }
-        val occLocal: Map[(Int, Long), Long] = hitFrame match {
-          case None => Map.empty
-          case Some(hp) => phase("occ_agg") {
-            hp.groupBy(col("band"), col("bkey"))
-              .agg(countDistinct(col("mid")).as("occ"))
-              .as[(Int, Long, Long)].collect()
-              .map { case (b, k, o) => (b, k) -> o }.toMap
-          }
-        }
-        val indexHits: Set[Long] = hitFrame match {
-          case None => Set.empty
-          case Some(hp) =>
-            val hitPairs = hp.select(col("nid"), col("mid")).as[(Long, Long)]
-            // candidate member ids and their signatures ARE
-            // driver-bounded (distinct members the batch collides with
-            // ≤ index occupancy of the batch's own buckets); the pair
-            // multiset is not. A column-expression refine was tried and
-            // reverted: the per-word packing expressions made the
-            // generated source huge, and with the probe's In literals
-            // changing every trigger the codegen cache never hits — 10 s
-            // of janino per trigger. Plain-Scala SWAR over broadcast
-            // sig maps in an RDD partition sweep has no codegen at all.
-            val mids: Array[Long] = phase("mids_collect")(
-              hitPairs.toDF().select(col("mid")).distinct().as[Long].collect())
-            val memberSig: Map[Long, Array[Long]] =
-              if (mids.isEmpty) Map.empty
-              else {
-                val midsDf = spark.createDataset(mids.toSeq).toDF("doc_id")
-                // same pruning trade as the members probe: a pushed In
-                // on doc_id lets the doc_id-sorted sig epochs skip row
-                // groups
-                val sigSrc =
-                  if (mids.length <= MaxProbeKeyLiterals)
-                    idxSigs.filter(col("doc_id").isin(mids.map(Long.box).toSeq: _*))
-                  else idxSigs
-                phase("msig_collect")(sigSrc
-                  .join(broadcast(midsDf), Seq("doc_id"))
-                  .select(col("doc_id"), col("sig8"))
-                  .as[(Long, Array[Long])].collect()
-                  .map { case (id, s) => id -> packSig8(s) }.toMap)
-              }
-            phase("refine_dist") {
-              if (memberSig.isEmpty) Set.empty
-              else {
-                val bcM = spark.sparkContext.broadcast(memberSig)
-                val bcN = spark.sparkContext.broadcast(sigPk)
-                val nPerms = NumPerms
-                val t = tCorr
-                try hitPairs.rdd.mapPartitions { it =>
-                  val m = bcM.value; val n = bcN.value
-                  val out = scala.collection.mutable.HashSet.empty[Long]
-                  it.foreach { case (nid, mid) =>
-                    if (!out.contains(nid))
-                      m.get(mid).foreach { ms =>
-                        if (packedAgreeCount(n(nid), ms).toDouble / nPerms >= t)
-                          out += nid
-                      }
-                  }
-                  out.iterator
-                }.collect().toSet
-                finally { bcM.destroy(); bcN.destroy() }
+                i += 1
               }
             }
-        }
-        hitFrame.foreach(_.unpersist(false)) // trigger-scoped, drop eagerly
-        (occLocal, indexHits, adm => phase("bloom_put") {
-          adm.foreach(t => state.bloom.putLong(t._2))
-          state.items += adm.size
-          state.known += s"$indexDir/members/batch=$batchId"
-        })
+          }
+          out.toSet
         }
         if (timing) sizes += ("idxhits" -> indexHits.size.toLong)
 
@@ -938,12 +568,12 @@ object DedupStreams {
           spark, s"$indexDir/members/batch=$batchId",
           graft.operators.SignatureIndex.MembersSchema,
           admitted.iterator.map(t => InternalRow(t._1, t._2, t._3))))
-        // probe-state update strictly AFTER the members write lands
-        // (crash before this point -> rebuild/re-seed covers it; a
-        // replay re-put is idempotent for the bloom and heals through
-        // ensureCovers for a store). Branch-specific: bloom puts on the
-        // parquet path, store.put on the KV path.
-        afterWrite(admitted)
+        // store update strictly AFTER the members write lands (a crash
+        // before this point leaves a component the next ensureCovers
+        // seeds; a replay's re-put is healed the same way)
+        phase("store_put")(st.put(
+          batchId, admitted,
+          admitted.map(_._3).distinct.map(d => d -> sigPk(d)).toMap))
       case None =>
         // ---------------- distributed spelling (over-cap) ----------------
         // signatures as cached frames, built only on this path (each is
@@ -953,17 +583,27 @@ object DedupStreams {
         val input = cachedBatch.get
         val sigSrc =
           if (input.rdd.getNumPartitions < 8) input.repartition(8) else input
+        // ids as long, the type the driver kernel writes and the store
+        // reads (SignatureIndex.MembersSchema/SigsSchema), whatever
+        // integral type the batch carries
         val sigs = MinHashLSH
           .signatures(Dedup.charShingles(sigSrc, "doc_id", "text"), NumPerms)
+          .withColumn("doc_id", col("doc_id").cast("long"))
           .withColumn("sig8", transform(col("sig"), x => x.bitwiseAND(lit(255L))))
           .cache()
         val banded = MinHashLSH.bandKeys(sigs, Bands, RowsPerBand)
           .select(col("doc_id"), col("band"), col("bkey"))
           .cache()
+        // the index side: the live components, read directly (the store
+        // seeds this trigger's write at the next driver-kernel trigger)
+        val members =
+          if (live.isEmpty) Seq.empty[(Int, Long, Long)].toDF("band", "bkey", "mid")
+          else spark.read.parquet(tablePaths("members"): _*)
+            .select(col("band"), col("bkey"), col("doc_id").as("mid"))
+        val idxSigs =
+          if (live.isEmpty) Seq.empty[(Long, Array[Long])].toDF("doc_id", "sig8")
+          else spark.read.parquet(tablePaths("sigs"): _*)
         try {
-          // this path doesn't maintain the probe bloom — invalidate so the
-          // next driver-kernel trigger rebuilds from disk
-          probeState.remove(indexDir)
           // probe the (write-time-capped) membership with the batch's band
           // keys: broadcast the batch side, so the index side is a pruned
           // columnar scan with NO shuffle, NO re-banding, NO window; bucket
@@ -1046,10 +686,6 @@ object DedupStreams {
       }
     } finally {
       cachedBatch.foreach(_.unpersist())
-      prevInFilter match {
-        case Some(v) => spark.conf.set(inFilterKey, v)
-        case None => spark.conf.unset(inFilterKey)
-      }
       if (timing) System.err.println(
         s"[drain-timing] batch=$batchId " +
           phases.map { case (n, ms) => s"$n=${ms}ms" }.mkString(" ") +

@@ -5,11 +5,13 @@ import graft.streaming.DedupStreams
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
-/** The external-KV probe seam: both store impls must be pure WORK
-  * substitutions — identical bucket-member sets, signature maps, flag
-  * sets and stream survivors as the frame-join / fused inline paths,
-  * with the in-memory store's coverage protocol (seed / write-through /
-  * fold-resync / out-of-band rebuild) proven rather than documented.
+/** The point-lookup probe: the in-memory store must be a pure WORK
+  * substitution — identical bucket-member sets, signature maps and flag
+  * sets as the members frame and the frame-join probe, and identical
+  * stream survivors and index rows as the over-cap distributed spelling,
+  * which reads the parquet index directly — with its coverage protocol
+  * (seed / write-through / fold-resync / out-of-band rebuild) proven
+  * rather than documented.
   */
 class MembershipStoreSpec extends SparkSpec {
 
@@ -33,7 +35,7 @@ class MembershipStoreSpec extends SparkSpec {
     (a, b)
   }
 
-  test("parquet and in-memory stores agree with the members frame lookup-for-lookup") {
+  test("in-memory store agrees with the members frame lookup-for-lookup") {
     val (corpus, _) = scenario()
     val dir = tmpDir("agree")
     SignatureIndex.build(corpus, "doc_id", "text", dir)
@@ -50,33 +52,31 @@ class MembershipStoreSpec extends SparkSpec {
       .map { case (k, vs) => k -> vs.map(_._3).distinct.sorted.toSeq }
     val keySet = keys.toSet
     val want = frame.filter(t => keySet.contains(t._1))
-    val pq = new ParquetMembershipStore(spark, dir)
-      .bucketMembers(keys).map { case (k, v) => k -> v.toSeq }
     val im = new InMemoryMembershipStore
     im.ensureCovers(spark, dir,
       SignatureIndex.componentNames(spark, dir, "members").toSet)
     val mm = im.bucketMembers(keys).map { case (k, v) => k -> v.toSeq }
-    assert(pq == want, s"parquet store diverged (${pq.size} vs ${want.size} buckets)")
     assert(mm == want, s"in-memory store diverged (${mm.size} vs ${want.size} buckets)")
-    // signatures: same ids, same packed bytes
+    // signatures: same ids, the packed bytes of the sigs table
     val ids = want.valuesIterator.flatten.toArray.distinct
-    val sp = new ParquetMembershipStore(spark, dir).memberSigs(ids)
+    val sp = SignatureIndex.sigs(spark, dir)
+      .select($"doc_id", $"sig8").as[(Long, Array[Long])].collect()
+      .map { case (id, s) => id -> MembershipStore.packSig8(s) }.toMap
     val sm = im.memberSigs(ids)
-    assert(sp.keySet == ids.toSet && sm.keySet == ids.toSet)
+    assert(sm.keySet == ids.toSet)
     assert(ids.forall(id => java.util.Arrays.equals(sp(id), sm(id))))
   }
 
-  test("probeNearDuplicateIds flags identically through no store / parquet store / in-memory store") {
+  test("probeNearDuplicateIds flags identically through no store / in-memory store") {
     val (corpus, batch) = scenario()
     val dir = tmpDir("probe")
     SignatureIndex.build(corpus, "doc_id", "text", dir)
-    def flags(store: Option[MembershipStore]): Set[Long] = SignatureIndex
+    def flags(store: Option[InMemoryMembershipStore]): Set[Long] = SignatureIndex
       .probeNearDuplicateIds(spark, dir, corpus, batch, "doc_id", "text", 0.7,
         store = store)
       .as[Long].collect().toSet
     val none = flags(None)
     assert(none.nonEmpty, "scenario must flag at least one batch doc")
-    assert(flags(Some(new ParquetMembershipStore(spark, dir))) == none)
     assert(flags(Some(new InMemoryMembershipStore)) == none)
   }
 
@@ -91,28 +91,35 @@ class MembershipStoreSpec extends SparkSpec {
   ).toDF("doc_id", "text")
 
   private def drain(
-      store: Option[MembershipStore], slices: Seq[Seq[Long]],
-      compactEvery: Int = 0): (Set[Long], String) = {
+      store: Option[InMemoryMembershipStore], slices: Seq[Seq[Long]],
+      compactEvery: Int = 0,
+      driverBatchCap: Long = DedupStreams.DefaultDriverBatchCap): (Set[Long], String) = {
     val root = Files.createTempDirectory("graft_store_drain").toString
     val out = s"$root/out"; val idx = s"$root/index"
     slices.zipWithIndex.foreach { case (ids, i) =>
       DedupStreams.dedupBatch(
         streamCorpus.filter(col("doc_id").isin(ids: _*)), out, idx,
-        threshold = 0.7, batchId = i, compactEvery = compactEvery, store = store)
+        threshold = 0.7, batchId = i, compactEvery = compactEvery,
+        driverBatchCap = driverBatchCap, store = store)
     }
     (spark.read.parquet(out).select(col("doc_id")).as[Long].collect().toSet, idx)
   }
 
-  test("store-backed stream drain retains exactly the no-store survivors, and writes the identical index") {
+  test("store-backed stream drain retains exactly the distributed spelling's survivors, and writes the identical index") {
     val slices = Seq(Seq(1L, 2L), Seq(3L, 4L), Seq(5L, 6L, 7L))
-    val (noStore, idxA) = drain(None, slices)
+    // cap 0: every batch takes the distributed spelling, which probes
+    // the parquet index with a broadcast join and never touches a store
+    val (dist, idxA) = drain(None, slices, driverBatchCap = 0L)
     val (kv, idxB) = drain(Some(new InMemoryMembershipStore), slices)
-    assert(noStore == Set(1L, 2L, 4L, 7L))
-    assert(kv == noStore)
-    def indexRows(idx: String) = SignatureIndex.members(spark, idx)
-      .select($"band", $"bkey", $"doc_id").as[(Int, Long, Long)].collect().toSet
+    assert(dist == Set(1L, 2L, 4L, 7L))
+    assert(kv == dist)
+    def indexRows(idx: String) = (
+      SignatureIndex.members(spark, idx)
+        .select($"band", $"bkey", $"doc_id").as[(Int, Long, Long)].collect().toSet,
+      SignatureIndex.sigs(spark, idx)
+        .select($"doc_id", $"sig8").as[(Long, Seq[Long])].collect().toSet)
     assert(indexRows(idxB) == indexRows(idxA),
-      "the KV-probed run must write the same durable membership rows")
+      "the KV-probed run must write the same durable index rows")
   }
 
   test("store-backed drain survivors are independent of batching") {
@@ -153,39 +160,19 @@ class MembershipStoreSpec extends SparkSpec {
       "copy of the out-of-band appended doc must be dropped (store seeded the append)")
   }
 
-  test("parquet store past 1024 distinct keys: every scan branch stays filtered (no full-index collect), results unchanged") {
+  test("lazy store past 1024 distinct keys pulls through the broadcast filter, results unchanged") {
     val (corpus, _) = scenario()
     val dir = tmpDir("chunk")
     SignatureIndex.build(corpus, "doc_id", "text", dir)
     // real keys (hits guaranteed) padded with synthetic absent keys to
-    // push the probe well past the 1024-literal per-scan bound — the r9
-    // fallback dropped the filter entirely here and collected the whole
-    // index to the driver
+    // push the probe past the 1024-literal bound of one isin pull
     val realKeys = SignatureIndex.members(spark, dir)
       .select($"band", $"bkey").distinct().as[(Int, Long)].collect()
     val keys = realKeys ++ (0 until 3000).map(i => (i % 32, 900000000L + i))
-    val nKeys = keys.map(_._2).distinct.length
-    assert(nKeys > 2048, s"scenario must exceed two chunks, got $nKeys keys")
-    val pq = new ParquetMembershipStore(spark, dir)
-    // plan shape: the probe is a union of per-chunk scans, EVERY leaf
-    // under a Filter carrying the chunk's In predicate — an unfiltered
-    // leaf is exactly the banned full-scan-collect
-    val memberPaths = SignatureIndex.tablePaths(spark, dir, "members", None)
-    val probe = pq.prunedScan(
-      spark.read.parquet(memberPaths: _*), "bkey", keys.map(_._2).distinct)
-    import org.apache.spark.sql.catalyst.plans.logical
-    def leaves(p: logical.LogicalPlan, filtered: Boolean): Seq[Boolean] = p match {
-      case f: logical.Filter =>
-        val hasKey = f.condition.references.exists(_.name == "bkey")
-        f.children.flatMap(leaves(_, filtered || hasKey))
-      case l if l.children.isEmpty => Seq(filtered)
-      case _ => p.children.flatMap(leaves(_, filtered))
-    }
-    val marks = leaves(probe.queryExecution.optimizedPlan, filtered = false)
-    val expectChunks = (nKeys + 1023) / 1024
-    assert(marks.length == expectChunks,
-      s"expected $expectChunks chunked scan branches, got ${marks.length}")
-    assert(marks.forall(identity), "an unfiltered scan branch survived past the literal cap")
+    assert(keys.map(_._2).distinct.length > 1024)
+    val lz = new InMemoryMembershipStore(lazySeed = true)
+    lz.ensureCovers(spark, dir, SignatureIndex.componentNames(spark, dir, "members").toSet)
+    assert(lz.stats.entries == 0, "lazy attach must seed nothing")
     // results: identical to the frame-derived expectation at this key count
     val keySet = keys.toSet
     val want = SignatureIndex.members(spark, dir)
@@ -193,14 +180,18 @@ class MembershipStoreSpec extends SparkSpec {
       .groupBy(t => (t._1, t._2))
       .map { case (k, vs) => k -> vs.map(_._3).distinct.sorted.toSeq }
       .filter(t => keySet.contains(t._1))
-    val got = pq.bucketMembers(keys).map { case (k, v) => k -> v.toSeq }
-    assert(got == want, s"chunked probe diverged (${got.size} vs ${want.size} buckets)")
-    // signatures through the same chunked path
+    val got = lz.bucketMembers(keys).map { case (k, v) => k -> v.toSeq }
+    assert(got == want, s"broadcast pull diverged (${got.size} vs ${want.size} buckets)")
+    // signatures through the same broadcast pull
     val ids = want.valuesIterator.flatten.toArray.distinct ++
       (0 until 2000).map(i => 800000000L + i)
     assert(ids.distinct.length > 1024)
-    val sigs = pq.memberSigs(ids)
+    val wantSigs = SignatureIndex.sigs(spark, dir)
+      .select($"doc_id", $"sig8").as[(Long, Array[Long])].collect()
+      .map { case (id, s) => id -> MembershipStore.packSig8(s) }.toMap
+    val sigs = lz.memberSigs(ids)
     assert(sigs.keySet == want.valuesIterator.flatten.toSet)
+    assert(sigs.forall { case (id, s) => java.util.Arrays.equals(s, wantSigs(id)) })
   }
 
   test("lazy store agrees lookup-for-lookup with the eager store and stays sub-corpus resident") {
@@ -267,7 +258,10 @@ class MembershipStoreSpec extends SparkSpec {
   test("lazy store-backed drain matches the no-store survivors across folds") {
     val slices = Seq(Seq(1L, 2L), Seq(3L, 4L), Seq(5L, 6L, 7L))
     val noStore = drain(None, slices)._1
-    val lz = drain(Some(new InMemoryMembershipStore(lazySeed = true)), slices)._1
+    // a fold at batch 2 renames the components the store holds; it must
+    // adopt the folded names (resyncAfterFold) rather than miss them
+    val lz = drain(Some(new InMemoryMembershipStore(lazySeed = true)), slices,
+      compactEvery = 2)._1
     assert(lz == noStore)
   }
 

@@ -147,26 +147,29 @@ class SignatureIndexSpec extends SparkSpec {
 
   test("an index seeded AFTER the stream first touched the dir still drops duplicates") {
     import spark.implicits._
-    // order of operations is the hazard: the stream's first trigger caches
-    // a driver-side probe state for the (then-empty) dir; the batch build
-    // then seeds compacted=-1 out of band. The probe must notice the
-    // uncovered component and rebuild — a stale bloom would silently
-    // false-negative every seeded key and retain exact duplicates.
+    // order of operations is the hazard: the stream's first trigger fills
+    // its store from the (then-empty) dir; the batch build then seeds
+    // compacted=-1 out of band. The next trigger's store must notice the
+    // uncovered component and seed it — a store that trusted its own
+    // puts would miss every seeded key and retain exact duplicates.
     val corpus = tables.documents.select($"doc_id", $"text").limit(100)
     val idx = tmpDir("lateseed")
+    val store = Some(new InMemoryMembershipStore)
     val novel0 = Seq((8000000L, "an early novel document before the corpus seed arrives"))
       .toDF("doc_id", "text")
-    graft.streaming.DedupStreams.dedupOnce(novel0, tmpDir("lateout0"), idx, threshold = 0.7)
+    graft.streaming.DedupStreams.dedupBatch(novel0, tmpDir("lateout0"), idx,
+      threshold = 0.7, batchId = 0, store = store)
     SignatureIndex.build(corpus, "doc_id", "text", idx)
     val dup = corpus.orderBy($"doc_id").limit(1)
       .select(($"doc_id" + 5000000L).as("doc_id"), $"text")
     val novel = Seq((9000000L, "a genuinely novel document with fresh unseen content entirely"))
       .toDF("doc_id", "text")
     val out = tmpDir("lateout1")
-    graft.streaming.DedupStreams.dedupOnce(dup.unionByName(novel), out, idx, threshold = 0.7)
+    graft.streaming.DedupStreams.dedupBatch(dup.unionByName(novel), out, idx,
+      threshold = 0.7, batchId = 1, store = store)
     val kept = spark.read.parquet(out).select($"doc_id").as[Long].collect().toSet
     assert(kept == Set(9000000L),
-      s"late-seeded index must still drop the duplicate (stale-bloom hazard): $kept")
+      s"late-seeded index must still drop the duplicate (stale-store hazard): $kept")
   }
 
   test("append makes admitted docs probe-visible; excludeBatch restores the as-of view") {

@@ -43,41 +43,9 @@ class DedupStreamsSpec extends SparkSpec {
     assert(survivors == Set(1L, 2L, 4L, 7L))
   }
 
-  test("bloom saturation triggers a geometric resize and pruning stays correct") {
-    // production capacity floor (1<<20) is only crossed after ~100
-    // thousand-doc triggers; lower it so the resize path actually runs:
-    // batch 0 admits ~3 docs x 32 band rows > 64, so batch 1's fetch
-    // sees items > capacity and must rebuild 4x from the tracked count
-    // instead of degrading to full scans forever
-    val prev = DedupStreams.MinBloomCapacity
-    DedupStreams.MinBloomCapacity = 64L
-    try {
-      val root = Files.createTempDirectory("dedup_resize").toString
-      val out = s"$root/out"; val idx = s"$root/index"
-      DedupStreams.dedupBatch(
-        corpus.filter(col("doc_id").isin(1L, 2L, 4L)), out, idx,
-        threshold = 0.7, batchId = 0)
-      val cap0 = DedupStreams.probeCapacity(idx).get
-      assert(cap0 == 64L, s"initial capacity must be the lowered floor: $cap0")
-      val batch1 = corpus.filter(col("doc_id").isin(3L, 6L)).unionByName(
-        Seq(8L -> "a genuinely novel late arrival about broadcast joins and salting")
-          .toDF("doc_id", "text"))
-      DedupStreams.dedupBatch(batch1, out, idx, threshold = 0.7, batchId = 1)
-      val cap1 = DedupStreams.probeCapacity(idx).get
-      assert(cap1 > cap0 && cap1 >= 4 * 32,
-        s"saturated state must resize geometrically: $cap0 -> $cap1")
-      // pruning correctness through the resize: 3 and 6 are exact copies
-      // of retained 1 and 2 (must drop); 8 is novel (must be retained —
-      // resize must not over-drop)
-      val kept = spark.read.parquet(out).select(col("doc_id")).as[Long].collect().toSet
-      assert(kept == Set(1L, 2L, 4L, 8L), s"survivors wrong through resize: $kept")
-    } finally DedupStreams.MinBloomCapacity = prev
-  }
-
   test("an empty micro-batch leaves the session's parquet pushdown conf untouched") {
-    // dedupBatch raises spark.sql.parquet.pushdown.inFilterThreshold for
-    // the probe's In-filters and must restore it on EVERY exit path; the
-    // empty-batch early return is the one that doesn't reach the probe
+    // the empty-batch early return is the one exit that reaches neither
+    // the probe nor a write; it sets no session conf either
     val key = "spark.sql.parquet.pushdown.inFilterThreshold"
     val before = spark.conf.getOption(key)
     val root = Files.createTempDirectory("dedup_empty").toString
@@ -277,12 +245,14 @@ class DedupStreamsSpec extends SparkSpec {
     }
     def drain(dbCap: Long) = {
       val root = Files.createTempDirectory("dedup_stream_paths").toString
-      // the distributed spelling drops the probe's bloom state, which
-      // the driver kernel's parquet probe keeps: which path ran
+      // only the driver kernel puts a trigger's admissions into the
+      // store (its own component is never seeded within the trigger):
+      // which path ran
+      val store = new graft.operators.InMemoryMembershipStore
       val kernelRan = batches.zipWithIndex.map { case (b, i) =>
         DedupStreams.dedupBatch(b, s"$root/out", s"$root/index",
-          threshold = 0.7, batchId = i.toLong, driverBatchCap = dbCap)
-        DedupStreams.probeCapacity(s"$root/index").isDefined
+          threshold = 0.7, batchId = i.toLong, driverBatchCap = dbCap, store = Some(store))
+        store.knownPaths.contains(s"batch=$i")
       }
       // batch by batch: the int-id batch's components carry int ids
       def perBatch(dir: String, cols: Column*): DataFrame = batches.indices
@@ -301,9 +271,9 @@ class DedupStreamsSpec extends SparkSpec {
       // each file was written with, nullability and containsNull
       // included, is the Spark row metadata in its parquet footer. Only
       // batches 0-2 are compared: the distributed spelling writes
-      // doc_id with the input's type and nullability (nullable in the
-      // tail batch, int in the int-id batch), the driver writer's
-      // schema is fixed long non-null, and both read back alike.
+      // doc_id with the input's nullability (nullable in the tail
+      // batch), the driver writer's schema is fixed non-null, and both
+      // read back alike.
       def written(table: String): Seq[String] = (0 to 2)
         .flatMap(i => new java.io.File(s"$root/index/$table/batch=$i").listFiles()
           .filter(_.getName.endsWith(".parquet")))
@@ -438,9 +408,10 @@ class DedupStreamsSpec extends SparkSpec {
       try r.getFooter finally r.close()
     }
     for ((name, frame) <- frames) {
+      val store = new graft.operators.InMemoryMembershipStore
       DedupStreams.dedupBatch(frame, s"$root/$name/out", s"$root/$name/index",
-        threshold = 0.7, batchId = 0)
-      assert(DedupStreams.probeCapacity(s"$root/$name/index").isDefined,
+        threshold = 0.7, batchId = 0, store = Some(store))
+      assert(store.knownPaths.contains("batch=0"),
         s"$name: the batch did not take the driver kernel")
       // 3 and 6 copy 1 and 2, 5 is a near-copy of 1
       frame.filter(DedupStreams.notDropped(Set(3L, 5L, 6L))).coalesce(1)
@@ -467,7 +438,7 @@ class DedupStreamsSpec extends SparkSpec {
     val batches = Seq(Seq(1L, 2L), Seq(3L, 4L), Seq(5L, 6L, 7L))
       .map(ids => corpus.filter(col("doc_id").isin(ids: _*))) ++
       Seq(distinctDocs(Seq(20L)), distinctDocs(Seq(21L)))
-    def run(root: String, store: graft.operators.MembershipStore, ids: Seq[Int]): Unit =
+    def run(root: String, store: graft.operators.InMemoryMembershipStore, ids: Seq[Int]): Unit =
       ids.foreach(i => DedupStreams.dedupBatch(batches(i), s"$root/out", s"$root/index",
         threshold = 0.7, batchId = i.toLong, compactEvery = 4, store = Some(store)))
     // live components only: after a fold the table dir mixes compacted=
@@ -541,6 +512,84 @@ class DedupStreamsSpec extends SparkSpec {
       assert(names.contains(".batch=9.tmp-y"), s"$table: the fold deleted an uncovered temp dir")
     }
     assert(contents(rootB) == contents(rootA), "the fold over a leftover temp dir diverges")
+  }
+
+  /** The parquet `doc_id` type of every file of one index table's live
+    * components. */
+  private def footerIdTypes(idx: String, table: String): Seq[String] =
+    graft.operators.SignatureIndex.tablePaths(spark, idx, table)
+      .flatMap(d => new java.io.File(d).listFiles().filter(_.getName.endsWith(".parquet")))
+      .map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.getPath), spark.sessionState.newHadoopConf()))
+        try {
+          val schema = r.getFooter.getFileMetaData.getSchema
+          schema.getType(schema.getFieldIndex("doc_id")).toString
+        } finally r.close()
+      }
+
+  test("an int-id batch on the distributed spelling writes long ids the next kernel trigger seeds") {
+    val root = Files.createTempDirectory("dedup_int_ids").toString
+    val out = s"$root/out"; val idx = s"$root/index"
+    val store = new graft.operators.InMemoryMembershipStore
+    val intIds = Seq(
+      11 -> "an int keyed document about sort merge joins and spill files",
+      12 -> "completely different content about spark physical plans and shuffles"
+    ).toDF("doc_id", "text")
+    // cap 0: the distributed spelling, which leaves the store untouched
+    DedupStreams.dedupBatch(intIds, out, idx, threshold = 0.7, batchId = 0,
+      driverBatchCap = 0L, store = Some(store))
+    assert(store.knownPaths.isEmpty, "the int-id batch took the driver kernel")
+    for (table <- Seq("members", "sigs")) {
+      val types = footerIdTypes(idx, table)
+      assert(types.nonEmpty && types.forall(_.contains("int64")),
+        s"$table doc_id footers: $types")
+    }
+    // the kernel trigger seeds that component through the same store and
+    // drops its copy of doc 11
+    DedupStreams.dedupBatch(
+      Seq(20L -> "an int keyed document about sort merge joins and spill files",
+        21L -> "a genuinely novel late arrival about broadcast joins and salting")
+        .toDF("doc_id", "text"),
+      out, idx, threshold = 0.7, batchId = 1, store = Some(store))
+    assert(store.knownPaths == Set("batch=0", "batch=1"), s"coverage: ${store.knownPaths}")
+    // survivors keep their batch's own id type, so read batch by batch
+    assert((0 to 1).flatMap(i => spark.read.parquet(s"$out/batch=$i")
+      .select(col("doc_id").cast("long")).as[Long].collect()).toSet == Set(11L, 12L, 21L))
+    for (table <- Seq("members", "sigs")) {
+      val types = footerIdTypes(idx, table)
+      assert(types.size == 2 && types.forall(_.contains("int64")),
+        s"$table doc_id footers: $types")
+    }
+  }
+
+  test("a drain through the kernel and the over-cap spelling leaves no cache, persisted RDD or conf behind") {
+    // suites share one session: start from an empty cache so any frame
+    // the drain leaves persisted shows
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val rddsBefore = sc.getPersistentRDDs.keySet
+    val confBefore = spark.conf.getAll
+    for (cap <- Seq(DedupStreams.DefaultDriverBatchCap, 0L)) {
+      val root = Files.createTempDirectory("dedup_hygiene").toString
+      val store = new graft.operators.InMemoryMembershipStore
+      // 6 batches, folds at 2 and 4: triggers after a fold read stable
+      // run=/compacted= components; a re-send of doc 1 gets dropped
+      (0 until 6).foreach { i =>
+        val docs =
+          if (i == 5) corpus.filter(col("doc_id") === 3L)
+          else distinctDocs(Seq(100L + i)).unionByName(corpus.filter(col("doc_id") === (i + 1L)))
+        DedupStreams.dedupBatch(docs, s"$root/out", s"$root/index", threshold = 0.7,
+          batchId = i.toLong, compactEvery = 2, driverBatchCap = cap, store = Some(store))
+      }
+      assert(store.knownPaths.nonEmpty == (cap > 0), s"cap $cap: paths taken")
+      assert(spark.read.parquet(s"$root/out").select(col("doc_id")).as[Long].collect().toSet ==
+        Set(1L, 2L, 4L) ++ (100L until 105L), s"cap $cap: survivors")
+      assert(spark.sharedState.cacheManager.isEmpty, s"cap $cap: a cached frame outlived the drain")
+      assert(sc.getPersistentRDDs.keySet == rddsBefore, s"cap $cap: a persisted RDD outlived the drain")
+      assert(spark.conf.getAll == confBefore, s"cap $cap: the drain changed the session conf")
+    }
   }
 
   test("write-time bucket admission enforces the cap") {
