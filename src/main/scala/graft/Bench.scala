@@ -17,48 +17,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // session() sets the static confs that must exist before the session
-    // does: the codegen cache sized for a ~120-query registry (the default
-    // 100 entries evicts continuously — r4's warm pass drifted +43% from
-    // re-running Janino) and a progress ring buffer big enough for the
-    // ~200-micro-batch dedup drain (default keeps 100).
-    val spark = session(cpus)
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")
-    Tables.smokeCheck(spark, sfDir) // fail in seconds, named, on a testdata regen
-    // catalog registration + ANALYZE stats (SURVEY §4.2): every registry
-    // query now plans against real cardinalities with CBO join reorder
-    // on; the one-time analyze scan happens here, outside the per-query
-    // timings
-    CatalogStats.analyze(spark, sfDir)
-    // warm up codegen + parquet reader once so the first measured query
-    // doesn't absorb JVM/classloading cost
-    Tables(spark, sfDir).lineitem.limit(1000)
-      .write.format("noop").mode("overwrite").save()
-
-    // Index prebuild pass: the index-backed queries' per-(dir, JVM)
-    // one-time artifact builds (signature indexes, IVF training, the
-    // two-shard build+merge) are INGEST-time costs at 100 TB, not query
-    // costs — run those queries once here so no timed pass absorbs a
-    // build. Build wall times land in the artifact separately
-    // (index_build_ms, from the TextQueries ledger); cold/warm/solo for
-    // the six index-backed queries then all measure the PROBE, so solo
-    // ≈ warm for them instead of solo carrying a hidden build.
-    val indexBacked = Set("q50_ann_ivf", "q130_refresh_pipeline",
-      "q131_index_admission", "q133_index_append", "q135_ivf_append",
-      "q136_index_merge", "q155_kv_store_admission", "q156_ivf_pq")
-    val prebuild: Seq[(String, Double)] = SparkEntry.registry
-      .filter(q => indexBacked.contains(q.name)).map { q =>
-        val t0 = System.nanoTime()
-        try q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench:prebuild] ${q.name} FAILED: ${e.getMessage}")
-        }
-        spark.catalog.clearCache()
-        val dt = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench:prebuild] ${q.name}%-28s ${dt}%8.2f s")
-        q.name -> dt
-      }
+    prepare(spark, sfDir)
+    // build wall times land in the artifact separately (index_build_ms,
+    // from the TextQueries ledger); cold/warm/solo for the index-backed
+    // queries then all measure the PROBE, so solo ≈ warm for them
+    // instead of solo carrying a hidden build
+    val prebuilt = prebuild(spark, sfDir, SparkEntry.registry, "bench:prebuild")
     // index-size ledger: persisted bytes of the ANN artifacts the
     // prebuild just materialized (pq_codes vs ivf_assignments is the
     // q156 compression claim, measured)
@@ -113,28 +79,9 @@ object Bench {
         streamGateNames.flatMap(n => SparkEntry.registry.find(_.name == n))
       val out = ordered.flatMap { q =>
         if (streamGateNames.contains(q.name)) quiesce()
-        val t0 = System.nanoTime()
-        val ok =
-          try { q.run(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            failed += q.name
-            System.err.println(s"[bench:$tag] ${q.name} FAILED: ${e.getMessage}")
-            false
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench:$tag] ${q.name}%-28s ${dt}%8.2f s")
-        // drop anything a query pinned in the cache manager so storage memory
-        // can't accumulate across the registry (r1's back-half degradation).
-        // Audited r5: no frame is shared across registry entries (q41-q43/q53
-        // re-read the on-disk fixture corpus; every .cache() in the operators
-        // is scoped to one query's pipeline), so the blanket clear drops only
-        // the finished query's own intermediates — it is not the source of
-        // the r4 warm drift (that was codegen-cache eviction, fixed above).
-        spark.catalog.clearCache()
-        // a failed query's time-to-failure must never ledger as a
-        // steady-state number (BenchSlope's r11 rule, applied here too):
-        // the name lives only in `failed`
-        if (ok) Some(q.name -> dt) else None
+        val dt = timedNoop(spark, sfDir, q, s"bench:$tag")
+        if (dt.isEmpty) failed += q.name
+        dt.map(q.name -> _)
       }
       val (l1, gc1, cpu1) = sysSnap()
       val wallMs = (System.nanoTime() - t0p) / 1000000L
@@ -201,21 +148,9 @@ object Bench {
     val solo: Seq[(String, Double)] = SparkEntry.registry
       .filter(q => soloNames.contains(q.name)).flatMap { q =>
         if (streamGateNames.contains(q.name)) quiesce()
-        val t0 = System.nanoTime()
-        val ok =
-          try { q.run(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            // a failed solo execution is recorded in `failed` and DROPPED
-            // from the solo dict — a time-to-failure must never read as a
-            // steady-state number in the artifact
-            failed += s"solo:${q.name}"
-            System.err.println(s"[bench:solo] ${q.name} FAILED: ${e.getMessage}")
-            false
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench:solo] ${q.name}%-28s ${dt}%8.2f s")
-        spark.catalog.clearCache()
-        if (ok) Some(q.name -> dt) else None
+        val dt = timedNoop(spark, sfDir, q, "bench:solo")
+        if (dt.isEmpty) failed += s"solo:${q.name}"
+        dt.map(q.name -> _)
       }
 
     // Solo-anchored contention resweep: solo is the SAME plan in the
@@ -234,20 +169,9 @@ object Bench {
     val resolo: Seq[(String, Double)] = SparkEntry.registry
       .filter(q => soloSuspects.contains(q.name)).flatMap { q =>
         if (streamGateNames.contains(q.name)) quiesce()
-        val t0 = System.nanoTime()
-        val ok =
-          try { q.run(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            failed += s"resweep:${q.name}"
-            System.err.println(s"[bench:resweep] ${q.name} FAILED: ${e.getMessage}")
-            false
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench:resweep] ${q.name}%-28s ${dt}%8.2f s " +
-          f"(in-sweep ${warm.toMap.getOrElse(q.name, 0.0)}%.2f s, " +
-          f"solo ${soloMap.getOrElse(q.name, 0.0)}%.2f s)")
-        spark.catalog.clearCache()
-        if (ok) Some(q.name -> dt) else None
+        val dt = timedNoop(spark, sfDir, q, "bench:resweep")
+        if (dt.isEmpty) failed += s"resweep:${q.name}"
+        dt.map(q.name -> _)
       }
     val resoloMap = resolo.toMap
     val warmFinal = warm.map { case (n, v) =>
@@ -391,7 +315,7 @@ object Bench {
     // solo-anchored contention triples
     val extrasJson = {
       def m3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-      val pb = prebuild.map { case (k, v) => "\"" + k + "\":" + m3(v) }
+      val pb = prebuilt.map { case (k, v) => "\"" + k + "\":" + m3(v) }
         .mkString("{", ",", "}")
       val builds = graft.queries.TextQueries.indexBuildMs.toSeq.sortBy(_._1)
         .map { case (k, v) => "\"" + k.takeWhile(_ != '|') + "\":" + v }
@@ -420,8 +344,15 @@ object Bench {
     System.out.flush()
   }
 
-  /** Session with the Bench configuration (shared by [[Bench.main]] and
-    * [[BenchDrain.main]]). */
+  /** The one session factory: every entry point (Bench, BenchDrain,
+    * BenchSlope, Verify, Explain, ScaleSmoke, the tools and the perfbench
+    * harness) opens its session here, so all of them run under the same
+    * confs — `cpus` local threads and shuffle partitions, UTC, no UI, and
+    * the static confs that must exist before the session does: a codegen
+    * cache sized for the registry (the default 100 entries evicts
+    * continuously — r4's warm pass drifted +43% from re-running Janino)
+    * and a progress ring buffer for the 400-batch drain. A caller inside a
+    * running session (a spec) gets that session back. */
   private[graft] def session(cpus: String): SparkSession = SparkSession.builder()
     .master(s"local[$cpus]")
     .config("spark.sql.shuffle.partitions", cpus)
@@ -433,6 +364,64 @@ object Bench {
     // last 255 batches
     .config("spark.sql.streaming.numRecentProgressUpdates", "512")
     .getOrCreate()
+
+  /** The queries whose per-(dir, JVM) one-time artifact builds
+    * (signature indexes, IVF training, the two-shard build+merge) are
+    * INGEST-time costs at 100 TB, not query costs: [[prebuild]] runs them
+    * once so no timed pass absorbs a build. */
+  private[graft] val IndexBacked = Set("q50_ann_ivf", "q130_refresh_pipeline",
+    "q131_index_admission", "q133_index_append", "q135_ivf_append",
+    "q136_index_merge", "q155_kv_store_admission", "q156_ivf_pq")
+
+  /** The untimed prologue of every sweep: a named fail-in-seconds check
+    * on a testdata regen, catalog registration + ANALYZE stats (SURVEY
+    * §4.2: every query plans against real cardinalities with CBO join
+    * reorder on), and one lineitem scan that warms codegen and the parquet
+    * reader so the first measured query doesn't absorb JVM/classloading
+    * cost. */
+  private[graft] def prepare(spark: SparkSession, sfDir: String): Unit = {
+    Tables.smokeCheck(spark, sfDir)
+    CatalogStats.analyze(spark, sfDir)
+    Tables(spark, sfDir).lineitem.limit(1000)
+      .write.format("noop").mode("overwrite").save()
+  }
+
+  /** Runs `q` once into the `noop` sink, logs its wall seconds to stderr
+    * under `[log]`, and clears the cache after. None when the run threw:
+    * a time-to-failure must never ledger as a steady-state number, so the
+    * caller drops the query from the pass and records it as failed.
+    *
+    * The clear drops anything the query pinned in the cache manager so
+    * storage memory can't accumulate across the registry (r1's back-half
+    * degradation). No frame is shared across registry entries (q41-q43/q53
+    * re-read the on-disk fixture corpus; every .cache() in the operators
+    * is scoped to one query's pipeline), so it drops only the finished
+    * query's own intermediates.
+    */
+  private[graft] def timedNoop(
+      spark: SparkSession, sfDir: String, q: QueryDef, log: String): Option[Double] = {
+    val t0 = System.nanoTime()
+    val ok =
+      try { q.run(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[$log] ${q.name} FAILED: ${e.getMessage}")
+        false
+      }
+    val dt = (System.nanoTime() - t0) / 1e9
+    System.err.println(f"[$log] ${q.name}%-28s ${dt}%8.2f s")
+    spark.catalog.clearCache()
+    if (ok) Some(dt) else None
+  }
+
+  /** Runs each [[IndexBacked]] member of `queries` once, before the timed
+    * passes; returns each one's wall seconds, failed runs included. */
+  private[graft] def prebuild(spark: SparkSession, sfDir: String,
+      queries: Seq[QueryDef], log: String): Seq[(String, Double)] =
+    queries.filter(q => IndexBacked.contains(q.name)).map { q =>
+      val t0 = System.nanoTime()
+      timedNoop(spark, sfDir, q, log)
+      q.name -> (System.nanoTime() - t0) / 1e9
+    }
 
   // 400 batches / 400k docs: double the r7 horizon, the scale at which a
   // linear per-trigger term would be unmistakable in the slope ratio

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: prints the formatted physical plan for the named queries
   * (all queries when none named) so scan pushdown (`PushedFilters`,
   * `ReadSchema`), join strategies (BroadcastHashJoin vs SortMergeJoin), and
@@ -13,13 +11,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val names = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     spark.sparkContext.setLogLevel("ERROR")
     // same planning context as Bench/Verify: catalog stats + CBO, so the
     // dumped plans are the plans the harness actually runs

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Dedup, SimilaritySearch, SubstringDedup}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale smoke for the near-dup family: replicates the sf0.1 corpus past
@@ -24,19 +23,13 @@ import org.apache.spark.sql.functions._
   * duplicates — exact-dup short circuits would make the run vacuous.
   *
   * Prints one JSON line with timings and result cardinalities. A
-  * diagnostic main like Profile — NOT part of the gate or bench; run as:
+  * diagnostic main — NOT part of the gate or bench; run as:
   *   sbt "runMain graft.ScaleSmoke [reps]"     (default reps = 20)
   */
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val reps = args.headOption.map(_.toInt).getOrElse(20)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

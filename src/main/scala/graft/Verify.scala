@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,17 +10,7 @@ object Verify {
       case sf :: out :: rest => (sf, out, rest.toSet)
       case _ => sys.error("usage: Verify <sfDir> <outDir> [query ...]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ~120 queries overflow the default 100-entry generated-class cache
-      // (see Bench.scala); not timed here, but recompilation still costs
-      // minutes of wall-clock across the dump
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")
     Tables.smokeCheck(spark, sfDir) // fail in seconds, named, on a testdata regen
     CatalogStats.analyze(spark, sfDir) // same CBO stats context as Bench

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Canon, QueryDef, Tables}
 import graft.Canon._
+import graft.SessionConf.withConf
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -255,18 +256,16 @@ object EventQueries {
       // 4 stream-scoped shuffle partitions (q159's commit-cost note —
       // per-trigger cost here is RocksDB commit + WAL per PARTITION,
       // and the default 32 paid 32 store commits x 4 triggers for
-      // batch-scale data)
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // r13: per-commit row counting is a metrics-only full-store scan
-      // the gate never reads — off (changelog checkpointing was ALSO
-      // tried here and measured ~2x WORSE at this gate's fresh-checkpoint
-      // few-commit shape, so full-snapshot commits stay)
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
-      val savedParts157 = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      // batch-scale data). r13: per-commit row counting is a
+      // metrics-only full-store scan the gate never reads — off
+      // (changelog checkpointing was ALSO tried here and measured ~2x
+      // WORSE at this gate's fresh-checkpoint few-commit shape, so
+      // full-snapshot commits stay)
+      try withConf(spark,
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false",
+        "spark.sql.shuffle.partitions" -> "4") {
         val out = graft.streaming.EventStreams.sessionSummaryTws(spark, stream)
         val q = out.writeStream
           .outputMode("update")
@@ -281,13 +280,7 @@ object EventQueries {
           q.processAllAvailable()
           (1 to 3).foreach { i => writeChunk(i); q.processAllAvailable() }
         } finally q.stop()
-      } finally {
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        spark.conf.unset(
-          "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows")
-        spark.conf.set("spark.sql.shuffle.partitions", savedParts157)
-        ev.unpersist()
-      }
+      } finally ev.unpersist()
       // final per-user state: the row from the LAST batch that emitted
       // the user (n_events is strictly monotone per emission, so max
       // batch = max n_events — both orderings pick the same row)
@@ -415,15 +408,13 @@ object EventQueries {
         .json(s"$run/in/*")
         .select($"event_id", $"user_id", timestamp_micros($"ts_us").as("ts"),
           $"event_type")
-      // 8 shuffle partitions for the stream's lifetime: the per-batch
+      // 4 shuffle partitions for the stream's lifetime: the per-batch
       // cost here is state-store commit + WAL fsync PER PARTITION, not
       // compute — 32 partitions × 2 join sides × 4 batches is 256
       // store commits for batch-scale data. The partition count is
       // pinned by the fresh checkpoint at start, so the conf is scoped
       // to this query like q157's state-store provider conf.
-      val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      try withConf(spark, "spark.sql.shuffle.partitions" -> "4") {
         val joined = graft.streaming.EventStreams.selfJoinWithin10Min(stream)
         val q = joined.writeStream
           .option("checkpointLocation", s"$run/ckpt")
@@ -438,10 +429,7 @@ object EventQueries {
           q.processAllAvailable()
           (1 to 1).foreach { i => writeChunk(i); q.processAllAvailable() }
         } finally q.stop()
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-        ev.unpersist()
-      }
+      } finally ev.unpersist()
       // explicit schema: a zero-pair batch leaves only _SUCCESS in its dir
       spark.read.schema("a_type STRING, b_id LONG")
         .option("recursiveFileLookup", "true")
@@ -580,10 +568,8 @@ object EventQueries {
         .json(s"$run/in/*")
         .select($"event_id", $"user_id", timestamp_micros($"ts_us").as("ts"),
           $"event_type")
-      // 8 stream-scoped shuffle partitions: q159's commit-cost note
-      val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      // 4 stream-scoped shuffle partitions: q159's commit-cost note
+      try withConf(spark, "spark.sql.shuffle.partitions" -> "4") {
         val joined = graft.streaming.EventStreams.leftOuterSelfJoinWithin10Min(stream)
         val q = joined.writeStream
           .option("checkpointLocation", s"$run/ckpt")
@@ -603,10 +589,7 @@ object EventQueries {
           (1 to 1).foreach { i => writeChunk(i); q.processAllAvailable() }
           writeSentinel(); q.processAllAvailable()
         } finally q.stop()
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-        ev.unpersist()
-      }
+      } finally ev.unpersist()
       // explicit schema: a zero-row batch leaves only _SUCCESS in its dir
       spark.read.schema("a_user LONG, a_type STRING, b_id LONG")
         .option("recursiveFileLookup", "true")
@@ -696,15 +679,13 @@ object EventQueries {
         .json(s"$run/in/*")
         .select($"user_id", timestamp_micros($"ts_us").as("ts"))
       // transformWithState requires the RocksDB state store provider;
-      // 8 stream-scoped shuffle partitions: q159's commit-cost note
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // no per-commit row counting: q157's commit-cost trim note
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
-      val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      // no per-commit row counting: q157's commit-cost trim note;
+      // 4 stream-scoped shuffle partitions: q159's commit-cost note
+      try withConf(spark,
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false",
+        "spark.sql.shuffle.partitions" -> "4") {
         val closed = graft.streaming.EventStreams.closedSessionsTws(spark, stream)
         val q = closed.writeStream
           .outputMode("append")
@@ -720,13 +701,7 @@ object EventQueries {
           (1 to 3).foreach { i => writeChunk(i); q.processAllAvailable() }
           writeSentinel(); q.processAllAvailable()
         } finally q.stop()
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        spark.conf.unset(
-          "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows")
-        ev.unpersist()
-      }
+      } finally ev.unpersist()
       // closed rows only: the sentinel proved everything real closed
       spark.read
         .schema("user_id LONG, s_start_us LONG, s_end_us LONG, n_events LONG")
@@ -808,9 +783,7 @@ object EventQueries {
         .json(s"$run/in/*")
         .select($"event_id", $"user_id", timestamp_micros($"ts_us").as("ts"),
           $"event_type")
-      val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      try withConf(spark, "spark.sql.shuffle.partitions" -> "4") {
         val joined = graft.streaming.EventStreams.fullOuterSelfJoinWithin10Min(stream)
         val q = joined.writeStream
           .option("checkpointLocation", s"$run/ckpt")
@@ -826,10 +799,7 @@ object EventQueries {
           (1 to 1).foreach { i => writeChunk(i); q.processAllAvailable() }
           writeSentinel(); q.processAllAvailable()
         } finally q.stop()
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-        ev.unpersist()
-      }
+      } finally ev.unpersist()
       spark.read
         .schema("a_user LONG, a_type STRING, b_id LONG")
         .option("recursiveFileLookup", "true")

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Canon, QueryDef, Tables}
 import graft.Canon._
+import graft.SessionConf.withConf
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, DomainCaps, LineDedup, MinHashLSH, QualityClassifier, SimHash, SimilaritySearch}
 import org.apache.spark.sql.DataFrame
@@ -2573,9 +2574,7 @@ object TextQueries {
       // count-invariant by the operator's determinism contract
       // (StreamingSpec's batching-invariance pins).
       val run = s"$scratch/run"
-      val savedParts111 = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConf(spark, "spark.sql.shuffle.partitions" -> "4") {
         ensureExpected("streamdedup", dir) {
           val ref = s"$scratch/ref"
           rmTree(Paths.get(ref))
@@ -2604,7 +2603,7 @@ object TextQueries {
           (2 to 4).foreach { i => writeChunk(i); q.processAllAvailable() }
         } finally q.stop()
         chunked.unpersist()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", savedParts111)
+      }
       spark.read.parquet(s"$run/out").select($"doc_id").orderBy($"doc_id")
     },
 
@@ -3574,11 +3573,9 @@ object TextQueries {
       // batch-sized frames (refresh batches, flagged sets, cohort
       // rollups) where 32-way exchanges are pure fixed cost; the heavy
       // per-batch work (shingle/minhash aggregation) is partition-count
-      // invariant in result by the operator contract. Restored in the
-      // finally below; the returned frame is read back lazily after.
-      val savedParts133 = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      // invariant in result by the operator contract. Restored at the
+      // end of the block; the returned frame is read back lazily after.
+      withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
       // cached: this body is the registry's most action-dense (two probe
       // rounds + append + rollup re-derive a and its b1/b2/corpus2
       // children ~8x); one materialization of the 2-column slice stops
@@ -3663,7 +3660,7 @@ object TextQueries {
       val rows = out.collect()
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
-      } finally spark.conf.set("spark.sql.shuffle.partitions", savedParts133)
+      }
     },
 
     // ---- q134: k-NN label classification (L3) — label the unlabeled pool

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, MinHashLSH}
@@ -21,12 +21,7 @@ object BucketStats {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .appName("graft-bucket-stats").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
     try {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** PQ quality-at-scale flag (r11 verdict item 6): measures IVF-PQ ADC
@@ -30,12 +29,7 @@ object PqRecall {
     val k = if (args.length > 2) args(2).toInt else 5
     val nProbeArg = if (args.length > 3) args(3) else "auto"
     val rerankArg = if (args.length > 4) args(4) else "auto"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-pq-recall").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     import spark.implicits._
     try {
       val t0 = System.nanoTime()

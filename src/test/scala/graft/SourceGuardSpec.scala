@@ -1,0 +1,38 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+/** Source-level guards on the program's structure:
+  *  - one session factory: every entry point opens `Bench.session`, so no
+  *    second, drifting conf list can appear in `src/main`;
+  *  - no query body unsets a conf: a gate scopes its confs with
+  *    `SessionConf.withConf`, which restores the caller's value instead of
+  *    dropping it.
+  */
+class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
+  private def scalaSources(dir: String): Seq[(Path, String)] = {
+    val s = Files.walk(Paths.get(dir))
+    try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      .map(p => p -> Files.readString(p))
+    finally s.close()
+  }
+  private def hits(dir: String, needle: String): Seq[String] =
+    scalaSources(dir).flatMap { case (p, text) =>
+      text.linesIterator.zipWithIndex.collect {
+        case (line, i) if line.contains(needle) => s"$p:${i + 1}: ${line.trim}"
+      }
+    }
+
+  test("src/main holds exactly one SparkSession builder, in Bench.session") {
+    val sites = hits("src/main", "SparkSession.builder")
+    assert(sites.size == 1 && sites.head.contains("Bench.scala"),
+      sites.mkString("builder sites:\n", "\n", ""))
+  }
+
+  test("no query body calls conf.unset") {
+    val sites = hits("src/main/scala/graft/queries", "conf.unset(")
+    assert(sites.isEmpty, sites.mkString("conf.unset in queries:\n", "\n", ""))
+  }
+}
