@@ -188,10 +188,12 @@ object Bench {
     // corpus exists by now: the q41/q53 passes above materialize it.
     val streamJson: String = try {
       import java.nio.file.{Files, Path, Paths}
+      import scala.jdk.CollectionConverters._
       val src = Paths.get(graft.fixtures.ClaimFixtures.EdiDir)
       // One full ingest run into fresh dirs; returns (files, rows, sec,
-      // per-batch (batchId, triggerMs, addBatchMs, walMs)) in batch order.
-      def runIngest(): (Int, Long, Double, Seq[(Long, Long, Long, Long)]) = {
+      // per-batch (batchId, every durationMs key -> ms)) in batch order.
+      type Ingest = (Int, Long, Double, Seq[(Long, Map[String, Long])])
+      def runIngest(): Ingest = {
         val tmp = Files.createTempDirectory("bench_stream")
         // ~100 MB of replicated EDI + parquet per run — delete on exit so
         // repeated rounds don't accumulate dead corpora in /tmp
@@ -220,20 +222,18 @@ object Bench {
         val dt = (System.nanoTime() - t0) / 1e9
         if (!finished) { q.stop(); (nFiles, -1L, dt, Nil) }
         else {
-          def d(p: org.apache.spark.sql.streaming.StreamingQueryProgress,
-              k: String): Long =
-            Option(p.durationMs.get(k)).map(_.longValue).getOrElse(0L)
           val batches = q.recentProgress.toSeq.filter(_.numInputRows > 0)
-            .map(p => (p.batchId, d(p, "triggerExecution"),
-              d(p, "addBatch"), d(p, "walCommit")))
+            .map(p => (p.batchId, p.durationMs.asScala.map { case (k, v) =>
+              k -> v.longValue }.toMap))
           val rows = spark.read.parquet(tmp.resolve("out").toString).count()
           (nFiles, rows, dt, batches)
         }
       }
-      def js(run: (Int, Long, Double, Seq[(Long, Long, Long, Long)])): String = {
+      def trig(b: (Long, Map[String, Long])): Long = b._2.getOrElse("triggerExecution", 0L)
+      def js(run: Ingest): String = {
         val (nFiles, rows, dt, batches) = run
         if (rows < 0) return "null"
-        val ms = batches.map(_._2)
+        val ms = batches.map(trig)
         val sorted = ms.sorted
         val (nb, p50, mx) =
           if (sorted.isEmpty) (0, 0L, 0L)
@@ -241,18 +241,24 @@ object Bench {
         val sec = String.format(java.util.Locale.ROOT, "%.3f", Double.box(dt))
         // per-batch trigger ms in BATCH ORDER (position of an outlier is
         // evidence: batch 0 = warmup/prebuild interference, mid-run =
-        // contention/GC) + the max batch's component split
+        // contention/GC), every trigger part's p50 over the batches, and
+        // the max batch's split into every part
         val arr = ms.mkString("[", ",", "]")
-        val maxDetail = batches.sortBy(-_._2).headOption.map { b =>
-          s"""{"batch":${b._1},"trigger_ms":${b._2},"add_batch_ms":${b._3},""" +
-            s""""wal_commit_ms":${b._4}}"""
+        def parts(kv: Iterable[(String, Long)]): String =
+          kv.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+        val partP50 = parts(batches.flatMap(_._2.keys).distinct.map { k =>
+          val xs = batches.map(_._2.getOrElse(k, 0L)).sorted
+          k -> xs(xs.size / 2)
+        })
+        val maxDetail = batches.sortBy(b => -trig(b)).headOption.map { b =>
+          s"""{"batch":${b._1},"trigger_ms":${trig(b)},"duration_ms":${parts(b._2)}}"""
         }.getOrElse("null")
         System.err.println(
           s"[bench:stream] ingest $nFiles files -> $rows claims in $sec s " +
             s"($nb batches, p50 ${p50} ms, max ${mx} ms)")
         s"""{"files":$nFiles,"claims":$rows,"sec":$sec,""" +
           s""""batches":$nb,"batch_p50_ms":$p50,"batch_max_ms":$mx,""" +
-          s""""batch_ms":$arr,"max_batch":$maxDetail}"""
+          s""""batch_ms":$arr,"duration_p50_ms":$partP50,"max_batch":$maxDetail}"""
       }
       // same contention discipline as the query passes: per-pass
       // load/GC/CPU diag, and a max-batch outlier past 2x p50 triggers
@@ -269,7 +275,7 @@ object Bench {
       val base = js(first)
       if (base == "null") base
       else {
-        val ms = first._4.map(_._2).sorted
+        val ms = first._4.map(trig).sorted
         val spiky = ms.nonEmpty && ms.last > 2 * ms(ms.size / 2)
         val resweep = if (spiky) {
           System.err.println("[bench:stream] max batch > 2x p50 — resweeping once")
@@ -351,10 +357,16 @@ object Bench {
     * the static confs that must exist before the session does: a codegen
     * cache sized for the registry (the default 100 entries evicts
     * continuously — r4's warm pass drifted +43% from re-running Janino)
-    * and a progress ring buffer for the 400-batch drain. A caller inside a
-    * running session (a spec) gets that session back. */
+    * and a progress ring buffer for the 400-batch drain. It also installs
+    * the fork-free `file:` scheme ([[graft.io.LocalFileScheme]]): Spark's
+    * distribution ships no native `libhadoop`, and without it the stock
+    * local file system forks `readlink` in every `getFileLinkStatus` and
+    * `chmod` in every `setPermission`, so each checkpoint-log write of a
+    * micro-batch paid several forks. A caller inside a running session (a
+    * spec) gets that session back. */
   private[graft] def session(cpus: String): SparkSession = SparkSession.builder()
     .master(s"local[$cpus]")
+    .config(graft.io.LocalFileScheme.SparkConf)
     .config("spark.sql.shuffle.partitions", cpus)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")

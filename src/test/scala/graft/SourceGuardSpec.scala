@@ -9,7 +9,10 @@ import scala.jdk.CollectionConverters._
   *    second, drifting conf list can appear in `src/main`;
   *  - no query body unsets a conf: a gate scopes its confs with
   *    `SessionConf.withConf`, which restores the caller's value instead of
-  *    dropping it.
+  *    dropping it;
+  *  - one spelling of the `file:` scheme install: `Bench.session` and the
+  *    test session read `graft.io.LocalFileScheme.SparkConf`, so specs run
+  *    the file system the bench measures.
   */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
   private def scalaSources(dir: String): Seq[(Path, String)] = {
@@ -34,5 +37,12 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("no query body calls conf.unset") {
     val sites = hits("src/main/scala/graft/queries", "conf.unset(")
     assert(sites.isEmpty, sites.mkString("conf.unset in queries:\n", "\n", ""))
+  }
+
+  test("the file: scheme keys are spelled only in graft.io.LocalFileScheme") {
+    val sites = (hits("src/main", "fs.file.impl") ++ hits("src/test", "fs.file.impl"))
+      .filterNot(_.contains("SourceGuardSpec.scala"))
+    assert(sites.nonEmpty && sites.forall(_.contains("io/LocalFileScheme.scala")),
+      sites.mkString("fs.file.impl sites:\n", "\n", ""))
   }
 }

@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared test session: small local parallelism, UTC, AQE on — the same
-  * shape Verify/Bench use so specs exercise the production configuration.
+/** Shared test session: small local parallelism, UTC, AQE on and the
+  * fork-free `file:` scheme — the same shape Verify/Bench use so specs
+  * exercise the production configuration.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -14,6 +15,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config(graft.io.LocalFileScheme.SparkConf)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
     .getOrCreate()
