@@ -187,7 +187,7 @@ object Bench {
     // checkpoint-fsync overhead visible as the p50/max spread. The fixture
     // corpus exists by now: the q41/q53 passes above materialize it.
     val streamJson: String = try {
-      import java.nio.file.{Files, Path, Paths}
+      import java.nio.file.{Files, Paths}
       import scala.jdk.CollectionConverters._
       val src = Paths.get(graft.fixtures.ClaimFixtures.EdiDir)
       // One full ingest run into fresh dirs; returns (files, rows, sec,
@@ -198,12 +198,7 @@ object Bench {
         // ~100 MB of replicated EDI + parquet per run — delete on exit so
         // repeated rounds don't accumulate dead corpora in /tmp
         Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          try {
-            val s = Files.walk(tmp)
-            try s.sorted(java.util.Comparator.reverseOrder[Path]())
-              .forEach(f => { Files.deleteIfExists(f); () })
-            finally s.close()
-          } catch { case _: Throwable => () } // already-gone dir: nothing to clean
+          scala.util.Try(graft.io.LocalDirs.deleteRecursively(tmp)); ()
         }))
         val in = tmp.resolve("in"); Files.createDirectories(in)
         var nFiles = 0
@@ -459,12 +454,7 @@ object Bench {
       import org.apache.spark.sql.functions._
       val tmp = Files.createTempDirectory("bench_drain")
       Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        try {
-          val s = Files.walk(tmp)
-          try s.sorted(java.util.Comparator.reverseOrder[Path]())
-            .forEach(f => { Files.deleteIfExists(f); () })
-          finally s.close()
-        } catch { case _: Throwable => () }
+        scala.util.Try(graft.io.LocalDirs.deleteRecursively(tmp)); ()
       }))
       val docs = Tables(spark, sfDir).documents.select(col("doc_id"), col("text"))
       val n = docs.count()

@@ -17,8 +17,4 @@ object QueryDef {
   /** Query with a DuckDB oracle (the normal case). */
   def apply(name: String, oracleSql: String)(build: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, Some(oracleSql.stripMargin.trim))(build)
-
-  /** Query with rows-only checking (non-SQL-expressible semantics). */
-  def noOracle(name: String)(build: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, None)(build)
 }

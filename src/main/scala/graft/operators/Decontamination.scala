@@ -102,28 +102,6 @@ object Decontamination {
       .select(col("db").as(idCol))
       .distinct()
 
-  /** Index-backed spelling of [[batchNearDuplicateIds]]: probes a
-    * persisted [[SignatureIndex]] over the retained corpus instead of
-    * re-shingling it, producing the IDENTICAL flag set when the index
-    * was built (uncapped) over the same corpus — at 100 TB this turns
-    * every refresh from O(corpus + batch) into O(batch + hits). The
-    * corpus frame supplies candidate text only (semi-joined down to the
-    * probe hits before any shingle is derived).
-    */
-  def batchNearDuplicateIdsIndexed(
-      corpus: DataFrame,
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      indexDir: String,
-      threshold: Double,
-      cfg: SignatureIndex.Config = SignatureIndex.Config(),
-      excludeBatch: Option[Long] = None,
-      store: Option[InMemoryMembershipStore] = None): DataFrame =
-    SignatureIndex.probeNearDuplicateIds(
-      corpus.sparkSession, indexDir, corpus, batch, idCol, textCol, threshold, cfg,
-      excludeBatch, store)
-
   /** Shared bipartite near-dup pair derivation: exact-thresholded
     * (da = bulk side, db = `isSmall` side) pairs with J >= threshold.
     */

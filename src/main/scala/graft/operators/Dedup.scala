@@ -399,17 +399,13 @@ object Dedup {
         greatest(col("da"), col("db")).as("db"))
       .distinct()
 
-  /** Upper-triangle containment scan over the collected bitmap table:
-    * each task takes a STRIPED slice of row indices (i, i+parts, ...) so
-    * the triangle's per-row imbalance averages out, popcounts its rows
-    * against all later rows, and emits both directions that clear the
-    * threshold. Plain compiled Scala — no codegen, no join machinery.
-    */
-  private def containmentKernel(bm: DataFrame, nWords: Int, threshold: Double): DataFrame =
-    containmentKernelRows(bm, bm.collect(), nWords, threshold)
-
-  /** Kernel entry over already-collected bitmap rows (the take-fuse path:
-    * the branch-deciding take IS the table — no second action).
+  /** Upper-triangle containment scan over the collected bitmap rows
+    * (the take-fuse path: the branch-deciding take IS the table — no
+    * second action): each task takes a STRIPED slice of row indices
+    * (i, i+parts, ...) so the triangle's per-row imbalance averages out,
+    * popcounts its rows against all later rows, and emits both
+    * directions that clear the threshold. Plain compiled Scala — no
+    * codegen, no join machinery.
     */
   private def containmentKernelRows(
       bm: DataFrame, rows: Array[org.apache.spark.sql.Row],

@@ -72,17 +72,6 @@ object HeavyHitters {
     (acc, dropped)
   }
 
-  /** Distinct candidate keys: the union of per-partition Misra–Gries
-    * survivors — a superset of every key with count > N/capacity.
-    */
-  def candidateKeys(keys: Dataset[String], capacity: Int): DataFrame = {
-    require(capacity >= 1, s"capacity=$capacity")
-    val spark = keys.sparkSession
-    import spark.implicits._
-    keys.mapPartitions(it => misraGries(it, capacity).keysIterator)
-      .toDF("key").distinct()
-  }
-
   /** Per-partition Misra–Gries survivors PLUS one `(null, n_p)` row per
     * partition carrying that partition's row count — so the recount
     * phase learns N (the certificate's denominator) without a third

@@ -54,18 +54,6 @@ object LineDedup {
       array_join(dedup.getField("kept"), "\n").as("clean_text"))
   }
 
-  /** Distinct lines occurring in at least `minDocs` distinct documents. */
-  def boilerplateLines(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      minDocs: Int): DataFrame =
-    docs
-      .select(col(idCol), explode(split(col(textCol), "\n")).as("line"))
-      .groupBy("line")
-      .agg(countDistinct(col(idCol)).as("doc_freq"))
-      .filter(col("doc_freq") >= minDocs)
-
   /** Strip boilerplate lines from every document.
     *
     * Returns one row per input document: `(idCol, n_lines, n_removed,

@@ -46,7 +46,11 @@ object MembershipStore {
     * disagreeing bytes of x = a^b are counted by OR-folding each byte
     * onto its own bit 0 (shift-and-mask keeps neighbors' bits out, so
     * the per-byte indicator is exact — unlike the classic borrow trick
-    * whose carry cascades across a zero byte below a nonzero one).
+    * whose carry cascades across a zero byte below a nonzero one). Kept
+    * as plain Scala on purpose: a column-expression spelling of this
+    * kernel was tried and reverted — with the probe's In literals
+    * changing every trigger the generated source never hits the codegen
+    * cache, costing ~10 s of janino per trigger.
     */
   def agreeCount(a: Array[Long], b: Array[Long]): Int = {
     var diff = 0; var i = 0

@@ -77,25 +77,13 @@ object SimHash {
       .agg(count(lit(1)).as("n_pairs"))
   }
 
-  /** Candidate pairs from 4x16-bit banding: two signatures at Hamming
-    * distance <= 3 differ in at most 3 of the 4 bands, so by pigeonhole
-    * they agree exactly on at least one band — a bucket equi-join on
-    * (band, key) finds every such pair without touching the n^2 space.
-    * Same shape as MinHashLSH.candidatePairs: shuffle on the band key,
-    * bucket-local joins, linear in bucket sizes at 100 TB, with the same
-    * hot-bucket cap (boilerplate-identical corpora would otherwise put
-    * K^2 rows through one bucket; see MinHashLSH.cappedBucketPairs).
-    * NOTE the cap bounds cost at the expense of the pigeonhole
-    * guarantee for pairs whose ONLY agreeing band is an over-cap
-    * bucket: those are reached only via the bucket representative. Pass
-    * bucketCap = Int.MaxValue for the unconditional guarantee.
+  /** (doc_id, band, bkey): the 4x16-bit band keys, one row per band.
+    * Two signatures at Hamming distance <= 3 differ in at most 3 of the
+    * 4 bands, so by pigeonhole they agree exactly on at least one band —
+    * a bucket equi-join on (band, key) finds every such pair without
+    * touching the n^2 space (MinHashLSH.cappedBucketPairs, with its
+    * hot-bucket cap).
     */
-  def bandedCandidates(
-      packed: DataFrame, bucketCap: Int = MinHashLSH.DefaultBucketCap,
-      logOverflow: Boolean = true): DataFrame =
-    MinHashLSH.cappedBucketPairs(bandedRows(packed), bucketCap, logOverflow)
-
-  /** (doc_id, band, bkey): the 4x16-bit band keys, one row per band. */
   private def bandedRows(packed: DataFrame): DataFrame = {
     val mask = lit(0xffffL)
     packed.select(

@@ -3,6 +3,8 @@ package graft.queries
 import graft.{Canon, QueryDef, Tables}
 import graft.Canon._
 import graft.SessionConf.withConf
+import graft.io.LocalDirs.pidScopedScratch
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,6 +14,43 @@ import org.apache.spark.sql.functions._
   * and must converge to these results (asserted in StreamingSpec).
   */
 object EventQueries {
+
+  /** The stream-stream join gates' replay (q159, q161, q163): the
+    * user-quarter events (`user_id % 4 = 0`) in two TIME-ORDERED chunks
+    * ([[StreamGate.timeSlices]]), `ts` riding the JSON hop as exact unix
+    * micros (the default JSON timestamp format truncates to millis), the
+    * join under 4 stream-scoped shuffle partitions (StreamGate's
+    * commit-cost note), each micro-batch's `cols` to its own batch dir. With
+    * `sentinel`, two far-future rows of user -1 (hi + 40/41 min, event
+    * ids -1/-2) follow as a last chunk to advance the watermark past
+    * every real row's eviction point (q161). Returns every batch's rows.
+    */
+  private def replayJoin(
+      spark: SparkSession, dir: String, scratch: String, cols: String, sentinel: Boolean)(
+      join: DataFrame => DataFrame): DataFrame = {
+    import spark.implicits._
+    val run = s"${pidScopedScratch(scratch, dir)}/run"
+    val (ev, hi) = StreamGate.timeSlices(Tables(spark, dir).events
+      .filter($"user_id" % 4 === 0)
+      .select($"event_id", $"user_id", unix_micros($"ts").as("ts_us"), $"event_type"), 2)
+    val last = Option.when(sentinel)(Seq(
+        (-1L, -1L, hi + 40L * 60000000L, "sentinel"),
+        (-2L, -1L, hi + 41L * 60000000L, "sentinel"))
+      .toDF("event_id", "user_id", "ts_us", "event_type"))
+    val out = StreamGate.BatchDirs(s"$run/out", cols)
+    withConf(spark, "spark.sql.shuffle.partitions" -> "4") {
+      StreamGate.replay(run, ev, 2, "event_id LONG, user_id LONG, ts_us LONG, event_type STRING",
+          last) { stream =>
+        join(stream.select($"event_id", $"user_id", timestamp_micros($"ts_us").as("ts"),
+            $"event_type"))
+          .writeStream
+          .option("checkpointLocation", s"$run/ckpt")
+          .foreachBatch(out.write _)
+          .start()
+      }
+    }
+    out.read(spark)
+  }
 
   val all: Seq[QueryDef] = Seq(
     // ---- Q29: tumbling 1h window (T2 batch-equivalent) --------------------
@@ -230,57 +269,29 @@ object EventQueries {
         |FROM per_session GROUP BY user_id ORDER BY user_id""",
     ) { (spark, dir) =>
       import spark.implicits._
-      import java.nio.file.{Files, Path, Paths}
-      val scratch = graft.queries.TextQueries
-        .pidScopedScratch("graft_stream_sess", dir)
-      def rmTree(p: Path): Unit = if (Files.exists(p)) {
-        val s = Files.walk(p)
-        try s.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(f => Files.delete(f))
-        finally s.close()
-      }
-      val run = s"$scratch/run"
-      rmTree(Paths.get(run))
+      val run = s"${pidScopedScratch("graft_stream_sess", dir)}/run"
       val ev = Tables(spark, dir).events
         .select($"user_id", unix_micros($"ts").as("ts_us"),
-          pmod($"event_id", lit(4)).cast("int").as("chunk")).cache()
-      def writeChunk(i: Int): Unit = ev.filter($"chunk" === i).drop("chunk")
-        .coalesce(1).write.json(s"$run/in/chunk_$i")
-      writeChunk(0) // the in/* glob must match before the query starts
-      val stream = spark.readStream
-        .schema("user_id LONG, ts_us LONG")
-        .option("maxFilesPerTrigger", "1")
-        .json(s"$run/in/*")
-        .select($"user_id", timestamp_micros($"ts_us").as("ts"))
-      // transformWithState requires the RocksDB state store provider;
-      // 4 stream-scoped shuffle partitions (q159's commit-cost note —
-      // per-trigger cost here is RocksDB commit + WAL per PARTITION,
-      // and the default 32 paid 32 store commits x 4 triggers for
-      // batch-scale data). r13: per-commit row counting is a
-      // metrics-only full-store scan the gate never reads — off
-      // (changelog checkpointing was ALSO tried here and measured ~2x
-      // WORSE at this gate's fresh-checkpoint few-commit shape, so
-      // full-snapshot commits stay)
-      try withConf(spark,
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false",
-        "spark.sql.shuffle.partitions" -> "4") {
-        val out = graft.streaming.EventStreams.sessionSummaryTws(spark, stream)
-        val q = out.writeStream
-          .outputMode("update")
-          .option("checkpointLocation", s"$run/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-            b.withColumn("batch", lit(id))
-              .write.mode("append").parquet(s"$run/out")
-            ()
-          }
-          .start()
-        try {
-          q.processAllAvailable()
-          (1 to 3).foreach { i => writeChunk(i); q.processAllAvailable() }
-        } finally q.stop()
-      } finally ev.unpersist()
+          pmod($"event_id", lit(4)).cast("int").as("chunk"))
+      // the RocksDB state store (StreamGate.TwsStateStore); 4
+      // stream-scoped shuffle partitions (StreamGate's commit-cost note
+      // — the default 32 paid 32 RocksDB commits x 4 triggers for
+      // batch-scale data)
+      withConf(spark, StreamGate.TwsStateStore :+ ("spark.sql.shuffle.partitions" -> "4"): _*) {
+        StreamGate.replay(run, ev, 4, "user_id LONG, ts_us LONG") { stream =>
+          graft.streaming.EventStreams
+            .sessionSummaryTws(spark, stream.select($"user_id", timestamp_micros($"ts_us").as("ts")))
+            .writeStream
+            .outputMode("update")
+            .option("checkpointLocation", s"$run/ckpt")
+            .foreachBatch { (b: Dataset[Row], id: Long) =>
+              b.withColumn("batch", lit(id))
+                .write.mode("append").parquet(s"$run/out")
+              ()
+            }
+            .start()
+        }
+      }
       // final per-user state: the row from the LAST batch that emitted
       // the user (n_events is strictly monotone per emission, so max
       // batch = max n_events — both orderings pick the same row)
@@ -374,66 +385,13 @@ object EventQueries {
         |GROUP BY 1 ORDER BY 1""",
     ) { (spark, dir) =>
       import spark.implicits._
-      import java.nio.file.{Files, Path, Paths}
-      val scratch = graft.queries.TextQueries
-        .pidScopedScratch("graft_stream_ssj", dir)
-      def rmTree(p: Path): Unit = if (Files.exists(p)) {
-        val s = Files.walk(p)
-        try s.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(f => Files.delete(f))
-        finally s.close()
-      }
-      val run = s"$scratch/run"
-      rmTree(Paths.get(run))
       // deterministic user-quarter replay: the gate proves STREAMING ≡
       // batch (q14 already gates the full-data batch semantics); the
       // equi-join key makes the one-sided oracle filter equivalent to
       // filtering the whole stream. Keeps the per-round stateful-join
       // cost batch-scale instead of 4x corpus-scale.
-      val ev0 = Tables(spark, dir).events
-        .filter($"user_id" % 4 === 0)
-        .select($"event_id", $"user_id", unix_micros($"ts").as("ts_us"),
-          $"event_type")
-      val b = ev0.agg(min($"ts_us"), max($"ts_us")).head()
-      val (lo, hi) = (b.getLong(0), b.getLong(1))
-      val ev = ev0.withColumn("chunk", least(lit(1),
-        floor(($"ts_us" - lit(lo)) * lit(2L) / lit(hi - lo + 1)).cast("int")))
-        .cache()
-      def writeChunk(i: Int): Unit = ev.filter($"chunk" === i).drop("chunk")
-        .coalesce(1).write.json(s"$run/in/chunk_$i")
-      writeChunk(0) // the in/* glob must match before the query starts
-      val stream = spark.readStream
-        .schema("event_id LONG, user_id LONG, ts_us LONG, event_type STRING")
-        .option("maxFilesPerTrigger", "1")
-        .json(s"$run/in/*")
-        .select($"event_id", $"user_id", timestamp_micros($"ts_us").as("ts"),
-          $"event_type")
-      // 4 shuffle partitions for the stream's lifetime: the per-batch
-      // cost here is state-store commit + WAL fsync PER PARTITION, not
-      // compute — 32 partitions × 2 join sides × 4 batches is 256
-      // store commits for batch-scale data. The partition count is
-      // pinned by the fresh checkpoint at start, so the conf is scoped
-      // to this query like q157's state-store provider conf.
-      try withConf(spark, "spark.sql.shuffle.partitions" -> "4") {
-        val joined = graft.streaming.EventStreams.selfJoinWithin10Min(stream)
-        val q = joined.writeStream
-          .option("checkpointLocation", s"$run/ckpt")
-          // batch-id subdir + overwrite: replay-idempotent (see q161)
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-            batch.select($"a_type", $"b_id")
-              .write.mode("overwrite").parquet(s"$run/out/batch_$bid")
-            ()
-          }
-          .start()
-        try {
-          q.processAllAvailable()
-          (1 to 1).foreach { i => writeChunk(i); q.processAllAvailable() }
-        } finally q.stop()
-      } finally ev.unpersist()
-      // explicit schema: a zero-pair batch leaves only _SUCCESS in its dir
-      spark.read.schema("a_type STRING, b_id LONG")
-        .option("recursiveFileLookup", "true")
-        .parquet(s"$run/out")
+      replayJoin(spark, dir, "graft_stream_ssj", "a_type STRING, b_id LONG", sentinel = false)(
+        graft.streaming.EventStreams.selfJoinWithin10Min)
         .groupBy($"a_type")
         .agg(count(lit(1)).as("n_pairs"), sum($"b_id").as("pair_checksum"))
         .orderBy($"a_type")
@@ -533,67 +491,9 @@ object EventQueries {
         |GROUP BY 1 ORDER BY 1""",
     ) { (spark, dir) =>
       import spark.implicits._
-      import java.nio.file.{Files, Path, Paths}
-      val scratch = graft.queries.TextQueries
-        .pidScopedScratch("graft_stream_ssjo", dir)
-      def rmTree(p: Path): Unit = if (Files.exists(p)) {
-        val s = Files.walk(p)
-        try s.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(f => Files.delete(f))
-        finally s.close()
-      }
-      val run = s"$scratch/run"
-      rmTree(Paths.get(run))
       // user-quarter replay, time-ordered chunks: q159's construction
-      val ev0 = Tables(spark, dir).events
-        .filter($"user_id" % 4 === 0)
-        .select($"event_id", $"user_id", unix_micros($"ts").as("ts_us"),
-          $"event_type")
-      val b = ev0.agg(min($"ts_us"), max($"ts_us")).head()
-      val (lo, hi) = (b.getLong(0), b.getLong(1))
-      val ev = ev0.withColumn("chunk", least(lit(1),
-        floor(($"ts_us" - lit(lo)) * lit(2L) / lit(hi - lo + 1)).cast("int")))
-        .cache()
-      def writeChunk(i: Int): Unit = ev.filter($"chunk" === i).drop("chunk")
-        .coalesce(1).write.json(s"$run/in/chunk_$i")
-      def writeSentinel(): Unit = Seq(
-          (-1L, -1L, hi + 40L * 60000000L, "sentinel"),
-          (-2L, -1L, hi + 41L * 60000000L, "sentinel"))
-        .toDF("event_id", "user_id", "ts_us", "event_type")
-        .coalesce(1).write.json(s"$run/in/chunk_4")
-      writeChunk(0) // the in/* glob must match before the query starts
-      val stream = spark.readStream
-        .schema("event_id LONG, user_id LONG, ts_us LONG, event_type STRING")
-        .option("maxFilesPerTrigger", "1")
-        .json(s"$run/in/*")
-        .select($"event_id", $"user_id", timestamp_micros($"ts_us").as("ts"),
-          $"event_type")
-      // 4 stream-scoped shuffle partitions: q159's commit-cost note
-      try withConf(spark, "spark.sql.shuffle.partitions" -> "4") {
-        val joined = graft.streaming.EventStreams.leftOuterSelfJoinWithin10Min(stream)
-        val q = joined.writeStream
-          .option("checkpointLocation", s"$run/ckpt")
-          // batch-id-named subdir + overwrite = idempotent under retry
-          // (r11 advice): a replayed or partially-written micro-batch
-          // lands in the same directory and replaces itself instead of
-          // double-appending — this gate's whole point is exact row-set
-          // equality against the batch oracle
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-            batch.select($"a_user", $"a_type", $"b_id")
-              .write.mode("overwrite").parquet(s"$run/out/batch_$bid")
-            ()
-          }
-          .start()
-        try {
-          q.processAllAvailable()
-          (1 to 1).foreach { i => writeChunk(i); q.processAllAvailable() }
-          writeSentinel(); q.processAllAvailable()
-        } finally q.stop()
-      } finally ev.unpersist()
-      // explicit schema: a zero-row batch leaves only _SUCCESS in its dir
-      spark.read.schema("a_user LONG, a_type STRING, b_id LONG")
-        .option("recursiveFileLookup", "true")
-        .parquet(s"$run/out")
+      replayJoin(spark, dir, "graft_stream_ssjo", "a_user LONG, a_type STRING, b_id LONG",
+        sentinel = true)(graft.streaming.EventStreams.leftOuterSelfJoinWithin10Min)
         .filter($"a_user" >= 0) // drop the sentinel's own (live) rows
         .groupBy($"a_type")
         .agg(count(lit(1)).as("n_rows"),
@@ -647,66 +547,28 @@ object EventQueries {
         |FROM per_session GROUP BY user_id ORDER BY user_id""",
     ) { (spark, dir) =>
       import spark.implicits._
-      import java.nio.file.{Files, Path, Paths}
-      val scratch = graft.queries.TextQueries
-        .pidScopedScratch("graft_stream_bsess", dir)
-      def rmTree(p: Path): Unit = if (Files.exists(p)) {
-        val s = Files.walk(p)
-        try s.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(f => Files.delete(f))
-        finally s.close()
-      }
-      val run = s"$scratch/run"
-      rmTree(Paths.get(run))
-      val ev0 = Tables(spark, dir).events
-        .select($"user_id", unix_micros($"ts").as("ts_us"))
-      val b = ev0.agg(min($"ts_us"), max($"ts_us")).head()
-      val (lo, hi) = (b.getLong(0), b.getLong(1))
-      val ev = ev0.withColumn("chunk", least(lit(3),
-        floor(($"ts_us" - lit(lo)) * lit(4L) / lit(hi - lo + 1)).cast("int")))
-        .cache()
-      def writeChunk(i: Int): Unit = ev.filter($"chunk" === i).drop("chunk")
-        .coalesce(1).write.json(s"$run/in/chunk_$i")
-      def writeSentinel(): Unit = Seq(
-          (-1L, hi + 41L * 60000000L),
-          (-1L, hi + 42L * 60000000L))
+      val run = s"${pidScopedScratch("graft_stream_bsess", dir)}/run"
+      val (ev, hi) = StreamGate.timeSlices(
+        Tables(spark, dir).events.select($"user_id", unix_micros($"ts").as("ts_us")), 4)
+      val sentinel = Seq((-1L, hi + 41L * 60000000L), (-1L, hi + 42L * 60000000L))
         .toDF("user_id", "ts_us")
-        .coalesce(1).write.json(s"$run/in/chunk_4")
-      writeChunk(0) // the in/* glob must match before the query starts
-      val stream = spark.readStream
-        .schema("user_id LONG, ts_us LONG")
-        .option("maxFilesPerTrigger", "1")
-        .json(s"$run/in/*")
-        .select($"user_id", timestamp_micros($"ts_us").as("ts"))
-      // transformWithState requires the RocksDB state store provider;
-      // no per-commit row counting: q157's commit-cost trim note;
-      // 4 stream-scoped shuffle partitions: q159's commit-cost note
-      try withConf(spark,
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false",
-        "spark.sql.shuffle.partitions" -> "4") {
-        val closed = graft.streaming.EventStreams.closedSessionsTws(spark, stream)
-        val q = closed.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$run/ckpt")
-          // batch-id subdir + overwrite: replay-idempotent (see q161)
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-            batch.write.mode("overwrite").parquet(s"$run/out/batch_$bid")
-            ()
-          }
-          .start()
-        try {
-          q.processAllAvailable()
-          (1 to 3).foreach { i => writeChunk(i); q.processAllAvailable() }
-          writeSentinel(); q.processAllAvailable()
-        } finally q.stop()
-      } finally ev.unpersist()
+      val out = StreamGate.BatchDirs(s"$run/out",
+        "user_id LONG, s_start_us LONG, s_end_us LONG, n_events LONG")
+      // the RocksDB state store (StreamGate.TwsStateStore); 4
+      // stream-scoped shuffle partitions: StreamGate's commit-cost note
+      withConf(spark, StreamGate.TwsStateStore :+ ("spark.sql.shuffle.partitions" -> "4"): _*) {
+        StreamGate.replay(run, ev, 4, "user_id LONG, ts_us LONG", Some(sentinel)) { stream =>
+          graft.streaming.EventStreams
+            .closedSessionsTws(spark, stream.select($"user_id", timestamp_micros($"ts_us").as("ts")))
+            .writeStream
+            .outputMode("append")
+            .option("checkpointLocation", s"$run/ckpt")
+            .foreachBatch(out.write _)
+            .start()
+        }
+      }
       // closed rows only: the sentinel proved everything real closed
-      spark.read
-        .schema("user_id LONG, s_start_us LONG, s_end_us LONG, n_events LONG")
-        .option("recursiveFileLookup", "true")
-        .parquet(s"$run/out")
+      out.read(spark)
         .filter($"user_id" >= 0) // the sentinel's own session stays live
         .groupBy($"user_id")
         .agg(count(lit(1)).as("n_sessions"),
@@ -749,61 +611,8 @@ object EventQueries {
         |GROUP BY 1 ORDER BY 1""",
     ) { (spark, dir) =>
       import spark.implicits._
-      import java.nio.file.{Files, Path, Paths}
-      val scratch = graft.queries.TextQueries
-        .pidScopedScratch("graft_stream_ssfo", dir)
-      def rmTree(p: Path): Unit = if (Files.exists(p)) {
-        val s = Files.walk(p)
-        try s.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(f => Files.delete(f))
-        finally s.close()
-      }
-      val run = s"$scratch/run"
-      rmTree(Paths.get(run))
-      val ev0 = Tables(spark, dir).events
-        .filter($"user_id" % 4 === 0)
-        .select($"event_id", $"user_id", unix_micros($"ts").as("ts_us"),
-          $"event_type")
-      val b = ev0.agg(min($"ts_us"), max($"ts_us")).head()
-      val (lo, hi) = (b.getLong(0), b.getLong(1))
-      val ev = ev0.withColumn("chunk", least(lit(1),
-        floor(($"ts_us" - lit(lo)) * lit(2L) / lit(hi - lo + 1)).cast("int")))
-        .cache()
-      def writeChunk(i: Int): Unit = ev.filter($"chunk" === i).drop("chunk")
-        .coalesce(1).write.json(s"$run/in/chunk_$i")
-      def writeSentinel(): Unit = Seq(
-          (-1L, -1L, hi + 40L * 60000000L, "sentinel"),
-          (-2L, -1L, hi + 41L * 60000000L, "sentinel"))
-        .toDF("event_id", "user_id", "ts_us", "event_type")
-        .coalesce(1).write.json(s"$run/in/chunk_4")
-      writeChunk(0) // the in/* glob must match before the query starts
-      val stream = spark.readStream
-        .schema("event_id LONG, user_id LONG, ts_us LONG, event_type STRING")
-        .option("maxFilesPerTrigger", "1")
-        .json(s"$run/in/*")
-        .select($"event_id", $"user_id", timestamp_micros($"ts_us").as("ts"),
-          $"event_type")
-      try withConf(spark, "spark.sql.shuffle.partitions" -> "4") {
-        val joined = graft.streaming.EventStreams.fullOuterSelfJoinWithin10Min(stream)
-        val q = joined.writeStream
-          .option("checkpointLocation", s"$run/ckpt")
-          // batch-id subdir + overwrite: replay-idempotent (see q161)
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-            batch.select($"a_user", $"a_type", $"b_id")
-              .write.mode("overwrite").parquet(s"$run/out/batch_$bid")
-            ()
-          }
-          .start()
-        try {
-          q.processAllAvailable()
-          (1 to 1).foreach { i => writeChunk(i); q.processAllAvailable() }
-          writeSentinel(); q.processAllAvailable()
-        } finally q.stop()
-      } finally ev.unpersist()
-      spark.read
-        .schema("a_user LONG, a_type STRING, b_id LONG")
-        .option("recursiveFileLookup", "true")
-        .parquet(s"$run/out")
+      replayJoin(spark, dir, "graft_stream_ssfo", "a_user LONG, a_type STRING, b_id LONG",
+        sentinel = true)(graft.streaming.EventStreams.fullOuterSelfJoinWithin10Min)
         // drop sentinel rows on whichever side they surfaced
         .filter(($"a_user".isNull || $"a_user" >= 0) &&
           ($"b_id".isNull || $"b_id" >= 0))

@@ -1326,7 +1326,7 @@ private[graft] object DppSink {
     synchronized {
       byDir.getOrElseUpdate(dir, {
         import org.apache.spark.sql.functions._
-        val path = s"${TextQueries.pidScopedScratch("graft_dppsink", dir)}/lineitem_by_month"
+        val path = s"${graft.io.LocalDirs.pidScopedScratch("graft_dppsink", dir)}/lineitem_by_month"
         Tables(spark, dir).lineitem
           .select(col("l_orderkey"), col("l_quantity"),
             date_format(col("l_shipdate"), "yyyy-MM").as("ship_month"))

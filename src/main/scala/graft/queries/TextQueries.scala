@@ -4,6 +4,8 @@ import graft.{Canon, QueryDef, Tables}
 import graft.Canon._
 import graft.SessionConf.withConf
 import graft.functions.TextFunctions
+import graft.io.LocalDirs
+import graft.io.LocalDirs.pidScopedScratch
 import graft.operators.{Dedup, DomainCaps, LineDedup, MinHashLSH, QualityClassifier, SimHash, SimilaritySearch}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -20,39 +22,18 @@ import org.apache.spark.sql.types.DecimalType
   */
 object TextQueries {
 
-  /** Root for the run-time expected parquets below — JVM-scoped (pid in
-    * the path, stale dead-pid siblings removed on first touch) for the
-    * same reason as [[pidScopedScratch]]: two concurrently launched
-    * harness JVMs would otherwise overwrite each other's expected
-    * parquet mid-oracle-read and corrupt the gate comparison. The oracle
-    * SQL strings interpolate these vals at dump time, so DuckDB reads
-    * exactly the path this JVM wrote.
+  /** Root for the run-time expected parquets below,
+    * `java.io.tmpdir/graft_expected_<pid>` — JVM-scoped (dead-pid
+    * siblings removed on first touch, [[LocalDirs.pidScoped]]): two
+    * concurrently launched harness JVMs would otherwise overwrite each
+    * other's expected parquet mid-oracle-read and corrupt the gate
+    * comparison. The oracle SQL strings interpolate these vals at dump
+    * time, so DuckDB reads exactly the path this JVM wrote.
     */
   private lazy val expectedRoot: String = {
-    import java.nio.file.{Files, Path, Paths}
-    val tmp = Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"))
-    val prefix = "graft_expected_"
-    def alive(pid: Long): Boolean = {
-      val h = ProcessHandle.of(pid)
-      h.isPresent && h.get().isAlive
-    }
-    def rm(p: Path): Unit = {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
-      finally s.close()
-    }
-    if (Files.isDirectory(tmp)) {
-      val s = Files.list(tmp)
-      try s.forEach { p =>
-        val n = p.getFileName.toString
-        val stale = n.startsWith(prefix) &&
-          scala.util.Try(n.stripPrefix(prefix).toLong).toOption.forall(!alive(_))
-        if (stale) { scala.util.Try(rm(p)); () }
-      } finally s.close()
-    }
-    val root = tmp.resolve(prefix + ProcessHandle.current().pid)
-    Files.createDirectories(root)
+    val root = LocalDirs.pidScoped(
+      java.nio.file.Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp")), "graft_expected_")
+    java.nio.file.Files.createDirectories(root)
     root.toString
   }
 
@@ -262,37 +243,6 @@ object TextQueries {
         path
       })
     }
-
-  /** Per-(dir, JVM) scratch root under `base`, with stale siblings from
-    * DEAD harness JVMs removed on entry (each forked run gets a fresh
-    * pid, so without this every round leaks a corpus-sized directory);
-    * live siblings — a concurrently running harness — are left alone.
-    */
-  private[graft] def pidScopedScratch(base: String, dir: String): String = {
-    import java.nio.file.{Files, Path, Paths}
-    val root = Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"), base)
-    val prefix = Integer.toHexString(dir.hashCode) + "_"
-    def rm(p: Path): Unit = {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
-      finally s.close()
-    }
-    def alive(pid: Long): Boolean = {
-      val h = ProcessHandle.of(pid)
-      h.isPresent && h.get().isAlive
-    }
-    if (Files.isDirectory(root)) {
-      val s = Files.list(root)
-      try s.forEach { p =>
-        val n = p.getFileName.toString
-        val stale = n.startsWith(prefix) &&
-          scala.util.Try(n.stripPrefix(prefix).toLong).toOption.forall(!alive(_))
-        if (stale) { scala.util.Try(rm(p)); () } // best-effort; a racing delete is fine
-      } finally s.close()
-    }
-    s"$root/$prefix${ProcessHandle.current().pid()}"
-  }
 
   /** Memoized q88 reference merges: learned once per sf dir by the
     * sequential reference implementation (the tokenizer artifact both the
@@ -2543,16 +2493,14 @@ object TextQueries {
     // drain (DedupStreams.dedupOnce, batching invariance: the operator's
     // documented monotone-id contract). The oracle reads the reference
     // survivors written by the once-per-dir fixture stage. Chunk files
-    // are fed to the running query one at a time (write chunk i, drain,
-    // write chunk i+1), so batch composition is deterministic without
-    // relying on file-listing order — gate harness only; a production
-    // ingest just points the file source at the landing directory. ------
+    // are fed one per micro-batch by StreamGate.replay — gate harness
+    // only; a production ingest just points the file source at the
+    // landing directory. ------------------------------------------------
     QueryDef(
       "q111_stream_dedup",
       s"SELECT doc_id FROM read_parquet('$StreamDedupExpected/*.parquet') ORDER BY doc_id",
     ) { (spark, dir) =>
       import spark.implicits._
-      import java.nio.file.{Files, Path, Paths}
       // 2000-doc slice: the gate proves the streaming machinery and the
       // batching-invariance contract, not ingest throughput (that's the
       // bench's 20k-file stream step) — and the reference drain + 4-batch
@@ -2560,13 +2508,7 @@ object TextQueries {
       val docs = Tables(spark, dir).documents.filter($"doc_id" < 2000)
         .select($"doc_id", $"text")
       val scratch = pidScopedScratch("graft_stream_dedup", dir) // see q99's pid note
-      def rmTree(p: Path): Unit = if (Files.exists(p)) {
-        val s = Files.walk(p)
-        try s.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(f => Files.delete(f))
-        finally s.close()
-      }
-      // 4 gate-scoped shuffle partitions (the q159 commit-cost trim,
+      // 4 gate-scoped shuffle partitions (StreamGate's commit-cost trim,
       // extended to this gate in r13 — it predated the r12 sweep): every
       // shuffle here is over a 2000-doc slice, so 32-way exchanges +
       // 32-task stages are pure per-batch fixed cost across the 4
@@ -2577,32 +2519,20 @@ object TextQueries {
       withConf(spark, "spark.sql.shuffle.partitions" -> "4") {
         ensureExpected("streamdedup", dir) {
           val ref = s"$scratch/ref"
-          rmTree(Paths.get(ref))
+          LocalDirs.deleteRecursively(java.nio.file.Paths.get(ref))
           graft.streaming.DedupStreams.dedupOnce(docs, s"$ref/out", s"$ref/index")
           spark.read.parquet(s"$ref/out").select($"doc_id").orderBy($"doc_id")
             .coalesce(1).write.mode("overwrite").parquet(StreamDedupExpected)
         }
-        rmTree(Paths.get(run))
         // 4 contiguous id-range chunks: monotone doc_id arrival across
         // batches, the operator's documented precondition (4 micro-batches
         // prove the index round trip while keeping the gate's fixed
         // per-batch cost — planning + checkpoint + sink commit — bounded)
-        val chunked = docs.withColumn("chunk",
-          ntile(4).over(org.apache.spark.sql.expressions.Window.orderBy($"doc_id"))).cache()
-        def writeChunk(i: Int): Unit = chunked.filter($"chunk" === i).drop("chunk")
-          .coalesce(1).write.json(s"$run/in/chunk_$i")
-        writeChunk(1) // the in/* glob must match before the query starts
-        val stream = spark.readStream
-          .schema("doc_id LONG, text STRING")
-          .option("maxFilesPerTrigger", "1")
-          .json(s"$run/in/*")
-        val q = graft.streaming.DedupStreams.ingest(
-          stream, s"$run/out", s"$run/index", s"$run/ckpt", availableNow = false)
-        try {
-          q.processAllAvailable()
-          (2 to 4).foreach { i => writeChunk(i); q.processAllAvailable() }
-        } finally q.stop()
-        chunked.unpersist()
+        val chunked = docs.withColumn("chunk", ntile(4).over(Window.orderBy($"doc_id")) - 1)
+        StreamGate.replay(run, chunked, 4, "doc_id LONG, text STRING") { stream =>
+          graft.streaming.DedupStreams.ingest(
+            stream, s"$run/out", s"$run/index", s"$run/ckpt", availableNow = false)
+        }
       }
       spark.read.parquet(s"$run/out").select($"doc_id").orderBy($"doc_id")
     },
@@ -3431,8 +3361,8 @@ object TextQueries {
       val batch = st.filter($"status" =!= "retained")
         .select(($"doc_id" + 2000000L).as("doc_id"), $"text")
       val idx = ensureSigIndex(dir, "q130_retained")(retained)
-      val flagged = graft.operators.Decontamination
-        .batchNearDuplicateIdsIndexed(retained, batch, "doc_id", "text", idx, threshold = 0.7)
+      val flagged = graft.operators.SignatureIndex.probeNearDuplicateIds(
+          spark, idx, retained, batch, "doc_id", "text", threshold = 0.7)
         .select(($"doc_id" - 2000000L).as("fid"))
       st.join(flagged,
           $"doc_id" === $"fid" && $"status" =!= "retained", "left")
@@ -3468,9 +3398,8 @@ object TextQueries {
               lit(" unseen content"))).as("text"),
           $"cohort")
       val idx = ensureSigIndex(dir, "documents")(a)
-      val flagged = graft.operators.Decontamination
-        .batchNearDuplicateIdsIndexed(
-          a, b.drop("cohort"), "doc_id", "text", idx, threshold = 0.7)
+      val flagged = graft.operators.SignatureIndex.probeNearDuplicateIds(
+          spark, idx, a, b.drop("cohort"), "doc_id", "text", threshold = 0.7)
         .withColumnRenamed("doc_id", "fid")
       b.join(flagged, $"doc_id" === $"fid", "left")
         .groupBy($"cohort")
@@ -4449,9 +4378,8 @@ object TextQueries {
               lit(" unseen content"))).as("text"),
           $"cohort")
       val idx = ensureSigIndex(dir, "documents")(a)
-      val flagged = graft.operators.Decontamination
-        .batchNearDuplicateIdsIndexed(
-          a, b.drop("cohort"), "doc_id", "text", idx, threshold = 0.7,
+      val flagged = graft.operators.SignatureIndex.probeNearDuplicateIds(
+          spark, idx, a, b.drop("cohort"), "doc_id", "text", threshold = 0.7,
           store = Some(kvStoreFor(idx)))
         .withColumnRenamed("doc_id", "fid")
       b.join(flagged, $"doc_id" === $"fid", "left")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Dedup, InMemoryMembershipStore, MinHashLSH}
+import graft.operators.{Dedup, InMemoryMembershipStore, MembershipStore, MinHashLSH, SignatureIndex}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
@@ -104,19 +104,9 @@ object DedupStreams {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  private val Bands = 32
-  private val RowsPerBand = 4
-  private val NumPerms = Bands * RowsPerBand
-
-  /** Pack a b-bit (8-bit fold) signature — NumPerms longs each holding
-    * one byte-range component — into NumPerms/8 longs, 8 components per
-    * word. The driver kernel's agreement estimate then compares 8
-    * components per XOR instead of one per array slot; exactness is
-    * byte equality either way. (Shared with the point-lookup store —
-    * one packing, one kernel, no drift.)
-    */
-  private[streaming] def packSig8(sig: Array[Long]): Array[Long] =
-    graft.operators.MembershipStore.packSig8(sig)
+  /** The index's derivation params: the library-wide banding, persisted
+    * beside the index by the first trigger. */
+  private val Cfg = SignatureIndex.Config()
 
   /** Open-addressing set of positive longs (0 = empty slot sentinel;
     * callers must never add 0). The within-batch pair loop inserts the
@@ -145,20 +135,6 @@ object DedupStreams {
       old.foreach(k => if (k != 0L) add(k))
     }
   }
-
-  /** Count agreeing byte components of two packed signatures. Per word:
-    * disagreeing bytes of x = a^b are counted by OR-folding each byte
-    * onto its own bit 0 (shift-and-mask keeps neighbors' bits out, so
-    * the per-byte indicator is exact — unlike the classic
-    * (x-0x01…)&~x&0x80… trick whose borrow cascades across a zero byte
-    * below a nonzero one); agreements are the complement. Kept as
-    * plain Scala on purpose: a column-expression spelling of this
-    * kernel was tried and reverted — with the probe's In literals
-    * changing every trigger the generated source never hits the
-    * codegen cache, costing ~10 s of janino per trigger.
-    */
-  private[streaming] def packedAgreeCount(a: Array[Long], b: Array[Long]): Int =
-    graft.operators.MembershipStore.agreeCount(a, b)
 
   /** Micro-batches between index compactions (fold `batch=*` dirs into
     * one `compacted=<M>` dir). Bounds the per-trigger listing at
@@ -253,7 +229,7 @@ object DedupStreams {
   private def est8(sa: Column, sb: Column): Column =
     aggregate(
       zip_with(sa, sb, (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, m) => acc + m).cast("double") / lit(NumPerms)
+      lit(0), (acc, m) => acc + m).cast("double") / lit(Cfg.numPerms)
 
   /** Rows whose `doc_id` is not in `dropped` — the anti-join against
     * the dropped set as one filter, null ids kept as the anti-join keeps
@@ -269,26 +245,6 @@ object DedupStreams {
     id.isNull || !ColumnBridge.toColumn(
       InSet(ColumnBridge.toExpression(id), dropped.map(d => d: Any)))
   }
-
-  /** Index listing/epoch selection lives in [[graft.operators
-    * .SignatureIndex]] (the shared on-disk layout — a batch-built index
-    * seeds a stream, a stream-built index serves batch probes); this is
-    * the same table pair, maintained incrementally.
-    */
-  private def listTable(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): graft.operators.SignatureIndex.TableListing =
-    graft.operators.SignatureIndex.listTable(fs, dir)
-
-  /** Two-level size-tiered compaction — the fold logic lives in
-    * [[graft.operators.SignatureIndex.compact]] (shared with batch-
-    * refresh indexes, which call it every K appends); the stream
-    * invokes it every `compactEvery` triggers and then resyncs its
-    * store's coverage to the folded names
-    * ([[InMemoryMembershipStore.resyncAfterFold]]).
-    */
-  private def compact(spark: SparkSession, indexDir: String, upTo: Long): Unit =
-    graft.operators.SignatureIndex.compact(spark, indexDir, upTo)
 
   /** One micro-batch of the online dedup; package-private so the
     * batching-invariance, replay-idempotence, admission-cap and
@@ -351,7 +307,7 @@ object DedupStreams {
         val prevDesc = sc.getLocalProperty("spark.job.description")
         sc.setJobDescription(s"dedup.collect batch=$batchId")
         try phase("collect")(MinHashLSH.collectWithSignatures(
-          batch, "doc_id", "text", NumPerms, maxRowBytes = DriverBatchBytes))
+          batch, "doc_id", "text", Cfg.numPerms, maxRowBytes = DriverBatchBytes))
         finally sc.setLocalProperty("spark.job.description", prevDesc)
       }
     val kernelRows = collected.filter(_.rows.length <= driverBatchCap)
@@ -374,7 +330,7 @@ object DedupStreams {
       val preNames = graft.operators.SignatureIndex
         .componentNames(spark, indexDir, "members", excludeBatch = Some(batchId)).toSet
       if ((preNames -- st.knownPaths).nonEmpty) st.clear()
-      try phase("compact")(compact(spark, indexDir, upTo = batchId - 1))
+      try phase("compact")(SignatureIndex.compact(spark, indexDir, upTo = batchId - 1))
       catch { case e: Throwable => cachedBatch.foreach(_.unpersist()); throw e }
     }
 
@@ -393,9 +349,8 @@ object DedupStreams {
     // a later batch-probe with different banding fails loudly instead of
     // silently finding zero collisions (SignatureIndex.validateParams)
     val listing = phase("list") {
-      graft.operators.SignatureIndex.writeParams(
-        fs, indexDir, graft.operators.SignatureIndex.Config(3, NumPerms, Bands, RowsPerBand))
-      listTable(fs, hPath)
+      SignatureIndex.writeParams(fs, indexDir, Cfg)
+      SignatureIndex.listTable(fs, hPath)
     }
     val live = listing.copy(batches = listing.batches.filter(_ != batchId))
     def tablePaths(table: String): Seq[String] =
@@ -437,10 +392,10 @@ object DedupStreams {
         val sig8Local: Map[Long, Array[Long]] =
           sigLocal.map { case (id, s) => id -> s.map(_ & 255L) }
         val sigPk: Map[Long, Array[Long]] =
-          sig8Local.map { case (id, s) => id -> packSig8(s) }
+          sig8Local.map { case (id, s) => id -> MembershipStore.packSig8(s) }
         val bandedLocal: Array[(Int, Long, Long)] = phase("band_keys")(
           sigLocal.toArray.flatMap { case (id, s) =>
-            MinHashLSH.bandKeysOf(s, Bands, RowsPerBand).zipWithIndex
+            MinHashLSH.bandKeysOf(s, Cfg.bands, Cfg.rowsPerBand).zipWithIndex
               .map { case (bkey, band) => (band, bkey, id) }
           })
         // batch vs index through the store's point lookups — O(batch
@@ -464,7 +419,7 @@ object DedupStreams {
               var i = 0
               while (i < ms.length && !out.contains(nid)) {
                 msig.get(ms(i)).foreach { m =>
-                  if (packedAgreeCount(nsig, m).toDouble / NumPerms >= tCorr)
+                  if (MembershipStore.agreeCount(nsig, m).toDouble / Cfg.numPerms >= tCorr)
                     out += nid
                 }
                 i += 1
@@ -505,7 +460,7 @@ object DedupStreams {
           def visit(a: Int, b: Int): Unit =
             if (seen.add((a.toLong << 20) | b.toLong)) {
               nPairs += 1
-              if (packedAgreeCount(pk(a), pk(b)).toDouble / NumPerms >= tCorr)
+              if (MembershipStore.agreeCount(pk(a), pk(b)).toDouble / Cfg.numPerms >= tCorr)
                 out += ((ids(a), ids(b)))
             }
           buckets.valuesIterator.foreach { rows =>
@@ -552,21 +507,21 @@ object DedupStreams {
         // order. Each write is individually idempotent (overwrite of its
         // own batch=<id> dir), so a failure in any of them fails the
         // trigger and the replay heals all three.
-        phase("write_survivors")(graft.operators.SignatureIndex.writeComponent(
+        phase("write_survivors")(SignatureIndex.writeComponent(
           spark, s"$outDir/batch=$batchId", batch.schema,
           kernel.rows.indices.iterator
             .filter(i => kernel.ids(i) == null || !dropped.contains(kernel.ids(i)))
             .map(i => kernel.rows(i))))
         // signatures only for docs reachable from the membership (a doc
         // admitted to zero buckets can never be probed)
-        phase("write_sigs")(graft.operators.SignatureIndex.writeComponent(
+        phase("write_sigs")(SignatureIndex.writeComponent(
           spark, s"$indexDir/sigs/batch=$batchId",
-          graft.operators.SignatureIndex.SigsSchema,
+          SignatureIndex.SigsSchema,
           admitted.iterator.map(_._3).distinct.map(d => InternalRow(
             d, UnsafeArrayData.fromPrimitiveArray(sig8Local(d))))))
-        phase("write_members")(graft.operators.SignatureIndex.writeComponent(
+        phase("write_members")(SignatureIndex.writeComponent(
           spark, s"$indexDir/members/batch=$batchId",
-          graft.operators.SignatureIndex.MembersSchema,
+          SignatureIndex.MembersSchema,
           admitted.iterator.map(t => InternalRow(t._1, t._2, t._3))))
         // store update strictly AFTER the members write lands (a crash
         // before this point leaves a component the next ensureCovers
@@ -587,11 +542,11 @@ object DedupStreams {
         // reads (SignatureIndex.MembersSchema/SigsSchema), whatever
         // integral type the batch carries
         val sigs = MinHashLSH
-          .signatures(Dedup.charShingles(sigSrc, "doc_id", "text"), NumPerms)
+          .signatures(Dedup.charShingles(sigSrc, "doc_id", "text"), Cfg.numPerms)
           .withColumn("doc_id", col("doc_id").cast("long"))
           .withColumn("sig8", transform(col("sig"), x => x.bitwiseAND(lit(255L))))
           .cache()
-        val banded = MinHashLSH.bandKeys(sigs, Bands, RowsPerBand)
+        val banded = MinHashLSH.bandKeys(sigs, Cfg.bands, Cfg.rowsPerBand)
           .select(col("doc_id"), col("band"), col("bkey"))
           .cache()
         // the index side: the live components, read directly (the store
@@ -660,24 +615,27 @@ object DedupStreams {
             .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
 
           // admission via a window over BATCH rows only (same semantics as
-          // the driver kernel's local form)
+          // the driver kernel's local form), cached: the sigs write reads
+          // its ids, then the members write its rows — sigs before
+          // members, the publish order of the driver kernel and the fold
+          // (a reader listing between the two writes must never see
+          // members whose sigs are not yet there)
           val wAdm = Window.partitionBy(col("band"), col("bkey")).orderBy(col("doc_id"))
-          banded
+          val admitted = banded
             .filter(notDropped(dropped))
             .join(broadcast(occupancy), Seq("band", "bkey"), "left")
             .withColumn("__r", row_number().over(wAdm))
             .filter(col("__r") + coalesce(col("occ"), lit(0)) <= lit(bucketCap))
             .select(col("band"), col("bkey"), col("doc_id"))
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$indexDir/members/batch=$batchId")
-          // read the written partition back rather than recomputing the
-          // admission window
-          val admittedIds = spark.read.parquet(s"$indexDir/members/batch=$batchId")
-            .select(col("doc_id")).distinct()
-          sigs.select(col("doc_id"), col("sig8"))
-            .join(admittedIds, Seq("doc_id"), "left_semi")
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$indexDir/sigs/batch=$batchId")
+            .cache()
+          try {
+            sigs.select(col("doc_id"), col("sig8"))
+              .join(broadcast(admitted.select(col("doc_id")).distinct()), Seq("doc_id"), "left_semi")
+              .coalesce(1)
+              .write.mode("overwrite").parquet(s"$indexDir/sigs/batch=$batchId")
+            admitted.coalesce(1)
+              .write.mode("overwrite").parquet(s"$indexDir/members/batch=$batchId")
+          } finally admitted.unpersist()
           memberHits.unpersist()
         } finally {
           banded.unpersist()

@@ -450,14 +450,8 @@ object EventStreams {
     */
   private[streaming] def mergeLatestBatch(
       batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], tableDir: String): Unit = {
-    import java.nio.file.{Files, Path, Paths}
-    def rmRf(p: Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val s = Files.list(p)
-        try s.forEach(rmRf(_)) finally s.close()
-      }
-      Files.delete(p)
-    }
+    import java.nio.file.{Files, Paths}
+    import graft.io.LocalDirs.deleteRecursively
     val tablePath = Paths.get(tableDir)
     val oldPath = Paths.get(tableDir + ".old")
     // recovery: a crash between rename-aside and staging-move leaves
@@ -465,7 +459,7 @@ object EventStreams {
     // a superseded `.old` next to the new table — drop it
     if (Files.exists(oldPath)) {
       if (!Files.exists(tablePath)) Files.move(oldPath, tablePath)
-      else rmRf(oldPath)
+      else deleteRecursively(oldPath)
     }
     val s = batch.sparkSession
     val cols = Seq("user_id", "ts", "event_id", "event_type", "value")
@@ -485,7 +479,7 @@ object EventStreams {
     // -> drop the aside copy
     if (existing) Files.move(tablePath, oldPath)
     Files.move(Paths.get(staging), tablePath)
-    if (Files.exists(oldPath)) rmRf(oldPath)
+    if (Files.exists(oldPath)) deleteRecursively(oldPath)
   }
 
   /** Run any of the above to an in-memory sink until the source drains;

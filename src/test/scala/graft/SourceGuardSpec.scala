@@ -12,7 +12,11 @@ import scala.jdk.CollectionConverters._
   *    dropping it;
   *  - one spelling of the `file:` scheme install: `Bench.session` and the
   *    test session read `graft.io.LocalFileScheme.SparkConf`, so specs run
-  *    the file system the bench measures.
+  *    the file system the bench measures;
+  *  - one recursive delete, `graft.io.LocalDirs.deleteRecursively`;
+  *  - one replay driver: under `graft/queries` only `StreamGate` opens a
+  *    stream source or drains a running query, so no gate re-spells the
+  *    harness or its release of the stream and the chunk cache.
   */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
   private def scalaSources(dir: String): Seq[(Path, String)] = {
@@ -44,5 +48,18 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
       .filterNot(_.contains("SourceGuardSpec.scala"))
     assert(sites.nonEmpty && sites.forall(_.contains("io/LocalFileScheme.scala")),
       sites.mkString("fs.file.impl sites:\n", "\n", ""))
+  }
+
+  test("src/main holds exactly one recursive delete, in graft.io.LocalDirs") {
+    val sites = hits("src/main", "Comparator.reverseOrder")
+    assert(sites.size == 1 && sites.head.contains("io/LocalDirs.scala"),
+      sites.mkString("reverse-order walk sites:\n", "\n", ""))
+  }
+
+  test("under graft/queries only StreamGate opens or drains a stream") {
+    val sites = Seq("readStream", "processAllAvailable")
+      .flatMap(hits("src/main/scala/graft/queries", _))
+    assert(sites.nonEmpty && sites.forall(_.contains("queries/StreamGate.scala")),
+      sites.mkString("stream sites in queries:\n", "\n", ""))
   }
 }

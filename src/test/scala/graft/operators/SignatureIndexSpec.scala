@@ -37,8 +37,8 @@ class SignatureIndexSpec extends SparkSpec {
     val (corpus, batch) = scenario()
     val dir = tmpDir("equiv")
     SignatureIndex.build(corpus, "doc_id", "text", dir)
-    val indexed = Decontamination
-      .batchNearDuplicateIdsIndexed(corpus, batch, "doc_id", "text", dir, threshold = 0.7)
+    val indexed = SignatureIndex
+      .probeNearDuplicateIds(spark, dir, corpus, batch, "doc_id", "text", threshold = 0.7)
       .as[Long].collect().toSet
     val u = corpus.withColumn("is_new", lit(false))
       .unionByName(batch.withColumn("is_new", lit(true)))

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.operators.MembershipStore
 import java.nio.file.Files
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -564,6 +565,37 @@ class DedupStreamsSpec extends SparkSpec {
     }
   }
 
+  test("an over-cap trigger publishes survivors, then sigs, then members") {
+    // sigs before members (SignatureIndex.append's contract): a reader
+    // listing between the two writes may see sigs without members, never
+    // members without sigs — a store seeding then would mark the
+    // component covered and never load its sigs
+    val root = java.nio.file.Paths.get(Files.createTempDirectory("dedup_write_order").toString)
+    val writes = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(
+          funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        qe.logical.foreach {
+          case c: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand =>
+            writes.synchronized(writes +=
+              root.relativize(java.nio.file.Paths.get(c.outputPath.toUri.getPath)).toString)
+          case _ =>
+        }
+      override def onFailure(
+          funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      DedupStreams.dedupBatch(corpus, s"$root/out", s"$root/index", threshold = 0.7,
+        batchId = 0, driverBatchCap = 0L)
+      org.apache.spark.sql.graft.ListenerBusHook.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.toSeq == Seq("out/batch=0", "index/sigs/batch=0", "index/members/batch=0"),
+      s"write order: $writes")
+  }
+
   test("a drain through the kernel and the over-cap spelling leaves no cache, persisted RDD or conf behind") {
     // suites share one session: start from an empty cache so any frame
     // the drain leaves persisted shows
@@ -636,14 +668,14 @@ class DedupStreamsSpec extends SparkSpec {
         case 1 => a.map(v => (v + 1) & 255L)
         case _ => a.map(v => if (rnd.nextBoolean()) v else rnd.nextInt(256).toLong)
       }
-      assert(DedupStreams.packedAgreeCount(
-        DedupStreams.packSig8(a), DedupStreams.packSig8(b)) == naive(a, b))
+      assert(MembershipStore.agreeCount(
+        MembershipStore.packSig8(a), MembershipStore.packSig8(b)) == naive(a, b))
     }
     // the borrow-cascade case that breaks the classic (x-LO)&~x&HI zero-
     // byte trick: a zero byte directly below a 0x01 byte (x = …0100…)
     val a = Array.fill(16)(0L)
     val b = Array.tabulate(16)(i => if (i == 1) 1L else 0L) // byte 1 differs
-    assert(DedupStreams.packedAgreeCount(
-      DedupStreams.packSig8(a), DedupStreams.packSig8(b)) == 15)
+    assert(MembershipStore.agreeCount(
+      MembershipStore.packSig8(a), MembershipStore.packSig8(b)) == 15)
   }
 }
