@@ -329,16 +329,8 @@ object Bench {
           ",\"solo\":" + m3(soloMap.getOrElse(n, 0.0)) +
           ",\"resweep\":" + resoloMap.get(n).map(m3).getOrElse("null") + "}"
       }.mkString("{", ",", "}")
-      // store_bytes: resident footprint of every KV-seam membership
-      // store this JVM seeded (q133's two views, q155) — the r11
-      // verdict's "corpus-proportional and not yet a ledger line"
-      val stores = graft.queries.TextQueries.kvStoreStats.toSeq.sortBy(_._1)
-        .map { case (k, s) =>
-          "\"" + k + "\":{\"entries\":" + s.entries + ",\"sigs\":" + s.sigs +
-            ",\"bytes\":" + s.approxBytes + "}"
-        }.mkString("{", ",", "}")
       s""""prebuild":$pb,"index_build_ms":$builds,"index_bytes":$sizes,""" +
-        s""""store_bytes":$stores,"solo_contended":$triples"""
+        s""""solo_contended":$triples"""
     }
     emit(cold, warmFinal, solo, failed.toSeq, streamJson, drainJson, sfDir,
       diagJson, warm2, suspects, soloSuspects, extrasJson)

@@ -2,29 +2,18 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared pieces of the signature index's point-lookup probe
+/** Shared pieces of the streaming trigger's point-lookup probe
   * ([[InMemoryMembershipStore]]): the packed b-bit signature layout, its
-  * SWAR agreement kernel, and the store's capacity ledger row.
+  * SWAR agreement kernel, and the store's capacity row.
   */
 object MembershipStore {
 
-  /** Capacity ledger row for one in-memory store: membership entries,
+  /** Capacity row for one in-memory store: membership entries,
     * signature rows, and an approximate resident-bytes figure. The
-    * single-JVM stand-in's footprint is corpus-proportional (it seeds
-    * the full retained member set), and that cost must be a MEASURED
-    * bench line, not a scaladoc caveat — the production contract stays
-    * "the same interface fronts a real KV store" where this figure is
-    * the store's keyspace size instead of driver heap.
+    * store seeds the full retained member set, so the footprint is
+    * corpus-proportional; the drain reports it as `store_stats`.
     */
   final case class StoreStats(entries: Int, sigs: Int, approxBytes: Long)
-
-  /** Bound on the pushed In-predicate literals of one pull scan: parquet-mr
-    * evaluates a pushed In as a left-nested OR chain whose recursion depth
-    * is the literal count (1024 evaluates fine on this JVM, 2048
-    * overflows the scan task's stack). A pull past it filters through a
-    * broadcast semi-join instead.
-    */
-  private[operators] val MaxInLiterals = 1024
 
   /** Pack a b-bit (8-bit fold) signature — `sig` holds one byte-range
     * component per long — into sig.length/8 longs, 8 components per
@@ -71,8 +60,9 @@ object MembershipStore {
   * `doc_id -> packed sig8`, the index's two append-only tables
   * ([[SignatureIndex]] layout scaladoc) held as a key-value view. It is
   * the one index probe of the streaming dedup trigger
-  * ([[graft.streaming.DedupStreams]]) and the store-backed candidate
-  * probe of [[SignatureIndex.probeNearDuplicateIds]].
+  * ([[graft.streaming.DedupStreams]]); batch admission
+  * ([[SignatureIndex.probeNearDuplicateIds]]) joins the members table
+  * instead.
   *
   * Data layout is primitive-array, not boxed-collection, because at
   * drain scale the membership holds ~#docs x bands entries (12.8M at
@@ -95,27 +85,8 @@ object MembershipStore {
   * analytical copy). Results never depend on the store's history: a
   * fresh store seeded from the same index answers every lookup the
   * same (MembershipStoreSpec).
-  *
-  * `lazySeed = true` replaces the first attach's full-index seed with
-  * PARTITION-PRUNED PULL-THROUGH: ensureCovers only records which
-  * components exist, and each probe pulls its OWN uncovered bucket keys
-  * / member ids from those components ([[pullScan]] — O(hits)
-  * collected bytes at any key count), caching positives AND negatives
-  * so warm re-probes stay point-lookup-only. Residency drops from
-  * O(retained corpus) to O(probe working set) — the figure the bench's
-  * store_bytes ledger reports for the seeded gates — and the seed cost
-  * moves off the first probe's critical path in proportion to how
-  * little of the index it touches. Later NOVEL components (out-of-band
-  * append batches — batch-sized by the index's refresh contract) still
-  * seed eagerly, which keeps cached negative results coherent: a pulled
-  * "absent" key can only gain members through an eagerly-seeded append
-  * or this store's own write-through put. After an uncertified fold the
-  * store clears and re-attaches lazily; after [[resyncAfterFold]] the
-  * folded components become the lazy pull source — re-pulling a key
-  * that already has resident entries is harmless because the read
-  * paths dedup member ids and signature puts are idempotent.
   */
-final class InMemoryMembershipStore(lazySeed: Boolean = false) {
+final class InMemoryMembershipStore {
   import org.apache.spark.sql.functions.col
 
   // ---- membership: open-addressing bkey -> chain head over parallel arrays
@@ -133,70 +104,6 @@ final class InMemoryMembershipStore(lazySeed: Boolean = false) {
 
   /** Live member-component dir names this store covers. */
   @volatile private var known: Set[String] = Set.empty
-
-  // ---- lazy pull-through state (lazySeed mode only): components whose
-  // content is consulted per-key instead of resident, the Spark/dir
-  // handle to pull from, and the positive+negative result caches that
-  // keep warm re-probes point-lookup-only
-  private var lazyCtx: Option[(SparkSession, String)] = None
-  private var lazyDirs: Set[String] = Set.empty
-  private val pulledKeys = new java.util.HashSet[java.lang.Long]()
-  private val pulledSigs = new java.util.HashSet[java.lang.Long]()
-
-  /** One pull job over the lazy components for `lits` values of
-    * `keyCol`: a point-lookup probe (<= [[MembershipStore.MaxInLiterals]]
-    * keys) is one isin filter scan, which row-group stats on the
-    * key-sorted epochs can prune; a BATCH-shaped probe past the bound
-    * is a single broadcast hash-semi filter scan. Collected bytes are
-    * O(hits) on both paths.
-    */
-  private def pullScan(
-      spark: SparkSession, paths: Seq[String], keyCol: String,
-      lits: Array[Long], cols: Seq[String]): Array[org.apache.spark.sql.Row] = {
-    val src = spark.read.parquet(paths: _*)
-    val pulled =
-      if (lits.length <= MembershipStore.MaxInLiterals)
-        src.filter(col(keyCol).isin(lits.map(Long.box).toSeq: _*))
-      else {
-        import spark.implicits._
-        val keys = lits.toSeq.toDF(keyCol)
-        src.join(org.apache.spark.sql.functions.broadcast(keys), Seq(keyCol))
-      }
-    pulled.select(cols.map(col): _*).collect()
-  }
-
-  /** Pull the given UNCOVERED bucket keys from the lazy components into
-    * the resident tables (positives inserted, negatives remembered via
-    * [[pulledKeys]]).
-    */
-  private def pullMembers(bkeys: Array[Long]): Unit = {
-    if (bkeys.isEmpty || lazyDirs.isEmpty) return
-    val (spark, indexDir) = lazyCtx.get
-    pullScan(spark, lazyDirs.toSeq.sorted.map(n => s"$indexDir/members/$n"),
-      "bkey", bkeys, Seq("band", "bkey", "doc_id"))
-      .foreach(r => insert(r.getInt(0), r.getLong(1), r.getLong(2)))
-    bkeys.foreach(k => pulledKeys.add(k))
-  }
-
-  /** Same pull-through for signatures of UNCOVERED member ids. */
-  private def pullSigs(ids: Array[Long]): Unit = {
-    if (ids.isEmpty || lazyDirs.isEmpty) return
-    val (spark, indexDir) = lazyCtx.get
-    val fs = new org.apache.hadoop.fs.Path(s"$indexDir/sigs")
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // a sig component may lag its member twin by one writer crash — the
-    // probe already treats a missing sig as a non-hit
-    val sLive = lazyDirs.toSeq.sorted.map(n => s"$indexDir/sigs/$n")
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-    if (sLive.nonEmpty)
-      pullScan(spark, sLive, "doc_id", ids, Seq("doc_id", "sig8"))
-        .foreach { r =>
-          sigMap.put(r.getLong(0),
-            MembershipStore.packSig8(r.getSeq[Long](1).toArray))
-          ()
-        }
-    ids.foreach(id => pulledSigs.add(id))
-  }
 
   def knownPaths: Set[String] = known
 
@@ -250,7 +157,6 @@ final class InMemoryMembershipStore(lazySeed: Boolean = false) {
     */
   def bucketMembers(
       keys: Array[(Int, Long)]): Map[(Int, Long), Array[Long]] = synchronized {
-    pullMembers(keys.map(_._2).distinct.filterNot(k => pulledKeys.contains(k)))
     val out = Map.newBuilder[(Int, Long), Array[Long]]
     keys.foreach { case (band, bkey) =>
       val s = slot(bkey)
@@ -271,8 +177,6 @@ final class InMemoryMembershipStore(lazySeed: Boolean = false) {
     * the given member ids (present ids only).
     */
   def memberSigs(ids: Array[Long]): Map[Long, Array[Long]] = synchronized {
-    pullSigs(ids.distinct
-      .filterNot(id => sigMap.containsKey(id) || pulledSigs.contains(id)))
     val b = Map.newBuilder[Long, Array[Long]]
     ids.foreach { id =>
       val s = sigMap.get(id)
@@ -309,10 +213,6 @@ final class InMemoryMembershipStore(lazySeed: Boolean = false) {
     entryNext = new Array[Int](1 << 16)
     sigMap.clear()
     known = Set.empty
-    lazyCtx = None
-    lazyDirs = Set.empty
-    pulledKeys.clear()
-    pulledSigs.clear()
   }
 
   /** Make the store cover exactly the live member components `liveDirs`
@@ -328,16 +228,6 @@ final class InMemoryMembershipStore(lazySeed: Boolean = false) {
     if ((known -- liveDirs).nonEmpty) clear()
     val fresh = (liveDirs -- known).toSeq.sorted
     if (fresh.isEmpty) return
-    if (lazySeed && known.isEmpty) {
-      // lazy first attach: record the components, seed NOTHING — each
-      // probe pulls its own keys (class scaladoc). Novel components
-      // after this attach fall through to the eager branch below,
-      // keeping cached negative pulls coherent.
-      lazyCtx = Some((spark, indexDir))
-      lazyDirs = fresh.toSet
-      known ++= fresh
-      return
-    }
     val mPaths = fresh.map(n => s"$indexDir/members/$n")
     val sPaths = fresh.map(n => s"$indexDir/sigs/$n")
     spark.read.parquet(mPaths: _*)
@@ -371,8 +261,7 @@ final class InMemoryMembershipStore(lazySeed: Boolean = false) {
     val it = sigMap.values().iterator()
     while (it.hasNext) sigWords += it.next().length
     val bytes = tableKeys.length.toLong * 13L + entryMid.length.toLong * 16L +
-      sigWords * 8L + sigMap.size.toLong * 64L +
-      (pulledKeys.size.toLong + pulledSigs.size.toLong) * 48L // negative caches
+      sigWords * 8L + sigMap.size.toLong * 64L
     MembershipStore.StoreStats(nEntries, sigMap.size, bytes)
   }
 
@@ -383,14 +272,6 @@ final class InMemoryMembershipStore(lazySeed: Boolean = false) {
     * re-seeds at the next ensureCovers.
     */
   def resyncAfterFold(liveDirs: Set[String]): Unit = synchronized {
-    if (known.nonEmpty) {
-      known = liveDirs
-      // lazy mode: the folded components become the pull source. Keys
-      // pulled before the fold stay covered (the fold is a pure
-      // concatenation of content this store had already consulted or
-      // holds resident); a future pull overlapping resident entries is
-      // deduped at read (class scaladoc).
-      if (lazyDirs.nonEmpty) lazyDirs = liveDirs
-    }
+    if (known.nonEmpty) known = liveDirs
   }
 }

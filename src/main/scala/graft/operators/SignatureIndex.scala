@@ -26,10 +26,9 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField
   * a stream-built index can serve batch admission probes. A batch build
   * writes one `compacted=-1` epoch (streaming batch ids are >= 0, so
   * batch dirs stack strictly after it and the stream's own batch 0 is
-  * never shadowed). On a cluster the same two tables sit behind a
-  * key-value/state-store interface for point lookups — bucket-keyed
-  * membership + doc-keyed signatures, both append-only, is deliberately
-  * a KV schema.
+  * never shadowed). Bucket-keyed membership + doc-keyed signatures,
+  * both append-only, is deliberately a KV schema: the streaming trigger
+  * probes it through [[InMemoryMembershipStore]] point lookups.
   *
   * Members files are range-partitioned and sorted by `bkey`, so a probe
   * that pushes a bkey predicate prunes files by footer min/max and row
@@ -48,6 +47,12 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField
   * semi-join; at 100 TB an id-bucketed corpus table makes that fetch a
   * bucket-pruned scan). The index affects WORK, never the result:
   * per-refresh cost drops from O(corpus + batch) to O(batch + hits).
+  *
+  * The candidate probe is one plan ([[probeCandidates]]): the batch's
+  * band keys, derived in-plan, broadcast against a pruned scan of the
+  * members table. Nothing batch- or hit-proportional reaches the
+  * driver, so the same probe serves a refresh batch and a corpus-scale
+  * one.
   *
   * Id contract: corpus and batch ids must be disjoint (the refine keys
   * shingles by id across both sides — the same contract the recompute
@@ -429,12 +434,8 @@ object SignatureIndex {
       foldB)
     val target = if (major) s"compacted=$upTo" else s"run=$upTo"
     def paths(dir: String): Seq[String] = src.dirNames.map(n => s"$dir/$n")
-    spark.read.parquet(paths(s"$indexDir/sigs"): _*)
-      .repartitionByRange(8, col("doc_id")).sortWithinPartitions(col("doc_id"))
-      .write.mode("overwrite").parquet(s"$indexDir/sigs/$target")
-    spark.read.parquet(paths(s"$indexDir/members"): _*)
-      .repartitionByRange(8, col("bkey")).sortWithinPartitions(col("bkey"))
-      .write.mode("overwrite").parquet(s"$indexDir/members/$target")
+    sortedRewrite(spark, paths(s"$indexDir/sigs"), paths(s"$indexDir/members"),
+      indexDir, target)
     log.info(s"${if (major) "MAJOR" else "minor"} fold of signature index through " +
       s"batch $upTo (${foldB.size} batch dir(s)" +
       s"${if (mergeRuns && l.runs.nonEmpty) s" + ${l.runs.size} run(s)" else ""}" +
@@ -465,6 +466,23 @@ object SignatureIndex {
     }
   }
 
+  /** Rewrite sig and member components as one `component` of
+    * `indexDir`, key-sorted so probe predicates prune row groups: sigs
+    * by `doc_id`, then members by `bkey`, each in 8 range partitions.
+    * Sigs land first (the fold ordering contract). Shared by
+    * [[compact]] and [[merge]].
+    */
+  private def sortedRewrite(
+      spark: SparkSession, sigPaths: Seq[String], memberPaths: Seq[String],
+      indexDir: String, component: String): Unit = {
+    spark.read.parquet(sigPaths: _*)
+      .repartitionByRange(8, col("doc_id")).sortWithinPartitions(col("doc_id"))
+      .write.mode("overwrite").parquet(s"$indexDir/sigs/$component")
+    spark.read.parquet(memberPaths: _*)
+      .repartitionByRange(8, col("bkey")).sortWithinPartitions(col("bkey"))
+      .write.mode("overwrite").parquet(s"$indexDir/members/$component")
+  }
+
   /** Merge shard-built indexes into one — the distributed BUILD story at
     * 100 TB: one job cannot (and should not) derive signatures over the
     * whole corpus, so each corpus shard builds its own index in parallel
@@ -492,12 +510,7 @@ object SignatureIndex {
     val sigPaths = shardDirs.flatMap(d => tablePaths(spark, d, "sigs"))
     require(memberPaths.nonEmpty,
       s"no signature index members under any of $shardDirs")
-    spark.read.parquet(sigPaths: _*)
-      .repartitionByRange(8, col("doc_id")).sortWithinPartitions(col("doc_id"))
-      .write.mode("overwrite").parquet(s"$destDir/sigs/compacted=-1")
-    spark.read.parquet(memberPaths: _*)
-      .repartitionByRange(8, col("bkey")).sortWithinPartitions(col("bkey"))
-      .write.mode("overwrite").parquet(s"$destDir/members/compacted=-1")
+    sortedRewrite(spark, sigPaths, memberPaths, destDir, "compacted=-1")
     val p = new org.apache.hadoop.fs.Path(destDir)
     writeParams(p.getFileSystem(spark.sessionState.newHadoopConf()),
       destDir, cfg, overwrite = true)
@@ -523,65 +536,6 @@ object SignatureIndex {
       .select(col("da"), col("db"))
   }
 
-  /** Store-backed spelling of [[probeCandidates]]: the batch's banded
-    * rows are collected (refresh batches are batch-scale by contract —
-    * hard-capped at [[MaxStoreProbeRows]]), each DISTINCT key resolved
-    * through ONE store point lookup, and the hit rows (one per member
-    * per probed bucket — occupancy-bounded, NOT pair-bounded) re-enter
-    * the plan as a literal frame that joins the batch side back on
-    * (band, bkey). The pair MULTISET therefore materializes on the
-    * executors, never the driver: a corpus hot bucket probed by its
-    * own thousands of exact-copy batch docs multiplies |bucket|×|probes|
-    * pairs, which a driver-side flatMap spelling OOM'd on at the sf1
-    * tier — the same nothing-multiset-proportional-on-the-driver rule
-    * the streaming kernel's hit frame follows. Per-band duplicate
-    * pairs are kept, exactly as the frame join keeps one row per
-    * (band, bkey) collision — the refine dedups after thresholding, so
-    * the flag set is identical.
-    */
-  private def storeCandidates(
-      spark: SparkSession, indexDir: String, batchSigs: DataFrame,
-      cfg: Config, excludeBatch: Option[Long], store: InMemoryMembershipStore): DataFrame = {
-    import spark.implicits._
-    val batchBanded: Array[(Long, Int, Long)] = MinHashLSH.bandKeys(
-      batchSigs, cfg.bands, cfg.rowsPerBand)
-      .select(col("doc_id"), col("band"), col("bkey"))
-      .as[(Long, Int, Long)].collect()
-    require(batchBanded.length <= MaxStoreProbeRows,
-      s"store-backed probe batch has ${batchBanded.length} banded rows " +
-        s"(> $MaxStoreProbeRows) — this is a corpus, not a refresh batch; " +
-        "use the frame-join probe (store = None)")
-    store.ensureCovers(
-      spark, indexDir, componentNames(spark, indexDir, "members", excludeBatch).toSet)
-    val bm = store.bucketMembers(batchBanded.map(t => (t._2, t._3)).distinct)
-    // ONE driver row per probed bucket, members as a packed array,
-    // exploded on the executors: the flat (bucket, member) spelling
-    // materialized Σ occupancy driver-side tuples — ~3M at sf0.1 when
-    // near-dup probes land in the uncapped corpus index's hot buckets —
-    // and the createDataset serialization of those tuples alone cost
-    // more than the whole frame-join probe it replaced (q133 6.4 s →
-    // 14.9 s, r11). Bucket-count rows + primitive arrays keep the
-    // driver hop at probed-key scale; occupancy expands in-plan.
-    val hitBuckets: Seq[(Int, Long, Array[Long])] =
-      bm.toSeq.map { case ((band, bkey), ms) => (band, bkey, ms) }
-    val nHits = hitBuckets.iterator.map(_._3.length.toLong).sum
-    require(nHits <= MaxStoreProbeRows,
-      s"store probe hit $nHits (bucket, member) rows " +
-        s"(> $MaxStoreProbeRows) — occupancy of the probed buckets is " +
-        "corpus-scale; use the frame-join probe (store = None)")
-    val batchDf = spark.createDataset(batchBanded.toSeq).toDF("db", "band", "bkey")
-    spark.createDataset(hitBuckets).toDF("band", "bkey", "das")
-      .select(col("band"), col("bkey"), explode(col("das")).as("da"))
-      .join(broadcast(batchDf), Seq("band", "bkey"))
-      .select(col("da"), col("db"))
-  }
-
-  /** Literal bound on the collected batch banded rows the store-backed
-    * probe materializes on the driver (a refresh batch is batch-scale
-    * by contract — docs x bands rows; 4M ≈ 64 MB of longs).
-    */
-  private val MaxStoreProbeRows = 4 * 1024 * 1024
-
   /** Ids of `batch` docs whose exact shingle Jaccard against SOME
     * indexed corpus doc reaches `threshold` — the index-backed spelling
     * of [[Decontamination.batchNearDuplicateIds]] (identical flag set
@@ -589,21 +543,12 @@ object SignatureIndex {
     * scaladoc). `corpus` supplies the TEXT of candidate corpus docs
     * only — it is filtered to candidate ids by a semi-join before any
     * shingle is derived.
-    *
-    * `store`: route the candidate probe through an
-    * [[InMemoryMembershipStore]] point lookup instead of the
-    * members-frame join — the external-KV seam. Candidates (and
-    * therefore the returned flag set) are IDENTICAL by the store
-    * contract (spec-pinned); only the probe's
-    * WORK changes: an in-memory store makes it O(batch keys),
-    * independent of index size.
     */
   def probeNearDuplicateIds(
       spark: SparkSession, indexDir: String,
       corpus: DataFrame, batch: DataFrame,
       idCol: String, textCol: String, threshold: Double,
       cfg: Config = Config(), excludeBatch: Option[Long] = None,
-      store: Option[InMemoryMembershipStore] = None,
       preparedShingles: Option[DataFrame] = None,
       preparedSignatures: Option[DataFrame] = None): DataFrame = {
     validateParams(spark, indexDir, cfg)
@@ -624,10 +569,7 @@ object SignatureIndex {
     // signature aggregation (the probe's dominant compute — measured
     // 5.8 s -> see PLANS.md r8 notes). Hits-scale rows.
     // Cache-release contract: see Dedup.jaccardPairs.
-    val cand = (store match {
-      case Some(st) => storeCandidates(spark, indexDir, batchSigs, cfg, excludeBatch, st)
-      case None => probeCandidates(spark, indexDir, batchSigs, cfg, excludeBatch)
-    }).cache()
+    val cand = probeCandidates(spark, indexDir, batchSigs, cfg, excludeBatch).cache()
     val candIds = cand.select(col("da").as(idCol)).distinct()
     // candidate corpus text only: hits-scale, not corpus-scale
     val corpusSh = Dedup.charShingles(

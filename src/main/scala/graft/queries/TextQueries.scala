@@ -381,7 +381,8 @@ object TextQueries {
     * probability ~ 1), and the novel cohort tops out an order of
     * magnitude below the threshold, so no marginal-recall pair can flip
     * an admission. Threshold parameterized: q124 gates the in-plan
-    * recompute at 0.5, q131 the persisted-index probe at 0.7.
+    * recompute at 0.5, q131/q155 the persisted-index probe at 0.7
+    * ([[indexAdmission]]).
     */
   private def incrementalOracle(threshold: Double): String =
     s"""WITH bsrc AS (
@@ -418,6 +419,53 @@ object TextQueries {
        |       CAST(coalesce(sum(b.doc_id) FILTER (WHERE f.doc_id IS NULL), 0) AS BIGINT) AS admitted_checksum
        |FROM b LEFT JOIN flagged f ON f.doc_id = b.doc_id
        |GROUP BY 1 ORDER BY 1""".stripMargin
+
+  /** The admission scenario of q124, q131 and q155 (the refresh batch
+    * [[incrementalOracle]] derives): `flag` returns the ids of the batch
+    * docs (`doc_id`, `text`) it rejects against the corpus `a`, and the
+    * result is the per-cohort rollup the oracle computes.
+    */
+  private def refreshAdmission(
+      spark: org.apache.spark.sql.SparkSession, dir: String)(
+      flag: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    import spark.implicits._
+    val a = Tables(spark, dir).documents.select($"doc_id", $"text")
+    val cohort = when($"doc_id" % 9 === 3, lit("exact"))
+      .when($"doc_id" % 7 === 2, lit("near"))
+      .when($"doc_id" % 13 === 5, lit("novel"))
+    val b = a.withColumn("cohort", cohort).filter($"cohort".isNotNull)
+      .select(($"doc_id" + 2000000L).as("doc_id"),
+        when($"cohort" === "exact", $"text")
+          .when($"cohort" === "near", concat($"text", lit(" edited")))
+          .otherwise(concat(lit("fresh item "), $"doc_id".cast("string"),
+            lit(" unseen content"))).as("text"),
+        $"cohort")
+    val flagged = flag(a, b.drop("cohort")).withColumnRenamed("doc_id", "fid")
+    b.join(flagged, $"doc_id" === $"fid", "left")
+      .groupBy($"cohort")
+      .agg(count(lit(1)).as("n_batch"),
+        count($"fid").as("n_flagged"),
+        (count(lit(1)) - count($"fid")).as("n_admitted"),
+        coalesce(sum(when($"fid".isNull, $"doc_id")), lit(0L))
+          .cast("long").as("admitted_checksum"))
+      .orderBy($"cohort")
+  }
+
+  /** q131/q155 body: persisted-index batch admission — the
+    * [[refreshAdmission]] scenario run through SignatureIndex: the
+    * corpus' shingle/signature/band derivation is a ONE-TIME build
+    * (ensureSigIndex; in production the index is written when the
+    * corpus is admitted), and the refresh batch probes the on-disk
+    * banded members table, so per-refresh cost is O(batch + hits)
+    * instead of O(corpus + batch) — the 100 TB refresh shape.
+    */
+  private def indexAdmission(
+      spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    refreshAdmission(spark, dir) { (a, batch) =>
+      graft.operators.SignatureIndex.probeNearDuplicateIds(
+        spark, ensureSigIndex(dir, "documents")(a), a, batch, "doc_id", "text",
+        threshold = 0.7)
+    }
 
   /** Shared CTE prefix for the cluster-assignment oracles (q56, q126):
     * exact J >= 0.7 pair graph via the bitmap-popcount derivation, then
@@ -3039,31 +3087,12 @@ object TextQueries {
     // bipartite admission with the bitmap-popcount spelling; the flag
     // set is recall-robust (see incrementalOracle scaladoc). ----------
     QueryDef("q124_incremental_neardup", incrementalOracle(0.5)) { (spark, dir) =>
-      import spark.implicits._
-      val a = Tables(spark, dir).documents.select($"doc_id", $"text")
-      val cohort = when($"doc_id" % 9 === 3, lit("exact"))
-        .when($"doc_id" % 7 === 2, lit("near"))
-        .when($"doc_id" % 13 === 5, lit("novel"))
-      val b = a.withColumn("cohort", cohort).filter($"cohort".isNotNull)
-        .select(($"doc_id" + 2000000L).as("doc_id"),
-          when($"cohort" === "exact", $"text")
-            .when($"cohort" === "near", concat($"text", lit(" edited")))
-            .otherwise(concat(lit("fresh item "), $"doc_id".cast("string"),
-              lit(" unseen content"))).as("text"),
-          $"cohort")
-      val u = a.withColumn("is_new", lit(false))
-        .unionByName(b.drop("cohort").withColumn("is_new", lit(true)))
-      val flagged = graft.operators.Decontamination
-        .batchNearDuplicateIds(u, "doc_id", "text", $"is_new", threshold = 0.5)
-        .withColumnRenamed("doc_id", "fid")
-      b.join(flagged, $"doc_id" === $"fid", "left")
-        .groupBy($"cohort")
-        .agg(count(lit(1)).as("n_batch"),
-          count($"fid").as("n_flagged"),
-          (count(lit(1)) - count($"fid")).as("n_admitted"),
-          coalesce(sum(when($"fid".isNull, $"doc_id")), lit(0L))
-            .cast("long").as("admitted_checksum"))
-        .orderBy($"cohort")
+      refreshAdmission(spark, dir) { (a, batch) =>
+        val u = a.withColumn("is_new", lit(false))
+          .unionByName(batch.withColumn("is_new", lit(true)))
+        graft.operators.Decontamination
+          .batchNearDuplicateIds(u, "doc_id", "text", col("is_new"), threshold = 0.5)
+      }
     },
 
     // ---- q126: leakage-aware train/val/test split — q62's md5 split
@@ -3375,41 +3404,11 @@ object TextQueries {
         .orderBy($"source", $"status")
     },
 
-    // ---- q131: persisted-index batch admission — q124's scenario run
-    // through SignatureIndex: the corpus' shingle/signature/band
-    // derivation is a ONE-TIME build (ensureSigIndex; in production the
-    // index is written when the corpus is admitted), and the refresh
-    // batch probes the on-disk banded members table, so per-refresh cost
-    // is O(batch + hits) instead of O(corpus + batch) — the 100 TB
-    // refresh shape. The oracle is the exact bipartite recompute
-    // (incrementalOracle at 0.7), so the gate proves index-backed ≡
-    // exact, not merely index-backed ≡ the engine's own recompute. -----
-    QueryDef("q131_index_admission", incrementalOracle(0.7)) { (spark, dir) =>
-      import spark.implicits._
-      val a = Tables(spark, dir).documents.select($"doc_id", $"text")
-      val cohort = when($"doc_id" % 9 === 3, lit("exact"))
-        .when($"doc_id" % 7 === 2, lit("near"))
-        .when($"doc_id" % 13 === 5, lit("novel"))
-      val b = a.withColumn("cohort", cohort).filter($"cohort".isNotNull)
-        .select(($"doc_id" + 2000000L).as("doc_id"),
-          when($"cohort" === "exact", $"text")
-            .when($"cohort" === "near", concat($"text", lit(" edited")))
-            .otherwise(concat(lit("fresh item "), $"doc_id".cast("string"),
-              lit(" unseen content"))).as("text"),
-          $"cohort")
-      val idx = ensureSigIndex(dir, "documents")(a)
-      val flagged = graft.operators.SignatureIndex.probeNearDuplicateIds(
-          spark, idx, a, b.drop("cohort"), "doc_id", "text", threshold = 0.7)
-        .withColumnRenamed("doc_id", "fid")
-      b.join(flagged, $"doc_id" === $"fid", "left")
-        .groupBy($"cohort")
-        .agg(count(lit(1)).as("n_batch"),
-          count($"fid").as("n_flagged"),
-          (count(lit(1)) - count($"fid")).as("n_admitted"),
-          coalesce(sum(when($"fid".isNull, $"doc_id")), lit(0L))
-            .cast("long").as("admitted_checksum"))
-        .orderBy($"cohort")
-    },
+    // ---- q131: persisted-index batch admission (indexAdmission). The
+    // oracle is the exact bipartite recompute (incrementalOracle at
+    // 0.7), so the gate proves index-backed ≡ exact, not merely
+    // index-backed ≡ the engine's own recompute. -----------------------
+    QueryDef("q131_index_admission", incrementalOracle(0.7))(indexAdmission),
 
     // ---- q133: the FULL index-maintenance refresh loop — probe, admit,
     // APPEND, probe again. Round 1 admits batch B1 against the persisted
@@ -3422,9 +3421,7 @@ object TextQueries {
     // round-1 admissions, so its flags can come from nowhere but the
     // appended component — the gate that proves the append is live. At
     // 100 TB this is the refresh steady state: per-refresh cost is
-    // O(batch + hits) probe + O(batch) append, never O(corpus) — and as
-    // of r11 the gated probes actually ride the KV seam (see the store
-    // comment in the body), not the per-refresh parquet epoch scan. Oracle:
+    // O(batch + hits) probe + O(batch) append, never O(corpus). Oracle:
     // ONE exact bitmap-popcount pair space over corpus ∪ B1 ∪ B2, both
     // rounds' flag sets derived exactly (round 2's corpus membership =
     // base ∪ round-1 survivors). Pair-enumeration oracle → rides the
@@ -3529,19 +3526,9 @@ object TextQueries {
             .when($"doc_id" % 17 === 6, lit("echo_new"))
             .otherwise(lit("novel2")).as("cohort"))
       val idx = ensureSigIndex(dir, "q133_base")(a)
-      // Both probes route through the in-memory MembershipStore — the
-      // external-KV seam is the DEFAULT for the append family as of r11
-      // (verdict item 2): the parquet frame-join probe re-scanned every
-      // epoch per refresh (corpus-proportional, the 12.1x ledger row),
-      // while the store is seeded once per (dir, JVM) and probed at
-      // O(batch keys) thereafter. Results are identical by the store
-      // contract (MembershipStoreSpec; the oracle gate re-proves it
-      // against the exact bipartite recompute every run). TWO stores
-      // because the two probes see different as-of views: round 1
-      // excludes its own about-to-be-overwritten batch=0 (replay
-      // contract) — one store flip-flopping between views would read
-      // the exclusion as a fold and rebuild per run. The frame-join
-      // epoch-scan path stays gated through q131.
+      // Both probes join the members table as q131 does; round 1 reads
+      // the index as-of before its own append (excludeBatch drops the
+      // batch=0 a previous run wrote — the replay contract).
       // ONE shingle + signature derivation of b1 serves both the round-1
       // probe and the append of its admitted docs (r13: probe → admit →
       // append are one trigger; the append previously re-ran the full
@@ -3554,7 +3541,7 @@ object TextQueries {
         .signatures(sh1, cfg133.numPerms).cache()
       val flagged1 = graft.operators.SignatureIndex.probeNearDuplicateIds(
           spark, idx, a, b1.drop("cohort"), "doc_id", "text", threshold = 0.7,
-          excludeBatch = Some(0L), store = Some(kvStoreFor(s"$idx#pre-append")),
+          excludeBatch = Some(0L),
           preparedShingles = Some(sh1), preparedSignatures = Some(sig1))
         .withColumnRenamed("doc_id", "fid").cache()
       val admitted1 = b1.join(flagged1, $"doc_id" === $"fid", "left_anti")
@@ -3567,8 +3554,7 @@ object TextQueries {
       // wholesale)
       val corpus2 = a.unionByName(admitted1)
       val flagged2 = graft.operators.SignatureIndex.probeNearDuplicateIds(
-          spark, idx, corpus2, b2.drop("cohort"), "doc_id", "text", threshold = 0.7,
-          store = Some(kvStoreFor(s"$idx#post-append")))
+          spark, idx, corpus2, b2.drop("cohort"), "doc_id", "text", threshold = 0.7)
         .withColumnRenamed("doc_id", "fid")
       def roundStats(b: DataFrame, f: DataFrame, round: Int): DataFrame =
         b.join(f, $"doc_id" === $"fid", "left")
@@ -4356,41 +4342,11 @@ object TextQueries {
           "eig_trace_ok", "eig_frob_ok", "resid_ok", "ortho_ok", "descending_ok")
     },
 
-    // ---- q155: batch admission through the IN-MEMORY MembershipStore —
-    // q131's scenario with the candidate probe routed through the
-    // external-KV seam's point-lookup impl (store seeded once per (dir,
-    // JVM) from the same persisted index q131 scans; probes thereafter
-    // are O(batch keys), independent of index size). The oracle is the
-    // SAME exact bipartite recompute as q131, so the driver gate proves
-    // KV-backed ≡ exact — not merely KV ≡ the engine's own parquet
-    // probe (that equivalence is MembershipStoreSpec's job). ----------
-    QueryDef("q155_kv_store_admission", incrementalOracle(0.7)) { (spark, dir) =>
-      import spark.implicits._
-      val a = Tables(spark, dir).documents.select($"doc_id", $"text")
-      val cohort = when($"doc_id" % 9 === 3, lit("exact"))
-        .when($"doc_id" % 7 === 2, lit("near"))
-        .when($"doc_id" % 13 === 5, lit("novel"))
-      val b = a.withColumn("cohort", cohort).filter($"cohort".isNotNull)
-        .select(($"doc_id" + 2000000L).as("doc_id"),
-          when($"cohort" === "exact", $"text")
-            .when($"cohort" === "near", concat($"text", lit(" edited")))
-            .otherwise(concat(lit("fresh item "), $"doc_id".cast("string"),
-              lit(" unseen content"))).as("text"),
-          $"cohort")
-      val idx = ensureSigIndex(dir, "documents")(a)
-      val flagged = graft.operators.SignatureIndex.probeNearDuplicateIds(
-          spark, idx, a, b.drop("cohort"), "doc_id", "text", threshold = 0.7,
-          store = Some(kvStoreFor(idx)))
-        .withColumnRenamed("doc_id", "fid")
-      b.join(flagged, $"doc_id" === $"fid", "left")
-        .groupBy($"cohort")
-        .agg(count(lit(1)).as("n_batch"),
-          count($"fid").as("n_flagged"),
-          (count(lit(1)) - count($"fid")).as("n_admitted"),
-          coalesce(sum(when($"fid".isNull, $"doc_id")), lit(0L))
-            .cast("long").as("admitted_checksum"))
-        .orderBy($"cohort")
-    },
+    // ---- q155: q131 under its own registry name — the same body
+    // (indexAdmission) against the same exact bipartite oracle. The name
+    // is kept for the 172-query registry and its committed sweeps; the
+    // batch probe has one spelling, the members-frame join. -----------
+    QueryDef("q155_kv_store_admission", incrementalOracle(0.7))(indexAdmission),
 
     // ---- q156: IVF-PQ (ProductQuantization scaladoc) — the residual-
     // compression stage of the billion-scale ANN stack: the persisted
@@ -4452,25 +4408,6 @@ object TextQueries {
     },
   )
 
-  /** Per-(key, JVM) in-memory membership stores for the KV-seam probes
-    * (q155, and q133's two as-of views) — seeded once from the persisted
-    * index on first probe (ensureCovers), then point-lookup-only across
-    * warm re-runs, mirroring how a long-lived refresh service would hold
-    * the KV view. The key is the index dir plus an optional view suffix
-    * (q133 holds a pre-append and a post-append view of the same index —
-    * see its comment for why they must not share one store).
-    */
-  private val kvStoreByIdx =
-    scala.collection.concurrent.TrieMap.empty[String, graft.operators.InMemoryMembershipStore]
-  private def kvStoreFor(idx: String): graft.operators.InMemoryMembershipStore =
-    kvStoreByIdx.getOrElseUpdate(idx,
-      // lazySeed: these stores front a PERSISTED corpus index — pull
-      // only the probe batch's keys instead of seeding the full
-      // retained member set (InMemoryMembershipStore scaladoc; r12
-      // verdict item 5: residency O(working set), and the first probe
-      // no longer pays a corpus-proportional seed scan)
-      new graft.operators.InMemoryMembershipStore(lazySeed = true))
-
   /** Tool access to the per-(dir, JVM) ANN index builds (PqRecall):
     * same ensure-once semantics as the q50/q156 gates.
     */
@@ -4480,25 +4417,4 @@ object TextQueries {
   private[graft] def pqIndexDir(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
     ensurePqIndex(spark, dir)
-
-  /** Capacity ledger over every KV-seam store this JVM seeded (the
-    * bench's store_bytes line). Keys are shortened to the index dir's
-    * last TWO path components plus the view suffix — stable across
-    * pids; collisions (two sf dirs sharing the whole shortened form)
-    * fall back to the full key instead of silently dropping a store's
-    * row (r12 ADVICE).
-    */
-  private[graft] def kvStoreStats: Map[String, graft.operators.MembershipStore.StoreStats] = {
-    val snap = kvStoreByIdx.readOnlySnapshot().toMap
-    def short(k: String): String = {
-      val (path, suffix) = k.span(_ != '#')
-      path.split('/').takeRight(2).mkString("/") + suffix
-    }
-    val collides = snap.keys.groupBy(short).collect {
-      case (s, ks) if ks.size > 1 => s
-    }.toSet
-    snap.map { case (k, v) =>
-      (if (collides(short(k))) k else short(k)) -> v.stats
-    }
-  }
 }

@@ -558,15 +558,15 @@ object DedupStreams {
         val idxSigs =
           if (live.isEmpty) Seq.empty[(Long, Array[Long])].toDF("doc_id", "sig8")
           else spark.read.parquet(tablePaths("sigs"): _*)
+        // probe the (write-time-capped) membership with the batch's band
+        // keys: broadcast the batch side, so the index side is a pruned
+        // columnar scan with NO shuffle, NO re-banding, NO window; bucket
+        // occupancy for admission falls out of the same join, counted
+        // over exactly the buckets this batch touches
+        val memberHits = members
+          .join(broadcast(banded.withColumnRenamed("doc_id", "nid")), Seq("band", "bkey"))
+          .cache()
         try {
-          // probe the (write-time-capped) membership with the batch's band
-          // keys: broadcast the batch side, so the index side is a pruned
-          // columnar scan with NO shuffle, NO re-banding, NO window; bucket
-          // occupancy for admission falls out of the same join, counted
-          // over exactly the buckets this batch touches
-          val memberHits = members
-            .join(broadcast(banded.withColumnRenamed("doc_id", "nid")), Seq("band", "bkey"))
-            .cache()
           val occupancy = memberHits.groupBy(col("band"), col("bkey"))
             .agg(countDistinct(col("mid")).as("occ"))
           // batch vs index: signatures are fetched for the candidate
@@ -596,10 +596,10 @@ object DedupStreams {
             .filter(est8(col("sa"), col("sb")) >= tCorr)
             .select(col("da"), col("db")).distinct()
             .cache()
-          val nPairs = refined.count()
-          log.info(s"dedupBatch($batchId): $nPairs refined pairs, " +
-            s"${indexHits.size} index hits (driver pair cap $MaxDriverPairs)")
-          val dropped =
+          val dropped = try {
+            val nPairs = refined.count()
+            log.info(s"dedupBatch($batchId): $nPairs refined pairs, " +
+              s"${indexHits.size} index hits (driver pair cap $MaxDriverPairs)")
             if (nPairs <= MaxDriverPairs)
               resolveDropped(indexHits, refined.as[(Long, Long)].collect())
             else {
@@ -610,7 +610,7 @@ object DedupStreams {
                 s"$MaxDriverPairs — using conservative distributed resolution")
               indexHits ++ refined.select(col("db")).distinct().as[Long].collect()
             }
-          refined.unpersist()
+          } finally refined.unpersist()
           input.filter(notDropped(dropped))
             .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
 
@@ -636,8 +636,8 @@ object DedupStreams {
             admitted.coalesce(1)
               .write.mode("overwrite").parquet(s"$indexDir/members/batch=$batchId")
           } finally admitted.unpersist()
-          memberHits.unpersist()
         } finally {
+          memberHits.unpersist()
           banded.unpersist()
           sigs.unpersist()
         }

@@ -16,7 +16,11 @@ import scala.jdk.CollectionConverters._
   *  - one recursive delete, `graft.io.LocalDirs.deleteRecursively`;
   *  - one replay driver: under `graft/queries` only `StreamGate` opens a
   *    stream source or drains a running query, so no gate re-spells the
-  *    harness or its release of the stream and the chunk cache.
+  *    harness or its release of the stream and the chunk cache;
+  *  - one batch admission probe: no query names the streaming trigger's
+  *    `InMemoryMembershipStore`, so `SignatureIndex.probeNearDuplicateIds`
+  *    (the members-frame join) stays the only candidate probe a gate
+  *    runs.
   */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
   private def scalaSources(dir: String): Seq[(Path, String)] = {
@@ -61,5 +65,10 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
       .flatMap(hits("src/main/scala/graft/queries", _))
     assert(sites.nonEmpty && sites.forall(_.contains("queries/StreamGate.scala")),
       sites.mkString("stream sites in queries:\n", "\n", ""))
+  }
+
+  test("no query names the streaming trigger's in-memory store") {
+    val sites = hits("src/main/scala/graft/queries", "InMemoryMembershipStore")
+    assert(sites.isEmpty, sites.mkString("store sites in queries:\n", "\n", ""))
   }
 }

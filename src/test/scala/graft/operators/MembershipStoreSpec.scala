@@ -5,13 +5,13 @@ import graft.streaming.DedupStreams
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
-/** The point-lookup probe: the in-memory store must be a pure WORK
-  * substitution — identical bucket-member sets, signature maps and flag
-  * sets as the members frame and the frame-join probe, and identical
-  * stream survivors and index rows as the over-cap distributed spelling,
-  * which reads the parquet index directly — with its coverage protocol
-  * (seed / write-through / fold-resync / out-of-band rebuild) proven
-  * rather than documented.
+/** The streaming trigger's point-lookup probe: the in-memory store must
+  * be a pure WORK substitution — identical bucket-member sets and
+  * signature maps as the members and sigs frames, and identical stream
+  * survivors and index rows as the over-cap distributed spelling, which
+  * reads the parquet index directly — with its coverage protocol (seed /
+  * write-through / fold-resync / out-of-band rebuild) proven rather than
+  * documented.
   */
 class MembershipStoreSpec extends SparkSpec {
 
@@ -20,23 +20,8 @@ class MembershipStoreSpec extends SparkSpec {
   private def tmpDir(tag: String): String =
     Files.createTempDirectory(s"graft_store_$tag").toString
 
-  /** Same q124-shaped corpus/batch scenario as SignatureIndexSpec. */
-  private def scenario() = {
-    val a = tables.documents.select($"doc_id", $"text")
-    val cohort = when($"doc_id" % 9 === 3, lit("exact"))
-      .when($"doc_id" % 7 === 2, lit("near"))
-      .when($"doc_id" % 13 === 5, lit("novel"))
-    val b = a.withColumn("cohort", cohort).filter($"cohort".isNotNull)
-      .select(($"doc_id" + 2000000L).as("doc_id"),
-        when($"cohort" === "exact", $"text")
-          .when($"cohort" === "near", concat($"text", lit(" edited")))
-          .otherwise(concat(lit("fresh item "), $"doc_id".cast("string"),
-            lit(" unseen content"))).as("text"))
-    (a, b)
-  }
-
   test("in-memory store agrees with the members frame lookup-for-lookup") {
-    val (corpus, _) = scenario()
+    val corpus = tables.documents.select($"doc_id", $"text")
     val dir = tmpDir("agree")
     SignatureIndex.build(corpus, "doc_id", "text", dir)
     // probe keys: every bucket of a slice of the corpus itself (hits
@@ -65,19 +50,6 @@ class MembershipStoreSpec extends SparkSpec {
     val sm = im.memberSigs(ids)
     assert(sm.keySet == ids.toSet)
     assert(ids.forall(id => java.util.Arrays.equals(sp(id), sm(id))))
-  }
-
-  test("probeNearDuplicateIds flags identically through no store / in-memory store") {
-    val (corpus, batch) = scenario()
-    val dir = tmpDir("probe")
-    SignatureIndex.build(corpus, "doc_id", "text", dir)
-    def flags(store: Option[InMemoryMembershipStore]): Set[Long] = SignatureIndex
-      .probeNearDuplicateIds(spark, dir, corpus, batch, "doc_id", "text", 0.7,
-        store = store)
-      .as[Long].collect().toSet
-    val none = flags(None)
-    assert(none.nonEmpty, "scenario must flag at least one batch doc")
-    assert(flags(Some(new InMemoryMembershipStore)) == none)
   }
 
   private def streamCorpus = Seq(
@@ -158,111 +130,6 @@ class MembershipStoreSpec extends SparkSpec {
     val after = spark.read.parquet(out).select(col("doc_id")).as[Long].collect().toSet
     assert(!after.contains(101L),
       "copy of the out-of-band appended doc must be dropped (store seeded the append)")
-  }
-
-  test("lazy store past 1024 distinct keys pulls through the broadcast filter, results unchanged") {
-    val (corpus, _) = scenario()
-    val dir = tmpDir("chunk")
-    SignatureIndex.build(corpus, "doc_id", "text", dir)
-    // real keys (hits guaranteed) padded with synthetic absent keys to
-    // push the probe past the 1024-literal bound of one isin pull
-    val realKeys = SignatureIndex.members(spark, dir)
-      .select($"band", $"bkey").distinct().as[(Int, Long)].collect()
-    val keys = realKeys ++ (0 until 3000).map(i => (i % 32, 900000000L + i))
-    assert(keys.map(_._2).distinct.length > 1024)
-    val lz = new InMemoryMembershipStore(lazySeed = true)
-    lz.ensureCovers(spark, dir, SignatureIndex.componentNames(spark, dir, "members").toSet)
-    assert(lz.stats.entries == 0, "lazy attach must seed nothing")
-    // results: identical to the frame-derived expectation at this key count
-    val keySet = keys.toSet
-    val want = SignatureIndex.members(spark, dir)
-      .select($"band", $"bkey", $"doc_id").as[(Int, Long, Long)].collect()
-      .groupBy(t => (t._1, t._2))
-      .map { case (k, vs) => k -> vs.map(_._3).distinct.sorted.toSeq }
-      .filter(t => keySet.contains(t._1))
-    val got = lz.bucketMembers(keys).map { case (k, v) => k -> v.toSeq }
-    assert(got == want, s"broadcast pull diverged (${got.size} vs ${want.size} buckets)")
-    // signatures through the same broadcast pull
-    val ids = want.valuesIterator.flatten.toArray.distinct ++
-      (0 until 2000).map(i => 800000000L + i)
-    assert(ids.distinct.length > 1024)
-    val wantSigs = SignatureIndex.sigs(spark, dir)
-      .select($"doc_id", $"sig8").as[(Long, Array[Long])].collect()
-      .map { case (id, s) => id -> MembershipStore.packSig8(s) }.toMap
-    val sigs = lz.memberSigs(ids)
-    assert(sigs.keySet == want.valuesIterator.flatten.toSet)
-    assert(sigs.forall { case (id, s) => java.util.Arrays.equals(s, wantSigs(id)) })
-  }
-
-  test("lazy store agrees lookup-for-lookup with the eager store and stays sub-corpus resident") {
-    val (corpus, _) = scenario()
-    val dir = tmpDir("lazy")
-    SignatureIndex.build(corpus, "doc_id", "text", dir)
-    val live = SignatureIndex.componentNames(spark, dir, "members").toSet
-    // a SMALL probe working set (one doc slice) plus guaranteed-absent
-    // keys — the negative-cache path
-    val keys = SignatureIndex.members(spark, dir)
-      .filter($"doc_id" % 17 === 0)
-      .select($"band", $"bkey").distinct()
-      .as[(Int, Long)].collect() ++ Array((0, 987654321L), (31, -42L))
-    val eager = new InMemoryMembershipStore
-    eager.ensureCovers(spark, dir, live)
-    val lz = new InMemoryMembershipStore(lazySeed = true)
-    lz.ensureCovers(spark, dir, live)
-    assert(lz.knownPaths == live)
-    assert(lz.stats.entries == 0, "lazy attach must seed nothing")
-    val em = eager.bucketMembers(keys).map { case (k, v) => k -> v.toSeq }
-    val lm = lz.bucketMembers(keys).map { case (k, v) => k -> v.toSeq }
-    assert(lm == em, s"lazy store diverged (${lm.size} vs ${em.size} buckets)")
-    val ids = em.valuesIterator.flatten.toArray.distinct ++ Array(999999999L)
-    val es = eager.memberSigs(ids)
-    val ls = lz.memberSigs(ids)
-    assert(ls.keySet == es.keySet)
-    assert(es.keySet.forall(id => java.util.Arrays.equals(es(id), ls(id))))
-    // residency: only the probed working set is resident, not the corpus
-    val total = SignatureIndex.members(spark, dir).count()
-    assert(lz.stats.entries < total,
-      s"lazy store resident ${lz.stats.entries} should be under the corpus's $total rows")
-    assert(lz.stats.entries > 0)
-    // warm re-probe (covered keys, incl. the cached negatives) still
-    // answers identically
-    assert(lz.bucketMembers(keys).map { case (k, v) => k -> v.toSeq } == em)
-  }
-
-  test("lazy store: novel append component seeds eagerly and its copies get flagged") {
-    val st = new InMemoryMembershipStore(lazySeed = true)
-    val root = Files.createTempDirectory("graft_store_lazy_append").toString
-    val out = s"$root/out"; val idx = s"$root/index"
-    SignatureIndex.build(
-      streamCorpus.filter(col("doc_id") <= 2), "doc_id", "text", idx)
-    // first probe attaches lazily against the epoch
-    DedupStreams.dedupBatch(
-      streamCorpus.filter(col("doc_id") === 3), out, idx,
-      threshold = 0.7, batchId = 0, compactEvery = 0, store = Some(st))
-    // out-of-band append, then a copy of the appended doc must be dropped
-    SignatureIndex.append(
-      Seq(100L -> "an entirely new retained document about columnar encodings")
-        .toDF("doc_id", "text"),
-      "doc_id", "text", idx, batchId = 50L,
-      cfg = SignatureIndex.Config(3, 128, 32, 4))
-    DedupStreams.dedupBatch(
-      Seq(101L -> "an entirely new retained document about columnar encodings")
-        .toDF("doc_id", "text"),
-      out, idx, threshold = 0.7, batchId = 51L, compactEvery = 0, store = Some(st))
-    val after = spark.read.parquet(out).select(col("doc_id")).as[Long].collect().toSet
-    assert(!after.contains(3L), "doc 3 (copy of 1) must be dropped via the lazy pull")
-    assert(!after.contains(101L),
-      "copy of the out-of-band appended doc must be dropped (append seeded eagerly)")
-  }
-
-  test("lazy store-backed drain matches the no-store survivors across folds") {
-    val slices = Seq(Seq(1L, 2L), Seq(3L, 4L), Seq(5L, 6L, 7L))
-    val noStore = drain(None, slices)._1
-    // a fold at batch 2 renames the components the store holds; it must
-    // adopt the folded names (resyncAfterFold) rather than miss them
-    val lz = drain(Some(new InMemoryMembershipStore(lazySeed = true)), slices,
-      compactEvery = 2)._1
-    assert(lz == noStore)
   }
 
   test("in-memory store coverage violation (uncertified fold) forces a full rebuild, not a silent miss") {

@@ -624,6 +624,24 @@ class DedupStreamsSpec extends SparkSpec {
     }
   }
 
+  test("an over-cap trigger whose survivor write throws releases its caches and conf") {
+    spark.catalog.clearCache()
+    val confBefore = spark.conf.getAll
+    val root = Files.createTempDirectory("dedup_overcap_throw").toString
+    // an index to probe, so the member-hit and refined-pair frames are
+    // non-trivial, then an output path that is a regular file: the
+    // survivor write after the pair collect cannot create its dir
+    DedupStreams.dedupBatch(corpus.filter(col("doc_id") <= 2L), s"$root/out0",
+      s"$root/index", threshold = 0.7, batchId = 0, driverBatchCap = 0L)
+    val outFile = Files.createFile(java.nio.file.Paths.get(root, "out")).toString
+    intercept[Exception] {
+      DedupStreams.dedupBatch(corpus.filter(col("doc_id") > 2L), outFile,
+        s"$root/index", threshold = 0.7, batchId = 1, driverBatchCap = 0L)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty, "a cached frame outlived the failed trigger")
+    assert(spark.conf.getAll == confBefore, "the failed trigger changed the session conf")
+  }
+
   test("write-time bucket admission enforces the cap") {
     val root = Files.createTempDirectory("dedup_stream_cap").toString
     val out = s"$root/out"; val idx = s"$root/index"
