@@ -389,6 +389,26 @@ object SignatureIndex {
     * too — bounds the reader's dir/footer count between majors. */
   private[graft] val MaxRuns = 8
 
+  /** Byte budget for index work done on the driver, the size test
+    * Spark's broadcast rule applies. It bounds two things:
+    *  - a streaming dedup trigger's batch (`DedupStreams.dedupBatch`): a
+    *    batch whose plan estimates more (`stats.sizeInBytes`; for a
+    *    foreachBatch micro-batch its source files' bytes), or gives no
+    *    estimate, goes distributed without running a job. The estimate
+    *    can undercount (compressed parquet, default per-row widths), so
+    *    the collect job enforces the budget on the copied rows
+    *    themselves. At `DedupStreams.DefaultDriverBatchCap` rows the
+    *    kernel already holds 64 MiB of 64-bit signatures; this budget at
+    *    most doubles that, and a batch of ~1 KB documents reaches both
+    *    bounds together;
+    *  - a fold's source ([[compact]], [[merge]]): by its parquet bytes
+    *    before any read, then by its decoded rows as they are read (see
+    *    [[sortedRewrite]]). A corpus-scale epoch exceeds it and folds
+    *    distributed.
+    * Specs lower it to reach the fallbacks.
+    */
+  private[graft] var DriverBatchBytes: Long = 64L << 20
+
   /** Two-level size-tiered compaction (the LSM shape), shared by the
     * streaming ingest (every `compactEvery` triggers) and long-lived
     * batch-refresh indexes (call it every K appends — without folds an
@@ -406,11 +426,15 @@ object SignatureIndex {
     *
     * All folds are pure concatenation (caps were enforced at write
     * time), written KEY-SORTED (sigs by doc_id, members by bkey) so
-    * probe predicates prune row groups. Deterministic for a given
-    * `upTo`, so a replay re-running one is harmless; each fold's sigs
-    * dir is written before its members dir, readers require `_SUCCESS`
-    * on folded dirs, and covered batch dirs are only deleted after both
-    * writes land.
+    * probe predicates prune row groups. Minor or major, a fold whose
+    * source fits [[DriverBatchBytes]] runs on the driver with no Spark
+    * job; a larger one rewrites through Spark ([[sortedRewrite]]).
+    * Deterministic for a given `upTo`, so a replay re-running one is
+    * harmless; each fold's sigs dir is written before its members dir,
+    * readers require `_SUCCESS` on folded dirs, and covered batch dirs
+    * are only deleted after both writes land, together with the hidden
+    * temp dirs of any driver write at or below `upTo` that crashed
+    * before its rename.
     */
   def compact(spark: SparkSession, indexDir: String, upTo: Long): Unit = {
     val conf = spark.sessionState.newHadoopConf()
@@ -443,23 +467,21 @@ object SignatureIndex {
     // cleanup is best-effort: leftovers are ignored by readers (covered
     // ids, hidden temp dirs) and retried by the next fold. Raw listing,
     // not listTable — that helper hides exactly the now-covered ids that
-    // need deleting. `.batch=<n>.tmp-*` is a [[writeComponent]] that
+    // need deleting. `.<component>.tmp-*` is a [[writeComponent]] (a
+    // trigger's batch=, or a driver fold's run= or compacted=) that
     // crashed before its rename.
+    val Temp = """\.(?:batch|run|compacted)=(-?\d{1,18})\.tmp-.*""".r
     for (dir <- Seq(membersDir, sigsDir) if fs.exists(dir)) {
-      val stale = fs.listStatus(dir).toSeq.map(_.getPath.getName).filter { n =>
-        def id(prefix: String): Option[Long] =
-          if (n.startsWith(prefix))
-            scala.util.Try(n.stripPrefix(prefix).toLong).toOption
-          else None
-        val tmpId = n.split("\\.tmp-", 2) match {
-          case Array(head, _) if head.startsWith(".batch=") =>
-            scala.util.Try(head.stripPrefix(".batch=").toLong).toOption
-          case _ => None
-        }
-        tmpId.exists(_ <= upTo) ||
+      val stale = fs.listStatus(dir).toSeq.map(_.getPath.getName).filter {
+        case Temp(tmpId) => tmpId.toLong <= upTo
+        case n =>
+          def id(prefix: String): Option[Long] =
+            if (n.startsWith(prefix))
+              scala.util.Try(n.stripPrefix(prefix).toLong).toOption
+            else None
           id("batch=").exists(_ <= upTo) ||
-          id("run=").exists(r => if (major) r <= upTo else mergeRuns && r < upTo) ||
-          (major && id("compacted=").exists(_ < upTo))
+            id("run=").exists(r => if (major) r <= upTo else mergeRuns && r < upTo) ||
+            (major && id("compacted=").exists(_ < upTo))
       }
       stale.foreach(n => scala.util.Try(
         fs.delete(new org.apache.hadoop.fs.Path(dir, n), true)))
@@ -468,19 +490,78 @@ object SignatureIndex {
 
   /** Rewrite sig and member components as one `component` of
     * `indexDir`, key-sorted so probe predicates prune row groups: sigs
-    * by `doc_id`, then members by `bkey`, each in 8 range partitions.
-    * Sigs land first (the fold ordering contract). Shared by
-    * [[compact]] and [[merge]].
+    * by `doc_id`, members by `bkey`. Sigs land first (the fold ordering
+    * contract). Shared by [[compact]] and [[merge]].
+    *
+    * The path is chosen by bytes, as the trigger kernel's is (the size
+    * test of Spark's broadcast rule). A source whose parquet bytes fit
+    * [[DriverBatchBytes]] is read on the driver with Spark's own parquet
+    * reader and no Spark job, and the budget is enforced again on the
+    * decoded rows as they are read. Within it, the rows are sorted in
+    * memory (members by `(bkey, band, doc_id)`, so the output is
+    * deterministic) and each table is written as one [[writeComponent]]
+    * file. Past the budget, what was read is dropped and each table is
+    * rewritten through Spark in 8 range partitions (a sampling job plus a
+    * shuffle per table), its jobs described `index.fold <component>`.
+    * Both paths write the same rows, key-sorted per file, in the schema
+    * `spark.read.parquet` gives the source (spec-asserted).
     */
   private def sortedRewrite(
       spark: SparkSession, sigPaths: Seq[String], memberPaths: Seq[String],
       indexDir: String, component: String): Unit = {
-    spark.read.parquet(sigPaths: _*)
-      .repartitionByRange(8, col("doc_id")).sortWithinPartitions(col("doc_id"))
-      .write.mode("overwrite").parquet(s"$indexDir/sigs/$component")
-    spark.read.parquet(memberPaths: _*)
-      .repartitionByRange(8, col("bkey")).sortWithinPartitions(col("bkey"))
-      .write.mode("overwrite").parquet(s"$indexDir/members/$component")
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+    import org.apache.spark.sql.graft.DriverParquet
+    val conf = spark.sessionState.newHadoopConf()
+    // the data files spark.read.parquet would list, in path order
+    def dataFiles(paths: Seq[String]) = paths.flatMap { p =>
+      val dir = new Path(p)
+      dir.getFileSystem(conf).listStatus(dir).toSeq.filter { s =>
+        val n = s.getPath.getName
+        s.isFile && s.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
+      }
+    }
+    val (sigFiles, memberFiles) = (dataFiles(sigPaths), dataFiles(memberPaths))
+    val fits = sigFiles.nonEmpty && memberFiles.nonEmpty &&
+      (sigFiles ++ memberFiles).map(_.getLen).sum <= DriverBatchBytes
+    val onDriver = if (!fits) None else {
+      val (sigSchema, memberSchema) =
+        (DriverParquet.schemaOf(spark, sigFiles), DriverParquet.schemaOf(spark, memberFiles))
+      for {
+        sigs <- DriverParquet.read(spark, sigFiles, sigSchema, DriverBatchBytes)
+        members <- DriverParquet.read(spark, memberFiles, memberSchema,
+          DriverBatchBytes - sigs.iterator.map(_.getSizeInBytes.toLong).sum)
+      } yield (sigSchema, sigs, memberSchema, members)
+    }
+    onDriver match {
+      case Some((sigSchema, sigs, memberSchema, members)) =>
+        val d = sigSchema.fieldIndex("doc_id")
+        java.util.Arrays.sort(sigs, Ordering.by((r: UnsafeRow) => r.getLong(d)))
+        val (k, b, md) = (memberSchema.fieldIndex("bkey"), memberSchema.fieldIndex("band"),
+          memberSchema.fieldIndex("doc_id"))
+        java.util.Arrays.sort(members, new Ordering[UnsafeRow] {
+          def compare(x: UnsafeRow, y: UnsafeRow): Int = {
+            val c = java.lang.Long.compare(x.getLong(k), y.getLong(k))
+            if (c != 0) c
+            else if (x.getInt(b) != y.getInt(b)) Integer.compare(x.getInt(b), y.getInt(b))
+            else java.lang.Long.compare(x.getLong(md), y.getLong(md))
+          }
+        })
+        writeComponent(spark, s"$indexDir/sigs/$component", sigSchema, sigs.iterator)
+        writeComponent(spark, s"$indexDir/members/$component", memberSchema, members.iterator)
+      case None =>
+        val sc = spark.sparkContext
+        val prevDesc = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(s"index.fold $component")
+        try {
+          spark.read.parquet(sigPaths: _*)
+            .repartitionByRange(8, col("doc_id")).sortWithinPartitions(col("doc_id"))
+            .write.mode("overwrite").parquet(s"$indexDir/sigs/$component")
+          spark.read.parquet(memberPaths: _*)
+            .repartitionByRange(8, col("bkey")).sortWithinPartitions(col("bkey"))
+            .write.mode("overwrite").parquet(s"$indexDir/members/$component")
+        } finally sc.setLocalProperty("spark.job.description", prevDesc)
+    }
   }
 
   /** Merge shard-built indexes into one — the distributed BUILD story at
@@ -488,10 +569,12 @@ object SignatureIndex {
     * whole corpus, so each corpus shard builds its own index in parallel
     * (the O(shard) shingle+signature derivation — the expensive part),
     * and the merge is a pure byte-level union of the already-derived
-    * (band, bkey, doc_id) / (doc_id, sig8) rows: one range-partitioned
-    * shuffle of index rows (orders of magnitude narrower than text),
-    * re-sorted so probe pushdown prunes the merged epoch exactly like a
-    * whole-built one. No text is read, no signature recomputed.
+    * (band, bkey, doc_id) / (doc_id, sig8) rows (orders of magnitude
+    * narrower than text), re-sorted so probe pushdown prunes the merged
+    * epoch exactly like a whole-built one: on the driver with no Spark
+    * job when the shards fit [[DriverBatchBytes]], otherwise one
+    * range-partitioned shuffle per table ([[sortedRewrite]]). No text is
+    * read, no signature recomputed.
     *
     * Contract: shard doc-id sets are disjoint (the build contract) and
     * every shard carries the same derivation params (validated). Shards

@@ -34,8 +34,8 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   *     near-dups themselves, not the corpus); everything else is
   *     retained by one filter against the small dropped set.
   *
-  * A batch small enough for the driver ([[DriverBatchBytes]] by its
-  * plan's size estimate and by its actual row bytes, at most
+  * A batch small enough for the driver ([[SignatureIndex.DriverBatchBytes]]
+  * by its plan's size estimate and by its actual row bytes, at most
   * [[DefaultDriverBatchCap]] rows) runs the pairwise steps (2–4) as a
   * DRIVER-RESIDENT KERNEL over its collected rows, banded keys and
   * b-bit signatures — metadata-scale state, the broadcast-parameters
@@ -73,17 +73,21 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * behind an external key-value/state-store interface.
   *
   * Every `compactEvery` batches the `batch=<id>` partition dirs fold —
-  * two-level and size-tiered (see [[compact]]): normally a MINOR fold
-  * into a `run=<R>` dir (O(folded batches)), a MAJOR fold into a new
-  * `compacted=<M>` epoch only when the runs reach 1/4 of the epoch's
-  * bytes. Per-trigger listing stays O(compactEvery + MaxRuns) dirs and
-  * amortized fold work stays O(batch), with each row epoch-rewritten
-  * O(log) times over the stream's life. Folds are pure concatenation —
-  * the cap was enforced at write time — and crash-safe: each fold's
-  * sigs dir is written before its members dir, readers require
-  * `_SUCCESS` on folded dirs and ignore batch dirs a fold covers, and
-  * covered dirs are only deleted after both writes land; a replayed
-  * trigger re-runs the same deterministic fold.
+  * two-level and size-tiered (see [[SignatureIndex.compact]]): normally
+  * a MINOR fold into a `run=<R>` dir (O(folded batches)), a MAJOR fold
+  * into a new `compacted=<M>` epoch only when the runs reach 1/4 of the
+  * epoch's bytes. Per-trigger listing stays O(compactEvery + MaxRuns)
+  * dirs and amortized fold work stays O(batch), with each row
+  * epoch-rewritten O(log) times over the stream's life. Which of the two
+  * a fold is does not pick its path; its bytes do: a fold whose
+  * components fit [[SignatureIndex.DriverBatchBytes]] (every fold of a
+  * refresh-scale index, minor or major) is read, sorted and rewritten on
+  * the driver with no Spark job, and a larger one rewrites through Spark.
+  * Folds are pure concatenation — the cap was enforced at write time —
+  * and crash-safe: each fold's sigs dir is written before its members
+  * dir, readers require `_SUCCESS` on folded dirs and ignore batch dirs
+  * a fold covers, and covered dirs are only deleted after both writes
+  * land; a replayed trigger re-runs the same deterministic fold.
   *
   * PRECONDITION for cross-run agreement: doc ids must arrive
   * monotonically non-decreasing across batches (ingest-time-assigned
@@ -148,26 +152,14 @@ object DedupStreams {
     * are metadata-scale (~10 MB at this cap), so within-batch pair
     * generation, similarity estimates, greedy resolution and bucket
     * admission run in plain Scala on the driver, leaving Spark the one
-    * collect job. Checked on the collected rows, after [[DriverBatchBytes]]
-    * has bounded their bytes. Cuts ~8 batch-scale shuffle stages (and
-    * their fixed latency) out of every trigger. Above the cap the
-    * identical semantics run as the distributed spelling (asserted
-    * equivalent in spec). Aligned with [[Dedup.MaxExactDocs]].
+    * collect job. Checked on the collected rows, after
+    * [[SignatureIndex.DriverBatchBytes]] has bounded their bytes. Cuts ~8
+    * batch-scale shuffle stages (and their fixed latency) out of every
+    * trigger. Above the cap the identical semantics run as the
+    * distributed spelling (asserted equivalent in spec). Aligned with
+    * [[Dedup.MaxExactDocs]].
     */
   val DefaultDriverBatchCap: Long = 65536L
-
-  /** Row-byte bound for the driver-resident kernel, the size test
-    * Spark's broadcast rule applies: a batch whose plan estimates more
-    * (`stats.sizeInBytes`; for a foreachBatch micro-batch its source
-    * files' bytes), or gives no estimate, goes distributed without
-    * running a job. The estimate can undercount (compressed parquet,
-    * default per-row widths), so the collect job enforces the bound on
-    * the copied rows themselves. At [[DefaultDriverBatchCap]] rows the
-    * kernel already holds 64 MiB of 64-bit signatures; this bound at
-    * most doubles that, and a batch of ~1 KB documents reaches both
-    * bounds together. Specs lower it to reach both fallbacks.
-    */
-  private[streaming] var DriverBatchBytes: Long = 64L << 20
 
   /** Bound on the refined near-dup pair set [[resolveDropped]]
     * materializes on the driver per trigger. Normal batches sit orders
@@ -301,13 +293,15 @@ object DedupStreams {
     // Long.MaxValue unless a session lowers it; the job's own byte bound
     // holds either way) and kept only within the row and byte bounds
     val collected: Option[MinHashLSH.CollectedRows] =
-      if (batch.queryExecution.optimizedPlan.stats.sizeInBytes > DriverBatchBytes) None
+      if (batch.queryExecution.optimizedPlan.stats.sizeInBytes >
+          SignatureIndex.DriverBatchBytes) None
       else {
         val sc = spark.sparkContext
         val prevDesc = sc.getLocalProperty("spark.job.description")
         sc.setJobDescription(s"dedup.collect batch=$batchId")
         try phase("collect")(MinHashLSH.collectWithSignatures(
-          batch, "doc_id", "text", Cfg.numPerms, maxRowBytes = DriverBatchBytes))
+          batch, "doc_id", "text", Cfg.numPerms,
+          maxRowBytes = SignatureIndex.DriverBatchBytes))
         finally sc.setLocalProperty("spark.job.description", prevDesc)
       }
     val kernelRows = collected.filter(_.rows.length <= driverBatchCap)

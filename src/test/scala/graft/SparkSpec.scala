@@ -23,4 +23,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sfDir = "/root/testdata/sf0.001"
 
   def tables: Tables = Tables(spark, sfDir)
+
+  /** Copy the tree under `from` into `to`, hidden files included. */
+  def copyDir(from: String, to: String): Unit = {
+    import java.nio.file.{Files, Paths}
+    val src = Paths.get(from)
+    val walk = Files.walk(src)
+    try walk.forEach { p =>
+      val dst = Paths.get(to).resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(dst) else Files.copy(p, dst)
+    } finally walk.close()
+  }
 }

@@ -364,6 +364,149 @@ class SignatureIndexSpec extends SparkSpec {
       "the temp dir outlived its rename")
   }
 
+  // ---- driver fold vs distributed fold --------------------------------
+
+  /** Docs of 30 seeded-random words: near-zero shingle overlap. */
+  private def randomDocs(ids: Seq[Long]) = {
+    import spark.implicits._
+    ids.map { i =>
+      val rng = new scala.util.Random(i)
+      i -> Seq.fill(30)(rng.alphanumeric.take(8).mkString).mkString(" ")
+    }.toDF("doc_id", "text")
+  }
+
+  /** The parquet data files of one component dir, as spark.read lists them. */
+  private def dataFiles(dir: String): Seq[java.io.File] =
+    new java.io.File(dir).listFiles().toSeq
+      .filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+
+  /** Parquet bytes of components `names` of both tables of `idx`. */
+  private def sourceBytes(idx: String, names: Seq[String]): Long =
+    (for (t <- Seq("sigs", "members"); n <- names; f <- dataFiles(s"$idx/$t/$n"))
+      yield f.length).sum
+
+  /** Descriptions of the Spark jobs `body` starts. */
+  private def jobsDuring(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = descs.add(
+        String.valueOf(Option(j.properties).map(_.getProperty("spark.job.description")).orNull))
+    }
+    org.apache.spark.sql.graft.ListenerBusHook.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.sql.graft.ListenerBusHook.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    descs.toArray(Array.empty[String]).toSeq
+  }
+
+  /** Run `fold(root)` into two roots: `driverRoot` under the driver budget
+    * and `fallbackRoot` with the budget lowered to `fallbackBytes`. The
+    * first must run no Spark job; the second must take the distributed
+    * rewrite, every job described `index.fold <target>`. Both must write
+    * `target` with the same rows, each file key-sorted, in the same
+    * parquet schema, row metadata and codec, with `_SUCCESS`. */
+  private def assertFoldPathsAgree(
+      driverRoot: String, fallbackRoot: String, target: String, fallbackBytes: Long)(
+      fold: String => Unit): Unit = {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val prevDesc = sc.getLocalProperty("spark.job.description")
+    assert(jobsDuring(fold(driverRoot)).isEmpty, s"$target: an under-budget fold ran a Spark job")
+    val prevBytes = SignatureIndex.DriverBatchBytes
+    SignatureIndex.DriverBatchBytes = fallbackBytes
+    val fallbackJobs = try jobsDuring(fold(fallbackRoot))
+      finally SignatureIndex.DriverBatchBytes = prevBytes
+    assert(fallbackJobs.nonEmpty, s"$target: an over-budget fold ran no Spark job")
+    assert(fallbackJobs.forall(_ == s"index.fold $target"),
+      s"$target: fallback job descriptions $fallbackJobs")
+    assert(sc.getLocalProperty("spark.job.description") == prevDesc,
+      "the fold left its job description behind")
+    val conf = spark.sessionState.newHadoopConf()
+    def footer(f: java.io.File) = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.getPath), conf))
+      try r.getFooter finally r.close()
+    }
+    for ((table, key) <- Seq("sigs" -> "doc_id", "members" -> "bkey")) {
+      val (d, f) = (s"$driverRoot/$table/$target", s"$fallbackRoot/$table/$target")
+      for (dir <- Seq(d, f)) {
+        assert(new java.io.File(s"$dir/_SUCCESS").exists, s"$dir: no _SUCCESS")
+        for (file <- dataFiles(dir)) {
+          val keys = spark.read.parquet(file.getPath).select(col(key)).as[Long].collect()
+          assert(keys.sameElements(keys.sorted), s"$file: $key not non-decreasing")
+        }
+      }
+      assert(dataFiles(d).size == 1, s"$d: the driver fold writes one file per table")
+      def rows(dir: String) =
+        spark.read.parquet(dir).collect().map(_.toSeq.map {
+          case a: scala.collection.Seq[_] => a.toList
+          case v => v
+        }.toString).sorted.toSeq
+      assert(rows(d).nonEmpty && rows(d) == rows(f), s"$table: row multisets differ")
+      val (a, b) = (footer(dataFiles(d).head), footer(dataFiles(f).head))
+      assert(a.getFileMetaData.getSchema == b.getFileMetaData.getSchema,
+        s"$table parquet schema: ${a.getFileMetaData.getSchema} vs ${b.getFileMetaData.getSchema}")
+      val meta = "org.apache.spark.sql.parquet.row.metadata"
+      assert(a.getFileMetaData.getKeyValueMetaData.get(meta) ==
+        b.getFileMetaData.getKeyValueMetaData.get(meta), s"$table row metadata")
+      assert(a.getBlocks.get(0).getColumns.get(0).getCodec ==
+        b.getBlocks.get(0).getColumns.get(0).getCodec, s"$table codec")
+    }
+  }
+
+  /** Live component names of both tables, which must agree. */
+  private def liveNames(idx: String): Seq[String] = {
+    val names = Seq("members", "sigs").map(t => SignatureIndex.componentNames(spark, idx, t))
+    assert(names(0) == names(1), s"members and sigs listings differ: $names")
+    names(0)
+  }
+
+  test("a minor fold under the driver budget runs no job and matches the distributed fold") {
+    val base = tmpDir("minorbase")
+    SignatureIndex.build(randomDocs(0L until 600L), "doc_id", "text", base)
+    (0 until 4).foreach(b => SignatureIndex.append(
+      randomDocs((1000L + 20 * b) until (1020L + 20 * b)), "doc_id", "text", base, b.toLong))
+    // the fallback budget passes the parquet-bytes gate and trips on the
+    // decoded rows
+    val bytes = sourceBytes(base, (0 until 4).map(b => s"batch=$b"))
+    val (d, f) = (tmpDir("minordriver"), tmpDir("minorfallback"))
+    copyDir(base, d); copyDir(base, f)
+    assertFoldPathsAgree(d, f, "run=3", bytes)(SignatureIndex.compact(spark, _, upTo = 3L))
+    assert(liveNames(d) == Seq("compacted=-1", "run=3") && liveNames(f) == liveNames(d))
+  }
+
+  test("a major fold absorbing MaxRuns runs matches the distributed fold") {
+    val base = tmpDir("majorbase")
+    SignatureIndex.build(randomDocs(0L until 10L), "doc_id", "text", base)
+    (0 until 12).foreach(b => SignatureIndex.append(
+      randomDocs((1000L + 5 * b) until (1005L + 5 * b)), "doc_id", "text", base, b.toLong))
+    // batches 0..7 stand as the minor folds' run= dirs
+    for (t <- Seq("members", "sigs"); b <- 0 until SignatureIndex.MaxRuns)
+      java.nio.file.Files.move(java.nio.file.Paths.get(s"$base/$t/batch=$b"),
+        java.nio.file.Paths.get(s"$base/$t/run=$b"))
+    assert(liveNames(base) == Seq("compacted=-1") ++ (0 until 8).map(r => s"run=$r") ++
+      (8 until 12).map(b => s"batch=$b"))
+    val (d, f) = (tmpDir("majordriver"), tmpDir("majorfallback"))
+    copyDir(base, d); copyDir(base, f)
+    // a budget of one byte: the parquet-bytes gate falls back before any read
+    assertFoldPathsAgree(d, f, "compacted=11", 1L)(SignatureIndex.compact(spark, _, upTo = 11L))
+    assert(liveNames(d) == Seq("compacted=11") && liveNames(f) == liveNames(d))
+  }
+
+  test("merge under the driver budget runs no job and matches the distributed merge") {
+    val s0 = tmpDir("mshard0"); val s1 = tmpDir("mshard1")
+    SignatureIndex.build(randomDocs(0L until 100L), "doc_id", "text", s0)
+    SignatureIndex.build(randomDocs(100L until 200L), "doc_id", "text", s1)
+    SignatureIndex.append(randomDocs(200L until 220L), "doc_id", "text", s1, 0L)
+    val bytes = sourceBytes(s0, Seq("compacted=-1")) + sourceBytes(s1, Seq("compacted=-1", "batch=0"))
+    val (d, f) = (tmpDir("mergedriver"), tmpDir("mergefallback"))
+    assertFoldPathsAgree(d, f, "compacted=-1", bytes)(SignatureIndex.merge(spark, Seq(s0, s1), _))
+    assert(liveNames(d) == Seq("compacted=-1"))
+  }
+
   test("probing with mismatched derivation params fails loudly") {
     import spark.implicits._
     val corpus = tables.documents.select($"doc_id", $"text").limit(50)

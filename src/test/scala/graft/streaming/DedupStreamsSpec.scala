@@ -289,8 +289,8 @@ class DedupStreamsSpec extends SparkSpec {
       (survivors, members, sigs,
         (membersDf.schema, written("members")), (sigsDf.schema, written("sigs")), kernelRan)
     }
-    val prevBytes = DedupStreams.DriverBatchBytes
-    DedupStreams.DriverBatchBytes = 600L
+    val prevBytes = graft.operators.SignatureIndex.DriverBatchBytes
+    graft.operators.SignatureIndex.DriverBatchBytes = 600L
     spark.sparkContext.addSparkListener(listener)
     val (driver, dist) = try {
       val d = drain(DedupStreams.DefaultDriverBatchCap)
@@ -301,7 +301,7 @@ class DedupStreamsSpec extends SparkSpec {
       // cap 0: every batch takes the distributed path
       (d, drain(0L))
     } finally {
-      DedupStreams.DriverBatchBytes = prevBytes
+      graft.operators.SignatureIndex.DriverBatchBytes = prevBytes
       spark.sparkContext.removeSparkListener(listener)
     }
     val (sDriver, mDriver, gDriver, mSchemaDriver, gSchemaDriver, kDriver) = driver
@@ -431,6 +431,20 @@ class DedupStreamsSpec extends SparkSpec {
     }
   }
 
+  // live components only: after a fold the table dir mixes compacted=
+  // and batch= names, which partition discovery cannot read as one
+  private def liveTable(root: String, name: String): DataFrame = spark.read.parquet(
+    graft.operators.SignatureIndex.tablePaths(spark, s"$root/index", name): _*)
+
+  /** Survivors and the live index rows of the drain under `root`. */
+  private def contents(root: String) = (
+    spark.read.parquet(s"$root/out").select(col("doc_id"), col("text"))
+      .as[(Long, String)].collect().toSeq.sorted,
+    liveTable(root, "members").select(col("band"), col("bkey"), col("doc_id"))
+      .as[(Int, Long, Long)].collect().toSeq.sorted,
+    liveTable(root, "sigs").select(col("doc_id"), col("sig8"))
+      .as[(Long, Seq[Long])].collect().toSeq.sortBy(_._1))
+
   test("a component write that died before its rename is ignored, replayed and folded away") {
     // a driver-side component write lands its file in a hidden
     // `.batch=<id>.tmp-<uuid>` dir and renames it into place; a crash in
@@ -442,17 +456,6 @@ class DedupStreamsSpec extends SparkSpec {
     def run(root: String, store: graft.operators.InMemoryMembershipStore, ids: Seq[Int]): Unit =
       ids.foreach(i => DedupStreams.dedupBatch(batches(i), s"$root/out", s"$root/index",
         threshold = 0.7, batchId = i.toLong, compactEvery = 4, store = Some(store)))
-    // live components only: after a fold the table dir mixes compacted=
-    // and batch= names, which partition discovery cannot read as one
-    def liveTable(root: String, name: String): DataFrame = spark.read.parquet(
-      graft.operators.SignatureIndex.tablePaths(spark, s"$root/index", name): _*)
-    def contents(root: String) = (
-      spark.read.parquet(s"$root/out").select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect().toSeq.sorted,
-      liveTable(root, "members").select(col("band"), col("bkey"), col("doc_id"))
-        .as[(Int, Long, Long)].collect().toSeq.sorted,
-      liveTable(root, "sigs").select(col("doc_id"), col("sig8"))
-        .as[(Long, Seq[Long])].collect().toSeq.sortBy(_._1))
     val foreignId = 999L
     val foreignKey = (0, 4242424242L)
 
@@ -513,6 +516,60 @@ class DedupStreamsSpec extends SparkSpec {
       assert(names.contains(".batch=9.tmp-y"), s"$table: the fold deleted an uncovered temp dir")
     }
     assert(contents(rootB) == contents(rootA), "the fold over a leftover temp dir diverges")
+  }
+
+  test("a fold that died between its sigs and members writes is healed by the replayed trigger") {
+    import graft.operators.{InMemoryMembershipStore, SignatureIndex}
+    import java.nio.file.{Files, Paths}
+    val batches = (0 until 10).map { i =>
+      if (i % 3 == 2) corpus.filter(col("doc_id") === (i % 7 + 1)) // re-sends: dups
+      else distinctDocs((100L + 10 * i) until (110L + 10 * i))
+    }
+    def run(root: String, store: InMemoryMembershipStore, ids: Seq[Int]): Unit =
+      ids.foreach(i => DedupStreams.dedupBatch(batches(i), s"$root/out", s"$root/index",
+        threshold = 0.7, batchId = i.toLong, compactEvery = 4, store = Some(store)))
+    def tempDirs(idx: String): Seq[String] = for {
+      t <- Seq("members", "sigs"); n <- new java.io.File(s"$idx/$t").list().toSeq
+      if n.contains(".tmp-")
+    } yield s"$t/$n"
+
+    val rootA = Files.createTempDirectory("dedup_fold_clean").toString
+    run(rootA, new InMemoryMembershipStore, 0 until 10)
+
+    // the replayed trigger's fold runs on the driver, then distributed
+    for (replayBudget <- Seq(SignatureIndex.DriverBatchBytes, 1L)) {
+      val rootB = Files.createTempDirectory("dedup_fold_crash").toString
+      val idx = s"$rootB/index"
+      run(rootB, new InMemoryMembershipStore, 0 until 4)
+      // trigger 4 folds batches 0..3 into compacted=3 (no epoch yet: a
+      // major). The crash state: its sigs write landed with _SUCCESS, its
+      // members write died in its hidden temp dir, and the covered batch
+      // dirs are all still there.
+      val scratch = Files.createTempDirectory("dedup_fold_scratch").toString
+      copyDir(idx, scratch)
+      SignatureIndex.compact(spark, scratch, upTo = 3L)
+      copyDir(s"$scratch/sigs/compacted=3", s"$idx/sigs/compacted=3")
+      val deadTmp = Paths.get(s"$idx/members/.compacted=3.tmp-dead")
+      Files.createDirectories(deadTmp)
+      Files.write(deadTmp.resolve("part-00000-dead-c000.snappy.parquet"), Array[Byte](1, 2, 3))
+      assert(new java.io.File(s"$idx/sigs/compacted=3/_SUCCESS").exists)
+      assert(SignatureIndex.componentNames(spark, idx, "members") ==
+        (0 until 4).map(b => s"batch=$b"), "the crash state lists no members fold")
+      assert(tempDirs(idx) == Seq("members/.compacted=3.tmp-dead"))
+
+      // the restarted stream (a fresh store) replays trigger 4, and with
+      // it the fold
+      val store = new InMemoryMembershipStore
+      val prevBytes = SignatureIndex.DriverBatchBytes
+      SignatureIndex.DriverBatchBytes = replayBudget
+      try run(rootB, store, Seq(4))
+      finally SignatureIndex.DriverBatchBytes = prevBytes
+      assert(tempDirs(idx).isEmpty, s"a temp dir survived the fold: ${tempDirs(idx)}")
+      assert(SignatureIndex.componentNames(spark, idx, "members").head == "compacted=3")
+      run(rootB, store, 5 until 10)
+      assert(contents(rootB) == contents(rootA),
+        s"survivors or live index rows diverge after a replayed fold (budget $replayBudget)")
+    }
   }
 
   /** The parquet `doc_id` type of every file of one index table's live
