@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.DriverParquet
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided analytics tables (TESTDATA.md).
   *
@@ -131,15 +134,37 @@ object Tables {
                           "label" -> key))
   }
 
+  /** The data schema `spark.read.parquet(path).schema` gives, read from
+    * the first data file's footer on the driver
+    * ([[org.apache.spark.sql.graft.DriverParquet.schemaOf]]), with none
+    * of the schema-inference job Spark's reader runs for it. `path` is a
+    * parquet file or a directory of part files; as in Spark's listing,
+    * names starting with `_` or `.` are not data files.
+    */
+  def footerSchema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val status = fs.getFileStatus(p)
+    val files =
+      if (status.isFile) Seq(status)
+      else fs.listStatus(p).toSeq.filter { s =>
+        val n = s.getPath.getName
+        s.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }.sortBy(_.getPath.getName)
+    require(files.nonEmpty, s"$path: no parquet data files")
+    DriverParquet.schemaOf(spark, files)
+  }
+
   /** Footer-only schema assertion over every table in `dir`: each problem
     * is reported as table.column (found vs expected), all tables checked
     * before failing so one regeneration surfaces its full blast radius in
-    * a single message. Run by Verify and Bench at session startup.
+    * a single message. Run by Verify and Bench at session startup. Each
+    * schema comes from [[footerSchema]], so the check runs no Spark job.
     */
   def smokeCheck(spark: SparkSession, dir: String): Unit = {
     val problems = Expected.flatMap { case (name, cols) =>
       val schemaOrErr =
-        try Right(spark.read.parquet(s"$dir/$name.parquet").schema)
+        try Right(footerSchema(spark, s"$dir/$name.parquet"))
         catch {
           // TIMESTAMP(NANOS) without the legacy conf: a known-good events
           // spelling (Tables.events handles it), not a smoke failure

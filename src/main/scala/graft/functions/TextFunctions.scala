@@ -85,24 +85,14 @@ object TextFunctions {
     * unit of the repetition quality signals (Rae et al. 2021 "Gopher"
     * §A1.1 duplicate/top n-gram fractions) and of n-gram overlap
     * decontamination (Brown et al. 2020 §C). Empty array when the doc has
-    * fewer than n tokens. One-pass expression; the HOF spelling below is
-    * the cross-checked reference (see [[org.apache.spark.sql.graft.WordNgrams]]
-    * for why the transform/slice form is interpreter-bound).
+    * fewer than n tokens. One-pass expression; the test-side HOF spelling
+    * (`ReferenceSpellings.wordNgramsExpr`) is the cross-checked reference
+    * (see [[org.apache.spark.sql.graft.WordNgrams]] for why the
+    * transform/slice form is interpreter-bound).
     */
   def wordNgrams(text: Column, n: Int): Column = {
     import org.apache.spark.sql.graft.{ColumnBridge, WordNgrams}
     ColumnBridge.toColumn(WordNgrams(ColumnBridge.toExpression(text), n))
-  }
-
-  /** The transform/slice spelling — interpreted HOF, spec-only: the
-    * one-pass [[wordNgrams]] is asserted element-identical to it.
-    */
-  private[graft] def wordNgramsExpr(text: Column, n: Int): Column = {
-    val ts = tokens(text)
-    when(size(ts) >= n,
-      transform(sequence(lit(1), size(ts) - (n - 1)),
-        i => concat_ws(" ", slice(ts, i, lit(n)))))
-      .otherwise(array().cast("array<string>"))
   }
 
   /** Per-document n-gram repetition statistics

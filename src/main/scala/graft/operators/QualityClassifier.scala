@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   *    and both engines compute bit-identical results.
   *
   * The explode + groupBy spelling of the same score (one full shuffle
-  * of the token stream) is the spec cross-check, not the production
-  * path.
+  * of the token stream) lives test-side (`ReferenceSpellings`) as the
+  * spec cross-check, not the production path.
   */
 object QualityClassifier {
 
@@ -108,15 +108,4 @@ object QualityClassifier {
         when(col("tp") + col("fn") > 0, ppmExact(col("tp"), col("tp") + col("fn"))))
       .orderBy(col("thr_tenths"))
   }
-
-  /** The explode + groupBy spelling of [[score]] — shuffles the whole
-    * token stream; spec cross-check only. */
-  private[graft] def scoreExploded(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol), explode(TextFunctions.alphaTokens(col(textCol))).as("tok"))
-      .groupBy(col(idCol))
-      .agg(
-        count(lit(1)).as("n_tokens"),
-        sum(tokenWeight(col("tok"))).as("weight_sum"))
-      .withColumn("score", col("weight_sum") / (lit(1000.0) * col("n_tokens")))
-      .withColumn("keep", col("weight_sum") > 0)
 }

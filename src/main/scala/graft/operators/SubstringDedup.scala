@@ -161,7 +161,7 @@ object SubstringDedup {
     // All row-local until the explode of the winnowed fingerprints
     // (WinnowedFingerprints: one codepoint pass + monotone-deque sliding
     // min — O(chars), vs the HOF spelling's O(chars * stride) slice
-    // copies, kept below for the equality spec). Frame count is
+    // copies, kept test-side for the equality spec). Frame count is
     // length - minLen + 1, the same as the direct plan's window count,
     // but only ~2/(stride+1) of positions survive selection (consecutive
     // frames mostly re-select the same minimum).
@@ -190,23 +190,6 @@ object SubstringDedup {
       .select(col(idCol).as("doc_id"),
         explode(ColumnBridge.toColumn(WinnowedFingerprints(
           ColumnBridge.toExpression(col(textCol)), minLen, stride))).as("fp"))
-  }
-
-  /** The HOF spelling of the same selection — O(chars * stride) slice
-    * copies; retained for cross-checking the expression (the
-    * precedent of the MinHash expression form the specs keep).
-    */
-  private[operators] def winnowedHof(
-      docs: DataFrame, idCol: String, textCol: String,
-      minLen: Int, stride: Int): DataFrame = {
-    val k = minLen - stride + 1
-    docs.filter(length(col(textCol)) >= minLen)
-      .select(col(idCol).as("doc_id"), col(textCol).as("__t"))
-      .withColumn("__hs", expr(
-        s"transform(sequence(1, length(__t) - ${k - 1}), p -> xxhash64(substring(__t, p, $k)))"))
-      .select(col("doc_id"), explode(expr(
-        s"array_distinct(transform(sequence(1, length(__t) - ${minLen - 1}), " +
-          s"i -> array_min(slice(__hs, i, $stride))))")).as("fp"))
   }
 
   private def spanStatsStrided(

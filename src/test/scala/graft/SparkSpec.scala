@@ -24,6 +24,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def tables: Tables = Tables(spark, sfDir)
 
+  /** Descriptions of the Spark jobs `body` starts ("null" where a job
+    * has none), read once the listener bus has delivered every event. */
+  def jobsDuring(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = descs.add(
+        String.valueOf(Option(j.properties).map(_.getProperty("spark.job.description")).orNull))
+    }
+    org.apache.spark.sql.graft.ListenerBusHook.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.sql.graft.ListenerBusHook.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    descs.toArray(Array.empty[String]).toSeq
+  }
+
   /** Copy the tree under `from` into `to`, hidden files included. */
   def copyDir(from: String, to: String): Unit = {
     import java.nio.file.{Files, Paths}

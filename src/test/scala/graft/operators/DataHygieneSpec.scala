@@ -28,14 +28,14 @@ class DataHygieneSpec extends SparkSpec {
       .select($"doc_id", $"text")
     for (n <- Seq(2, 4)) {
       val fast = docs.select($"doc_id", TextFunctions.wordNgrams($"text", n).as("g"))
-      val ref = docs.select($"doc_id", TextFunctions.wordNgramsExpr($"text", n).as("g"))
+      val ref = docs.select($"doc_id", ReferenceSpellings.wordNgramsExpr($"text", n).as("g"))
       assert(fast.exceptAll(ref).isEmpty && ref.exceptAll(fast).isEmpty,
         s"n=$n: one-pass grams diverge from the HOF reference")
     }
     // multi-byte path: grams slice by codepoint-correct byte offsets
     val zh = Seq("你好 世界 测试 abc", "émigré café  naïve").toDF("t")
     val f2 = zh.select(TextFunctions.wordNgrams($"t", 2).as("g")).as[Seq[String]].collect().toSeq
-    val r2 = zh.select(TextFunctions.wordNgramsExpr($"t", 2).as("g")).as[Seq[String]].collect().toSeq
+    val r2 = zh.select(ReferenceSpellings.wordNgramsExpr($"t", 2).as("g")).as[Seq[String]].collect().toSeq
     assert(f2 == r2)
   }
 
@@ -47,7 +47,7 @@ class DataHygieneSpec extends SparkSpec {
       .filter($"st.n_grams" > 0)
       .select($"doc_id", $"st.n_grams".as("n"), $"st.n_distinct".as("nd"), $"st.max_count".as("mx"))
     val ref = docs
-      .select($"doc_id", explode(TextFunctions.wordNgramsExpr($"text", 2)).as("gram"))
+      .select($"doc_id", explode(ReferenceSpellings.wordNgramsExpr($"text", 2)).as("gram"))
       .groupBy($"doc_id", $"gram").agg(count(lit(1)).as("c"))
       .groupBy($"doc_id")
       .agg(sum($"c").cast("long").as("n"), count(lit(1)).as("nd"), max($"c").cast("long").as("mx"))

@@ -14,7 +14,7 @@ class PipelineAssemblySpec extends SparkSpec {
     val docs = tables.documents
     val local = QualityClassifier.score(docs, "doc_id", "text")
       .select("doc_id", "n_tokens", "weight_sum")
-    val exploded = QualityClassifier.scoreExploded(docs, "doc_id", "text")
+    val exploded = ReferenceSpellings.scoreExploded(docs, "doc_id", "text")
       .select("doc_id", "n_tokens", "weight_sum")
     assert(local.exceptAll(exploded).count() == 0)
     assert(exploded.exceptAll(local).count() == 0)

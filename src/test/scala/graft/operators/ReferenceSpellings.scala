@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -72,4 +73,43 @@ object ReferenceSpellings {
       .agg(
         sum(expr("IF(pos < 32, shiftleft(CAST(sbit AS BIGINT), pos), 0L)")).as("lo"),
         sum(expr("IF(pos >= 32, shiftleft(CAST(sbit AS BIGINT), pos - 32), 0L)")).as("hi"))
+
+  /** [[QualityClassifier.score]] as an explode + groupBy — shuffles the
+    * whole token stream.
+    */
+  def scoreExploded(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.select(col(idCol), explode(TextFunctions.alphaTokens(col(textCol))).as("tok"))
+      .groupBy(col(idCol))
+      .agg(
+        count(lit(1)).as("n_tokens"),
+        sum(QualityClassifier.tokenWeight(col("tok"))).as("weight_sum"))
+      .withColumn("score", col("weight_sum") / (lit(1000.0) * col("n_tokens")))
+      .withColumn("keep", col("weight_sum") > 0)
+
+  /** [[SubstringDedup.candidateFingerprints]] as higher-order functions —
+    * O(chars * stride) slice copies.
+    */
+  def winnowedHof(
+      docs: DataFrame, idCol: String, textCol: String,
+      minLen: Int, stride: Int): DataFrame = {
+    val k = minLen - stride + 1
+    docs.filter(length(col(textCol)) >= minLen)
+      .select(col(idCol).as("doc_id"), col(textCol).as("__t"))
+      .withColumn("__hs", expr(
+        s"transform(sequence(1, length(__t) - ${k - 1}), p -> xxhash64(substring(__t, p, $k)))"))
+      .select(col("doc_id"), explode(expr(
+        s"array_distinct(transform(sequence(1, length(__t) - ${minLen - 1}), " +
+          s"i -> array_min(slice(__hs, i, $stride))))")).as("fp"))
+  }
+
+  /** [[graft.functions.TextFunctions.wordNgrams]] as an interpreted
+    * transform/slice over the token array.
+    */
+  def wordNgramsExpr(text: Column, n: Int): Column = {
+    val ts = TextFunctions.tokens(text)
+    when(size(ts) >= n,
+      transform(sequence(lit(1), size(ts) - (n - 1)),
+        i => concat_ws(" ", slice(ts, i, lit(n)))))
+      .otherwise(array().cast("array<string>"))
+  }
 }

@@ -385,22 +385,6 @@ class SignatureIndexSpec extends SparkSpec {
     (for (t <- Seq("sigs", "members"); n <- names; f <- dataFiles(s"$idx/$t/$n"))
       yield f.length).sum
 
-  /** Descriptions of the Spark jobs `body` starts. */
-  private def jobsDuring(body: => Unit): Seq[String] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = descs.add(
-        String.valueOf(Option(j.properties).map(_.getProperty("spark.job.description")).orNull))
-    }
-    org.apache.spark.sql.graft.ListenerBusHook.drain(sc)
-    sc.addSparkListener(listener)
-    try { body; org.apache.spark.sql.graft.ListenerBusHook.drain(sc) }
-    finally sc.removeSparkListener(listener)
-    descs.toArray(Array.empty[String]).toSeq
-  }
-
   /** Run `fold(root)` into two roots: `driverRoot` under the driver budget
     * and `fallbackRoot` with the budget lowered to `fallbackBytes`. The
     * first must run no Spark job; the second must take the distributed

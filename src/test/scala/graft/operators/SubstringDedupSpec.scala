@@ -110,7 +110,7 @@ class SubstringDedupSpec extends SparkSpec {
       val viaExpr = graft.operators.SubstringDedup
         .candidateFingerprints(docs, "doc_id", "text", 20, stride)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val viaHof = graft.operators.SubstringDedup
+      val viaHof = ReferenceSpellings
         .winnowedHof(docs, "doc_id", "text", 20, stride)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(viaExpr == viaHof,
