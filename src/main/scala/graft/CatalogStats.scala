@@ -115,10 +115,7 @@ object CatalogStats {
   /** DROP, CREATE and ANALYZE one table, its jobs described
     * `catalog.analyze <name>`; registered only once all three succeed. */
   private def register(spark: SparkSession, dir: String, name: String): Unit = {
-    val sc = spark.sparkContext
-    val prevDesc = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"catalog.analyze $name")
-    try {
+    SessionConf.withJobDescription(spark.sparkContext, s"catalog.analyze $name") {
       val t = catalogName(dir, name)
       val loc = s"$dir/$name.parquet"
       registered.remove((dir, name))
@@ -132,7 +129,7 @@ object CatalogStats {
           spark.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR ALL COLUMNS")
       }
       registered.put((dir, name), ())
-    } finally sc.setLocalProperty("spark.job.description", prevDesc)
+    }
   }
 
   /** Drop every table this session registered and forget them — restores

@@ -7,15 +7,15 @@ import org.apache.spark.sql.functions._
   * the operators' exact-mode caps (documents and embeddings both cross
   * 65 536 rows) and drives the production scale paths end-to-end —
   * the paths the correctness gate can't reach, because at gate scale the
-  * Auto modes correctly pin the exact plans:
+  * operators correctly pick the exact plans:
   *
-  *  - `Dedup.jaccardPairs(Auto)` must LOG and take the MinHash-LSH switch;
+  *  - `Dedup.jaccardPairs` must LOG and take the MinHash-LSH switch;
   *  - banded candidate generation runs against a boilerplate-heavy corpus
   *    (every document has `reps` near-copies — J ≈ 0.98 siblings), the
   *    boilerplate shape the hot-bucket star cap exists for;
   *  - `Dedup.clusters` consumes the ~10⁶-edge pair graph (right at the
   *    driver union-find / distributed label-propagation boundary);
-  *  - `SimilaritySearch.nearDuplicates(Auto)` must take the hyperplane-
+  *  - `SimilaritySearch.nearDuplicates` must take the hyperplane-
   *    bucketed switch over the replicated embedding corpus.
   *
   * Each replica appends a distinct ` v<k>` suffix (documents) /

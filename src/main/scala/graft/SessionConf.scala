@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 
 object SessionConf {
@@ -19,5 +20,17 @@ object SessionConf {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** Runs `body` with `desc` as the description of every Spark job the
+    * calling thread starts, then puts the caller's description back (or
+    * none, when it had none), also when `body` throws. The one place the
+    * program sets a job description.
+    */
+  def withJobDescription[T](sc: SparkContext, desc: String)(body: => T): T = {
+    val prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body
+    finally sc.setLocalProperty("spark.job.description", prior)
   }
 }

@@ -186,42 +186,20 @@ object Dedup {
     * corpora auto-route through MinHash-LSH candidates. */
   val MaxExactDocs = 65536L
 
-  /** Physical strategy selector for [[jaccardPairs]]. `Auto` picks from
-    * runtime statistics and LOGS the choice; `Exact` and `Approx` pin it,
-    * so a caller who needs exact-or-fail semantics (or wants LSH recall
-    * characteristics regardless of corpus size) is never surprised by a
-    * data-size-dependent switch.
-    */
-  sealed trait JaccardMode
-  object JaccardMode {
-    /** Statistics-driven: exact under `maxExact` docs, else MinHash-LSH. */
-    case object Auto extends JaccardMode
-    /** Always the exact all-pairs plan — caller asserts corpus is small. */
-    case object Exact extends JaccardMode
-    /** Always MinHash-LSH candidates + exact refine (recall < 1). */
-    case object Approx extends JaccardMode
-  }
-
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** n-gram Jaccard over pre-exploded shingle rows (doc_id, s): all pairs
-    * (da < db) with jaccard >= threshold. Under `JaccardMode.Auto`, while
-    * the corpus holds fewer than `maxExact` documents this is exact (bitmap
-    * or inverted-index strategy, picked from the distinct-shingle
-    * statistic); beyond that the operator auto-switches to MinHashLSH
-    * banded candidates + exact refine, so the all-pairs plan can't be
-    * reached accidentally at 100 TB. Both switches are runtime statistics
-    * — operator-level AQE — computed in ONE aggregation pass over the
-    * cached shingle set (doc count + distinct-shingle count together), and
-    * the chosen strategy is logged; pass an explicit mode to pin it.
+    * (da < db) with jaccard >= threshold. While the corpus holds at most
+    * [[MaxExactDocs]] documents this is exact (bitmap or inverted-index
+    * strategy, picked from the distinct-shingle statistic); beyond that
+    * the operator auto-switches to MinHashLSH banded candidates + exact
+    * refine, so the all-pairs plan can't be reached accidentally at
+    * 100 TB. Both switches are runtime statistics — operator-level AQE —
+    * computed in ONE aggregation pass over the cached shingle set (doc
+    * count + distinct-shingle count together), and the chosen strategy
+    * is logged.
     */
-  def jaccardPairs(
-      shingles: DataFrame, threshold: Double, maxExact: Long = MaxExactDocs,
-      mode: JaccardMode = JaccardMode.Auto): DataFrame = {
-    if (mode == JaccardMode.Approx) {
-      log.info("jaccardPairs: mode=Approx (MinHash-LSH candidates + exact refine)")
-      return MinHashLSH.nearDuplicatePairs(shingles, threshold)
-    }
+  def jaccardPairs(shingles: DataFrame, threshold: Double): DataFrame = {
     // every strategy statistic and the bitmap build scan the shingle set;
     // cache the exploded form across those actions. Lazy .cache() (an eager
     // localCheckpoint costs a full extra materialization pass — measured 2x
@@ -236,16 +214,16 @@ object Dedup {
       countDistinct(col("doc_id")).as("docs"),
       countDistinct(col("s")).as("dict")).head()
     val (docs, dict) = (stats.getLong(0), stats.getLong(1))
-    if (mode == JaccardMode.Auto && docs > maxExact) {
-      log.info(s"jaccardPairs: auto-switch to MinHash-LSH ($docs docs > maxExact=$maxExact); " +
-        "results are approximate (recall < 1) — pass mode=Exact to pin the all-pairs plan")
+    if (docs > MaxExactDocs) {
+      log.info(s"jaccardPairs: auto-switch to MinHash-LSH ($docs docs > $MaxExactDocs); " +
+        "results are approximate (recall < 1)")
       return MinHashLSH.nearDuplicatePairs(shingles, threshold)
     }
     if (dict <= MaxBitmapDict) {
       log.info(s"jaccardPairs: exact bitmap strategy ($docs docs, $dict distinct shingles)")
       jaccardBitmap(bitmaps(sh, collectDict(sh)), None, threshold)
     } else if (sh.schema("doc_id").dataType == org.apache.spark.sql.types.LongType &&
-        docs <= BroadcastRefineMaxDocs &&
+        docs <= DriverKernel.MaxRows &&
         docs * ((dict + 63) / 64) <= MaxPackedWords) {
       // packed tier (see MaxPackedWords): dictionary too wide for the
       // column bitmap form, corpus small enough for the broadcast
@@ -332,9 +310,9 @@ object Dedup {
           // bounded-alphabet shingles (a char-5-gram vocabulary saturates
           // near 2k no matter the corpus, so most grams are hot and the
           // inverted index's shingle-match multiset explodes: measured
-          // 425 s vs 3 s at sf0.1). Under the broadcast-doc cap and with
+          // 425 s vs 3 s at sf0.1). Within the driver bounds and with
           // long ids it runs as the hand-written upper-triangle scan over
-          // the collected bitmap table (the nearDuplicatesExactKernel
+          // the collected bitmap table (the nearDuplicatesKernel
           // shape: ~1.3 MB broadcast at 5k docs / 32 words — plain
           // compiled Scala, so unlike the codegen'd join spelling its
           // hot loop can't be evicted from the codegen cache by a long
@@ -343,13 +321,10 @@ object Dedup {
           val d = collectDict(sh)
           val nWords = (d.size + 63) / 64
           val bm = bitmaps(sh, d).cache()
-          if (longIds) {
-            // take-fuse: one action decides the kernel branch AND is the
-            // collected table (see jaccardBitmap)
-            val rows = bm.take(BroadcastRefineMaxDocs.toInt + 1)
-            if (rows.length <= BroadcastRefineMaxDocs)
-              return containmentKernelRows(bm, rows, nWords, threshold)
-          }
+          // one bounded collect decides the kernel branch AND is the
+          // collected table (see jaccardBitmap)
+          val rows = if (longIds) DriverKernel.collectRows(bm, "containment.collect") else None
+          if (rows.isDefined) return containmentKernelRows(bm, rows.get, nWords, threshold)
           val a = bm.select(col("doc_id").as("da") +: col("n").as("na") +:
             (0 until nWords).map(w => col(s"w$w").as(s"a$w")): _*)
           val b = bm.select(col("doc_id").as("db") +: col("n").as("nb") +:
@@ -360,7 +335,7 @@ object Dedup {
           a.join(broadcast(b), col("da") < col("db"))
             .select(col("da"), col("db"), inter.cast("long").as("i"),
               col("na"), col("nb"))
-        } else if (longIds && docs <= BroadcastRefineMaxDocs &&
+        } else if (longIds && docs <= DriverKernel.MaxRows &&
             docs * ((dict + 63) / 64) <= MaxPackedWords) {
           // packed tier: same upper-triangle kernel, bitmaps built as
           // Array[Long] rows — covers e.g. an 18k-gram dictionary at
@@ -400,12 +375,11 @@ object Dedup {
       .distinct()
 
   /** Upper-triangle containment scan over the collected bitmap rows
-    * (the take-fuse path: the branch-deciding take IS the table — no
-    * second action): each task takes a STRIPED slice of row indices
-    * (i, i+parts, ...) so the triangle's per-row imbalance averages out,
-    * popcounts its rows against all later rows, and emits both
-    * directions that clear the threshold. Plain compiled Scala — no
-    * codegen, no join machinery.
+    * (the branch-deciding collect IS the table — no second action): each
+    * task takes a STRIPED slice of row indices (i, i+parts, ...) so the
+    * triangle's per-row imbalance averages out, popcounts its rows
+    * against all later rows, and emits both directions that clear the
+    * threshold. Plain compiled Scala — no codegen, no join machinery.
     */
   private def containmentKernelRows(
       bm: DataFrame, rows: Array[org.apache.spark.sql.Row],
@@ -532,7 +506,6 @@ object Dedup {
     */
   def jaccardForPairs(
       shingles: DataFrame, pairs: DataFrame, threshold: Double,
-      maxBroadcast: Long = BroadcastRefineMaxDocs,
       pairsDistinct: Boolean = true): DataFrame = {
     // The refine scans the shingle set more than once (dictionary
     // statistic, then the bitmap build or the inverted join). Callers
@@ -546,7 +519,7 @@ object Dedup {
     val sh = shingles.cache()
     shingleDict(sh) match {
       case Some(d) =>
-        jaccardBitmap(bitmaps(sh, d), Some(pairs), threshold, maxBroadcast, pairsDistinct)
+        jaccardBitmap(bitmaps(sh, d), Some(pairs), threshold, pairsDistinct)
       case None =>
         jaccardInvertedForPairs(
           sh, if (pairsDistinct) pairs else pairs.distinct(), threshold)
@@ -597,13 +570,6 @@ object Dedup {
       .agg(count(lit(1)).as("n"), wordCols: _*)
   }
 
-  /** Corpus bound under which the candidate refine collects + broadcasts
-    * the bitmap table instead of joining it: 65536 docs x 64 words = 33 MB
-    * worst case — the same metadata-scale broadcast contract as the
-    * shingle dictionary and the exact-cosine kernel.
-    */
-  val BroadcastRefineMaxDocs = 65536L
-
   /** Popcount Jaccard over bitmap rows; `pairs` restricts to candidates
     * (LSH refine), otherwise the full da < db pair space is scanned — the
     * compact one-row-per-doc side makes that a broadcast nested loop with
@@ -612,16 +578,18 @@ object Dedup {
     * The candidate refine adapts on the corpus size: joining the bitmap
     * table copies 2 x nWords longs into EVERY candidate row (6 GB of row
     * traffic for 6M candidates over a 2.6 MB bitmap table at sf0.1 —
-    * measured as the refine's dominant cost), so under
-    * [[BroadcastRefineMaxDocs]] the bitmaps are broadcast once and a
-    * fused per-pair popcount loop runs over the narrow (da, db) rows.
+    * measured as the refine's dominant cost), so while the bitmap table
+    * fits [[DriverKernel]]'s bounds (65,536 docs x 64 words = 35 MB
+    * worst case — the same metadata-scale broadcast contract as the
+    * shingle dictionary and the exact-cosine kernel) it is broadcast
+    * once and a fused per-pair popcount loop runs over the narrow
+    * (da, db) rows.
     * Past the bound the join form is the correct shape — at billions of
     * docs nothing fits in a broadcast, and the join shuffles candidates
     * against the bucketed bitmap table.
     */
   private def jaccardBitmap(
       bm0: DataFrame, pairs: Option[DataFrame], threshold: Double,
-      maxBroadcast: Long = BroadcastRefineMaxDocs,
       pairsDistinct: Boolean = true): DataFrame = {
     // both join branches consume the same one-row-per-doc aggregate; cache
     // it so the bitmap build isn't executed once per branch (exchange reuse
@@ -633,19 +601,12 @@ object Dedup {
     // keeps the type-generic join form
     def longIds = bm.schema("doc_id").dataType ==
       org.apache.spark.sql.types.LongType
-    // ONE action decides the broadcast-vs-join branch AND (when under the
-    // cap) IS the collected table — the shingleDict take-fuse applied to
-    // the bitmap side: the count-then-collect spelling paid an extra
-    // cached scan + scheduler round on every candidate refine. Over the
-    // cap the take stops at maxBroadcast+1 rows (bounded — the same
-    // driver envelope the under-cap broadcast already commits to) and the
-    // join form proceeds exactly as before.
+    // ONE bounded job decides the broadcast-vs-join branch AND (within
+    // the driver bounds) IS the collected table; past them the join form
+    // proceeds
     val kernelRows: Option[Array[org.apache.spark.sql.Row]] =
-      if (pairs.isDefined && longIds) {
-        val cap = math.min(maxBroadcast, Int.MaxValue.toLong - 2).toInt
-        val rows = bm.take(cap + 1)
-        if (rows.length <= cap) Some(rows) else None
-      } else None
+      if (pairs.isDefined && longIds) DriverKernel.collectRows(bm, "jaccard.collect")
+      else None
     pairs match {
       case Some(p) if kernelRows.isDefined =>
         val spark = bm.sparkSession

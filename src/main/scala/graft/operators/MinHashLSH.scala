@@ -154,15 +154,6 @@ object MinHashLSH {
     a
   }
 
-  /** One partition's share of [[collectWithSignatures]]: the copied
-    * rows, each row's `cast(id as long)` (null where the id is) and
-    * signature (null where the text gives no shingle), and the rows'
-    * bytes. A partition whose bytes passed the bound carries no rows.
-    */
-  private final case class RowsPart(
-      rows: Array[InternalRow], ids: Array[java.lang.Long], sigs: Array[Array[Long]],
-      bytes: Long)
-
   /** Every row of a driver-bounded frame with its MinHash signature:
     * `rows(i)` is a copy of the i-th row in `df`'s schema, `ids(i)` its
     * id cast to long (null for a null id), and `sigs` maps each id to
@@ -182,16 +173,15 @@ object MinHashLSH {
     * [[permuteMin]]. A row without a shingle comes back without a
     * signature, as it gets no shingle row there.
     *
-    * `maxRowBytes` bounds the copied rows' bytes on the driver: a task
-    * stops once its partition passes it, the driver drops what it holds
-    * once the partitions' sum does, and the call returns None. For
-    * micro-batch inputs, where the aggregation's exchange and planning
-    * are the whole cost; distributed inputs stay on [[signatures]].
+    * The job is a [[DriverKernel.collect]] described `description`,
+    * bounded by the copied rows' bytes and [[DriverKernel.MaxRows]] rows;
+    * past either it returns None. For micro-batch inputs, where the
+    * aggregation's exchange and planning are the whole cost; distributed
+    * inputs stay on [[signatures]].
     */
   private[graft] def collectWithSignatures(
-      df: DataFrame, idCol: String, textCol: String,
-      numPerms: Int = 128, n: Int = 3,
-      maxRowBytes: Long = Long.MaxValue): Option[CollectedRows] = {
+      df: DataFrame, idCol: String, textCol: String, description: String,
+      numPerms: Int = 128, n: Int = 3): Option[CollectedRows] = {
     import org.apache.spark.sql.catalyst.expressions.{UnsafeRow, XXH64}
     import org.apache.spark.sql.graft.CharShingles
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
@@ -203,57 +193,35 @@ object MinHashLSH {
     }
     val ab = permParams(numPerms)
     val width = df.schema.length
-    val rdd = df
-      .select(struct(col("*")), col(idCol).cast(LongType),
-        when(length(col(textCol)) >= n, lower(col(textCol))))
-      .queryExecution.toRdd
-    val perPartition = (it: Iterator[InternalRow]) => {
-      val rows = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-      val ids = scala.collection.mutable.ArrayBuffer.empty[java.lang.Long]
-      val sigs = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
-      var bytes = 0L
-      while (bytes <= maxRowBytes && it.hasNext) {
-        val r = it.next()
-        // a projection's output is an UnsafeRow, so is its nested struct
-        val row = r.getStruct(0, width).asInstanceOf[UnsafeRow].copy()
-        bytes += row.getSizeInBytes
-        val id: java.lang.Long = if (r.isNullAt(1)) null else r.getLong(1)
-        var sig: Array[Long] = null
-        if (!r.isNullAt(2)) {
-          val text = r.getUTF8String(2).getBytes
-          CharShingles.foreachShingle(text, n) { (start, end) =>
-            if (sig == null) sig = Array.fill(numPerms)(Long.MaxValue)
-            val h = XXH64.hashUnsafeBytes(
-              text, Platform.BYTE_ARRAY_OFFSET + start, end - start, HashSeed)
-            permuteMin(sig, java.lang.Math.floorMod(h, Prime), ab)
-          }
-          require(sig == null || id != null, s"collectWithSignatures: null $idCol")
+    DriverKernel.collect(
+      df.select(struct(col("*")), col(idCol).cast(LongType),
+          when(length(col(textCol)) >= n, lower(col(textCol))))
+        .queryExecution.toRdd,
+      description) { r =>
+      // a projection's output is an UnsafeRow, so is its nested struct
+      val row = r.getStruct(0, width).asInstanceOf[UnsafeRow].copy()
+      val id: java.lang.Long = if (r.isNullAt(1)) null else r.getLong(1)
+      var sig: Array[Long] = null
+      if (!r.isNullAt(2)) {
+        val text = r.getUTF8String(2).getBytes
+        CharShingles.foreachShingle(text, n) { (start, end) =>
+          if (sig == null) sig = Array.fill(numPerms)(Long.MaxValue)
+          val h = XXH64.hashUnsafeBytes(
+            text, Platform.BYTE_ARRAY_OFFSET + start, end - start, HashSeed)
+          permuteMin(sig, java.lang.Math.floorMod(h, Prime), ab)
         }
-        rows += row; ids += id; sigs += sig
+        require(sig == null || id != null, s"collectWithSignatures: null $idCol")
       }
-      if (bytes > maxRowBytes) RowsPart(Array.empty, Array.empty, Array.empty, bytes)
-      else RowsPart(rows.toArray, ids.toArray, sigs.toArray, bytes)
-    }
-    // results arrive one partition at a time on the scheduler's thread;
-    // once their sum passes the bound nothing more is kept
-    val parts = new Array[RowsPart](rdd.getNumPartitions)
-    var held = 0L
-    df.sparkSession.sparkContext.runJob(rdd, perPartition, (i: Int, p: RowsPart) => {
-      held += p.bytes
-      if (held > maxRowBytes) parts.indices.foreach(parts(_) = null) else parts(i) = p
-    })
-    if (held > maxRowBytes) None
-    else {
+      (row, id, sig)
+    }(_._1.getSizeInBytes.toLong).map { kept =>
       val merged = scala.collection.mutable.HashMap.empty[Long, Array[Long]]
-      parts.foreach(p => p.ids.indices.foreach { i =>
-        val sig = p.sigs(i)
-        if (sig != null) merged.get(p.ids(i)) match {
+      kept.foreach { case (_, id, sig) =>
+        if (sig != null) merged.get(id) match {
           case Some(acc) => mergeMin(acc, sig)
-          case None => merged.put(p.ids(i), sig)
+          case None => merged.put(id, sig)
         }
-      })
-      Some(CollectedRows(
-        parts.flatMap(_.rows), parts.flatMap(_.ids), merged.toMap))
+      }
+      CollectedRows(kept.map(_._1: InternalRow), kept.map(_._2), merged.toMap)
     }
   }
 

@@ -389,26 +389,6 @@ object SignatureIndex {
     * too — bounds the reader's dir/footer count between majors. */
   private[graft] val MaxRuns = 8
 
-  /** Byte budget for index work done on the driver, the size test
-    * Spark's broadcast rule applies. It bounds two things:
-    *  - a streaming dedup trigger's batch (`DedupStreams.dedupBatch`): a
-    *    batch whose plan estimates more (`stats.sizeInBytes`; for a
-    *    foreachBatch micro-batch its source files' bytes), or gives no
-    *    estimate, goes distributed without running a job. The estimate
-    *    can undercount (compressed parquet, default per-row widths), so
-    *    the collect job enforces the budget on the copied rows
-    *    themselves. At `DedupStreams.DefaultDriverBatchCap` rows the
-    *    kernel already holds 64 MiB of 64-bit signatures; this budget at
-    *    most doubles that, and a batch of ~1 KB documents reaches both
-    *    bounds together;
-    *  - a fold's source ([[compact]], [[merge]]): by its parquet bytes
-    *    before any read, then by its decoded rows as they are read (see
-    *    [[sortedRewrite]]). A corpus-scale epoch exceeds it and folds
-    *    distributed.
-    * Specs lower it to reach the fallbacks.
-    */
-  private[graft] var DriverBatchBytes: Long = 64L << 20
-
   /** Two-level size-tiered compaction (the LSM shape), shared by the
     * streaming ingest (every `compactEvery` triggers) and long-lived
     * batch-refresh indexes (call it every K appends — without folds an
@@ -427,8 +407,9 @@ object SignatureIndex {
     * All folds are pure concatenation (caps were enforced at write
     * time), written KEY-SORTED (sigs by doc_id, members by bkey) so
     * probe predicates prune row groups. Minor or major, a fold whose
-    * source fits [[DriverBatchBytes]] runs on the driver with no Spark
-    * job; a larger one rewrites through Spark ([[sortedRewrite]]).
+    * source fits the driver budget ([[DriverKernel.BudgetBytes]], the
+    * operators' one driver-kernel bound) runs on the driver with no
+    * Spark job; a larger one rewrites through Spark ([[sortedRewrite]]).
     * Deterministic for a given `upTo`, so a replay re-running one is
     * harmless; each fold's sigs dir is written before its members dir,
     * readers require `_SUCCESS` on folded dirs, and covered batch dirs
@@ -495,9 +476,10 @@ object SignatureIndex {
     *
     * The path is chosen by bytes, as the trigger kernel's is (the size
     * test of Spark's broadcast rule). A source whose parquet bytes fit
-    * [[DriverBatchBytes]] is read on the driver with Spark's own parquet
-    * reader and no Spark job, and the budget is enforced again on the
-    * decoded rows as they are read. Within it, the rows are sorted in
+    * [[DriverKernel.BudgetBytes]] is read on the driver with Spark's own
+    * parquet reader and no Spark job, and the budget is enforced again
+    * on the decoded rows as they are read (a corpus-scale epoch exceeds
+    * it and folds distributed). Within it, the rows are sorted in
     * memory (members by `(bkey, band, doc_id)`, so the output is
     * deterministic) and each table is written as one [[writeComponent]]
     * file. Past the budget, what was read is dropped and each table is
@@ -523,14 +505,14 @@ object SignatureIndex {
     }
     val (sigFiles, memberFiles) = (dataFiles(sigPaths), dataFiles(memberPaths))
     val fits = sigFiles.nonEmpty && memberFiles.nonEmpty &&
-      (sigFiles ++ memberFiles).map(_.getLen).sum <= DriverBatchBytes
+      (sigFiles ++ memberFiles).map(_.getLen).sum <= DriverKernel.BudgetBytes
     val onDriver = if (!fits) None else {
       val (sigSchema, memberSchema) =
         (DriverParquet.schemaOf(spark, sigFiles), DriverParquet.schemaOf(spark, memberFiles))
       for {
-        sigs <- DriverParquet.read(spark, sigFiles, sigSchema, DriverBatchBytes)
+        sigs <- DriverParquet.read(spark, sigFiles, sigSchema, DriverKernel.BudgetBytes)
         members <- DriverParquet.read(spark, memberFiles, memberSchema,
-          DriverBatchBytes - sigs.iterator.map(_.getSizeInBytes.toLong).sum)
+          DriverKernel.BudgetBytes - sigs.iterator.map(_.getSizeInBytes.toLong).sum)
       } yield (sigSchema, sigs, memberSchema, members)
     }
     onDriver match {
@@ -550,17 +532,14 @@ object SignatureIndex {
         writeComponent(spark, s"$indexDir/sigs/$component", sigSchema, sigs.iterator)
         writeComponent(spark, s"$indexDir/members/$component", memberSchema, members.iterator)
       case None =>
-        val sc = spark.sparkContext
-        val prevDesc = sc.getLocalProperty("spark.job.description")
-        sc.setJobDescription(s"index.fold $component")
-        try {
+        graft.SessionConf.withJobDescription(spark.sparkContext, s"index.fold $component") {
           spark.read.parquet(sigPaths: _*)
             .repartitionByRange(8, col("doc_id")).sortWithinPartitions(col("doc_id"))
             .write.mode("overwrite").parquet(s"$indexDir/sigs/$component")
           spark.read.parquet(memberPaths: _*)
             .repartitionByRange(8, col("bkey")).sortWithinPartitions(col("bkey"))
             .write.mode("overwrite").parquet(s"$indexDir/members/$component")
-        } finally sc.setLocalProperty("spark.job.description", prevDesc)
+        }
     }
   }
 
@@ -572,7 +551,7 @@ object SignatureIndex {
     * (band, bkey, doc_id) / (doc_id, sig8) rows (orders of magnitude
     * narrower than text), re-sorted so probe pushdown prunes the merged
     * epoch exactly like a whole-built one: on the driver with no Spark
-    * job when the shards fit [[DriverBatchBytes]], otherwise one
+    * job when the shards fit [[DriverKernel.BudgetBytes]], otherwise one
     * range-partitioned shuffle per table ([[sortedRewrite]]). No text is
     * read, no signature recomputed.
     *

@@ -20,18 +20,6 @@ object SimilaritySearch {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Physical strategy selector for [[nearDuplicates]]: `Auto` picks from
-    * the corpus row count and LOGS the choice; `Exact`/`Approx` pin it so
-    * the caller is never silently moved between exact and recall<1 results
-    * by data size alone.
-    */
-  sealed trait Mode
-  object Mode {
-    case object Auto extends Mode
-    case object Exact extends Mode
-    case object Approx extends Mode
-  }
-
   /** Exact cosine top-k. probes/candidates: (idCol, vecCol). Output:
     * (qid, rn, cid, cos) with rn in 1..k, cos rounded to 4dp, ties broken
     * by cid.
@@ -142,109 +130,91 @@ object SimilaritySearch {
   }
 
   /** All pairs (a < b) with cosine >= threshold — embedding near-dup.
-    * The exact all-pairs form runs only while the corpus fits under
-    * `maxExact` rows; past that the operator auto-switches to the
-    * hyperplane-bucketed candidate path (same result shape, recall
-    * tuned ~1 at near-dup thresholds) so the O(n^2) plan can't be reached
-    * accidentally at scale — the same operator-level adaptive switch
-    * Dedup applies between its bitmap and inverted strategies.
+    * Exact while the corpus holds at most [[DriverKernel.MaxRows]]
+    * rows; past that the operator switches to the hyperplane-bucketed
+    * candidate path (same result shape, recall tuned ~1 at near-dup
+    * thresholds), so the O(n^2) plan can't be reached accidentally at
+    * scale — the same operator-level switch Dedup applies between its
+    * exact and MinHash-LSH strategies. The exact form runs as the
+    * driver kernel below when the vectors also fit the driver budget
+    * (one bounded collect decides and is the kernel's input), else as
+    * the all-pairs join.
     */
-  /** Row bound for the exact-cosine broadcast kernel: 65536 x 64 dims =
-    * 33 MB of driver/broadcast footprint worst case.
-    */
-  val BroadcastKernelMaxRows = 65536L
-
   def nearDuplicates(
-      df: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      maxExact: Long = 65536, mode: Mode = Mode.Auto): DataFrame = mode match {
-    case Mode.Approx =>
-      log.info("nearDuplicates: mode=Approx (hyperplane-bucketed, recall < 1)")
-      nearDuplicatesBucketed(df, idCol, vecCol, threshold)
-    case Mode.Exact =>
-      nearDuplicatesExact(df, idCol, vecCol, threshold)
-    case Mode.Auto =>
-      val n = df.count()
-      if (n > maxExact) {
-        log.info(s"nearDuplicates: auto-switch to hyperplane buckets ($n rows > maxExact=" +
-          s"$maxExact); results are approximate (recall < 1) — pass mode=Exact to pin all-pairs")
-        nearDuplicatesBucketed(df, idCol, vecCol, threshold)
-      } else nearDuplicatesExact(df, idCol, vecCol, threshold)
-  }
-
-  /** The exact O(n^2) form. Under [[BroadcastKernelMaxRows]] it runs as
-    * the broadcast kernel below; above it (e.g. `Mode.Exact` pinned on a
-    * large corpus) it stays the fully distributed join — slower, but it
-    * cannot OOM the driver the way an unbounded collect would.
-    */
-  private[operators] def nearDuplicatesExact(
       df: DataFrame, idCol: String, vecCol: String, threshold: Double): DataFrame =
-    if (df.count() <= BroadcastKernelMaxRows)
-      nearDuplicatesExactKernel(df, idCol, vecCol, threshold)
-    else {
-      log.info(s"nearDuplicatesExact: corpus exceeds BroadcastKernelMaxRows=" +
-        s"$BroadcastKernelMaxRows — running the distributed join form")
-      nearDuplicatesExactJoin(df, idCol, vecCol, threshold)
+    nearDuplicatesKernel(df, idCol, vecCol, threshold).getOrElse {
+      val n = df.count()
+      if (n <= DriverKernel.MaxRows) nearDuplicatesExactJoin(df, idCol, vecCol, threshold)
+      else {
+        log.info(s"nearDuplicates: auto-switch to hyperplane buckets ($n rows > " +
+          s"${DriverKernel.MaxRows}); results are approximate (recall < 1)")
+        nearDuplicatesBucketed(df, idCol, vecCol, threshold)
+      }
     }
 
-  /** Exact all-pairs cosine as a broadcast kernel: the whole vector set
-    * is collected once (BOUNDED by [[BroadcastKernelMaxRows]] — 33 MB
-    * worst case, the same metadata-scale broadcast contract as the
-    * shingle dictionary), broadcast, and each task scans its slice of
-    * row indices against the upper triangle. The all-pairs JOIN spelling
-    * materializes BOTH embedding arrays per pair — n^2 * 2d doubles,
-    * 12.8 GB of row traffic at sf0.1 against a 2.5 MB vector set — and
+  /** Exact all-pairs cosine as a broadcast kernel, or None when the
+    * vectors do not fit [[DriverKernel]]'s bounds: the whole vector set
+    * is collected once (65,536 x 64 dims = 33 MB worst case, the same
+    * metadata-scale broadcast contract as the shingle dictionary),
+    * broadcast, and each task scans its slice of row indices against
+    * the upper triangle. The all-pairs JOIN spelling materializes BOTH
+    * embedding arrays per pair — n^2 * 2d doubles, 12.8 GB of row traffic at sf0.1 against a 2.5 MB vector set — and
     * measured 2x slower than this kernel. Arithmetic matches the column
     * form exactly: sequential double dot, norms via sqrt(dot(v,v)), and
     * HALF_UP 4dp rounding through BigDecimal.valueOf like Spark's
     * round() (paid only near the threshold; anything below
     * threshold - 1e-4 cannot round up to pass).
     */
-  private def nearDuplicatesExactKernel(
-      df: DataFrame, idCol: String, vecCol: String, threshold: Double): DataFrame = {
+  private def nearDuplicatesKernel(
+      df: DataFrame, idCol: String, vecCol: String, threshold: Double): Option[DataFrame] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val all = df.select(col(idCol).cast("long").as("id"), toDouble(col(vecCol)).as("v"))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
-    val ids = all.map(_._1)
-    val vecs = all.map(_._2)
-    val norms = vecs.map { v =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      math.sqrt(s)
-    }
-    val bc = spark.sparkContext.broadcast((ids, vecs, norms))
-    val n = ids.length
-    // round-robin the a-side indices so the shrinking upper-triangle rows
-    // spread evenly across tasks instead of loading the first partitions
-    spark.range(0, n.toLong)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .mapPartitions { it =>
-        val (ids, vecs, norms) = bc.value
-        it.flatMap { aL =>
-          val a = aL.toInt
-          val va = vecs(a); val na = norms(a)
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-          var b = a + 1
-          while (b < ids.length) {
-            val vb = vecs(b)
-            var s = 0.0; var i = 0
-            while (i < va.length) { s += va(i) * vb(i); i += 1 }
-            val raw = s / (na * norms(b))
-            if (raw >= threshold - 1e-4) {
-              val c = java.math.BigDecimal.valueOf(raw)
-                .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-              if (c >= threshold) out += ((ids(a), ids(b), c))
-            }
-            b += 1
-          }
-          out
-        }
+    DriverKernel.collectRows(
+      df.select(col(idCol).cast("long").as("id"), toDouble(col(vecCol)).as("v")),
+      "similarity.collect").map { rows =>
+      val all = rows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+      val ids = all.map(_._1)
+      val vecs = all.map(_._2)
+      val norms = vecs.map { v =>
+        var s = 0.0; var i = 0
+        while (i < v.length) { s += v(i) * v(i); i += 1 }
+        math.sqrt(s)
       }
-      .toDF("ka", "kb", "cos")
+      val bc = spark.sparkContext.broadcast((ids, vecs, norms))
+      val n = ids.length
+      // round-robin the a-side indices so the shrinking upper-triangle rows
+      // spread evenly across tasks instead of loading the first partitions
+      spark.range(0, n.toLong)
+        .repartition(spark.sparkContext.defaultParallelism)
+        .as[Long]
+        .mapPartitions { it =>
+          val (ids, vecs, norms) = bc.value
+          it.flatMap { aL =>
+            val a = aL.toInt
+            val va = vecs(a); val na = norms(a)
+            val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+            var b = a + 1
+            while (b < ids.length) {
+              val vb = vecs(b)
+              var s = 0.0; var i = 0
+              while (i < va.length) { s += va(i) * vb(i); i += 1 }
+              val raw = s / (na * norms(b))
+              if (raw >= threshold - 1e-4) {
+                val c = java.math.BigDecimal.valueOf(raw)
+                  .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+                if (c >= threshold) out += ((ids(a), ids(b), c))
+              }
+              b += 1
+            }
+            out
+          }
+        }
+        .toDF("ka", "kb", "cos")
+    }
   }
 
-  /** The all-pairs JOIN spelling — kept as the cross-checked reference
+  /** The all-pairs JOIN spelling: the exact form for vectors past the
+    * driver budget (wide vectors), and the cross-checked reference
     * formulation for the broadcast kernel above.
     */
   private[operators] def nearDuplicatesExactJoin(

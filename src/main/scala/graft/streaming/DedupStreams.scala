@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Dedup, InMemoryMembershipStore, MembershipStore, MinHashLSH, SignatureIndex}
+import graft.operators.{Dedup, DriverKernel, InMemoryMembershipStore, MembershipStore, MinHashLSH, SignatureIndex}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
@@ -34,12 +34,15 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   *     near-dups themselves, not the corpus); everything else is
   *     retained by one filter against the small dropped set.
   *
-  * A batch small enough for the driver ([[SignatureIndex.DriverBatchBytes]]
-  * by its plan's size estimate and by its actual row bytes, at most
-  * [[DefaultDriverBatchCap]] rows) runs the pairwise steps (2–4) as a
-  * DRIVER-RESIDENT KERNEL over its collected rows, banded keys and
-  * b-bit signatures — metadata-scale state, the broadcast-parameters
-  * idiom. Its index probe is a set of point lookups in an
+  * A batch small enough for the driver (the operators' one driver
+  * budget, [[DriverKernel.BudgetBytes]], by its plan's size estimate and
+  * by its actual row bytes, at most [[DriverKernel.MaxRows]] rows) runs
+  * the pairwise steps (2–4) as a DRIVER-RESIDENT KERNEL over its
+  * collected rows, banded keys and b-bit signatures — metadata-scale
+  * state, the broadcast-parameters idiom: within-batch pair generation,
+  * similarity estimates, greedy resolution and bucket admission run in
+  * plain Scala, which cuts ~8 batch-scale shuffle stages (and their
+  * fixed latency) out of every trigger. Its index probe is a set of point lookups in an
   * [[InMemoryMembershipStore]], the write-through view of the index
   * (see [[ingest]]), so a steady-state trigger costs ONE Spark job, a
   * shuffle-free pass that brings every batch row to the driver with
@@ -80,7 +83,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * dirs and amortized fold work stays O(batch), with each row
   * epoch-rewritten O(log) times over the stream's life. Which of the two
   * a fold is does not pick its path; its bytes do: a fold whose
-  * components fit [[SignatureIndex.DriverBatchBytes]] (every fold of a
+  * components fit [[DriverKernel.BudgetBytes]] (every fold of a
   * refresh-scale index, minor or major) is read, sorted and rewritten on
   * the driver with no Spark job, and a larger one rewrites through Spark.
   * Folds are pure concatenation — the cap was enforced at write time —
@@ -145,21 +148,6 @@ object DedupStreams {
     * O(compactEvery) dirs; <= 0 disables compaction.
     */
   val DefaultCompactEvery = 16
-
-  /** Batch-row bound for the driver-resident batch kernel — the
-    * broadcast-parameters shape ([[graft.operators.PageRank]] fast path,
-    * same idiom): a micro-batch's banded rows and 128-byte signatures
-    * are metadata-scale (~10 MB at this cap), so within-batch pair
-    * generation, similarity estimates, greedy resolution and bucket
-    * admission run in plain Scala on the driver, leaving Spark the one
-    * collect job. Checked on the collected rows, after
-    * [[SignatureIndex.DriverBatchBytes]] has bounded their bytes. Cuts ~8
-    * batch-scale shuffle stages (and their fixed latency) out of every
-    * trigger. Above the cap the identical semantics run as the
-    * distributed spelling (asserted equivalent in spec). Aligned with
-    * [[Dedup.MaxExactDocs]].
-    */
-  val DefaultDriverBatchCap: Long = 65536L
 
   /** Bound on the refined near-dup pair set [[resolveDropped]]
     * materializes on the driver per trigger. Normal batches sit orders
@@ -259,7 +247,6 @@ object DedupStreams {
       batchId: Long = 0L,
       bucketCap: Int = MinHashLSH.DefaultBucketCap,
       compactEvery: Int = DefaultCompactEvery,
-      driverBatchCap: Long = DefaultDriverBatchCap,
       store: Option[InMemoryMembershipStore] = None): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
@@ -289,26 +276,17 @@ object DedupStreams {
     }
     // the kernel's input: every batch row with its signature, from the
     // trigger's one job — run only when the plan's size estimate fits
-    // the driver (a plan without one reports spark.sql.defaultSizeInBytes,
-    // Long.MaxValue unless a session lowers it; the job's own byte bound
-    // holds either way) and kept only within the row and byte bounds
+    // the driver budget (a plan without one reports
+    // spark.sql.defaultSizeInBytes, Long.MaxValue unless a session
+    // lowers it), and None past the budget or DriverKernel.MaxRows rows
     val collected: Option[MinHashLSH.CollectedRows] =
-      if (batch.queryExecution.optimizedPlan.stats.sizeInBytes >
-          SignatureIndex.DriverBatchBytes) None
-      else {
-        val sc = spark.sparkContext
-        val prevDesc = sc.getLocalProperty("spark.job.description")
-        sc.setJobDescription(s"dedup.collect batch=$batchId")
-        try phase("collect")(MinHashLSH.collectWithSignatures(
-          batch, "doc_id", "text", Cfg.numPerms,
-          maxRowBytes = SignatureIndex.DriverBatchBytes))
-        finally sc.setLocalProperty("spark.job.description", prevDesc)
-      }
-    val kernelRows = collected.filter(_.rows.length <= driverBatchCap)
+      if (batch.queryExecution.optimizedPlan.stats.sizeInBytes > DriverKernel.BudgetBytes) None
+      else phase("collect")(MinHashLSH.collectWithSignatures(
+        batch, "doc_id", "text", s"dedup.collect batch=$batchId", Cfg.numPerms))
     // the distributed spelling reads its batch several times: cached for
     // the trigger, and counted for the emptiness guard the collected
     // rows give the kernel
-    val cachedBatch = if (kernelRows.isDefined) None else Some(batch.cache())
+    val cachedBatch = if (collected.isDefined) None else Some(batch.cache())
     if (collected.fold(cachedBatch.get.count() == 0L)(_.rows.isEmpty)) {
       cachedBatch.foreach(_.unpersist()); return
     }
@@ -371,10 +349,10 @@ object DedupStreams {
           log.info(s"dedupBatch($batchId): dropped ${dropped.size} near-duplicate doc(s)")
         dropped.toSet
       }
-      kernelRows match {
+      collected match {
       case Some(kernel) =>
         // ---------------- driver-resident batch kernel ----------------
-        // (see DefaultDriverBatchCap) — the batch's rows and signatures
+        // (see DriverKernel) — the batch's rows and signatures
         // came to the driver from the collect job (per-row MinHash where
         // the rows sit, duplicate ids min-merged on the driver: no
         // shuffle, no cached frames), band keys are folded locally, and

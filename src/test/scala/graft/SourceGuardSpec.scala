@@ -20,7 +20,10 @@ import scala.jdk.CollectionConverters._
   *  - one batch admission probe: no query names the streaming trigger's
   *    `InMemoryMembershipStore`, so `SignatureIndex.probeNearDuplicateIds`
   *    (the members-frame join) stays the only candidate probe a gate
-  *    runs.
+  *    runs;
+  *  - one job-description scope: only `SessionConf.withJobDescription`
+  *    sets a Spark job description, so every described phase restores
+  *    its caller's description, also when it throws.
   */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
   private def scalaSources(dir: String): Seq[(Path, String)] = {
@@ -70,5 +73,12 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("no query names the streaming trigger's in-memory store") {
     val sites = hits("src/main/scala/graft/queries", "InMemoryMembershipStore")
     assert(sites.isEmpty, sites.mkString("store sites in queries:\n", "\n", ""))
+  }
+
+  test("src/main sets a job description only in SessionConf.withJobDescription") {
+    val sites = Seq("\"spark.job.description\"", "setJobDescription(")
+      .flatMap(hits("src/main", _))
+    assert(sites.nonEmpty && sites.forall(_.contains("graft/SessionConf.scala")),
+      sites.mkString("job description sites:\n", "\n", ""))
   }
 }

@@ -41,6 +41,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     descs.toArray(Array.empty[String]).toSeq
   }
 
+  /** Runs `body` with the operators' driver budget
+    * (`DriverKernel.BudgetBytes`) set to `bytes`, then restores it, also
+    * when `body` throws: the one way a spec reaches a driver kernel's
+    * distributed fallback. */
+  def withDriverBudget[T](bytes: Long)(body: => T): T = {
+    val prior = graft.operators.DriverKernel.BudgetBytes
+    graft.operators.DriverKernel.BudgetBytes = bytes
+    try body
+    finally graft.operators.DriverKernel.BudgetBytes = prior
+  }
+
   /** Copy the tree under `from` into `to`, hidden files included. */
   def copyDir(from: String, to: String): Unit = {
     import java.nio.file.{Files, Paths}

@@ -64,24 +64,22 @@ class MembershipStoreSpec extends SparkSpec {
 
   private def drain(
       store: Option[InMemoryMembershipStore], slices: Seq[Seq[Long]],
-      compactEvery: Int = 0,
-      driverBatchCap: Long = DedupStreams.DefaultDriverBatchCap): (Set[Long], String) = {
+      compactEvery: Int = 0): (Set[Long], String) = {
     val root = Files.createTempDirectory("graft_store_drain").toString
     val out = s"$root/out"; val idx = s"$root/index"
     slices.zipWithIndex.foreach { case (ids, i) =>
       DedupStreams.dedupBatch(
         streamCorpus.filter(col("doc_id").isin(ids: _*)), out, idx,
-        threshold = 0.7, batchId = i, compactEvery = compactEvery,
-        driverBatchCap = driverBatchCap, store = store)
+        threshold = 0.7, batchId = i, compactEvery = compactEvery, store = store)
     }
     (spark.read.parquet(out).select(col("doc_id")).as[Long].collect().toSet, idx)
   }
 
   test("store-backed stream drain retains exactly the distributed spelling's survivors, and writes the identical index") {
     val slices = Seq(Seq(1L, 2L), Seq(3L, 4L), Seq(5L, 6L, 7L))
-    // cap 0: every batch takes the distributed spelling, which probes
+    // budget 0: every batch takes the distributed spelling, which probes
     // the parquet index with a broadcast join and never touches a store
-    val (dist, idxA) = drain(None, slices, driverBatchCap = 0L)
+    val (dist, idxA) = withDriverBudget(0L)(drain(None, slices))
     val (kv, idxB) = drain(Some(new InMemoryMembershipStore), slices)
     assert(dist == Set(1L, 2L, 4L, 7L))
     assert(kv == dist)

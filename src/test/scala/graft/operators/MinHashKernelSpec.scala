@@ -18,6 +18,7 @@ class MinHashKernelSpec extends SparkSpec {
   private val Bands = 32
   private val RowsPerBand = 4
   private val NumPerms = Bands * RowsPerBand
+  private val Desc = "minhash.collect"
 
   private type Result = (Map[Long, (Seq[Long], Seq[Long])], Set[(Long, Int, Long)])
 
@@ -37,7 +38,7 @@ class MinHashKernelSpec extends SparkSpec {
 
   /** The same, the way the driver kernel derives them. */
   private def kernel(df: DataFrame): Result = {
-    val sigs = MinHashLSH.collectWithSignatures(df, "doc_id", "text", NumPerms).get.sigs
+    val sigs = MinHashLSH.collectWithSignatures(df, "doc_id", "text", Desc, NumPerms).get.sigs
     val bands = sigs.iterator.flatMap { case (id, s) =>
       MinHashLSH.bandKeysOf(s, Bands, RowsPerBand).zipWithIndex
         .map { case (bkey, band) => (id, band, bkey) }
@@ -62,7 +63,7 @@ class MinHashKernelSpec extends SparkSpec {
   private def assertRowsReturned(df: DataFrame): Unit = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
-    val c = MinHashLSH.collectWithSignatures(df, "doc_id", "text", NumPerms).get
+    val c = MinHashLSH.collectWithSignatures(df, "doc_id", "text", Desc, NumPerms).get
     val got = c.rows.toSeq.map(r =>
       CatalystTypeConverters.convertToScala(r, df.schema).asInstanceOf[Row])
       .zip(c.ids.toSeq.map(Option(_).map(_.longValue)))
@@ -108,7 +109,7 @@ class MinHashKernelSpec extends SparkSpec {
       .toDF("doc_id", "text")
     assertRowsReturned(nullIds)
     assertRowsReturned(nullIds.repartition(3))
-    val c = MinHashLSH.collectWithSignatures(nullIds, "doc_id", "text", NumPerms).get
+    val c = MinHashLSH.collectWithSignatures(nullIds, "doc_id", "text", Desc, NumPerms).get
     assert(c.rows.length == 4 && c.ids.count(_ == null) == 2)
     assert(c.sigs.keySet == Set(13L), s"only doc 13 has a shingle: ${c.sigs.keySet}")
   }
@@ -119,19 +120,19 @@ class MinHashKernelSpec extends SparkSpec {
     assertIdentical(ints)
     val strs = Seq("a" -> "string keyed document").toDF("doc_id", "text")
     intercept[IllegalArgumentException](
-      MinHashLSH.collectWithSignatures(strs, "doc_id", "text", NumPerms))
+      MinHashLSH.collectWithSignatures(strs, "doc_id", "text", Desc, NumPerms))
   }
 
   test("the collect gives up past its row-byte bound, in one partition or across several") {
     val docs = (1L to 8L).map(i => i -> s"document number $i with some text in it").toDF("doc_id", "text")
-    val c = MinHashLSH.collectWithSignatures(docs, "doc_id", "text", NumPerms).get
+    val c = MinHashLSH.collectWithSignatures(docs, "doc_id", "text", Desc, NumPerms).get
     val bytes = c.rows.map(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.UnsafeRow]
       .getSizeInBytes.toLong).sum
     for (df <- Seq(docs.coalesce(1), docs.repartition(4))) {
-      assert(MinHashLSH.collectWithSignatures(
-        df, "doc_id", "text", NumPerms, maxRowBytes = bytes).isDefined, "at the bound")
-      assert(MinHashLSH.collectWithSignatures(
-        df, "doc_id", "text", NumPerms, maxRowBytes = bytes - 1).isEmpty, "past the bound")
+      assert(withDriverBudget(bytes)(MinHashLSH.collectWithSignatures(
+        df, "doc_id", "text", Desc, NumPerms)).isDefined, "at the bound")
+      assert(withDriverBudget(bytes - 1)(MinHashLSH.collectWithSignatures(
+        df, "doc_id", "text", Desc, NumPerms)).isEmpty, "past the bound")
     }
   }
 }

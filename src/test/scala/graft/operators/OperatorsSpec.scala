@@ -195,16 +195,17 @@ class OperatorsSpec extends SparkSpec {
     val ckpt = PageRank.ranks(edges, iterations = 3, checkpointDir = Some(dir))
       .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
     assert(ckpt == r)
-    // the distributed path (forced via a zero broadcast cap) must agree
+    // the distributed path (forced via a zero driver budget) must agree
     // with the driver-resident fast path to double precision
-    val dist = PageRank.ranks(edges, iterations = 3, broadcastNodeCap = 0L)
-      .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
+    val dist = withDriverBudget(0L)(PageRank.ranks(edges, iterations = 3)
+      .collect()).map(x => x.getLong(0) -> x.getDouble(1)).toMap
     assert(dist.keySet == r.keySet)
     dist.foreach { case (v, d) => assert(math.abs(d - r(v)) < 1e-12, s"node $v: $d vs ${r(v)}") }
-    // the middle tier (sub-node-cap, over the driver EDGE cap: rank
-    // vector broadcast per round, edges distributed) must also agree
-    val mid = PageRank.ranks(edges, iterations = 3, driverEdgeCap = 0L)
-      .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
+    // the middle tier (the 3 nodes' 16-byte rows fit the budget, the 4
+    // packed edges' 16 bytes each do not: rank vector broadcast per
+    // round, edges distributed) must also agree
+    val mid = withDriverBudget(3 * 16L)(PageRank.ranks(edges, iterations = 3)
+      .collect()).map(x => x.getLong(0) -> x.getDouble(1)).toMap
     assert(mid.keySet == r.keySet)
     mid.foreach { case (v, d) => assert(math.abs(d - r(v)) < 1e-12, s"node $v: $d vs ${r(v)}") }
   }
@@ -247,8 +248,8 @@ class OperatorsSpec extends SparkSpec {
     val cand = MinHashLSH.candidatePairs(MinHashLSH.signatures(sh))
     val viaBroadcast = Dedup.jaccardForPairs(sh, cand, 0.7)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val viaJoin = Dedup.jaccardForPairs(sh, cand, 0.7, maxBroadcast = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val viaJoin = withDriverBudget(0L)(Dedup.jaccardForPairs(sh, cand, 0.7)
+      .collect()).map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(viaBroadcast == viaJoin && viaBroadcast.nonEmpty)
   }
 
@@ -329,7 +330,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("broadcast cosine near-dup kernel equals the all-pairs join formulation") {
     val e = tables.embeddings
-    val k = SimilaritySearch.nearDuplicatesExact(e, "vec_id", "embedding", 0.45)
+    val k = SimilaritySearch.nearDuplicates(e, "vec_id", "embedding", 0.45)
     val j = SimilaritySearch.nearDuplicatesExactJoin(e, "vec_id", "embedding", 0.45)
     assert(k.exceptAll(j).count() == 0 && j.exceptAll(k).count() == 0)
     assert(k.count() > 0, "threshold should admit some pairs on the fixture embeddings")
@@ -339,7 +340,7 @@ class OperatorsSpec extends SparkSpec {
     val e = tables.embeddings
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select(col("ka"), col("kb")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(SimilaritySearch.nearDuplicatesExact(e, "vec_id", "embedding", 0.45))
+    val exact = pairs(SimilaritySearch.nearDuplicates(e, "vec_id", "embedding", 0.45))
     val bucketed = pairs(SimilaritySearch.nearDuplicatesBucketed(e, "vec_id", "embedding", 0.45))
     assert(exact.nonEmpty)
     assert(bucketed.subsetOf(exact), "refine must keep bucketed pairs exact")

@@ -398,10 +398,7 @@ class SignatureIndexSpec extends SparkSpec {
     val sc = spark.sparkContext
     val prevDesc = sc.getLocalProperty("spark.job.description")
     assert(jobsDuring(fold(driverRoot)).isEmpty, s"$target: an under-budget fold ran a Spark job")
-    val prevBytes = SignatureIndex.DriverBatchBytes
-    SignatureIndex.DriverBatchBytes = fallbackBytes
-    val fallbackJobs = try jobsDuring(fold(fallbackRoot))
-      finally SignatureIndex.DriverBatchBytes = prevBytes
+    val fallbackJobs = withDriverBudget(fallbackBytes)(jobsDuring(fold(fallbackRoot)))
     assert(fallbackJobs.nonEmpty, s"$target: an over-budget fold ran no Spark job")
     assert(fallbackJobs.forall(_ == s"index.fold $target"),
       s"$target: fallback job descriptions $fallbackJobs")

@@ -244,7 +244,7 @@ class DedupStreamsSpec extends SparkSpec {
         Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
           .filter(_.startsWith("dedup.collect")).foreach(d => collectJobs.synchronized(collectJobs += d))
     }
-    def drain(dbCap: Long) = {
+    def drain() = {
       val root = Files.createTempDirectory("dedup_stream_paths").toString
       // only the driver kernel puts a trigger's admissions into the
       // store (its own component is never seeded within the trigger):
@@ -252,7 +252,7 @@ class DedupStreamsSpec extends SparkSpec {
       val store = new graft.operators.InMemoryMembershipStore
       val kernelRan = batches.zipWithIndex.map { case (b, i) =>
         DedupStreams.dedupBatch(b, s"$root/out", s"$root/index",
-          threshold = 0.7, batchId = i.toLong, driverBatchCap = dbCap, store = Some(store))
+          threshold = 0.7, batchId = i.toLong, store = Some(store))
         store.knownPaths.contains(s"batch=$i")
       }
       // batch by batch: the int-id batch's components carry int ids
@@ -289,21 +289,16 @@ class DedupStreamsSpec extends SparkSpec {
       (survivors, members, sigs,
         (membersDf.schema, written("members")), (sigsDf.schema, written("sigs")), kernelRan)
     }
-    val prevBytes = graft.operators.SignatureIndex.DriverBatchBytes
-    graft.operators.SignatureIndex.DriverBatchBytes = 600L
     spark.sparkContext.addSparkListener(listener)
     val (driver, dist) = try {
-      val d = drain(DedupStreams.DefaultDriverBatchCap)
+      val d = withDriverBudget(600L)(drain())
       org.apache.spark.sql.graft.ListenerBusHook.drain(spark.sparkContext)
       // every batch but the over-estimate one ran the collect job
       assert(collectJobs.toSeq == (0 to 5).map(i => s"dedup.collect batch=$i"),
         s"collect jobs under the driver cap: $collectJobs")
-      // cap 0: every batch takes the distributed path
-      (d, drain(0L))
-    } finally {
-      graft.operators.SignatureIndex.DriverBatchBytes = prevBytes
-      spark.sparkContext.removeSparkListener(listener)
-    }
+      // budget 0: every batch takes the distributed path
+      (d, withDriverBudget(0L)(drain()))
+    } finally spark.sparkContext.removeSparkListener(listener)
     val (sDriver, mDriver, gDriver, mSchemaDriver, gSchemaDriver, kDriver) = driver
     val (sDist, mDist, gDist, mSchemaDist, gSchemaDist, kDist) = dist
     assert(kDriver == Seq(true, true, true, true, true, false, false),
@@ -537,7 +532,7 @@ class DedupStreamsSpec extends SparkSpec {
     run(rootA, new InMemoryMembershipStore, 0 until 10)
 
     // the replayed trigger's fold runs on the driver, then distributed
-    for (replayBudget <- Seq(SignatureIndex.DriverBatchBytes, 1L)) {
+    for (replayBudget <- Seq(graft.operators.DriverKernel.BudgetBytes, 1L)) {
       val rootB = Files.createTempDirectory("dedup_fold_crash").toString
       val idx = s"$rootB/index"
       run(rootB, new InMemoryMembershipStore, 0 until 4)
@@ -560,10 +555,7 @@ class DedupStreamsSpec extends SparkSpec {
       // the restarted stream (a fresh store) replays trigger 4, and with
       // it the fold
       val store = new InMemoryMembershipStore
-      val prevBytes = SignatureIndex.DriverBatchBytes
-      SignatureIndex.DriverBatchBytes = replayBudget
-      try run(rootB, store, Seq(4))
-      finally SignatureIndex.DriverBatchBytes = prevBytes
+      withDriverBudget(replayBudget)(run(rootB, store, Seq(4)))
       assert(tempDirs(idx).isEmpty, s"a temp dir survived the fold: ${tempDirs(idx)}")
       assert(SignatureIndex.componentNames(spark, idx, "members").head == "compacted=3")
       run(rootB, store, 5 until 10)
@@ -595,9 +587,9 @@ class DedupStreamsSpec extends SparkSpec {
       11 -> "an int keyed document about sort merge joins and spill files",
       12 -> "completely different content about spark physical plans and shuffles"
     ).toDF("doc_id", "text")
-    // cap 0: the distributed spelling, which leaves the store untouched
-    DedupStreams.dedupBatch(intIds, out, idx, threshold = 0.7, batchId = 0,
-      driverBatchCap = 0L, store = Some(store))
+    // budget 0: the distributed spelling, which leaves the store untouched
+    withDriverBudget(0L)(DedupStreams.dedupBatch(intIds, out, idx, threshold = 0.7,
+      batchId = 0, store = Some(store)))
     assert(store.knownPaths.isEmpty, "the int-id batch took the driver kernel")
     for (table <- Seq("members", "sigs")) {
       val types = footerIdTypes(idx, table)
@@ -645,8 +637,8 @@ class DedupStreamsSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      DedupStreams.dedupBatch(corpus, s"$root/out", s"$root/index", threshold = 0.7,
-        batchId = 0, driverBatchCap = 0L)
+      withDriverBudget(0L)(DedupStreams.dedupBatch(corpus, s"$root/out", s"$root/index",
+        threshold = 0.7, batchId = 0))
       org.apache.spark.sql.graft.ListenerBusHook.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     assert(writes.toSeq == Seq("out/batch=0", "index/sigs/batch=0", "index/members/batch=0"),
@@ -660,7 +652,7 @@ class DedupStreamsSpec extends SparkSpec {
     val sc = spark.sparkContext
     val rddsBefore = sc.getPersistentRDDs.keySet
     val confBefore = spark.conf.getAll
-    for (cap <- Seq(DedupStreams.DefaultDriverBatchCap, 0L)) {
+    for (budget <- Seq(graft.operators.DriverKernel.BudgetBytes, 0L)) {
       val root = Files.createTempDirectory("dedup_hygiene").toString
       val store = new graft.operators.InMemoryMembershipStore
       // 6 batches, folds at 2 and 4: triggers after a fold read stable
@@ -669,15 +661,17 @@ class DedupStreamsSpec extends SparkSpec {
         val docs =
           if (i == 5) corpus.filter(col("doc_id") === 3L)
           else distinctDocs(Seq(100L + i)).unionByName(corpus.filter(col("doc_id") === (i + 1L)))
-        DedupStreams.dedupBatch(docs, s"$root/out", s"$root/index", threshold = 0.7,
-          batchId = i.toLong, compactEvery = 2, driverBatchCap = cap, store = Some(store))
+        withDriverBudget(budget)(DedupStreams.dedupBatch(docs, s"$root/out", s"$root/index",
+          threshold = 0.7, batchId = i.toLong, compactEvery = 2, store = Some(store)))
       }
-      assert(store.knownPaths.nonEmpty == (cap > 0), s"cap $cap: paths taken")
+      assert(store.knownPaths.nonEmpty == (budget > 0), s"budget $budget: paths taken")
       assert(spark.read.parquet(s"$root/out").select(col("doc_id")).as[Long].collect().toSet ==
-        Set(1L, 2L, 4L) ++ (100L until 105L), s"cap $cap: survivors")
-      assert(spark.sharedState.cacheManager.isEmpty, s"cap $cap: a cached frame outlived the drain")
-      assert(sc.getPersistentRDDs.keySet == rddsBefore, s"cap $cap: a persisted RDD outlived the drain")
-      assert(spark.conf.getAll == confBefore, s"cap $cap: the drain changed the session conf")
+        Set(1L, 2L, 4L) ++ (100L until 105L), s"budget $budget: survivors")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"budget $budget: a cached frame outlived the drain")
+      assert(sc.getPersistentRDDs.keySet == rddsBefore,
+        s"budget $budget: a persisted RDD outlived the drain")
+      assert(spark.conf.getAll == confBefore, s"budget $budget: the drain changed the session conf")
     }
   }
 
@@ -688,12 +682,12 @@ class DedupStreamsSpec extends SparkSpec {
     // an index to probe, so the member-hit and refined-pair frames are
     // non-trivial, then an output path that is a regular file: the
     // survivor write after the pair collect cannot create its dir
-    DedupStreams.dedupBatch(corpus.filter(col("doc_id") <= 2L), s"$root/out0",
-      s"$root/index", threshold = 0.7, batchId = 0, driverBatchCap = 0L)
+    withDriverBudget(0L)(DedupStreams.dedupBatch(corpus.filter(col("doc_id") <= 2L),
+      s"$root/out0", s"$root/index", threshold = 0.7, batchId = 0))
     val outFile = Files.createFile(java.nio.file.Paths.get(root, "out")).toString
     intercept[Exception] {
-      DedupStreams.dedupBatch(corpus.filter(col("doc_id") > 2L), outFile,
-        s"$root/index", threshold = 0.7, batchId = 1, driverBatchCap = 0L)
+      withDriverBudget(0L)(DedupStreams.dedupBatch(corpus.filter(col("doc_id") > 2L), outFile,
+        s"$root/index", threshold = 0.7, batchId = 1))
     }
     assert(spark.sharedState.cacheManager.isEmpty, "a cached frame outlived the failed trigger")
     assert(spark.conf.getAll == confBefore, "the failed trigger changed the session conf")
