@@ -322,8 +322,12 @@ object Dedup {
           val nWords = (d.size + 63) / 64
           val bm = bitmaps(sh, d).cache()
           // one bounded collect decides the kernel branch AND is the
-          // collected table (see jaccardBitmap)
-          val rows = if (longIds) DriverKernel.collectRows(bm, "containment.collect") else None
+          // collected table (see jaccardBitmap); past the row limit by
+          // the stats row's count, no collect runs
+          val rows =
+            if (longIds && docs <= DriverKernel.MaxRows)
+              DriverKernel.collectRows(bm, "containment.collect").toOption
+            else None
           if (rows.isDefined) return containmentKernelRows(bm, rows.get, nWords, threshold)
           val a = bm.select(col("doc_id").as("da") +: col("n").as("na") +:
             (0 until nWords).map(w => col(s"w$w").as(s"a$w")): _*)
@@ -549,12 +553,12 @@ object Dedup {
   }
 
   /** Collects the (caller-verified ≤ MaxBitmapDict) dictionary. */
-  private def collectDict(shingles: DataFrame): Map[String, Int] =
+  private[operators] def collectDict(shingles: DataFrame): Map[String, Int] =
     shingles.select(col("s")).distinct().orderBy(col("s"))
       .collect().map(_.getString(0)).zipWithIndex.toMap
 
   /** (doc_id, n, w0..wk): per-doc set size + fixed-width bitmap words. */
-  private def bitmaps(shingles: DataFrame, dict: Map[String, Int]): DataFrame = {
+  private[operators] def bitmaps(shingles: DataFrame, dict: Map[String, Int]): DataFrame = {
     val nWords = (dict.size + 63) / 64
     // broadcast hash join against the dictionary: O(1) per shingle row
     // (a folded map literal would linear-scan its entries per row)
@@ -605,7 +609,7 @@ object Dedup {
     // the driver bounds) IS the collected table; past them the join form
     // proceeds
     val kernelRows: Option[Array[org.apache.spark.sql.Row]] =
-      if (pairs.isDefined && longIds) DriverKernel.collectRows(bm, "jaccard.collect")
+      if (pairs.isDefined && longIds) DriverKernel.collectRows(bm, "jaccard.collect").toOption
       else None
     pairs match {
       case Some(p) if kernelRows.isDefined =>

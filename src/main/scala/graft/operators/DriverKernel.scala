@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 
+import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+import scala.concurrent.duration.Duration
 import scala.reflect.ClassTag
 
 /** The one driver-or-distributed choice of the operators. Each operator
@@ -20,10 +22,11 @@ import scala.reflect.ClassTag
   *    arithmetic sets another.
   *
   * [[collect]] (and [[collectRows]], its `DataFrame` form) enforces
-  * them inside the one job that brings the rows in,
-  * so no gate runs a count, a `take` or a fold job first to choose its
-  * path: an input within both bounds comes back whole, any other comes
-  * back `None` and the gate runs its distributed spelling.
+  * them inside the one job that brings the rows in, and cancels that
+  * job once they are passed, so no gate runs a count, a `take` or a
+  * fold job first to choose its path: an input within both bounds comes
+  * back whole, any other comes back as the bound it passed and the gate
+  * runs its distributed spelling.
   *
   * Why 64 MiB: it is the envelope of the kernels at their row limits,
   * with room to spare, and a small share of a 2-8 GB driver heap:
@@ -60,17 +63,30 @@ object DriverKernel {
     * a bound, with its element count and bytes. */
   private final case class Part[T](kept: Array[T], rows: Long, bytes: Long)
 
+  /** The bound a [[collect]] passed. */
+  sealed trait Over
+
+  /** More elements than the row limit: the input holds more rows than
+    * it, so a caller can act on the count without running one. */
+  case object OverRows extends Over
+
+  /** The bytes passed the budget within the row limit: the input's row
+    * count is not known. */
+  case object OverBudget extends Over
+
   /** Every element of `rdd` as `keep` makes it, in partition order, from
-    * one Spark job described `description` — or `None` when the
-    * elements number more than `maxRows` or their `bytes` sum past
-    * [[BudgetBytes]]. Each task stops once its partition passes either
-    * bound and then returns no elements; the driver drops what it holds
-    * once the running sums pass either bound. `rdd` is built inside the
-    * description's scope, so the stages an adaptive plan runs to build
-    * it carry the description too.
+    * one Spark job described `description` — or the bound it passed
+    * when the elements number more than `maxRows` or their `bytes` sum
+    * past [[BudgetBytes]]. Each task stops once its partition passes
+    * either bound and then returns no elements; once the driver's
+    * running sums pass either bound it drops what it holds and cancels
+    * the job, so it receives about one budget plus the partitions whose
+    * tasks were already running, however many partitions the input has.
+    * `rdd` is built inside the description's scope, so the stages an
+    * adaptive plan runs to build it carry the description too.
     */
   def collect[A, T: ClassTag](rdd: => RDD[A], description: String, maxRows: Long = MaxRows)(
-      keep: A => T)(bytes: T => Long): Option[Array[T]] = {
+      keep: A => T)(bytes: T => Long): Either[Over, Array[T]] = {
     val budget = BudgetBytes
     val perPartition = (it: Iterator[A]) => {
       val kept = Array.newBuilder[T]
@@ -90,23 +106,37 @@ object DriverKernel {
       val r = rdd
       val parts = new Array[Array[T]](r.getNumPartitions)
       // results arrive one partition at a time on the scheduler's
-      // thread; once the sums pass a bound nothing more is kept
-      sc.runJob(r, perPartition, (i: Int, p: Part[T]) => {
+      // thread; once the sums pass a bound nothing more is kept, and
+      // this thread cancels the job
+      val passed = Promise[Unit]()
+      val job = sc.submitJob(r, perPartition, r.partitions.indices, (i: Int, p: Part[T]) => {
         rows += p.rows
         held += p.bytes
-        if (over) parts.indices.foreach(parts(_) = null) else parts(i) = p.kept
-      })
+        if (over) {
+          parts.indices.foreach(parts(_) = null)
+          passed.trySuccess(())
+        } else parts(i) = p.kept
+      }, ())
+      Await.ready(Future.firstCompletedOf(Seq(job, passed.future))(ExecutionContext.parasitic),
+        Duration.Inf)
+      if (passed.isCompleted) {
+        job.cancel()
+        // no result arrives once the job has ended
+        Await.ready(job, Duration.Inf)
+      } else Await.result(job, Duration.Inf) // a failed job throws its error
       parts
     }
     log.info(s"$description: $rows rows, $held bytes " +
       s"(limits $maxRows rows, $budget bytes) -> ${if (over) "distributed" else "driver"}")
-    if (over) None else Some(Array.concat(parts.toIndexedSeq: _*))
+    if (rows > maxRows) Left(OverRows)
+    else if (held > budget) Left(OverBudget)
+    else Right(Array.concat(parts.toIndexedSeq: _*))
   }
 
   /** Every row of `df`, as `df.collect()` gives it, from one bounded
     * job: the bytes counted are each row's `UnsafeRow` size. */
   def collectRows(
-      df: DataFrame, description: String, maxRows: Long = MaxRows): Option[Array[Row]] = {
+      df: DataFrame, description: String, maxRows: Long = MaxRows): Either[Over, Array[Row]] = {
     val schema = df.schema
     collect(df.queryExecution.toRdd.mapPartitions { it =>
       lazy val toUnsafe = UnsafeProjection.create(schema)

@@ -222,7 +222,7 @@ object MinHashLSH {
         }
       }
       CollectedRows(kept.map(_._1: InternalRow), kept.map(_._2), merged.toMap)
-    }
+    }.toOption
   }
 
   /** Seed of Spark's xxhash64(), which [[signatures]] and [[bandKeys]]

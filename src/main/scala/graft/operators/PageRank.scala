@@ -72,13 +72,15 @@ object PageRank {
       // build its packed partitions, so it skips the DataFrame cache.
       val deg = cachedEdges.groupBy(col("src")).agg(count(lit(1)).as("__d"))
       val weighted = cachedEdges.join(deg, Seq("src"))
-      val nodes = cachedEdges.select(col("src").as("v")).distinct()
+      // cached before the collect, so the distributed path's count reads
+      // what the collect computed before it passed a bound
+      val nodes = cachedEdges.select(col("src").as("v")).distinct().cache()
       DriverKernel.collectRows(nodes, "pagerank.nodes", MaxDriverNodes) match {
-        case Some(rows) =>
+        case Right(rows) =>
+          nodes.unpersist()
           require(rows.nonEmpty, "PageRank over an empty edge list")
           ranksDriverResident(weighted, nodes.schema, rows.map(_.get(0)), iterations, alpha)
-        case None =>
-          nodes.cache()
+        case Left(_) =>
           val n = nodes.count()
           val teleport = (1.0 - alpha) / n
           val cached = weighted.cache()
@@ -167,7 +169,7 @@ object PageRank {
     // byte bound applies
     DriverKernel.collect(packed, "pagerank.edges", maxRows = Long.MaxValue)(identity)(
       16L * _._1.length) match {
-      case Some(parts) =>
+      case Right(parts) =>
         for (_ <- 1 to iterations) {
           val acc = new Array[Double](ranks.length)
           parts.foreach { case (ss, dd, gg) =>
@@ -176,7 +178,7 @@ object PageRank {
           }
           ranks = applyContrib(acc)
         }
-      case None =>
+      case Left(_) =>
         for (_ <- 1 to iterations) {
           val bR = sc.broadcast(ranks)
           val contrib = packed.mapPartitions { it =>

@@ -142,18 +142,20 @@ object SimilaritySearch {
     */
   def nearDuplicates(
       df: DataFrame, idCol: String, vecCol: String, threshold: Double): DataFrame =
-    nearDuplicatesKernel(df, idCol, vecCol, threshold).getOrElse {
-      val n = df.count()
-      if (n <= DriverKernel.MaxRows) nearDuplicatesExactJoin(df, idCol, vecCol, threshold)
+    nearDuplicatesKernel(df, idCol, vecCol, threshold).fold({ over =>
+      // past the budget within the row limit the collect did not learn
+      // the row count; past the row limit it did
+      if (over == DriverKernel.OverBudget && df.count() <= DriverKernel.MaxRows)
+        nearDuplicatesExactJoin(df, idCol, vecCol, threshold)
       else {
-        log.info(s"nearDuplicates: auto-switch to hyperplane buckets ($n rows > " +
-          s"${DriverKernel.MaxRows}); results are approximate (recall < 1)")
+        log.info(s"nearDuplicates: auto-switch to hyperplane buckets (more than " +
+          s"${DriverKernel.MaxRows} rows); results are approximate (recall < 1)")
         nearDuplicatesBucketed(df, idCol, vecCol, threshold)
       }
-    }
+    }, identity)
 
-  /** Exact all-pairs cosine as a broadcast kernel, or None when the
-    * vectors do not fit [[DriverKernel]]'s bounds: the whole vector set
+  /** Exact all-pairs cosine as a broadcast kernel, or the bound passed
+    * when the vectors do not fit [[DriverKernel]]'s: the whole vector set
     * is collected once (65,536 x 64 dims = 33 MB worst case, the same
     * metadata-scale broadcast contract as the shingle dictionary),
     * broadcast, and each task scans its slice of row indices against
@@ -166,7 +168,8 @@ object SimilaritySearch {
     * threshold - 1e-4 cannot round up to pass).
     */
   private def nearDuplicatesKernel(
-      df: DataFrame, idCol: String, vecCol: String, threshold: Double): Option[DataFrame] = {
+      df: DataFrame, idCol: String, vecCol: String, threshold: Double
+  ): Either[DriverKernel.Over, DataFrame] = {
     val spark = df.sparkSession
     import spark.implicits._
     DriverKernel.collectRows(

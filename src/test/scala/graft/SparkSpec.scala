@@ -41,6 +41,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     descs.toArray(Array.empty[String]).toSeq
   }
 
+  /** The columns of each frame `body` counts with `Dataset.count()`. */
+  def countsDuring(body: => Unit): Seq[Seq[String]] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val counted = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "count") counted.add(qe.analyzed.children.head.output.map(_.name))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { body; org.apache.spark.sql.graft.ListenerBusHook.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    counted.toArray(Array.empty[Seq[String]]).toSeq
+  }
+
   /** Runs `body` with the operators' driver budget
     * (`DriverKernel.BudgetBytes`) set to `bytes`, then restores it, also
     * when `body` throws: the one way a spec reaches a driver kernel's
@@ -50,6 +65,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.operators.DriverKernel.BudgetBytes = bytes
     try body
     finally graft.operators.DriverKernel.BudgetBytes = prior
+  }
+
+  /** Bytes `DriverKernel.collectRows` counts for `df`: the sum of its
+    * rows' `UnsafeRow` sizes. */
+  def rowBytes(df: org.apache.spark.sql.DataFrame): Long = {
+    val schema = df.schema
+    df.queryExecution.toRdd.mapPartitions { it =>
+      val toUnsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(schema)
+      it.map(r => toUnsafe(r).getSizeInBytes.toLong)
+    }.fold(0L)(_ + _)
   }
 
   /** Copy the tree under `from` into `to`, hidden files included. */

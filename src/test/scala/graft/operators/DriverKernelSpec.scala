@@ -3,37 +3,27 @@ package graft.operators
 import graft.SparkSpec
 import graft.functions.VectorFunctions.toDouble
 import graft.streaming.DedupStreams
+import org.apache.spark.Success
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 
 /** The one driver-kernel bound at its edges: the primitive's per-task
-  * stop, its driver-side sums and its `None` one byte or one row past a
-  * bound, and every gate that collects through it run with the budget
-  * fitting and one byte short. The trigger, `nearDuplicates` and the
-  * bitmap refine also run one row either side of `DriverKernel.MaxRows`;
-  * the containment scan (all pairs of 65,536 documents) and PageRank's
-  * 1M-node limit are too large for a unit spec and rely on the same row
-  * check the primitive's specs cover. Each pair of runs must give the
-  * same rows; the path is named by the gate's described collect job, the
-  * jobs that follow it and the plan of the frame it returns.
+  * stop, its driver-side sums, its cancellation and the bound it reports
+  * one byte or one row past, and the gates with a row limit run one row
+  * either side of `DriverKernel.MaxRows`. The containment scan (all
+  * pairs of 65,536 documents) and PageRank's 1M-node limit are too large
+  * for a unit spec and rely on the same row check the primitive's specs
+  * cover. Each gate's run one byte short of the budget sits in the spec
+  * of its operator (OperatorsSpec, SubstringDedupSpec), its trigger
+  * counterpart in MinHashKernelSpec and DedupStreamsSpec.
   */
 class DriverKernelSpec extends SparkSpec {
 
   import spark.implicits._
 
   private def sc = spark.sparkContext
-
-  /** Bytes `DriverKernel.collectRows` counts for `df`: its rows'
-    * `UnsafeRow` sizes. */
-  private def rowBytes(df: DataFrame): Long = {
-    val schema = df.schema
-    df.queryExecution.toRdd.mapPartitions { it =>
-      val toUnsafe = UnsafeProjection.create(schema)
-      it.map(r => toUnsafe(r).getSizeInBytes.toLong)
-    }.fold(0L)(_ + _)
-  }
 
   private def hasJoin(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.find(_.isInstanceOf[Join]).isDefined
@@ -45,6 +35,22 @@ class DriverKernelSpec extends SparkSpec {
     (out.get, jobs)
   }
 
+  /** (result, successful tasks) of `body`. */
+  private def withFinishedTasks[T](body: => T): (T, Int) = {
+    val finished = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.reason == Success) finished.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.ListenerBusHook.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.sql.graft.ListenerBusHook.drain(sc)
+      (out, finished.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   // ---- the primitive ----------------------------------------------------
 
   test("a task stops pulling rows once its partition passes a bound") {
@@ -53,23 +59,43 @@ class DriverKernelSpec extends SparkSpec {
       sc.parallelize(1 to 1000, 1).map { i => pulled.add(1); i }, "spec.collect", maxRows)(
       identity)(_ => 8L)
     pulled.reset()
-    assert(withDriverBudget(80L)(run(DriverKernel.MaxRows)).isEmpty)
+    assert(withDriverBudget(80L)(run(DriverKernel.MaxRows)) == Left(DriverKernel.OverBudget))
     assert(pulled.value == 11L, s"past the byte bound the task pulled ${pulled.value} rows")
     pulled.reset()
-    assert(run(5L).isEmpty)
+    assert(run(5L) == Left(DriverKernel.OverRows))
     assert(pulled.value == 6L, s"past the row limit the task pulled ${pulled.value} rows")
   }
 
-  test("the driver sums bytes and rows across 4 partitions; None one byte or row past") {
+  test("the driver sums bytes and rows across 4 partitions; past one, it reports which") {
     // 4 partitions of 10 elements, 8 bytes each: 80 B per partition,
     // 320 B and 40 rows in all — every partition alone is within bounds
     val rdd = sc.parallelize(1 to 40, 4)
     def run(budget: Long, maxRows: Long) =
       withDriverBudget(budget)(DriverKernel.collect(rdd, "spec.collect", maxRows)(
-        (i: Int) => i.toLong)(_ => 8L))
-    assert(run(320L, 40L).map(_.toSeq) == Some((1L to 40L).toSeq), "at both bounds")
-    assert(run(319L, 40L).isEmpty, "at budget + 1 bytes")
-    assert(run(320L, 39L).isEmpty, "at row limit + 1 rows")
+        (i: Int) => i.toLong)(_ => 8L)).map(_.toSeq)
+    assert(run(320L, 40L) == Right((1L to 40L).toSeq), "at both bounds")
+    assert(run(319L, 40L) == Left(DriverKernel.OverBudget), "at budget + 1 bytes")
+    assert(run(320L, 39L) == Left(DriverKernel.OverRows), "at row limit + 1 rows")
+  }
+
+  test("the driver cancels the collect once its sums pass a bound, whatever the partition count") {
+    // 200 partitions of 5 elements, 8 bytes each: 40 B and 5 rows per
+    // partition, each within both bounds alone. Past them after 3
+    // partitions, the job is cancelled: only the tasks already running
+    // finish (4 task slots)
+    def run(budget: Long, maxRows: Long) = withDriverBudget(budget)(withFinishedTasks(
+      DriverKernel.collect(sc.parallelize(1 to 1000, 200).mapPartitions { it =>
+        Thread.sleep(20); it
+      }, "spec.collect", maxRows)((i: Int) => i)(_ => 8L)))
+    val (overBudget, budgetTasks) = run(80L, DriverKernel.MaxRows)
+    assert(overBudget == Left(DriverKernel.OverBudget))
+    assert(budgetTasks < 20, s"past the budget $budgetTasks of 200 tasks finished")
+    val (overRows, rowTasks) = run(DriverKernel.BudgetBytes, 10L)
+    assert(overRows == Left(DriverKernel.OverRows))
+    assert(rowTasks < 20, s"past the row limit $rowTasks of 200 tasks finished")
+    // within both bounds every partition comes back, in order
+    val (all, allTasks) = run(DriverKernel.BudgetBytes, DriverKernel.MaxRows)
+    assert(all.map(_.toSeq) == Right(1 to 1000) && allTasks == 200)
   }
 
   test("the collect runs one described job and restores the caller's description, also on a throw") {
@@ -79,9 +105,9 @@ class DriverKernelSpec extends SparkSpec {
         Seq((1L, "a", Seq(1.0, 2.0)), (2L, null, Seq.empty[Double])).toDF("id", "s", "v"),
         "spec.collect"))
       assert(jobs == Seq("spec.collect"), s"jobs: $jobs")
-      assert(rows.get.toSeq ==
+      assert(rows.map(_.toSeq) == Right(
         Seq((1L, "a", Seq(1.0, 2.0)), (2L, null, Seq.empty[Double])).toDF("id", "s", "v")
-          .collect().toSeq, "collectRows must give what collect() gives")
+          .collect().toSeq), "collectRows must give what collect() gives")
       assert(sc.getLocalProperty("spark.job.description") == "outer")
       intercept[Exception](DriverKernel.collect(
         sc.parallelize(1 to 4, 2), "spec.throw")((i: Int) =>
@@ -91,7 +117,7 @@ class DriverKernelSpec extends SparkSpec {
     } finally sc.setJobDescription(null)
   }
 
-  // ---- the gates ----------------------------------------------------------
+  // ---- the gates at the row limit -----------------------------------------
 
   /** Random 12-digit hex documents: no two are near-duplicates. */
   private def hexDocs(n: Long): DataFrame = spark.range(1, n + 1)
@@ -114,27 +140,6 @@ class DriverKernelSpec extends SparkSpec {
   private def sameRows(a: DataFrame, b: DataFrame): Boolean =
     a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
-  test("streaming trigger: same survivors and index one byte short of the budget") {
-    val batch = Seq(
-      1L -> "the quick brown fox jumps over the lazy dog again and again today",
-      2L -> "completely different content about spark physical plans and shuffles",
-      3L -> "the quick brown fox jumps over the lazy dog again and again today",
-      4L -> "third unrelated document mentioning parquet statistics and pruning"
-    ).toDF("doc_id", "text")
-    val bytes = rowBytes(batch)
-    // the plan estimates default 20-byte strings, below the rows' bytes:
-    // one byte short, the collect job still runs and gives up
-    assert(batch.queryExecution.optimizedPlan.stats.sizeInBytes < bytes - 1)
-    val (fit, fitJobs, fitKernel) = withDriverBudget(bytes)(trigger(batch))
-    val (short, shortJobs, shortKernel) = withDriverBudget(bytes - 1)(trigger(batch))
-    assert(fitKernel && fitJobs == Seq("dedup.collect batch=0"), s"fitting: $fitJobs")
-    assert(!shortKernel && shortJobs.head == "dedup.collect batch=0" &&
-      shortJobs.tail.nonEmpty && !shortJobs.tail.contains("dedup.collect batch=0"),
-      s"one byte short: $shortJobs")
-    fit.zip(short).foreach { case (f, s) => assert(sameRows(f, s)) }
-    assert(fit.head.select(col("doc_id")).as[Long].collect().toSet == Set(1L, 2L, 4L))
-  }
-
   test("streaming trigger: DriverKernel.MaxRows rows run the kernel, one more runs distributed") {
     val n = DriverKernel.MaxRows.toLong
     val (at, atJobs, atKernel) = trigger(hexDocs(n))
@@ -151,27 +156,8 @@ class DriverKernelSpec extends SparkSpec {
     }
   }
 
-  private def vectors(df: DataFrame) =
-    df.select(col("vec_id").cast("long").as("id"), toDouble(col("embedding")).as("v"))
-
   private def cosinePairs(df: DataFrame): Set[(Long, Long, Double)] =
     df.select(col("ka"), col("kb"), col("cos")).as[(Long, Long, Double)].collect().toSet
-
-  test("nearDuplicates: the exact join one byte short of the budget gives the kernel's pairs") {
-    val e = tables.embeddings
-    val bytes = rowBytes(vectors(e))
-    val (fit, fitJobs) = withDriverBudget(bytes)(
-      withJobs(SimilaritySearch.nearDuplicates(e, "vec_id", "embedding", 0.45)))
-    val (short, shortJobs) = withDriverBudget(bytes - 1)(
-      withJobs(SimilaritySearch.nearDuplicates(e, "vec_id", "embedding", 0.45)))
-    assert(fitJobs == Seq("similarity.collect") && !hasJoin(fit), s"fitting: $fitJobs")
-    // past the budget the count job picks the exact join
-    assert(shortJobs.head == "similarity.collect" && shortJobs.tail.nonEmpty &&
-      !shortJobs.tail.contains("similarity.collect") && hasJoin(short),
-      s"one byte short: $shortJobs")
-    val pairs = cosinePairs(fit)
-    assert(pairs.nonEmpty && cosinePairs(short) == pairs)
-  }
 
   test("nearDuplicates: DriverKernel.MaxRows vectors are exact, one more switches to buckets") {
     // 4-dim vectors from id hashes; the last one points away from all
@@ -183,11 +169,19 @@ class DriverKernelSpec extends SparkSpec {
         .as("embedding"))
     val n = DriverKernel.MaxRows.toLong
     val (at, atJobs) = withJobs(SimilaritySearch.nearDuplicates(vecs(n), "vec_id", "embedding", 0.9999))
-    val (past, pastJobs) =
-      withJobs(SimilaritySearch.nearDuplicates(vecs(n + 1), "vec_id", "embedding", 0.9999))
+    var past: DataFrame = null
+    var pastJobs: Seq[String] = null
+    // the collect counted the rows, so the vectors are not counted
+    // before the switch (OperatorsSpec's cosine test sees that count one
+    // byte past the budget)
+    val counted = countsDuring {
+      pastJobs = jobsDuring {
+        past = SimilaritySearch.nearDuplicates(vecs(n + 1), "vec_id", "embedding", 0.9999)
+      }
+    }
     assert(atJobs == Seq("similarity.collect") && !hasJoin(at), s"at the limit: $atJobs")
-    assert(pastJobs.head == "similarity.collect" && pastJobs.tail.nonEmpty,
-      s"past the limit: $pastJobs")
+    assert(pastJobs.head == "similarity.collect" && hasJoin(past) &&
+      !counted.contains(Seq("vec_id", "embedding")), s"past the limit: $pastJobs, $counted")
     val exact = cosinePairs(at)
     val bucketed = cosinePairs(past)
     assert(bucketed == cosinePairs(
@@ -196,31 +190,8 @@ class DriverKernelSpec extends SparkSpec {
     assert(exact.nonEmpty && bucketed.subsetOf(exact), "the bucketed path must refine to exact pairs")
   }
 
-  /** Bytes of `Dedup.bitmaps`' rows for `sh`: (doc_id, n, w0..wk), all
-    * fixed-width longs. */
-  private def bitmapBytes(sh: DataFrame): Long = {
-    val stats = sh.agg(countDistinct(col("doc_id")), countDistinct(col("s"))).head()
-    val fields = 2 + (stats.getLong(1) + 63) / 64
-    stats.getLong(0) * (8 * ((fields + 63) / 64) + 8 * fields)
-  }
-
   private def jaccardRows(df: DataFrame): Set[(Long, Long, Double)] =
     df.select(col("da"), col("db"), col("jaccard")).as[(Long, Long, Double)].collect().toSet
-
-  test("jaccardForPairs: the join refine one byte short of the budget gives the kernel's rows") {
-    val sh = Dedup.charShingles(tables.documents, "doc_id", "text").cache()
-    val cand = MinHashLSH.candidatePairs(MinHashLSH.signatures(sh))
-      .select(col("da"), col("db")).as[(Long, Long)].collect().toSeq.toDF("da", "db")
-    val bytes = bitmapBytes(sh)
-    val (fit, fitJobs) = withDriverBudget(bytes)(withJobs(Dedup.jaccardForPairs(sh, cand, 0.7)))
-    val (short, shortJobs) =
-      withDriverBudget(bytes - 1)(withJobs(Dedup.jaccardForPairs(sh, cand, 0.7)))
-    assert(fitJobs.contains("jaccard.collect") && !hasJoin(fit), s"fitting: $fitJobs")
-    assert(shortJobs.contains("jaccard.collect") && hasJoin(short), s"one byte short: $shortJobs")
-    val rows = jaccardRows(fit)
-    assert(rows.nonEmpty && jaccardRows(short) == rows)
-    sh.unpersist()
-  }
 
   test("jaccardForPairs: DriverKernel.MaxRows documents run the kernel, one more the join") {
     // 8-letter texts over a 3-letter alphabet: at most 27 distinct
@@ -240,45 +211,5 @@ class DriverKernelSpec extends SparkSpec {
     val rows = jaccardRows(at)
     assert(rows.nonEmpty && jaccardRows(past) == rows)
     spark.catalog.clearCache()
-  }
-
-  test("containmentPairs: the join one byte short of the budget gives the kernel's rows") {
-    val sh = Dedup.charShingles(tables.documents, "doc_id", "text").cache()
-    val bytes = bitmapBytes(sh)
-    def rows(df: DataFrame) = df.select(col("inner_doc"), col("outer_doc"), col("containment"))
-      .as[(Long, Long, Double)].collect().toSet
-    val (fit, fitJobs) = withDriverBudget(bytes)(withJobs(Dedup.containmentPairs(sh, 0.9)))
-    val (short, shortJobs) =
-      withDriverBudget(bytes - 1)(withJobs(Dedup.containmentPairs(sh, 0.9)))
-    assert(fitJobs.contains("containment.collect") && !hasJoin(fit), s"fitting: $fitJobs")
-    assert(shortJobs.contains("containment.collect") && hasJoin(short),
-      s"one byte short: $shortJobs")
-    assert(rows(fit).nonEmpty && rows(short) == rows(fit))
-    sh.unpersist()
-  }
-
-  test("PageRank: all three paths, one byte short of each bound, give the same ranks") {
-    // a 40-node ring with chords: 40 node rows of 16 B, 80 packed edges
-    // of 16 B
-    val edges = (0L until 40L).flatMap(i => Seq((i, (i + 1) % 40), (i, (i * 7 + 3) % 40)))
-      .toDF("src", "dst")
-    def ranks(budget: Long) = withDriverBudget(budget)(withJobs(
-      PageRank.ranks(edges, iterations = 5).as[(Long, Double)].collect().toMap))
-    val (driver, driverJobs) = ranks(80 * 16L)
-    val (mid, midJobs) = ranks(80 * 16L - 1)
-    val (dist, distJobs) = ranks(40 * 16L - 1)
-    val (nodes, rest) = driverJobs.span(_ == "pagerank.nodes")
-    assert(nodes.nonEmpty && rest.nonEmpty && rest.forall(_ == "pagerank.edges"),
-      s"within both bounds: $driverJobs")
-    // the middle tier: every round is one more job
-    assert(midJobs.contains("pagerank.edges") && midJobs.dropWhile(_ != "pagerank.edges")
-      .count(_ != "pagerank.edges") == 5, s"edges one byte short: $midJobs")
-    assert(distJobs.head == "pagerank.nodes" && !distJobs.contains("pagerank.edges") &&
-      distJobs.exists(_ != "pagerank.nodes"), s"nodes one byte short: $distJobs")
-    assert(driver.size == 40 && mid.keySet == driver.keySet && dist.keySet == driver.keySet)
-    // the per-round sums run in another order on the distributed paths
-    for ((v, r) <- driver) {
-      assert(math.abs(mid(v) - r) < 1e-12 && math.abs(dist(v) - r) < 1e-12, s"node $v")
-    }
   }
 }

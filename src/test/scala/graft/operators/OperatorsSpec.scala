@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Operator-level behavior checks on small data: as-of join semantics,
@@ -8,6 +9,9 @@ import org.apache.spark.sql.functions._
   * counterparts (the scale-path contract from SURVEY.md §2.12).
   */
 class OperatorsSpec extends SparkSpec {
+
+  private def hasJoin(df: DataFrame): Boolean = df.queryExecution.optimizedPlan
+    .find(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]).isDefined
 
   test("AsOfJoin.latest picks the greatest right time <= left time, ties by tiebreak") {
     import spark.implicits._
@@ -195,17 +199,35 @@ class OperatorsSpec extends SparkSpec {
     val ckpt = PageRank.ranks(edges, iterations = 3, checkpointDir = Some(dir))
       .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
     assert(ckpt == r)
-    // the distributed path (forced via a zero driver budget) must agree
-    // with the driver-resident fast path to double precision
-    val dist = withDriverBudget(0L)(PageRank.ranks(edges, iterations = 3)
-      .collect()).map(x => x.getLong(0) -> x.getDouble(1)).toMap
+    // the three paths, each at or one byte short of its driver budget:
+    // the 3 nodes' rows and the 4 packed edges take 16 bytes each
+    def ranksAt(budget: Long): (Map[Long, Double], Seq[String]) = {
+      var out: Map[Long, Double] = null
+      val jobs = jobsDuring {
+        out = withDriverBudget(budget)(PageRank.ranks(edges, iterations = 3).collect())
+          .map(x => x.getLong(0) -> x.getDouble(1)).toMap
+      }
+      (out, jobs)
+    }
+    // both fit: the nodes' collect, then the edges' (no job in the loop)
+    val (driver, driverJobs) = ranksAt(4 * 16L)
+    val (nodeJobs, rest) = driverJobs.span(_ == "pagerank.nodes")
+    assert(nodeJobs.nonEmpty && rest.nonEmpty && rest.forall(_ == "pagerank.edges"),
+      s"within both bounds: $driverJobs")
+    assert(driver == r)
+    // the distributed path (the nodes one byte short) must agree with
+    // the driver-resident fast path to double precision
+    val (dist, distJobs) = ranksAt(3 * 16L - 1)
+    assert(distJobs.head == "pagerank.nodes" && !distJobs.contains("pagerank.edges") &&
+      distJobs.exists(_ != "pagerank.nodes"), s"nodes one byte short: $distJobs")
     assert(dist.keySet == r.keySet)
     dist.foreach { case (v, d) => assert(math.abs(d - r(v)) < 1e-12, s"node $v: $d vs ${r(v)}") }
-    // the middle tier (the 3 nodes' 16-byte rows fit the budget, the 4
-    // packed edges' 16 bytes each do not: rank vector broadcast per
-    // round, edges distributed) must also agree
-    val mid = withDriverBudget(3 * 16L)(PageRank.ranks(edges, iterations = 3)
-      .collect()).map(x => x.getLong(0) -> x.getDouble(1)).toMap
+    // the middle tier (the nodes fit, the edges one byte short: rank
+    // vector broadcast per round, edges distributed, one job a round)
+    // must also agree
+    val (mid, midJobs) = ranksAt(4 * 16L - 1)
+    assert(midJobs.contains("pagerank.edges") && midJobs.dropWhile(_ != "pagerank.edges")
+      .count(_ != "pagerank.edges") == 3, s"edges one byte short: $midJobs")
     assert(mid.keySet == r.keySet)
     mid.foreach { case (v, d) => assert(math.abs(d - r(v)) < 1e-12, s"node $v: $d vs ${r(v)}") }
   }
@@ -245,11 +267,19 @@ class OperatorsSpec extends SparkSpec {
 
   test("broadcast bitmap refine equals the join-shaped refine") {
     val sh = Dedup.charShingles(tables.documents, "doc_id", "text").cache()
-    val cand = MinHashLSH.candidatePairs(MinHashLSH.signatures(sh))
-    val viaBroadcast = Dedup.jaccardForPairs(sh, cand, 0.7)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val viaJoin = withDriverBudget(0L)(Dedup.jaccardForPairs(sh, cand, 0.7)
-      .collect()).map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    // checkpointed, so the refine's own plan shows whether it joins
+    val cand = MinHashLSH.candidatePairs(MinHashLSH.signatures(sh)).localCheckpoint()
+    // the bitmap table fits the budget exactly, then one byte short
+    val bytes = rowBytes(Dedup.bitmaps(sh, Dedup.collectDict(sh)))
+    def refine(budget: Long) = {
+      var out: DataFrame = null
+      val jobs = jobsDuring { out = withDriverBudget(budget)(Dedup.jaccardForPairs(sh, cand, 0.7)) }
+      assert(jobs.contains("jaccard.collect"), s"budget $budget: $jobs")
+      (out.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet, hasJoin(out))
+    }
+    val (viaBroadcast, broadcastJoins) = refine(bytes)
+    val (viaJoin, joinJoins) = refine(bytes - 1)
+    assert(!broadcastJoins && joinJoins, "the kernel within the budget, the join past it")
     assert(viaBroadcast == viaJoin && viaBroadcast.nonEmpty)
   }
 
@@ -330,10 +360,24 @@ class OperatorsSpec extends SparkSpec {
 
   test("broadcast cosine near-dup kernel equals the all-pairs join formulation") {
     val e = tables.embeddings
-    val k = SimilaritySearch.nearDuplicates(e, "vec_id", "embedding", 0.45)
     val j = SimilaritySearch.nearDuplicatesExactJoin(e, "vec_id", "embedding", 0.45)
-    assert(k.exceptAll(j).count() == 0 && j.exceptAll(k).count() == 0)
-    assert(k.count() > 0, "threshold should admit some pairs on the fixture embeddings")
+    // the vectors fit the budget exactly (the kernel), then one byte
+    // short: within the row limit a count picks the exact join
+    val bytes = rowBytes(e.select(col("vec_id").cast("long"),
+      graft.functions.VectorFunctions.toDouble(col("embedding"))))
+    for (budget <- Seq(bytes, bytes - 1)) {
+      var (k, jobs): (DataFrame, Seq[String]) = (null, null)
+      val counted = countsDuring {
+        jobs = jobsDuring {
+          k = withDriverBudget(budget)(SimilaritySearch.nearDuplicates(e, "vec_id", "embedding", 0.45))
+        }
+      }
+      val kernel = budget == bytes
+      assert(jobs.head == "similarity.collect" && hasJoin(k) != kernel &&
+        counted.nonEmpty != kernel, s"budget $budget: $jobs, $counted")
+      assert(k.exceptAll(j).count() == 0 && j.exceptAll(k).count() == 0)
+      assert(k.count() > 0, "threshold should admit some pairs on the fixture embeddings")
+    }
   }
 
   test("hyperplane-bucketed near-dup pairs are a high-recall subset of exact") {

@@ -126,9 +126,19 @@ class SubstringDedupSpec extends SparkSpec {
     val docs = Seq((1L, short), (2L, long), (3L, "unrelated text body"))
       .toDF("doc_id", "text")
     val sh = Dedup.charShingles(docs, "doc_id", "text", n = 5)
-    val cont = Dedup.containmentPairs(sh, 0.9)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(cont.toSeq == Seq((1L, 2L, 1.0)), s"got ${cont.toSeq}")
+    // the bitmap table fits the budget exactly (the driver scan), then
+    // one byte short (the broadcast join): the same rows
+    val bytes = rowBytes(Dedup.bitmaps(sh, Dedup.collectDict(sh)))
+    for (budget <- Seq(bytes, bytes - 1)) {
+      var out: org.apache.spark.sql.DataFrame = null
+      val jobs = jobsDuring { out = withDriverBudget(budget)(Dedup.containmentPairs(sh, 0.9)) }
+      val joins = out.queryExecution.optimizedPlan
+        .find(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]).isDefined
+      assert(jobs.contains("containment.collect") && joins == (budget < bytes),
+        s"budget $budget: $jobs")
+      val cont = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      assert(cont.toSeq == Seq((1L, 2L, 1.0)), s"got ${cont.toSeq}")
+    }
     // the symmetric measure misses it: every 5-gram of short is in long,
     // but the union is dominated by long's extra prose
     val jac = Dedup.jaccardPairs(sh, 0.7)
