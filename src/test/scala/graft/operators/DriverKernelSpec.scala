@@ -4,7 +4,7 @@ import graft.SparkSpec
 import graft.functions.VectorFunctions.toDouble
 import graft.streaming.DedupStreams
 import org.apache.spark.Success
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
@@ -35,12 +35,16 @@ class DriverKernelSpec extends SparkSpec {
     (out.get, jobs)
   }
 
-  /** (result, successful tasks) of `body`. */
+  /** (result, successful tasks of the jobs `body` starts) of `body`. A
+    * task of an earlier cancelled job can still end after that job has,
+    * so tasks count only in the stages of jobs started here. */
   private def withFinishedTasks[T](body: => T): (T, Int) = {
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val finished = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = e.stageIds.foreach(stages.add)
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.reason == Success) finished.incrementAndGet()
+        if (e.reason == Success && stages.contains(e.stageId)) finished.incrementAndGet()
     }
     org.apache.spark.sql.graft.ListenerBusHook.drain(sc)
     sc.addSparkListener(listener)
