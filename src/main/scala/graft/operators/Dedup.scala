@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -78,54 +78,28 @@ object Dedup {
     * the checkpoint instead of killing the job; local single-JVM runs
     * keep the cheaper localCheckpoint.
     *
-    * Adaptive small-graph path: a pair set under `maxDriverEdges` (with
-    * long ids) is collected and solved by union-find on the driver —
-    * near-dup pair graphs are usually tiny relative to the corpus
-    * (pairs are the OUTPUT of dedup detection, not the input data), and
-    * a million-edge graph is 16 MB, metadata-scale, while each
-    * distributed round costs several shuffles plus a checkpoint. The
-    * iterative plan engages past the bound, where it is the only shape
-    * that works.
+    * Adaptive small-graph path: a pair set of long ids within
+    * [[MaxDriverEdges]] rows and the driver budget ([[DriverKernel]]) is
+    * collected and solved by union-find on the driver — near-dup pair
+    * graphs are usually tiny relative to the corpus (pairs are the
+    * OUTPUT of dedup detection, not the input data), and a million-edge
+    * graph is 24 MB as rows, metadata-scale, while each distributed round
+    * costs several shuffles plus a checkpoint. The one bounded collect,
+    * described `clusters.edges`, both chooses the path and fetches the
+    * edges; the iterative plan engages past either bound, where it is
+    * the only shape that works.
     */
   def clusters(
       pairs: DataFrame, aCol: String = "da", bCol: String = "db", maxIter: Int = 25,
-      checkpointDir: Option[String] = None, maxDriverEdges: Long = 1L << 20): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = {
     val spark = pairs.sparkSession
     val norm = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
     val longIds = norm.schema.fields.forall(_.dataType ==
       org.apache.spark.sql.types.LongType)
-    // single bounded action decides the path AND fetches the edges: a
-    // limit of maxDriverEdges+1 rows either returns the whole graph (fast
-    // path) or proves it oversized — no separate count() pass re-executing
-    // the (often expensive) pair pipeline, and driver memory stays bounded
-    // either way
-    val probe: Array[(Long, Long)] = if (longIds) {
-      import spark.implicits._
-      val cap = math.min(maxDriverEdges + 1, Int.MaxValue.toLong).toInt
-      if (maxDriverEdges >= 0) norm.limit(cap).as[(Long, Long)].collect() else Array.empty
-    } else Array.empty
-    if (longIds && maxDriverEdges >= 0 && probe.length <= maxDriverEdges) {
-      import spark.implicits._
-      val es = probe
-      // union-find with path halving; unions always keep the SMALLER root,
-      // so a component's root is its min vertex — exactly the distributed
-      // min-label result
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x0: Long): Long = {
-        var x = x0
-        parent.getOrElseUpdate(x, x)
-        while (parent(x) != x) {
-          parent(x) = parent(parent(x))
-          x = parent(x)
-        }
-        x
-      }
-      es.foreach { case (a, b) =>
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      return parent.keys.toSeq.map(v => (v, find(v))).toDF("doc_id", "cluster_id")
-    }
+    val onDriver =
+      if (longIds) DriverKernel.collectRows(norm, "clusters.edges", MaxDriverEdges).toOption
+      else None
+    if (onDriver.isDefined) return componentsOnDriver(spark, onDriver.get)
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     def materialize(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
@@ -161,6 +135,33 @@ object Dedup {
     }
     require(converged, s"label propagation did not converge in $maxIter rounds")
     labels
+  }
+
+  /** Row limit of [[clusters]]' driver path. */
+  val MaxDriverEdges: Int = 1 << 20
+
+  /** [[clusters]] over (src, dst) long edges held on the driver:
+    * union-find with path halving. Unions always keep the SMALLER root,
+    * so a component's root is its min vertex — exactly the distributed
+    * min-label result. */
+  private def componentsOnDriver(
+      spark: SparkSession, edges: Array[Row]): DataFrame = {
+    import spark.implicits._
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x0: Long): Long = {
+      var x = x0
+      parent.getOrElseUpdate(x, x)
+      while (parent(x) != x) {
+        parent(x) = parent(parent(x))
+        x = parent(x)
+      }
+      x
+    }
+    edges.foreach { e =>
+      val ra = find(e.getLong(0)); val rb = find(e.getLong(1))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toSeq.map(v => (v, find(v))).toDF("doc_id", "cluster_id")
   }
 
   /** Distinct n-character shingles per document: (doc_id, s) rows.

@@ -37,6 +37,8 @@ import scala.reflect.ClassTag
   *  - `PageRank`: 4M packed edges × 16 B (two int indices and a double
   *    degree) = 64 MiB exactly, and up to [[PageRank.MaxDriverNodes]]
   *    node ids;
+  *  - `Dedup.clusters`: up to [[Dedup.MaxDriverEdges]] (2^20) pair rows
+  *    of two long ids, 24 MiB as rows;
   *  - the streaming dedup trigger (`DedupStreams.dedupBatch`): one
   *    micro-batch's rows; at 65,536 rows its 64-bit signatures alone
   *    hold 64 MiB, so a batch of ~1 KB documents reaches both bounds

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.edi.ClaimMapping
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.SessionClone
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** S1+S7 composed: the streaming claims-feed ingest. A production 837
@@ -40,6 +41,17 @@ object ClaimStreams {
   /** Start the checkpointed parquet ingest; `availableNow` processes the
     * current backlog then stops (the batch-catchup pattern), otherwise
     * the query runs until stopped.
+    *
+    * A batch's relation lists its files with a Spark job, one task per
+    * file, when they number more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32), so a
+    * 1024-file trigger spent most of its time listing. The stream reads
+    * from a clone of `spark` whose threshold is `filesPerTrigger`: its
+    * batches list on the driver, and the caller's conf is untouched. The
+    * file source lists with the session it was read from, so scoping the
+    * setting around `start()` (whose own session copy the source never
+    * reads) would not reach it. The query therefore belongs to the clone:
+    * `spark.streams` does not list it; stop or await the returned handle.
     */
   def ingest(
       spark: SparkSession,
@@ -48,7 +60,10 @@ object ClaimStreams {
       checkpointDir: String,
       availableNow: Boolean = true,
       filesPerTrigger: Int = 1024): StreamingQuery = {
-    val writer = claims(spark, inDir, filesPerTrigger).writeStream
+    val stream = SessionClone(spark)
+    stream.conf.set(
+      "spark.sql.sources.parallelPartitionDiscovery.threshold", filesPerTrigger.toString)
+    val writer = claims(stream, inDir, filesPerTrigger).writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)

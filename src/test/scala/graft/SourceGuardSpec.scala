@@ -23,7 +23,10 @@ import scala.jdk.CollectionConverters._
   *    runs;
   *  - one job-description scope: only `SessionConf.withJobDescription`
   *    sets a Spark job description, so every described phase restores
-  *    its caller's description, also when it throws.
+  *    its caller's description, also when it throws;
+  *  - one interpreted-evaluation switch: Spark's internal
+  *    `spark.sql.codegen.factoryMode` is named in `src/main` only in
+  *    `CatalogStats`, whose set-up-scale ANALYZE wave is its one use.
   */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
   private def scalaSources(dir: String): Seq[(Path, String)] = {
@@ -80,5 +83,11 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
       .flatMap(hits("src/main", _))
     assert(sites.nonEmpty && sites.forall(_.contains("graft/SessionConf.scala")),
       sites.mkString("job description sites:\n", "\n", ""))
+  }
+
+  test("src/main names Spark's codegen factory mode only in CatalogStats") {
+    val sites = hits("src/main", "spark.sql.codegen.factoryMode")
+    assert(sites.nonEmpty && sites.forall(_.contains("graft/CatalogStats.scala")),
+      sites.mkString("codegen factory mode sites:\n", "\n", ""))
   }
 }

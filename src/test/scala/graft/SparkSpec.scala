@@ -26,19 +26,25 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Descriptions of the Spark jobs `body` starts ("null" where a job
     * has none), read once the listener bus has delivered every event. */
-  def jobsDuring(body: => Unit): Seq[String] = {
+  def jobsDuring(body: => Unit): Seq[String] =
+    jobPropertiesDuring(body).map(p => String.valueOf(p.getProperty("spark.job.description")))
+
+  /** The properties of each Spark job `body` starts (its description and
+    * the SQL confs its query propagated), read once the listener bus has
+    * delivered every event. */
+  def jobPropertiesDuring(body: => Unit): Seq[java.util.Properties] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val props = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
     val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = descs.add(
-        String.valueOf(Option(j.properties).map(_.getProperty("spark.job.description")).orNull))
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        props.add(Option(j.properties).getOrElse(new java.util.Properties))
     }
     org.apache.spark.sql.graft.ListenerBusHook.drain(sc)
     sc.addSparkListener(listener)
     try { body; org.apache.spark.sql.graft.ListenerBusHook.drain(sc) }
     finally sc.removeSparkListener(listener)
-    descs.toArray(Array.empty[String]).toSeq
+    props.toArray(Array.empty[java.util.Properties]).toSeq
   }
 
   /** The columns of each frame `body` counts with `Dataset.count()`. */

@@ -291,11 +291,21 @@ class OperatorsSpec extends SparkSpec {
       (10L, 11L), (11L, 12L), (12L, 13L), (13L, 14L)).toDF("da", "db")
     val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L, 14L -> 10L)
-    // driver union-find fast path and the distributed label-propagation
-    // loop (forced via maxDriverEdges = 0) must agree exactly
-    val viaDriver = Dedup.clusters(pairs).as[(Long, Long)].collect().toMap
-    val viaLoop = Dedup.clusters(pairs, maxDriverEdges = 0)
-      .as[(Long, Long)].collect().toMap
+    // driver union-find fast path (the edges fit the budget exactly) and
+    // the distributed label-propagation loop (one byte short) must agree
+    // exactly; the driver path runs no job after its collect
+    val bytes = rowBytes(pairs)
+    def run(budget: Long) = {
+      var out = Map.empty[Long, Long]
+      val jobs = jobsDuring {
+        out = withDriverBudget(budget)(Dedup.clusters(pairs)).as[(Long, Long)].collect().toMap
+      }
+      assert(jobs.contains("clusters.edges"), s"budget $budget: $jobs")
+      (out, jobs.count(_ != "clusters.edges"))
+    }
+    val (viaDriver, driverJobs) = run(bytes)
+    val (viaLoop, loopJobs) = run(bytes - 1)
+    assert(driverJobs == 0 && loopJobs > 0, s"jobs past the collect: $driverJobs, $loopJobs")
     assert(viaDriver == expected && viaLoop == expected)
   }
 
@@ -304,8 +314,8 @@ class OperatorsSpec extends SparkSpec {
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L),
       (10L, 11L), (11L, 12L), (12L, 13L), (13L, 14L)).toDF("da", "db")
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    // maxDriverEdges = 0 forces the iterative path the checkpoint serves
-    val got = Dedup.clusters(pairs, checkpointDir = Some(dir), maxDriverEdges = 0)
+    // a zero budget forces the iterative path the checkpoint serves
+    val got = withDriverBudget(0L)(Dedup.clusters(pairs, checkpointDir = Some(dir)))
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L, 14L -> 10L))

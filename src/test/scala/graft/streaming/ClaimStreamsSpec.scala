@@ -45,4 +45,34 @@ class ClaimStreamsSpec extends SparkSpec {
     assert(afterSecond.exceptAll(batchAll).count() == 0 &&
       batchAll.exceptAll(afterSecond).count() == 0)
   }
+
+  test("a trigger of more files than Spark's parallel-listing threshold lists them on the driver") {
+    ClaimFixtures.writeEdi()
+    val fixture = new java.io.File(ClaimFixtures.EdiDir).list()
+      .filter(_.endsWith(".txt")).sorted.head
+    val inDir = Files.createTempDirectory("claims_in").toString
+    val outDir = Files.createTempDirectory("claims_out").toString
+    val ckptDir = Files.createTempDirectory("claims_ckpt").toString
+    // 40 files in one trigger: past the default threshold of 32 paths,
+    // above which a batch's relation lists its files with a Spark job
+    (0 until 40).foreach { i =>
+      Files.copy(Paths.get(ClaimFixtures.EdiDir, fixture), Paths.get(inDir, s"c${i}_$fixture"))
+    }
+    val threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val before = spark.conf.getAll.get(threshold)
+    var inputRows = Seq.empty[Long]
+    val jobs = jobsDuring {
+      val q = ClaimStreams.ingest(spark, inDir, outDir, ckptDir)
+      assert(spark.conf.getAll.get(threshold) == before, "ingest changed the caller's conf")
+      q.awaitTermination()
+      inputRows = q.recentProgress.toSeq.map(_.numInputRows).filter(_ > 0)
+    }
+    assert(spark.conf.getAll.get(threshold) == before, "ingest changed the caller's conf")
+    assert(inputRows == Seq(40L), s"rows per trigger: $inputRows")
+    val listing = jobs.filter(_.startsWith("Listing leaf files"))
+    assert(listing.isEmpty, s"listing jobs: $listing")
+    val batch = ClaimMapping.claims(spark, ClaimMapping.readDocs(spark, inDir))
+    val streamed = spark.read.parquet(outDir)
+    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+  }
 }
