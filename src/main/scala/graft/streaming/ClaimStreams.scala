@@ -47,11 +47,11 @@ object ClaimStreams {
     * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32), so a
     * 1024-file trigger spent most of its time listing. The stream reads
     * from a clone of `spark` whose threshold is `filesPerTrigger`: its
-    * batches list on the driver, and the caller's conf is untouched. The
-    * file source lists with the session it was read from, so scoping the
-    * setting around `start()` (whose own session copy the source never
-    * reads) would not reach it. The query therefore belongs to the clone:
-    * `spark.streams` does not list it; stop or await the returned handle.
+    * batches list on the driver, and the caller's conf is untouched. A
+    * setting scoped around `start()` would not reach the listing: the
+    * file source reads the conf of the session it was read from, when
+    * each batch runs. The query belongs to the clone, so `spark.streams`
+    * does not list it; stop or await the returned handle.
     */
   def ingest(
       spark: SparkSession,
